@@ -54,12 +54,12 @@ object IngestCli {
 
     task match {
       case "SeedStations" =>
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        val store = GaugeStore.open(spark, req("store"))
         store.writeStations(ObsIngest.seedStations(spark, req("stations")))
         println(s"seeded ${store.stations.count()} stations")
 
       case "SequenceIngest" =>
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        val store = GaugeStore.open(spark, req("store"))
         store.vacuum().foreach(a => System.err.println(s"[vacuum] $a"))
         val now = opts.get("now").map(lit(_)).getOrElse(current_timestamp()).cast("timestamp")
         val catalog = loadCatalog(spark, req("catalog"))
@@ -68,14 +68,14 @@ object IngestCli {
         println(s"ingested $n new files")
 
       case "QueryObs" =>
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        val store = GaugeStore.open(spark, req("store"))
         println(QueryApi.obsTimeseriesStationDataJson(
           store.gaugeDataForRange(req("start"), req("end")),
           store.gaugeSource, store.stations,
           req("station"), req("start"), req("end")))
 
       case "QueryObsAllParms" =>
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        val store = GaugeStore.open(spark, req("store"))
         println(QueryApi.obsTimeseriesStationDataAllParmsJson(
           store.gaugeDataForRange(req("start"), req("end")),
           store.gaugeSource, store.stations,
@@ -84,7 +84,7 @@ object IngestCli {
       case "ModelRunIngest" =>
         // SequenceIngest for one ADCIRC run dir (runModelIngest.py:553-580):
         // FORECAST_*/NOWCAST_* data + meta_* station files under --runDir.
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        val store = GaugeStore.open(spark, req("store"))
         store.vacuum().foreach(a => System.err.println(s"[vacuum] $a"))
         val n = modelRunIngest(spark, store,
           runDir = req("runDir"), modelRunId = req("modelRunID"),
@@ -97,7 +97,7 @@ object IngestCli {
         println(s"ingested $n model files")
 
       case "QueryForecast" =>
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        val store = GaugeStore.open(spark, req("store"))
         val df = QueryApi.forecastTimeseriesStationData(
           store.modelDataForTimemark(req("timemark").replace("T", " ")),
           store.modelSource, store.stations,
@@ -107,9 +107,9 @@ object IngestCli {
           df.columns.filterNot(_ == "time_stamp").toSeq))
 
       case "QueryNowcast" =>
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        val store = GaugeStore.open(spark, req("store"))
         // run_date-pruned like the QueryServe nowcast path; horizon
-        // contract documented on GaugeStore.modelDataForRange
+        // contract documented on SnapshotGaugeStore.modelDataForRange
         val df = QueryApi.nowcastTimeseriesStationData(
           store.modelDataForRange(req("start"), req("end"),
             opts.getOrElse("horizonDays", "35").toInt),
@@ -124,7 +124,7 @@ object IngestCli {
         // JSON request per stdin line, one JSON response per stdout
         // line, warm session across requests — the engine half of the
         // reference's REST serving surface (README.md:151-166)
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        val store = GaugeStore.open(spark, req("store"))
         System.err.println("[serve] ready (blank line or 'quit' ends)")
         QueryServe.serve(store,
           scala.io.Source.stdin.getLines(), println)
@@ -133,7 +133,7 @@ object IngestCli {
         // streaming obs ingest, one AvailableNow drain per catalog
         // source (cron-equivalent): the file-source checkpoint under
         // the store replaces the ledger anti-join for idempotence
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        val store = GaugeStore.open(spark, req("store"))
         store.vacuum().foreach(a => System.err.println(s"[vacuum] $a"))
         loadCatalog(spark, req("catalog")).foreach { meta =>
           graft.streaming.StreamingIngest.runOnce(spark, meta, store,
@@ -145,7 +145,7 @@ object IngestCli {
       case "StreamModelRuns" =>
         // drain run-manifest announcements (StreamingModelIngest):
         // each manifest row hands a completed run to modelRunIngest
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        val store = GaugeStore.open(spark, req("store"))
         store.vacuum().foreach(a => System.err.println(s"[vacuum] $a"))
         graft.streaming.StreamingModelIngest.runOnce(spark, store,
           req("watchDir"), s"${req("store")}/_checkpoints/model_manifests")
@@ -561,10 +561,11 @@ object IngestCli {
         println(s"""{"cosine_similarity":${row.getDouble(0)},"rolling_hash":${row.getLong(1)},"canonical_url":"${row.getString(2)}","snapshot_at_rows":$tvfN,"rows_after_sql_delete":$dmlN,"files_after_sql_optimize":$optN,"describe_history_rows":$histN,"v2_replace_rows":$v2N,"v2_truncate_rows":$v2T,"copy_into_reloaded":$copyN}""")
 
       case "Stats" =>
-        // operational table statistics (files/bytes/leaves + the worst
-        // leaf by file count — the compaction trigger signal); pure FS
-        // metadata walk, no Spark jobs
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        // operational table statistics: live files/bytes of the fact
+        // tables from their manifests; files/bytes/leaves + the worst
+        // leaf by file count (the compaction trigger signal) for the
+        // rest from a directory walk — metadata only, no Spark jobs
+        val store = GaugeStore.open(spark, req("store"))
         val tables = opts.getOrElse("tables",
           "gauge_data,model_data,ledger_obs,ledger_model,stations," +
             "gauge_source,model_source,apsviz_station,retain_obs_station")
@@ -583,9 +584,9 @@ object IngestCli {
 
       case "Rollup" =>
         // incremental daily OHLC serving tier: rebuilds only the
-        // (source, date) partitions whose fact counts drifted —
-        // idempotent, run on any cadence after ingest
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+        // (source, date) partitions the fact's CDC touched since the
+        // last run — idempotent, run on any cadence after ingest
+        val store = GaugeStore.open(spark, req("store"))
         val rebuilt = store.rollupDaily()
         if (rebuilt.isEmpty) println("rollup up to date, rebuilt 0 partition(s)")
         else {
@@ -611,7 +612,7 @@ object IngestCli {
         // plain path it is NOT idempotent; run it on a slower cadence.
         val store = GaugeStore.open(spark,
           opts.getOrElse("store", opts.getOrElse("index",
-            sys.error("missing --store or --index"))), opts.get("backend"))
+            sys.error("missing --store or --index"))))
         store.vacuum().foreach(a => System.err.println(s"[vacuum] $a"))
         val tables = (if (opts.contains("index"))
           opts.getOrElse("tables", "lists")
@@ -737,7 +738,7 @@ object IngestCli {
         val runDirs = HistoricalArchive.archive(man)
         println(s"archived ${man.count()} files into ${runDirs.length} run dirs")
         if (opts.get("ingest").contains("true")) {
-          val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
+          val store = GaugeStore.open(spark, req("store"))
           store.vacuum().foreach(a => System.err.println(s"[vacuum] $a"))
           val runs = man.select("run_id", "ensemble_db", "ADCIRCgrid_db",
             "storm_db", "forcing", "instance", "advisory_db", "timemark")

@@ -17,7 +17,7 @@ package graft.domain
   * bad request. Blank line or `quit` ends the session.
   *
   * Scale: dims stay broadcast; each request reads ONLY the fact
-  * partitions its time range prunes to (`gaugeDataForRange` /
+  * files its time range prunes to (`gaugeDataForRange` /
   * `modelDataForTimemark`), so request cost is window-bounded no matter
   * how large the store grows.
   */
@@ -83,12 +83,12 @@ object QueryServe {
           QueryApi.jsonAgg(df, "time_stamp",
             df.columns.filterNot(_ == "time_stamp").toSeq)
         case "get_nowcast_timeseries_station_data" =>
-          // run_date-pruned scan: a nowcast row's run timemark sits
+          // run-day-pruned scan: a nowcast row's run timemark sits
           // within the horizon of its `time` (nowcast segments are
-          // emitted at their own run's clock), so only partitions near
+          // emitted at their own run's clock), so only files near
           // [start, end] can contribute — never the whole run history.
           // The silent-pruning CONTRACT and the 35-day default live on
-          // GaugeStore.modelDataForRange; requests override per call.
+          // SnapshotGaugeStore.modelDataForRange; requests override per call.
           val df = QueryApi.nowcastTimeseriesStationData(
             store.modelDataForRange(p("start"), p("end"),
               req.getOrElse("horizonDays", "35").toInt),

@@ -5,40 +5,35 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.SnapshotTable
 
-/** [[GaugeStore]] with the FACT tables (`gauge_data`, `model_data`)
-  * backed by manifest-log [[SnapshotTable]]s instead of Hive-style
-  * partition directories — the object-store deployment the base
-  * class's scaladoc defers to (its park-and-swap protocol needs
-  * atomic DIRECTORY rename; the manifest log needs only
-  * create-if-absent on one small file), plus what the log buys on any
-  * filesystem: snapshot-isolated readers during rewrites, time
-  * travel, CDC ([[SnapshotTable.diff]]), and metadata-only scan
-  * pruning from per-file `obs_day`/`run_day` stats in place of
-  * directory pruning (the reference pipeline's read scopes,
-  * get_obs_timeseries_station_data.sql:24, prune identically either
-  * way — BETWEEN on the day number vs. directory names).
+/** The [[GaugeStore]] implementation: its FACT tables (`gauge_data`,
+  * `model_data`) are manifest-log [[SnapshotTable]]s. The log needs
+  * only create-if-absent on one small file per commit (no atomic
+  * DIRECTORY rename), so it runs on object stores, and it buys on any
+  * filesystem: snapshot-isolated readers during rewrites, time travel,
+  * CDC ([[SnapshotTable.diff]]), and metadata-only scan pruning from
+  * per-file `obs_day`/`run_day` stats (the reference pipeline's read
+  * scopes, get_obs_timeseries_station_data.sql:24, become BETWEEN on
+  * the day number).
   *
-  * Dimension and ledger tables stay plain parquet: they are
-  * O(#stations)/O(#files)-sized, rewritten through the driver, and
-  * gain nothing from a manifest log.
+  * Dimension and ledger tables stay plain parquet in the base class:
+  * they are O(#stations)/O(#files)-sized, rewritten through the
+  * driver, and gain nothing from a manifest log.
   *
-  * The multi-table [[atomicCommit]] keeps its exact CLI surface; only
-  * [[publishCommit]] changes: staged fact parquet becomes ONE tagged
-  * manifest commit (tag = commit id), so a crash-rerun of a stranded
-  * commit is idempotent through [[SnapshotTable.appendIfAbsent]]
-  * rather than through unique part-file names.
+  * [[publishCommit]] turns the staged fact parquet of an
+  * [[atomicCommit]] into ONE tagged manifest commit per fact table
+  * (tag = commit id), so a crash-rerun of a stranded commit is
+  * idempotent through [[SnapshotTable.appendIfAbsent]].
   *
-  * Daily rollup maintenance is CDC-DRIVEN here: instead of the base
-  * class's staleness scan (two control-plane aggregates over fact and
-  * rollup), [[rollupDaily]] diffs the fact table since the version the
-  * rollup last reflected and rebuilds exactly the (source, date)
-  * groups the CDC touched — on append-only ranges the diff reads only
-  * the NEW files, so a day's ingest costs a day's scan at any table
-  * size. OHLC open/close/high/low are rebuilt per group, not
-  * incrementally folded — deletes can invalidate extrema without a
-  * rescan, so group-scoped recompute is the correct maintenance
-  * algebra for them (COUNT/SUM-only states can use
-  * [[graft.sources.IncrementalAgg]] instead).
+  * Daily rollup maintenance is CDC-DRIVEN: [[rollupDaily]] diffs the
+  * fact table since the version the rollup last reflected and
+  * rebuilds exactly the (source, date) groups the CDC touched — on
+  * append-only ranges the diff reads only the NEW files, so a day's
+  * ingest costs a day's scan at any table size. OHLC
+  * open/close/high/low are rebuilt per group, not incrementally folded
+  * — deletes can invalidate extrema without a rescan, so group-scoped
+  * recompute is the correct maintenance algebra for them
+  * (COUNT/SUM-only states can use [[graft.sources.IncrementalAgg]]
+  * instead).
   */
 class SnapshotGaugeStore(spark2: SparkSession, root2: String)
     extends GaugeStore(spark2, root2) {
@@ -51,11 +46,10 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
   private def dayOf(date: String): Long =
     java.time.LocalDate.parse(date.take(10)).toEpochDay
 
-  /** Fact rows + the derived columns the snapshot fact carries:
-    * `data_source_part`/`obs_date` exactly like the base layout (so
-    * rollup grouping and scoped repairs read identically) plus
-    * `obs_day` (epoch day, LONG) — the manifest-stat pruning key that
-    * replaces directory pruning. */
+  /** Fact rows + the derived columns the gauge fact carries:
+    * `data_source_part`/`obs_date` (rollup grouping and scoped
+    * repairs) plus `obs_day` (epoch day, LONG) — the manifest-stat
+    * pruning key. */
   private def withGaugeParts(df: DataFrame, dataSource: String): DataFrame =
     df.withColumn("data_source_part", lit(dataSource))
       .withColumn("obs_date", to_date(col("time")))
@@ -78,9 +72,10 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
   override def gaugeData: DataFrame =
     gaugeTable.read().drop("data_source_part", "obs_date", "obs_day")
 
-  /** File-pruned fact scan: the manifest `obs_day` stats bound IO the
-    * way obs_date directory pruning does in the base layout; the
-    * row-level day predicate still applies downstream. */
+  /** File-pruned fact scan: the manifest `obs_day` stats bound IO to
+    * the files of the window — without this, a [start,end] query over
+    * 100 TB scans every file; the row-level day predicate still
+    * applies downstream. */
   override def gaugeDataForRange(startDate: String, endDate: String): DataFrame = {
     val (lo, hi) = (dayOf(startDate), dayOf(endDate))
     gaugeTable.readPruned("obs_day", lo, hi)
@@ -97,8 +92,8 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
     * Conflicts with a concurrent keyed commit re-resolve and retry —
     * the loser recomputes against the new head. */
   override def compactGaugeData(
-      scope: Option[(String, String)] = None,
-      dataSource: Option[String] = None): Unit = {
+      scope: Option[(String, String)],
+      dataSource: Option[String]): Unit = {
     if (!hasGaugeData) return
     var attempt = 0
     while (attempt < 20) {
@@ -174,8 +169,23 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
       .drop("run_date", "run_day")
   }
 
+  /** Pruned model scan for a TIME-range query (the nowcast serving
+    * path): a nowcast row's run timemark sits within `horizonDays` of
+    * the row's `time` by construction (each run contributes the
+    * nowcast segment at its own clock), so only run days inside the
+    * widened [start, end] window can hold qualifying rows. Without
+    * this, years of model runs mean every nowcast request reads every
+    * file; with it, request IO is window-bounded like
+    * [[gaugeDataForRange]]. The widening is symmetric so the bound is
+    * safe whichever side of `time` a deployment's run clock lands on.
+    *
+    * CONTRACT: `horizonDays` must bound the deployment's real
+    * |time − timemark| for the rows being served — a run outside it
+    * is pruned SILENTLY. The default (35 days) is generous even for
+    * monthly run cadences; a deployment with longer hindcasts must
+    * pass its own. */
   override def modelDataForRange(startDate: String, endDate: String,
-      horizonDays: Int = 35): DataFrame = {
+      horizonDays: Int): DataFrame = {
     val (lo, hi) = (dayOf(startDate) - horizonDays, dayOf(endDate) + horizonDays)
     modelTable.readPruned("run_day", lo, hi)
       .filter(col("run_day").between(lo, hi))
@@ -185,9 +195,10 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
   override def hasModelData: Boolean = modelTable.currentVersion > 0
 
   /** Rerun repair: replace the repaired run-dates' rows in one keyed
-    * commit, preserving other runs' rows sharing the same files. The
-    * repaired-run list is O(few) — one driver collect, like the base
-    * class's partition swap loop. */
+    * commit, preserving other runs' rows sharing the same files. Only
+    * files whose `run_day` stats meet the repaired days are rewritten,
+    * so a rerun costs one run's data, not the table size. The
+    * repaired-run list is O(few) — one driver collect. */
   override def swapModelRunDatePartitions(df: DataFrame): Unit = {
     val repaired = withModelParts(df)
     // a repair is per-run: null-timemark rows have no run to replace
@@ -366,25 +377,42 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
     stale
   }
 
-  /** Small-file maintenance for the snapshot facts: a manifest-commit
-    * rewrite via [[SnapshotTable.compact]] (older snapshots keep
-    * reading the originals until [[SnapshotTable.vacuum]]), sized to
-    * `targetBytes`. Idempotent like the base path: an already-packed
-    * table (and no z-order request) is left alone. Non-fact tables
-    * fall through to the base bin-pack. */
-  override def binPackCompact(
-      table: String, targetBytes: Long = 128L << 20,
-      parallelism: Int = 8,
-      zorderCols: Seq[String] = Nil, zorderBits: Int = 4): Seq[String] = {
-    val snap = table match {
-      case "gauge_data" if hasGaugeData => Some((gaugeTable, "obs_day"))
-      case "model_data" if hasModelData => Some((modelTable, "run_day"))
-      case "gauge_data" | "model_data" => return Seq.empty
+  /** The manifest table and its pruning-day column behind a fact
+    * table name; None for every other table. */
+  private def factTable(table: String): Option[(SnapshotTable, String)] =
+    table match {
+      case "gauge_data" => Some((gaugeTable, "obs_day"))
+      case "model_data" => Some((modelTable, "run_day"))
       case _ => None
     }
-    snap match {
+
+  /** Fact tables report their LIVE snapshot from the manifest — files
+    * and bytes the current version references. A directory walk would
+    * count `_log` manifests and files already removed but not yet
+    * vacuumed. */
+  override def tableStats(table: String): Option[Map[String, Any]] =
+    factTable(table) match {
+      case Some((t, _)) =>
+        if (!tableExists(table)) None
+        else Some(Map("table" -> table, "files" -> t.files().size,
+          "bytes" -> t.liveBytes()))
+      case None => super.tableStats(table)
+    }
+
+  /** Small-file maintenance for the facts: a manifest-commit rewrite
+    * via [[SnapshotTable.compact]] (older snapshots keep reading the
+    * originals until [[SnapshotTable.vacuum]]), sized to
+    * `targetBytes`. Idempotent: an already-packed table (and no
+    * z-order request) is left alone. Non-fact tables go through the
+    * base class's leaf bin-pack. */
+  override def binPackCompact(
+      table: String, targetBytes: Long,
+      parallelism: Int,
+      zorderCols: Seq[String], zorderBits: Int): Seq[String] = {
+    factTable(table) match {
       case None => super.binPackCompact(table, targetBytes, parallelism,
         zorderCols, zorderBits)
+      case Some((t, _)) if t.currentVersion == 0 => Seq.empty
       case Some((t, dayCol)) =>
         // gauge facts also re-record the data_source_part string
         // bounds the rewrite would otherwise lose — source-scoped

@@ -4,11 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 /** Manifest-log table format: snapshot isolation + time travel on
-  * immutable parquet, the variant [[graft.domain.GaugeStore]]'s
-  * scaladoc defers to for object stores (its commit protocol needs
-  * atomic DIRECTORY rename; this needs only "create fails if the
-  * target exists" on one small FILE — the guarantee S3-style stores
-  * and every HDFS/POSIX filesystem give).
+  * immutable parquet, the layout of [[graft.domain.GaugeStore]]'s fact
+  * tables. It needs no atomic DIRECTORY rename, only "create fails if
+  * the target exists" on one small FILE — the guarantee S3-style
+  * stores and every HDFS/POSIX filesystem give.
   *
   * Layout under `root`:
   *   data/<commit-uuid>-partNNNNN.parquet   — immutable data files

@@ -26,7 +26,7 @@ class AtomicCommitSpec extends SparkSuite {
 
   test("crash AFTER the commit point: vacuum finalizes, zero dup, zero lost") {
     val root = Files.createTempDirectory("graft-ac1").toString
-    val store = new GaugeStore(spark, root)
+    val store = GaugeStore.open(spark, root)
     // pre-existing committed state
     store.atomicCommit("c0") { staging =>
       store.stageGaugeData(factRows("2023-04-23 10:00:00"), "tidal_gauge", staging)
@@ -57,7 +57,7 @@ class AtomicCommitSpec extends SparkSuite {
 
   test("crash BEFORE the commit point: staging is swept, nothing published") {
     val root = Files.createTempDirectory("graft-ac2").toString
-    val store = new GaugeStore(spark, root)
+    val store = GaugeStore.open(spark, root)
     store.atomicCommit("c0") { staging =>
       store.stageLedger(ledgerRow("a.csv"), staging)
     }
@@ -81,7 +81,7 @@ class AtomicCommitSpec extends SparkSuite {
       "TIME,STATION,WATER_LEVEL\n2023-04-23T10:00:00,8410140,1.10".getBytes)
     Files.write(Paths.get(root, "geom.csv"),
       "8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A".getBytes)
-    val store = new GaugeStore(spark, s"$root/store")
+    val store = GaugeStore.open(spark, s"$root/store")
     store.writeStations(ObsIngest.seedStations(spark, s"$root/geom.csv"))
     val meta = SourceMeta("tidal_gauge", "noaa", "noaa", "water_level",
       "noaaweb_stationdata_water_level", "tidal", "m")

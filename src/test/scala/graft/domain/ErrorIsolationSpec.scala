@@ -17,7 +17,7 @@ class ErrorIsolationSpec extends SparkSuite {
     Files.write(Paths.get(root, "geom.csv"),
       ("8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A\n" +
        "44007,43.5,-70.1,gmt,NDBC,Buoy,ocean,us,me,,01C").getBytes)
-    val store = new GaugeStore(spark, s"$root/store")
+    val store = GaugeStore.open(spark, s"$root/store")
     store.writeStations(ObsIngest.seedStations(spark, s"$root/geom.csv"))
 
     // good source file
@@ -64,15 +64,19 @@ class ErrorIsolationSpec extends SparkSuite {
     val harvest = s"$root/harvest"; Files.createDirectories(Paths.get(harvest))
     Files.write(Paths.get(root, "geom.csv"),
       "8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A".getBytes)
-    val store = new GaugeStore(spark, s"$root/store")
+    val store = GaugeStore.open(spark, s"$root/store")
     store.writeStations(ObsIngest.seedStations(spark, s"$root/geom.csv"))
 
-    // same source: one good file, one structurally broken file — the
-    // batch scan FAILFASTs, then the per-file retry isolates the damage
+    // same source: one good file and broken ones — the batch scan
+    // FAILFASTs, then the per-file retry isolates the damage
     Files.write(Paths.get(harvest, "noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv"),
       "TIME,STATION,WATER_LEVEL\n2023-04-23T10:00:00,8410140,1.10".getBytes)
     Files.write(Paths.get(harvest, "noaaweb_stationdata_water_level_2023-04-23T18_00_00.csv"),
       "TIME,STATION,WATER_LEVEL\nnot-a-time,8410140,not-a-number".getBytes)
+    // a file whose TIME parses but whose measure does not gets past
+    // the ledger bounds scan and fails inside the commit's stage step
+    Files.write(Paths.get(harvest, "noaaweb_stationdata_water_level_2023-04-23T19_00_00.csv"),
+      "TIME,STATION,WATER_LEVEL\n2023-04-23T19:00:00,8410140,not-a-number".getBytes)
 
     val meta = SourceMeta("tidal_gauge", "noaa", "noaa", "water_level",
       "noaaweb_stationdata_water_level", "tidal", "m")
@@ -83,11 +87,16 @@ class ErrorIsolationSpec extends SparkSuite {
     val ledgered = store.ledger.select("file_name").collect().map(_.getString(0))
     assert(ledgered.toSeq ==
       Seq("noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv"))
-    // the bad file stays unledgered → it is retried (and re-skipped)
+    // each bad file stays unledgered → it is retried (and re-skipped)
     // on the next run without blocking anything
     val n2 = IngestCli.sequenceIngest(spark, store, Seq(meta), harvest,
       lit("2023-04-24 01:00:00"))
     assert(n2 == 0)
     assert(store.gaugeData.count() == 1)
+    // every attempt that failed inside its commit dropped its
+    // uncommitted staging dir instead of leaving it behind
+    val staging = new java.io.File(s"$root/store/_staging")
+    assert(!staging.exists() || staging.list().isEmpty,
+      s"staging residue: ${staging.list().mkString(", ")}")
   }
 }

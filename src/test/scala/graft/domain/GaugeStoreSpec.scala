@@ -19,55 +19,35 @@ class GaugeStoreSpec extends SparkSuite {
       .select("source_id", "timemark", "time", "water_level", "wave_height",
         "wind_speed", "air_pressure", "stream_elevation", "flow_volume")
 
-  test("partitioned layout + time-range scan prunes partitions") {
-    val root = Files.createTempDirectory("graft-store").toString
-    val store = new GaugeStore(spark, root)
-    store.appendGaugeData(mkFact(Seq(
-      (1L, "2023-04-23 12:00:00", "2023-04-22 10:00:00", 1.0),
-      (1L, "2023-04-23 12:00:00", "2023-04-23 10:00:00", 2.0),
-      (1L, "2023-04-23 12:00:00", "2023-04-24 10:00:00", 3.0))), "tidal_gauge")
-
-    // physical layout: data_source_part=/obs_date= directories
-    val dirs = new java.io.File(s"$root/gauge_data/data_source_part=tidal_gauge").list()
-    assert(dirs.count(_.startsWith("obs_date=")) == 3)
-
-    val pruned = store.gaugeDataForRange("2023-04-23 00:00:00", "2023-04-23 23:59:59")
-    assert(pruned.collect().map(_.getAs[Double]("water_level")).toSeq == Seq(2.0))
-    // the obs_date predicate must reach the scan as a partition filter
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("obs_date"))
-  }
-
   test("modelDataForRange prunes run_date partitions to the widened window") {
     val root = Files.createTempDirectory("graft-store-mdr").toString
-    val store = new GaugeStore(spark, root)
-    val fact = Seq(
+    val store = GaugeStore.open(spark, root)
+    // one file per run, so file pruning is observable per run day
+    Seq(
       ("2023-01-01 12:00:00", "2023-01-01 13:00:00", 1.0),
       ("2023-04-23 12:00:00", "2023-04-23 13:00:00", 2.0),
-      ("2023-09-30 12:00:00", "2023-09-30 13:00:00", 3.0))
-      .toDF("tm", "t", "water_level")
-      .select(lit(7L).as("source_id"), col("tm").cast("timestamp").as("timemark"),
-        col("t").cast("timestamp").as("time"), col("water_level"))
-    store.appendModelData(fact)
+      ("2023-09-30 12:00:00", "2023-09-30 13:00:00", 3.0)).foreach { r =>
+      store.appendModelData(Seq(r).toDF("tm", "t", "water_level")
+        .select(lit(7L).as("source_id"), col("tm").cast("timestamp").as("timemark"),
+          col("t").cast("timestamp").as("time"), col("water_level")).coalesce(1))
+    }
     val pruned = store.modelDataForRange(
       "2023-04-20 00:00:00", "2023-04-25 00:00:00", horizonDays = 7)
-    // only the April run survives the partition filter
+    // only the April run survives the window
     assert(pruned.collect().map(_.getAs[Double]("water_level")).toSeq == Seq(2.0))
-    // the run_date predicate must reach the scan as a partition filter
-    // (inputFiles reports pre-pruning listing, so assert on the plan +
-    // the post-execution numFiles metric)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("run_date"))
-    val scans = pruned.queryExecution.executedPlan.collectWithSubqueries {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(scans.nonEmpty && scans.head.metrics("numFiles").value == 1,
-      "January and September run partitions must not be read")
+    // and the January and September runs' files are never planned
+    assert(pruned.inputFiles.length == 1,
+      s"read ${pruned.inputFiles.length} of 3 run files — manifest pruning lost")
   }
+
+  /** One ledgered file per run, committed the way ingest commits. */
+  private def seedModelLedger(store: GaugeStore, runs: String*): Unit =
+    store.atomicCommit(store.newCommitId("model"))(store.stageModelLedger(
+      runs.map(r => (s"$r.csv", r, true)).toDF("file_name", "model_run_id", "ingested"), _))
 
   test("cross-batch compaction keeps latest timemark per (source,time)") {
     val root = Files.createTempDirectory("graft-store2").toString
-    val store = new GaugeStore(spark, root)
+    val store = GaugeStore.open(spark, root)
     store.appendGaugeData(mkFact(Seq(
       (1L, "2023-04-23 12:00:00", "2023-04-23 10:00:00", 1.0))), "tidal_gauge")
     store.appendGaugeData(mkFact(Seq(
@@ -80,7 +60,7 @@ class GaugeStoreSpec extends SparkSuite {
 
   test("scoped compaction repairs only partitions inside the date range") {
     val root = Files.createTempDirectory("graft-store4").toString
-    val store = new GaugeStore(spark, root)
+    val store = GaugeStore.open(spark, root)
     // duplicates on two different dates
     store.appendGaugeData(mkFact(Seq(
       (1L, "2023-04-23 12:00:00", "2023-04-22 10:00:00", 1.0),
@@ -105,25 +85,12 @@ class GaugeStoreSpec extends SparkSuite {
     assert(store.gaugeData.filter(col("water_level") === 8.0).count() == 1)
   }
 
-  test("ledger mark-ingested flips only the named files") {
-    val root = Files.createTempDirectory("graft-store3").toString
-    val store = new GaugeStore(spark, root)
-    val ledger = Seq(("a.csv", false), ("b.csv", false))
-      .toDF("file_name", "ingested")
-      .withColumn("processing_datetime", lit("2023-04-23 12:00:00").cast("timestamp"))
-    store.appendLedger(ledger)
-    store.markIngested(Seq("a.csv"))
-    val got = store.ledger.collect()
-      .map(r => r.getAs[String]("file_name") -> r.getAs[Boolean]("ingested")).toMap
-    assert(got == Map("a.csv" -> true, "b.csv" -> false))
-  }
-
   test("vacuum restores a parked backup after a simulated swap crash and sweeps strays") {
     val root = Files.createTempDirectory("graft-store4").toString
-    val store = new GaugeStore(spark, root)
-    val ledger = Seq(("a.csv", false)).toDF("file_name", "ingested")
-      .withColumn("processing_datetime", lit("2023-04-23 12:00:00").cast("timestamp"))
-    store.appendLedger(ledger)
+    val store = GaugeStore.open(spark, root)
+    store.atomicCommit("c0")(store.stageLedger(Seq(("a.csv", true))
+      .toDF("file_name", "ingested")
+      .withColumn("processing_datetime", lit("2023-04-23 12:00:00").cast("timestamp")), _))
     // simulate the swapInto crash window: live parked as backup, tmp
     // written but never swapped in
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -143,28 +110,21 @@ class GaugeStoreSpec extends SparkSuite {
 
   test("vacuum restores parked PARTITION dirs when the table itself survived") {
     val root = Files.createTempDirectory("graft-store5").toString
-    val store = new GaugeStore(spark, root)
-    val fact = Seq(
-      ("2023-04-23 12:00:00", "2023-04-23 13:00:00", 1.0),
-      ("2023-04-24 12:00:00", "2023-04-24 13:00:00", 2.0))
-      .toDF("tm", "t", "water_level")
-      .select(lit(7L).as("source_id"), col("tm").cast("timestamp").as("timemark"),
-        col("t").cast("timestamp").as("time"), col("water_level"),
-        lit(null).cast("double").as("wave_height"), lit("x").as("proc"))
-    store.appendModelData(fact)
-    assert(store.modelData.count() == 2)
-    // simulate a partition swap crash: one run_date parked into the
-    // backup, never replaced — the table dir itself still exists
+    val store = GaugeStore.open(spark, root)
+    seedModelLedger(store, "r1", "r2")
+    assert(store.modelLedger.count() == 2)
+    // simulate a partition swap crash: one run's partition parked into
+    // the backup, never replaced — the table dir itself still exists
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
-    fs.mkdirs(p("model_data_pbak_99"))
-    assert(fs.rename(p("model_data/run_date=2023-04-23"),
-      p("model_data_pbak_99/run_date=2023-04-23")))
-    assert(store.modelData.count() == 1)           // partition gone
+    fs.mkdirs(p("ledger_model_pbak_99"))
+    assert(fs.rename(p("ledger_model/model_run_id=r1"),
+      p("ledger_model_pbak_99/model_run_id=r1")))
+    assert(store.modelLedger.count() == 1)         // partition gone
     val actions = store.vacuum()
-    assert(actions.exists(_.contains("restored model_data/run_date=2023-04-23")))
-    assert(store.modelData.count() == 2)           // partition back
-    assert(!fs.exists(p("model_data_pbak_99")))
+    assert(actions.exists(_.contains("restored ledger_model/model_run_id=r1")), actions.toString)
+    assert(store.modelLedger.count() == 2)         // partition back
+    assert(!fs.exists(p("ledger_model_pbak_99")))
   }
 
   test("vacuum does NOT mine a whole-table backup for partitions the rewrite dropped") {
@@ -173,27 +133,20 @@ class GaugeStoreSpec extends SparkSuite {
     // dropped), the superseded full copy sits in _bak_. Restoring that
     // partition would resurrect deleted data.
     val root = Files.createTempDirectory("graft-store6").toString
-    val store = new GaugeStore(spark, root)
-    val fact = Seq(
-      ("2023-04-23 12:00:00", "2023-04-23 13:00:00", 1.0),
-      ("2023-04-24 12:00:00", "2023-04-24 13:00:00", 2.0))
-      .toDF("tm", "t", "water_level")
-      .select(lit(7L).as("source_id"), col("tm").cast("timestamp").as("timemark"),
-        col("t").cast("timestamp").as("time"), col("water_level"),
-        lit(null).cast("double").as("wave_height"), lit("x").as("proc"))
-    store.appendModelData(fact)
+    val store = GaugeStore.open(spark, root)
+    seedModelLedger(store, "r1", "r2")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
     // park the FULL old table (as swapInto does), make the live table a
-    // rewrite that dropped the 04-23 partition
-    assert(fs.rename(p("model_data"), p("model_data_bak_77")))
-    fs.mkdirs(p("model_data"))
-    assert(fs.rename(p("model_data_bak_77/run_date=2023-04-24"),
-      p("model_data/run_date=2023-04-24")))
+    // rewrite that dropped the r1 partition
+    assert(fs.rename(p("ledger_model"), p("ledger_model_bak_77")))
+    fs.mkdirs(p("ledger_model"))
+    assert(fs.rename(p("ledger_model_bak_77/model_run_id=r2"),
+      p("ledger_model/model_run_id=r2")))
     val actions = store.vacuum()
-    assert(!actions.exists(_.contains("restored model_data/")),
+    assert(!actions.exists(_.contains("restored ledger_model/")),
       s"whole-table backup was mined for partitions: $actions")
-    assert(store.modelData.count() == 1)           // dropped stays dropped
-    assert(!fs.exists(p("model_data_bak_77")))     // superseded copy swept
+    assert(store.modelLedger.count() == 1)         // dropped stays dropped
+    assert(!fs.exists(p("ledger_model_bak_77")))   // superseded copy swept
   }
 }

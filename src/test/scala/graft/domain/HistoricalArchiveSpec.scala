@@ -102,7 +102,7 @@ class HistoricalArchiveSpec extends SparkSuite {
     // the archived layout is exactly what modelRunIngest consumes
     Files.write(Paths.get(root, "geom.csv"),
       "8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A".getBytes)
-    val store = new GaugeStore(spark, s"$root/store")
+    val store = GaugeStore.open(spark, s"$root/store")
     store.writeStations(ObsIngest.seedStations(spark, s"$root/geom.csv"))
     val n = graft.IngestCli.modelRunIngest(spark, store, runDir,
       "4358-2023042306-gfsforecast", "2023-04-23T12:00:00", "gfsforecast",
@@ -137,9 +137,7 @@ class HistoricalArchiveSpec extends SparkSuite {
     val runDir = s"$root/4358-2023042306-gfsforecast"
     assert(Files.exists(Paths.get(runDir, "FORECAST_NOAASTATIONS.csv")))
     assert(Files.exists(Paths.get(runDir, "meta_FORECAST_NOAASTATIONS.csv")))
-    // the CLI created the store (snapshot-backed by the r11 default) —
-    // read it back through the auto-detecting factory, never a
-    // hardcoded backend
+    // the CLI created the store — read it back through the factory
     val store = GaugeStore.open(spark, s"$root/store")
     assert(store.modelData.count() == 2)            // the good file's rows
     assert(store.modelLedger.filter(col("ingested")).count() == 1)

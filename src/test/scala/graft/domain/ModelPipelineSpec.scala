@@ -134,7 +134,7 @@ class ModelPipelineSpec extends SparkSuite {
     writeRun(0.5)
     Files.write(Paths.get(runDir, "meta_FORECAST_NOAASTATIONS.csv"),
       "STATION\n8410140".getBytes)
-    val store = new GaugeStore(spark, s"$root/store")
+    val store = GaugeStore.open(spark, s"$root/store")
     store.writeStations(stations)
 
     def ingest(now: String) = graft.IngestCli.modelRunIngest(spark, store,

@@ -26,7 +26,7 @@ class QueryServeSpec extends SparkSuite {
       ("TIME,STATION,WATER_LEVEL\n" +
         "2023-04-23T10:00:00,8410140,1.10\n" +
         "2023-04-23T11:00:00,8410140,1.25").getBytes)
-    val s = new GaugeStore(spark, storeDir)
+    val s = GaugeStore.open(spark, storeDir)
     s.writeStations(ObsIngest.seedStations(spark, s"$dir/geom_noaa.csv"))
     graft.IngestCli.sequenceIngest(spark, s, Seq(meta), dir,
       lit("2023-04-24 00:00:00").cast("timestamp"), deleteProcessed = false)
@@ -88,12 +88,15 @@ class QueryServeSpec extends SparkSuite {
       out(0).contains("\"time_stamp\":\"2023-04-23 10:30:00\"") &&
       out(0).contains("\"GFSFORECAST_EC95D\":0.81") &&
       out(0).contains("\"time_stamp\":\"2023-04-23 11:30:00\""), out(0))
-    // the serve path reads the PRUNED scan: run_date must appear as a
-    // partition filter in the frame the op is built over
-    val plan = store.modelDataForRange(
-      "2023-04-23 00:00:00", "2023-04-24 00:00:00", 35)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("run_date"))
+    // the serve path reads the PRUNED scan: a run far outside the
+    // widened window never reaches the frame the op is built over
+    store.appendModelData(fact.drop("model_run_id")
+      .withColumn("timemark", lit("2023-09-30 12:00:00").cast("timestamp")))
+    val pruned = store.modelDataForRange(
+      "2023-04-23 00:00:00", "2023-04-24 00:00:00", 35).inputFiles.toSet
+    assert(pruned.nonEmpty && pruned ==
+      store.modelDataForTimemark("2023-04-23 12:00:00").inputFiles.toSet)
+    assert(store.modelData.inputFiles.length > pruned.size)
   }
 
   test("parse handles escaped quotes and ignores non-string noise") {

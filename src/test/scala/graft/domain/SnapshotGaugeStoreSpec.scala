@@ -4,12 +4,10 @@ import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** [[SnapshotGaugeStore]]-specific behavior beyond the shared
-  * pipeline/rollup scenarios (SnapshotObsPipelineSpec /
-  * SnapshotRollupSpec): manifest-stat file pruning standing in for
-  * directory pruning, copy-on-write scoped repairs with time travel,
-  * idempotent crash re-publication of the multi-table commit, and the
-  * backend auto-detecting factory. */
+/** [[SnapshotGaugeStore]] behavior beyond the pipeline/rollup
+  * scenarios (ObsPipelineSpec / RollupSpec): manifest-stat file
+  * pruning, copy-on-write scoped repairs with time travel, idempotent
+  * crash re-publication of the multi-table commit, and the factory. */
 class SnapshotGaugeStoreSpec extends SparkSuite {
   import spark.implicits._
 
@@ -185,41 +183,43 @@ class SnapshotGaugeStoreSpec extends SparkSuite {
     assert(rows == Set(1L -> 9.0, 2L -> 5.0), s"got $rows")
   }
 
-  test("GaugeStore.open auto-detects the snapshot backend from the marker") {
+  test("GaugeStore.open refuses a plain-layout root and writes nothing into an --index dir") {
     val root = Files.createTempDirectory("snapopen").toString
-    val created = GaugeStore.open(spark, root, Some("snapshot"))
+    val created = GaugeStore.open(spark, root)
     assert(created.isInstanceOf[SnapshotGaugeStore])
     created.appendGaugeData(fact((1L, "2023-04-23 00:00:00", "2023-04-23 01:00:00", 1.0)), "tidal_gauge")
-    // later opens pass no backend (the CLI's default) and must route
-    // to the same backend — mixing would read the manifest dirs as raw
-    // parquet
-    val reopened = GaugeStore.open(spark, root)
-    assert(reopened.isInstanceOf[SnapshotGaugeStore])
-    assert(reopened.gaugeData.count() == 1)
-    // NEW stores default to the snapshot backend (round-11 ADR) and
-    // stamp the marker so every later open stays consistent
+    assert(GaugeStore.open(spark, root).gaugeData.count() == 1)
+    // a root laid out by the removed park-and-swap fact backend (Hive
+    // partition dirs under either fact table) is refused, not read as
+    // a manifest table
+    val plainGauge = Files.createTempDirectory("plaingauge").toString
+    fact((1L, "2023-04-23 00:00:00", "2023-04-23 01:00:00", 1.0))
+      .withColumn("data_source_part", lit("tidal_gauge"))
+      .write.partitionBy("data_source_part").parquet(s"$plainGauge/gauge_data")
+    val plainModel = Files.createTempDirectory("plainmodel").toString
+    model((1L, "2023-04-23 00:00:00", "2023-04-23 01:00:00", 1.0))
+      .withColumn("run_date", to_date(col("timemark")))
+      .write.partitionBy("run_date").parquet(s"$plainModel/model_data")
+    Seq(plainGauge -> "gauge_data", plainModel -> "model_data").foreach {
+      case (r, table) =>
+        val err = intercept[IllegalArgumentException](GaugeStore.open(spark, r))
+        assert(err.getMessage.contains(s"plain-layout $table"), err.getMessage)
+    }
+    // opening writes nothing: neither into a fresh root nor into a
+    // BuildAnnIndex layout that `Compact --index` opens as a store
+    def tree(r: String): Set[String] = {
+      val s = Files.walk(Paths.get(r))
+      try s.toArray.map(_.toString).toSet finally s.close()
+    }
     val freshRoot = Files.createTempDirectory("freshopen").toString
-    val fresh = GaugeStore.open(spark, freshRoot)
-    assert(fresh.isInstanceOf[SnapshotGaugeStore])
-    assert(Files.exists(Paths.get(freshRoot, "_backend")))
-    // an EXISTING plain store (content on disk, no marker, no manifest
-    // log) keeps opening plain — pre-ADR stores never migrate silently
-    val plainRoot = Files.createTempDirectory("plainopen").toString
-    val legacy = new GaugeStore(spark, plainRoot)
-    legacy.appendGaugeData(fact((1L, "2023-04-23 00:00:00", "2023-04-23 01:00:00", 1.0)), "tidal_gauge")
-    val plain = GaugeStore.open(spark, plainRoot)
-    assert(!plain.isInstanceOf[SnapshotGaugeStore])
-    assert(plain.gaugeData.count() == 1)
-    // explicit opt-out still creates a plain store on a fresh dir
-    val optOutRoot = Files.createTempDirectory("optout").toString
-    assert(!GaugeStore.open(spark, optOutRoot, Some("plain"))
-      .isInstanceOf[SnapshotGaugeStore])
-    // an explicit backend CONTRADICTING the on-disk layout is refused —
-    // mixing would read manifest dirs as raw parquet (or plant a log
-    // inside a plain table)
-    intercept[IllegalArgumentException](
-      GaugeStore.open(spark, root, Some("plain")))       // snapshot store
-    intercept[IllegalArgumentException](
-      GaugeStore.open(spark, plainRoot, Some("snapshot"))) // plain store
+    GaugeStore.open(spark, freshRoot)
+    assert(tree(freshRoot) == Set(freshRoot))
+    val index = Files.createTempDirectory("indexopen").toString
+    model((1L, "2023-04-23 00:00:00", "2023-04-23 01:00:00", 1.0))
+      .withColumn("centroid_id", lit(0))
+      .write.partitionBy("centroid_id").parquet(s"$index/lists")
+    val before = tree(index)
+    GaugeStore.open(spark, index).vacuum()
+    assert(tree(index) == before)
   }
 }

@@ -20,7 +20,7 @@ class StreamingIngestSpec extends SparkSuite {
     Files.write(Paths.get(root, "geom.csv"),
       "8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A".getBytes)
 
-    val store = new GaugeStore(spark, storeDir)
+    val store = GaugeStore.open(spark, storeDir)
     store.writeStations(ObsIngest.seedStations(spark, s"$root/geom.csv"))
 
     def writeFile(tm: String, rows: Seq[String]): Unit =

@@ -36,7 +36,7 @@ class StreamingModelIngestSpec extends SparkSuite {
     Files.write(Paths.get(root, "geom.csv"),
       ("8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A\n" +
         "8418150,43.6,-70.2,gmt,NOAA,Portland,tidal,us,me,Cumb,01B").getBytes)
-    val store = new GaugeStore(spark, s"$root/store")
+    val store = GaugeStore.open(spark, s"$root/store")
     store.writeStations(ObsIngest.seedStations(spark, s"$root/geom.csv"))
     store
   }
