@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: times every registered query at the sf dir given by
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout (driver contract). A
@@ -24,17 +25,14 @@ object Bench {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
   }
 
-  /** Committed quiet-box per-query floors (seconds). The file is the
-    * flat `{"name":sec,...}` this object writes itself — parse it
-    * without a JSON library so Bench stays dependency-free. */
+  /** Committed quiet-box per-query floors (seconds): the numeric
+    * fields of the flat `{"name":sec,...}` object this object writes
+    * itself (string fields are annotations). */
   private[graft] def loadFloors(path: java.nio.file.Path): Map[String, Double] =
     if (!java.nio.file.Files.exists(path)) Map.empty
-    else {
-      val txt = new String(java.nio.file.Files.readAllBytes(path),
-        java.nio.charset.StandardCharsets.UTF_8)
-      """"([^"]+)"\s*:\s*(-?[0-9.eE+]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
+    else graft.util.Json.mapper.readTree(path.toFile).properties.asScala
+      .collect { case e if e.getValue.isNumber =>
+        e.getKey -> e.getValue.doubleValue }.toMap
 
   /** Self-policing gate, two discriminators per query:
     *  - BEST of N > 2× floor AND +0.25 s: a genuine plan regression

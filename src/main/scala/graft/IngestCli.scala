@@ -51,6 +51,9 @@ object IngestCli {
     * surface against a shared session. */
   def runTask(spark: SparkSession, task: String, opts: Map[String, String]): Unit = {
     def req(k: String) = opts.getOrElse(k, sys.error(s"missing --$k"))
+    // the one-shot query tasks: one QueryServe request built from opts
+    def query(op: String): Unit = println(QueryServe.answer(
+      GaugeStore.open(spark, req("store")), opts + ("op" -> op)))
 
     task match {
       case "SeedStations" =>
@@ -67,19 +70,10 @@ object IngestCli {
           deleteProcessed = opts.get("deleteProcessed").contains("true"))
         println(s"ingested $n new files")
 
-      case "QueryObs" =>
-        val store = GaugeStore.open(spark, req("store"))
-        println(QueryApi.obsTimeseriesStationDataJson(
-          store.gaugeDataForRange(req("start"), req("end")),
-          store.gaugeSource, store.stations,
-          req("station"), req("start"), req("end")))
+      case "QueryObs" => query("get_obs_timeseries_station_data")
 
       case "QueryObsAllParms" =>
-        val store = GaugeStore.open(spark, req("store"))
-        println(QueryApi.obsTimeseriesStationDataAllParmsJson(
-          store.gaugeDataForRange(req("start"), req("end")),
-          store.gaugeSource, store.stations,
-          req("station"), req("start"), req("end"), req("nowcastSource")))
+        query("get_obs_timeseries_station_data_allparms")
 
       case "ModelRunIngest" =>
         // SequenceIngest for one ADCIRC run dir (runModelIngest.py:553-580):
@@ -96,28 +90,9 @@ object IngestCli {
           advisory = opts.get("advisory"))
         println(s"ingested $n model files")
 
-      case "QueryForecast" =>
-        val store = GaugeStore.open(spark, req("store"))
-        val df = QueryApi.forecastTimeseriesStationData(
-          store.modelDataForTimemark(req("timemark").replace("T", " ")),
-          store.modelSource, store.stations,
-          req("station"), req("timemark"), req("maxEnd"),
-          req("dataSource"), req("instance"))
-        println(QueryApi.jsonAgg(df, "time_stamp",
-          df.columns.filterNot(_ == "time_stamp").toSeq))
+      case "QueryForecast" => query("get_forecast_timeseries_station_data")
 
-      case "QueryNowcast" =>
-        val store = GaugeStore.open(spark, req("store"))
-        // run_date-pruned like the QueryServe nowcast path; horizon
-        // contract documented on SnapshotGaugeStore.modelDataForRange
-        val df = QueryApi.nowcastTimeseriesStationData(
-          store.modelDataForRange(req("start"), req("end"),
-            opts.getOrElse("horizonDays", "35").toInt),
-          store.modelSource, store.stations,
-          req("station"), req("start"), req("end"),
-          req("dataSource"), req("instance"))
-        println(QueryApi.jsonAgg(df, "time_stamp",
-          df.columns.filterNot(_ == "time_stamp").toSeq))
+      case "QueryNowcast" => query("get_nowcast_timeseries_station_data")
 
       case "QueryServe" =>
         // long-running read-path endpoint (QueryServe scaladoc): one
@@ -570,17 +545,8 @@ object IngestCli {
           "gauge_data,model_data,ledger_obs,ledger_model,stations," +
             "gauge_source,model_source,apsviz_station,retain_obs_station")
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        tables.flatMap(t => store.tableStats(t)).foreach { m =>
-          def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-          val parts = m.map { case (k, v) =>
-            val vs = v match {
-              case s: String => "\"" + esc(s) + "\""
-              case other => other.toString
-            }
-            "\"" + esc(k) + "\":" + vs
-          }
-          println(parts.mkString("{", ",", "}"))
-        }
+        tables.flatMap(t => store.tableStats(t)).foreach(m =>
+          println(graft.util.Json.mapper.writeValueAsString(m)))
 
       case "Rollup" =>
         // incremental daily OHLC serving tier: rebuilds only the

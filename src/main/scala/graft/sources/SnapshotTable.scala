@@ -1,5 +1,7 @@
 package graft.sources
 
+import com.fasterxml.jackson.annotation.JsonInclude
+import graft.util.Json
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
@@ -102,18 +104,6 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
 
   private def pointerPath = new Path(logDir, "_last_checkpoint")
 
-  /** First integer at `"key":` (unquoted JSON number); None if absent. */
-  private def intOf(json: String, key: String): Option[Int] = {
-    val kIdx = json.indexOf("\"" + key + "\":")
-    if (kIdx < 0) None
-    else {
-      var i = kIdx + key.length + 3
-      val sb = new StringBuilder
-      while (i < json.length && json.charAt(i).isDigit) { sb.append(json.charAt(i)); i += 1 }
-      if (sb.isEmpty) None else Some(sb.toString.toInt)
-    }
-  }
-
   /** (newest checkpoint version, log-retention floor) from the pointer
     * file; None on absence or any parse/IO problem (callers fall back
     * to listing). The floor is the newest checkpoint whose OLDER log
@@ -122,13 +112,8 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
   private def readPointer(): Option[(Int, Int)] = try {
     if (!fs.exists(pointerPath)) None
     else {
-      val in = fs.open(pointerPath)
-      val raw = try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 4096, false)
-        new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-      intOf(raw, "version").map(v => (v, intOf(raw, "floor").getOrElse(0)))
+      val p = Json.read(fs, pointerPath, classOf[SnapshotTable.Pointer])
+      Some((p.version, p.floor))
     }
   } catch { case scala.util.control.NonFatal(_) => None }
 
@@ -146,11 +131,8 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     val v = math.max(version, cur.map(_._1).getOrElse(0))
     val f = cur.map(_._2).getOrElse(0)
     if (!cur.contains((v, f))) {
-      val body = s"""{"version":$v,"floor":$f}"""
       val tmp = new Path(s"$root/_staging/ptr-${java.util.UUID.randomUUID()}.json")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      Json.write(fs, tmp, SnapshotTable.Pointer(v, f))
       if (fs.getUri.getScheme == "file") {
         java.nio.file.Files.move(
           java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath),
@@ -193,13 +175,8 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
   private def readFloorFile(): Option[(Int, Int)] = try {
     if (!fs.exists(floorPath)) None
     else {
-      val in = fs.open(floorPath)
-      val raw = try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 4096, false)
-        new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-      intOf(raw, "floor").map(f => (f, intOf(raw, "boundary").getOrElse(f)))
+      val r = Json.read(fs, floorPath, classOf[SnapshotTable.RetentionRecord])
+      Some((r.floor, math.max(r.boundary, r.floor)))
     }
   } catch { case scala.util.control.NonFatal(_) => None }
 
@@ -219,11 +196,8 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     val f = math.max(math.max(floor, curF), legacy)
     val b = math.max(math.max(boundary, curB), f)
     if ((f, b) != (curF, curB)) {
-      val body = s"""{"floor":$f,"boundary":$b}"""
       val tmp = new Path(s"$root/_staging/floor-${java.util.UUID.randomUUID()}.json")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      Json.write(fs, tmp, SnapshotTable.RetentionRecord(f, b))
       if (fs.getUri.getScheme == "file" && !floorForceFileContext) {
         java.nio.file.Files.move(
           java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath),
@@ -300,339 +274,10 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       listLog().flatMap(s => versionOf(s.getPath.getName)).foldLeft(0)(math.max)
   }
 
-  // ---- manifest encode/decode (dependency-free, like Bench floors) --
-
-  /** JSON string escaping for manifest values. `appendIfAbsent` is a
-    * public API, so a tag containing `"` or `\` must round-trip — an
-    * unescaped quote would corrupt the manifest and break the decode
-    * of add/remove for that AND every later read of the table. */
-  private def esc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case c => b.append(c)
-    }
-    b.toString
-  }
-
-  // Field parsers are LINEAR hand-rolled scanners, not regexes: Java's
-  // regex engine recurses one stack frame per alternation-star step, so
-  // matching a `(char|escape)*` group is O(content length) STACK depth
-  // — a checkpoint's live array grows with the table and overflowed the
-  // stack in the concurrency stress spec at mere kilobytes. Key lookup
-  // by indexOf is sound because every quote inside a stored string is
-  // escaped (`\"`), so the bare sequence `"key":` can never occur
-  // inside string content (incl. the schema blob, which is also
-  // serialized last).
-
-  /** String tokens of the array at `"key":[...]`; Nil if absent. */
-  private def arrOf(json: String, key: String): Seq[String] = {
-    val kIdx = json.indexOf("\"" + key + "\":[")
-    if (kIdx < 0) Nil
-    else {
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      var i = kIdx + key.length + 4 // past `"key":[`
-      var done = false
-      while (!done && i < json.length) {
-        json.charAt(i) match {
-          case ']' => done = true
-          case '"' =>
-            val sb = new StringBuilder
-            i += 1
-            while (json.charAt(i) != '"') {
-              if (json.charAt(i) == '\\') { sb.append(json.charAt(i + 1)); i += 2 }
-              else { sb.append(json.charAt(i)); i += 1 }
-            }
-            out += sb.toString
-            i += 1
-          case _ => i += 1 // separator comma
-        }
-      }
-      out.toSeq
-    }
-  }
-
-  /** The scalar string at `"key":"..."`; None if absent. */
-  private def strOf(json: String, key: String): Option[String] = {
-    val kIdx = json.indexOf("\"" + key + "\":\"")
-    if (kIdx < 0) None
-    else {
-      var i = kIdx + key.length + 4 // past `"key":"`
-      val sb = new StringBuilder
-      while (json.charAt(i) != '"') {
-        if (json.charAt(i) == '\\') { sb.append(json.charAt(i + 1)); i += 2 }
-        else { sb.append(json.charAt(i)); i += 1 }
-      }
-      Some(sb.toString)
-    }
-  }
-
-  private def jsonArr(xs: Seq[String]): String =
-    xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
-
-  private def encode(add: Seq[String], remove: Seq[String],
-      tag: Option[String] = None,
-      stats: Seq[SnapshotTable.FileStat] = Nil,
-      keyed: Boolean = false,
-      schema: Option[String] = None,
-      sstats: Seq[SnapshotTable.StrStat] = Nil,
-      blooms: Seq[(String, String)] = Nil,
-      props: Seq[(String, Option[String])] = Nil,
-      sizes: Seq[(String, Long)] = Nil,
-      rows: Seq[(String, Long)] = Nil,
-      dvs: Seq[(String, String, Long)] = Nil,
-      op: Option[String] = None,
-      nulls: Seq[(String, String, Long)] = Nil): String = {
-    val t = tag.map(v => s""","tag":"${esc(v)}"""").getOrElse("")
-    // the VERB that produced this commit (DESCRIBE HISTORY's operation
-    // column) — observability only, replay ignores it
-    val o = op.map(v => s""","op":"${esc(v)}"""").getOrElse("")
-    // latest-writer schema (Spark StructType JSON): lets readers plan
-    // with ONE recorded schema instead of footer-merging 100k files,
-    // and makes add-a-column appends readable across old files
-    // (missing columns null-fill). Recorded by every commit that
-    // stages a frame; replay keeps the newest. Serialized LAST so the
-    // first-match field parsers can never land inside the blob (its
-    // escaping already prevents that; the ordering is belt-and-braces).
-    val sc = schema.map(s => s""","schema":"${esc(s)}"""").getOrElse("")
-    // '|' is the stat-field separator — a path containing it would
-    // decode as garbage, so reject it up front (uuid-part names never
-    // contain one; this guards only hand-constructed stats)
-    stats.foreach(s => require(!s.file.contains("|") && !s.col.contains("|"),
-      s"stat path/col must not contain '|': ${s.file}|${s.col}"))
-    val st =
-      if (stats.isEmpty) ""
-      else s""","stats":${jsonArr(stats.map(s => s"${s.file}|${s.col}|${s.lo}|${s.hi}"))}"""
-    val sst = sstatsJsonField(sstats) + bloomsJsonField(blooms) +
-      propsJsonField(props) + sizesJsonField(sizes) +
-      rowsJsonField(rows) + nullsJsonField(nulls) + dvsJsonField(dvs)
-    // keyed marker: this commit's PLAN depended on the live row/key
-    // set (merge/overwrite/restore/compact) — recorded so a concurrent
-    // keyed writer can detect it even when this commit removed nothing
-    // (an append-shaped merge); see `commit`'s isolation scaladoc
-    val k = if (keyed) s""","keyed":true""" else ""
-    s"""{"add":${jsonArr(add)},"remove":${jsonArr(remove)}$t$o$st$sst$k$sc}"""
-  }
-
-  private def statsOf(json: String): Seq[SnapshotTable.FileStat] =
-    arrOf(json, "stats").flatMap { s =>
-      s.split('|') match {
-        case Array(f, c, lo, hi) =>
-          Some(SnapshotTable.FileStat(f, c, lo.toLong, hi.toLong))
-        case _ => None
-      }
-    }
-
-  /** The ONE serializer for the `"sstats"` wire field — manifests and
-    * checkpoints must stay parse-compatible with [[sstatsOf]], so
-    * neither path hand-rolls it. Bounds are base64 raw UTF-8 bytes
-    * (base64 never contains '|' or '"'); an absent upper bound
-    * (all-0xFF truncation overflow) encodes as "*", outside the
-    * base64 alphabet. Empty when there is nothing to record. */
-  private def sstatsJsonField(sstats: Seq[SnapshotTable.StrStat]): String = {
-    sstats.foreach(s => require(!s.file.contains("|") && !s.col.contains("|"),
-      s"stat path/col must not contain '|': ${s.file}|${s.col}"))
-    if (sstats.isEmpty) ""
-    else {
-      val b64 = java.util.Base64.getEncoder
-      s""","sstats":${jsonArr(sstats.map(s =>
-        s"${s.file}|${s.col}|${b64.encodeToString(s.lo)}|" +
-          s.hi.map(b64.encodeToString).getOrElse("*")))}"""
-    }
-  }
-
-  private def sstatsOf(json: String): Seq[SnapshotTable.StrStat] = {
-    val b64 = java.util.Base64.getDecoder
-    // limit -1: an empty-string bound ("" = empty byte lower bound)
-    // must survive the split — the default drops trailing empties
-    arrOf(json, "sstats").flatMap { s =>
-      s.split("\\|", -1) match {
-        case Array(f, c, lo, hi) =>
-          Some(SnapshotTable.StrStat(f, c, b64.decode(lo),
-            if (hi == "*") None else Some(b64.decode(hi))))
-        case _ => None
-      }
-    }
-  }
-
-  /** The `"blooms"` wire field: `file|col` markers recording which
-    * (file, column) pairs have a bloom sidecar under `_index/` —
-    * replay learns sidecar existence from metadata, never from
-    * listing or probing the index dir. */
-  private def bloomsJsonField(blooms: Seq[(String, String)]): String = {
-    blooms.foreach { case (f, c) =>
-      require(!f.contains("|") && !c.contains("|"),
-        s"bloom path/col must not contain '|': $f|$c")
-    }
-    if (blooms.isEmpty) ""
-    else s""","blooms":${jsonArr(blooms.map { case (f, c) => s"$f|$c" })}"""
-  }
-
-  private def bloomsOf(json: String): Set[(String, String)] =
-    arrOf(json, "blooms").flatMap { s =>
-      s.split('|') match {
-        case Array(f, c) => Some((f, c))
-        case _ => None
-      }
-    }.toSet
-
-  /** The `"props"` wire field: table-property sets/unsets as
-    * `b64(key)|b64(value)` (unset = `b64(key)|*`) — base64 both sides
-    * because keys AND values are user strings that may contain the
-    * separator. Replay applies entries in version order, latest
-    * wins. */
-  private def propsJsonField(props: Seq[(String, Option[String])]): String =
-    if (props.isEmpty) ""
-    else {
-      val b64 = java.util.Base64.getEncoder
-      def enc(s: String) =
-        b64.encodeToString(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      s""","props":${jsonArr(props.map { case (k, v) =>
-        s"${enc(k)}|${v.map(enc).getOrElse("*")}" })}"""
-    }
-
-  private def propsOf(json: String): Seq[(String, Option[String])] = {
-    val b64 = java.util.Base64.getDecoder
-    def dec(s: String) = new String(b64.decode(s),
-      java.nio.charset.StandardCharsets.UTF_8)
-    arrOf(json, "props").flatMap { s =>
-      s.split("\\|", -1) match {
-        case Array(k, v) =>
-          Some((dec(k), if (v == "*") None else Some(dec(v))))
-        case _ => None
-      }
-    }
-  }
-
-  /** The `"sizes"` wire field: `file|bytes` per ADDED file — the
-    * Delta `add.size` idea. Recorded at commit time from the staging
-    * move's own `FileStatus` (zero extra IO), carried through
-    * checkpoints for live files only, so [[detail]] sums total bytes
-    * from replay state instead of statting every live file on the
-    * driver — the op that turns DESCRIBE DETAIL into minutes of HEAD
-    * requests at 10⁵–10⁶ files on an object store. */
-  private def sizesJsonField(sizes: Seq[(String, Long)]): String = {
-    sizes.foreach { case (f, _) =>
-      require(!f.contains("|"), s"size path must not contain '|': $f")
-    }
-    if (sizes.isEmpty) ""
-    else s""","sizes":${jsonArr(sizes.map { case (f, n) => s"$f|$n" })}"""
-  }
-
-  private def sizesOf(json: String): Seq[(String, Long)] =
-    arrOf(json, "sizes").flatMap { s =>
-      s.split('|') match {
-        case Array(f, n) => scala.util.Try(n.toLong).toOption.map(f -> _)
-        case _ => None
-      }
-    }
-
-  /** The `"rows"` wire field: `file|rowCount` per ADDED file — the
-    * Delta `add.stats.numRecords` idea. Captured at commit time from
-    * the staging aggregate when one already runs (bloom builds,
-    * stat/constraint passes) or from the staged file's own parquet
-    * FOOTER otherwise (a few-KB tail read per staged file, same
-    * O(staged) driver shape as the staging move itself — never
-    * O(table)). Makes [[deleteWhereMoR]]'s full-file-tombstone check
-    * and [[detail]]'s `num_rows` metadata-only; files committed before
-    * row tracking simply have no entry and fall back to a scan. */
-  private def rowsJsonField(rows: Seq[(String, Long)]): String = {
-    rows.foreach { case (f, _) =>
-      require(!f.contains("|"), s"rows path must not contain '|': $f")
-    }
-    if (rows.isEmpty) ""
-    else s""","rows":${jsonArr(rows.map { case (f, n) => s"$f|$n" })}"""
-  }
-
-  private def rowsOf(json: String): Seq[(String, Long)] =
-    arrOf(json, "rows").flatMap { s =>
-      s.split('|') match {
-        case Array(f, n) => scala.util.Try(n.toLong).toOption.map(f -> _)
-        case _ => None
-      }
-    }
-
-  /** The `"nulls"` wire field: `file|col|nullCount` per staged
-    * (file, stat column) — recorded by the SAME staging aggregate as
-    * min/max, so every write path that records stats records null
-    * counts (rewrites never decay it). Lets `IS NULL` skip files with
-    * zero nulls and `IS NOT NULL` skip all-null files from METADATA
-    * alone — at 100k files the difference between a pruned scan and a
-    * full one for the ubiquitous `WHERE deleted_at IS NULL` shape.
-    * Unlike min/max (which ignore nulls), recorded for a stat column
-    * even when every row is null. */
-  private def nullsJsonField(ns: Seq[(String, String, Long)]): String = {
-    ns.foreach { case (f, c, _) =>
-      require(!f.contains("|") && !c.contains("|"),
-        s"nulls path/col must not contain '|': $f|$c")
-    }
-    if (ns.isEmpty) ""
-    else s""","nulls":${jsonArr(ns.map { case (f, c, n) => s"$f|$c|$n" })}"""
-  }
-
-  private def nullsOf(json: String): Seq[(String, String, Long)] =
-    arrOf(json, "nulls").flatMap { s =>
-      s.split('|') match {
-        case Array(f, c, n) =>
-          scala.util.Try(n.toLong).toOption.map((f, c, _))
-        case _ => None
-      }
-    }
-
-  /** The `"dvs"` wire field: `dataFilePath|sidecarName|deletedCount`
-    * per file whose DELETION VECTOR this commit (re)points — the
-    * merge-on-read DELETE channel (Delta's deletion vectors): the data
-    * file stays live and untouched; a sidecar under `_index/` lists
-    * the row indexes every read must skip. Sidecars are immutable —
-    * a new delete on the same file writes a NEW sidecar holding the
-    * union and repoints here (replay keeps the latest per file; the
-    * superseded generation becomes vacuum-sweepable). `file|*|0` is
-    * the tombstone (no DV — [[restore]] re-records target-version DV
-    * state with it). */
-  private def dvsJsonField(dvs: Seq[(String, String, Long)]): String = {
-    dvs.foreach { case (f, s, _) =>
-      require(!f.contains("|") && !s.contains("|"),
-        s"dv path must not contain '|': $f|$s")
-    }
-    if (dvs.isEmpty) ""
-    else s""","dvs":${jsonArr(dvs.map { case (f, s, n) => s"$f|$s|$n" })}"""
-  }
-
-  private def dvsOf(json: String): Seq[(String, String, Long)] =
-    arrOf(json, "dvs").flatMap { s =>
-      s.split('|') match {
-        case Array(f, sc, n) =>
-          scala.util.Try(n.toLong).toOption.map(c => (f, sc, c))
-        case _ => None
-      }
-    }
-
-  private def tagOf(json: String): Option[String] = strOf(json, "tag")
-
-  private def opOf(json: String): Option[String] = strOf(json, "op")
-
-  private def keyedOf(json: String): Boolean =
-    json.contains(""""keyed":true""")
-
-  private def schemaOf(json: String): Option[String] = strOf(json, "schema")
-
-  private def decode(json: String): (Seq[String], Seq[String]) =
-    (arrOf(json, "add"), arrOf(json, "remove"))
-
-  private def readManifestRaw(v: Int): String = {
+  private def readManifest(v: Int): SnapshotTable.Manifest = {
     metaReads += 1
-    val p = new Path(logDir, f"$v%08d.json")
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-      new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
+    Json.read(fs, manifestPath(v), classOf[SnapshotTable.Manifest])
   }
-
-  private def readManifest(v: Int): (Seq[String], Seq[String]) =
-    decode(readManifestRaw(v))
 
   // ---- checkpointing: replay = newest checkpoint + manifest tail ----
 
@@ -658,26 +303,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     * checkpoint `v` (live-file-filtered stats/bounds/bloom markers). */
   private def readCheckpoint(v: Int): SnapshotTable.TableState = {
     metaReads += 1
-    val p = checkpointPath(v)
-    val in = fs.open(p)
-    val raw = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-      new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-    SnapshotTable.TableState(
-      live = arrOf(raw, "live"),
-      stats = statsOf(raw).map(s => (s.file, s.col) -> (s.lo, s.hi)).toMap,
-      sstats = sstatsOf(raw).map(s => (s.file, s.col) -> (s.lo, s.hi)).toMap,
-      tags = arrOf(raw, "tags").toSet,
-      schema = schemaOf(raw),
-      blooms = bloomsOf(raw),
-      props = propsOf(raw).collect { case (k, Some(v)) => k -> v }.toMap,
-      sizes = sizesOf(raw).toMap,
-      dvs = dvsOf(raw).collect {
-        case (f, s, n) if s != "*" => f -> (s, n) }.toMap,
-      rows = rowsOf(raw).toMap,
-      nulls = nullsOf(raw).map(e => (e._1, e._2) -> e._3).toMap)
+    Json.read(fs, checkpointPath(v), classOf[SnapshotTable.Checkpoint]).state
   }
 
   /** Fully replayed table state at version `v`: live files in add
@@ -758,30 +384,29 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       schema = ck.schema
     }
     (c + 1 to v).foreach { i =>
-      val raw = readManifestRaw(i)
-      val (add, remove) = decode(raw)
-      live ++= add
+      val m = readManifest(i)
+      live ++= m.add
       // a REMOVED file's deletion vector dies with it (a compaction
       // rewrite materialized the deletes; a restore re-records the
       // target's DV state explicitly)
-      remove.foreach(dvs -= _)
-      live --= remove
-      statsOf(raw).foreach(s => stats((s.file, s.col)) = (s.lo, s.hi))
-      sstatsOf(raw).foreach(s => sstats((s.file, s.col)) = (s.lo, s.hi))
-      blooms ++= bloomsOf(raw)
-      propsOf(raw).foreach {
+      m.remove.foreach(dvs -= _)
+      live --= m.remove
+      m.fileStats.foreach(s => stats((s.file, s.col)) = (s.lo, s.hi))
+      m.strStats.foreach(s => sstats((s.file, s.col)) = (s.lo, s.hi))
+      blooms ++= m.bloomPairs
+      m.propChanges.foreach {
         case (k, Some(vv)) => props(k) = vv
         case (k, None) => props -= k
       }
-      sizesOf(raw).foreach(kv => sizes(kv._1) = kv._2)
-      rowsOf(raw).foreach(kv => rowCounts(kv._1) = kv._2)
-      nullsOf(raw).foreach(e => nulls((e._1, e._2)) = e._3)
-      dvsOf(raw).foreach {
+      m.fileSizes.foreach(kv => sizes(kv._1) = kv._2)
+      m.rowCounts.foreach(kv => rowCounts(kv._1) = kv._2)
+      m.nullCounts.foreach(e => nulls((e._1, e._2)) = e._3)
+      m.dvEntries.foreach {
         case (f, "*", _) => dvs -= f
         case (f, s, n) => dvs(f) = (s, n)
       }
-      tagOf(raw).foreach(tags += _)
-      schemaOf(raw).foreach(s => schema = Some(s))
+      m.tag.foreach(tags += _)
+      m.schema.foreach(s => schema = Some(s))
     }
     // column mapping: files written BEFORE a rename recorded their
     // stats under the then-logical (= physical) column name; alias
@@ -894,43 +519,8 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
   private def maybeCheckpoint(v: Int): Unit =
     if (checkpointInterval > 0 && v % checkpointInterval == 0) try {
       if (!fs.exists(checkpointPath(v))) {
-        val state = replayStateFull(v)
-        val liveSet = state.live.toSet
-        // only LIVE files' stats ride forward: a removed file's ranges
-        // can never prune anything again, and dropping them keeps the
-        // checkpoint O(live files), not O(files ever added)
-        val st = state.stats.collect {
-          case ((f, c), (lo, hi)) if liveSet.contains(f) =>
-            SnapshotTable.FileStat(f, c, lo, hi)
-        }.toSeq.sortBy(s => (s.file, s.col))
-        st.foreach(s => require(!s.file.contains("|") && !s.col.contains("|")))
-        val sstJson = sstatsJsonField(state.sstats.collect {
-          case ((f, c), (lo, hi)) if liveSet.contains(f) =>
-            SnapshotTable.StrStat(f, c, lo, hi)
-        }.toSeq.sortBy(s => (s.file, s.col))) +
-          bloomsJsonField(state.blooms.toSeq
-            .filter(b => liveSet.contains(b._1)).sorted) +
-          propsJsonField(state.props.toSeq.sorted
-            .map { case (k, v) => k -> Some(v) }) +
-          sizesJsonField(state.sizes.toSeq
-            .filter(s => liveSet.contains(s._1)).sortBy(_._1)) +
-          rowsJsonField(state.rows.toSeq
-            .filter(s => liveSet.contains(s._1)).sortBy(_._1)) +
-          nullsJsonField(state.nulls.toSeq
-            .collect { case ((f, c), n) if liveSet.contains(f) =>
-              (f, c, n) }.sortBy(e => (e._1, e._2))) +
-          dvsJsonField(state.dvs.toSeq
-            .filter(d => liveSet.contains(d._1)).sortBy(_._1)
-            .map { case (f, (s, n)) => (f, s, n) })
-        val body = s"""{"live":${jsonArr(state.live)}""" +
-          s""","stats":${jsonArr(st.map(s => s"${s.file}|${s.col}|${s.lo}|${s.hi}"))}""" +
-          sstJson +
-          s""","tags":${jsonArr(state.tags.toSeq.sorted)}""" +
-          state.schema.map(s => s""","schema":"${esc(s)}"""").getOrElse("") + "}"
         val tmp = new Path(s"$root/_staging/ckpt-${java.util.UUID.randomUUID()}.json")
-        val out = fs.create(tmp, true)
-        try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
+        Json.write(fs, tmp, SnapshotTable.Checkpoint.of(replayStateFull(v)))
         if (!publish(tmp, checkpointPath(v))) fs.delete(tmp, false)
       }
       // advance the pointer whether this writer won the publish race or
@@ -2221,15 +1811,11 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     val checkRemoves = remove.nonEmpty || keyed
     fs.mkdirs(logDir)
     var tmp = new Path(s"$root/_staging/manifest-${java.util.UUID.randomUUID()}.json")
-    def stage(): Unit = {
-      val out = fs.create(tmp, true)
-      try out.write(encode(add, remove, tag, stats, keyed = checkRemoves,
-        schema = schemaRec, sstats = sstats, blooms = blooms, props = props,
-        sizes = sizes, rows = if (recordRowCounts) rows else Nil, dvs = dvs,
-        op = Some(op).filter(_.nonEmpty), nulls = nulls)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    def stage(): Unit = Json.write(fs, tmp, SnapshotTable.Manifest.of(add, remove,
+      tag, stats, keyed = checkRemoves, schema = schemaRec, sstats = sstats,
+      blooms = blooms, props = props, sizes = sizes,
+      rows = if (recordRowCounts) rows else Nil, dvs = dvs,
+      op = Some(op).filter(_.nonEmpty), nulls = nulls))
     stage()
     // test seam: runs once at the exact race window (staged, not yet
     // published), then self-disarms — lets specs inject a concurrent
@@ -2252,7 +1838,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       // verbs only) pays the one replay that reads the actual keys
       val raised =
         try (gateCheckedUpTo + 1 to head).exists(v =>
-          readManifestRaw(v).contains("\"props\":"))
+          readManifest(v).props.nonEmpty)
         catch { case _: java.io.FileNotFoundException => true }
       if (raised) gateWriter(replayStateFull(head).props)
       gateCheckedUpTo = head
@@ -2282,21 +1868,20 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
         // file implies an in-range remove of it — caught transitively.)
         val guardAdds = Seq.newBuilder[String]
         val clash = (checkedUpTo + 1 to head).flatMap { v =>
-          val raw = readManifestRaw(v)
-          val dec = decode(raw)
-          val rem = dec._2
+          val m = readManifest(v)
+          val rem = m.remove
           val hit = scope match {
             case Some(sc) =>
               val scSet = sc.toSet
               rem.find(scSet.contains).map(f => s"removed $f")
-                .orElse(dvsOf(raw).map(_._1).find(scSet.contains)
+                .orElse(m.dvEntries.map(_._1).find(scSet.contains)
                   .map(f => s"re-pointed DV of $f"))
             case None =>
               if (rem.nonEmpty) Some(s"removed ${rem.head}")
-              else if (keyedOf(raw)) Some("keyed append")
+              else if (m.keyed) Some("keyed append")
               else None
           }
-          if (hit.isEmpty && addGuard.isDefined) guardAdds ++= dec._1
+          if (hit.isEmpty && addGuard.isDefined) guardAdds ++= m.add
           hit.map(m => (v, m))
         }
         if (clash.nonEmpty) {
@@ -2338,7 +1923,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
         // (a recompute that now violates the evolution contract —
         // e.g. the column we carry was just dropped — throws cleanly)
         if ((schemaSeen + 1 to head).exists(v =>
-            schemaOf(readManifestRaw(v)).isDefined)) {
+            readManifest(v).schema.isDefined)) {
           // columns the interleaved commits ADDED are not drops by
           // this writer's frame — grace them through the gate
           val namesAtFirst = replayStateFull(schemaFirst).schema
@@ -2993,7 +2578,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       if (c > 0) { seen = c; tags ++= readCheckpoint(c).tags }
     }
     if (cur > seen)
-      tags = tags ++ (seen + 1 to cur).flatMap(v => tagOf(readManifestRaw(v)))
+      tags = tags ++ (seen + 1 to cur).flatMap(v => readManifest(v).tag)
     tagScan = (math.max(cur, seen), tags)
     tags
   }
@@ -4313,20 +3898,19 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     require(fromVersion >= retentionFloor,
       s"diff from $fromVersion needs manifests below the log-retention " +
         s"floor $retentionFloor of $root (deleted by vacuumLog)")
-    val raws = (fromVersion + 1 to toVersion).map(readManifestRaw)
-    val manifests = raws.map(decode)
+    val manifests = (fromVersion + 1 to toVersion).map(readManifest)
     // a deletion-vector commit removes ROWS with an empty remove set,
     // so the append-only fast path must also rule out dv entries in
     // the range — otherwise a MoR delete would diff to empty
-    val anyDv = raws.exists(dvsOf(_).nonEmpty)
+    val anyDv = manifests.exists(_.dvs.nonEmpty)
     // both sides read under toVersion's RECORDED schema: a widened
     // append inside the range otherwise leaves `from` and `to` with
     // different column sets (exceptAll refuses) and lets the fast
     // path's footer sampling drop the new column from the CDC; under
     // one schema, pre-widening rows null-fill and a widened re-insert
     // of the same narrow row correctly diffs as a change
-    if (!anyDv && manifests.forall(_._2.isEmpty)) {
-      val added = manifests.flatMap(_._1)
+    if (!anyDv && manifests.forall(_.remove.isEmpty)) {
+      val added = manifests.flatMap(_.add)
       val rows =
         if (added.nonEmpty) readFiles(added, Some(toVersion))
         else read(Some(toVersion)).limit(0)
@@ -4379,8 +3963,8 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
   private[graft] def rangeHasRemovals(fromVersion: Int,
       toVersion: Int): Boolean =
     (fromVersion + 1 to toVersion).exists { v =>
-      val r = readManifestRaw(v) // inline: short-circuits on first hit
-      decode(r)._2.nonEmpty || dvsOf(r).nonEmpty
+      val m = readManifest(v) // inline: short-circuits on first hit
+      m.remove.nonEmpty || m.dvs.nonEmpty
     }
 
   /** The newest version committed at or before `timestampMillis` —
@@ -4987,11 +4571,11 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       if (files.forall(m.contains)) Some(files.map(m).sum) else None
     val rows = (lo to cur).flatMap { v =>
       try {
-        val raw = readManifestRaw(v)
-        val (add, remove) = decode(raw)
-        val addRows = rowsOf(raw).toMap
-        val addSizes = sizesOf(raw).toMap
-        val dvNew = dvsOf(raw)
+        val m = readManifest(v)
+        val (add, remove) = (m.add, m.remove)
+        val addRows = m.rowCounts.toMap
+        val addSizes = m.fileSizes.toMap
+        val dvNew = m.dvEntries
         // removed-side: live rows of each removed file at the PRIOR
         // state, plus tombstone growth from re-pointed DVs. Versions at
         // or below the seed have no prior-state maps — removed-side
@@ -5014,9 +4598,9 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
             fs.getFileStatus(manifestPath(v)).getModificationTime),
           n_add = add.size,
           n_remove = remove.size,
-          tag = tagOf(raw),
-          keyed = keyedOf(raw),
-          op = opOf(raw),
+          tag = m.tag,
+          keyed = m.keyed,
+          op = m.op,
           num_rows_added = sumOver(add, addRows),
           num_rows_removed = removedRows,
           bytes_added = sumOver(add, addSizes),
@@ -5132,13 +4716,12 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       if (c0 >= rf) { keep ++= live; keepDv ++= dvNow.values }
     }
     (c0 + 1 to cur).foreach { v =>
-      val raw = readManifestRaw(v)
-      val (add, remove) = decode(raw)
-      live ++= add
-      seen ++= add
-      remove.foreach(dvNow -= _)
-      live --= remove
-      dvsOf(raw).foreach {
+      val m = readManifest(v)
+      live ++= m.add
+      seen ++= m.add
+      m.remove.foreach(dvNow -= _)
+      live --= m.remove
+      m.dvEntries.foreach {
         case (f, "*", _) => dvNow -= f
         case (f, sc, _) => dvNow(f) = sc
       }
@@ -5813,6 +5396,307 @@ object SnapshotTable {
       dvs: Map[String, (String, Long)] = Map.empty,
       rows: Map[String, Long] = Map.empty,
       nulls: Map[(String, String), Long] = Map.empty)
+
+  /** `_log/_last_checkpoint`: the newest checkpoint version, plus the
+    * retention floor tables recorded here before `_retention_floor`
+    * existed (preserved, never raised). */
+  private[sources] final case class Pointer(version: Int, floor: Int)
+
+  /** `_log/_retention_floor`: the replay floor and the user-facing
+    * retention boundary (see the class's `_retention_floor` notes). */
+  private[sources] final case class RetentionRecord(floor: Int, boundary: Int)
+
+  /** The per-file channels manifests and checkpoints share. On the wire
+    * each channel is a JSON array of `|`-joined strings; the typed
+    * views below skip malformed entries. The encoders in the companion
+    * refuse a path or column containing `|` (uuid-part names never
+    * contain one; the guard catches hand-constructed stats). */
+  private[sources] sealed trait Channels {
+    def stats: Seq[String]
+    def sstats: Seq[String]
+    def blooms: Seq[String]
+    def props: Seq[String]
+    def sizes: Seq[String]
+    def rows: Seq[String]
+    def nulls: Seq[String]
+    def dvs: Seq[String]
+
+    def fileStats: Seq[FileStat] = stats.flatMap { s =>
+      s.split('|') match {
+        case Array(f, c, lo, hi) => Some(FileStat(f, c, lo.toLong, hi.toLong))
+        case _ => None
+      }
+    }
+
+    def strStats: Seq[StrStat] = {
+      val b64 = java.util.Base64.getDecoder
+      // limit -1: an empty-string bound ("" = empty byte lower bound)
+      // must survive the split — the default drops trailing empties
+      sstats.flatMap { s =>
+        s.split("\\|", -1) match {
+          case Array(f, c, lo, hi) =>
+            Some(StrStat(f, c, b64.decode(lo),
+              if (hi == "*") None else Some(b64.decode(hi))))
+          case _ => None
+        }
+      }
+    }
+
+    def bloomPairs: Set[(String, String)] = blooms.flatMap { s =>
+      s.split('|') match {
+        case Array(f, c) => Some((f, c))
+        case _ => None
+      }
+    }.toSet
+
+    def propChanges: Seq[(String, Option[String])] = {
+      val b64 = java.util.Base64.getDecoder
+      def dec(s: String) = new String(b64.decode(s),
+        java.nio.charset.StandardCharsets.UTF_8)
+      props.flatMap { s =>
+        s.split("\\|", -1) match {
+          case Array(k, v) => Some((dec(k), if (v == "*") None else Some(dec(v))))
+          case _ => None
+        }
+      }
+    }
+
+    def fileSizes: Seq[(String, Long)] = Channels.fileCounts(sizes)
+
+    def rowCounts: Seq[(String, Long)] = Channels.fileCounts(rows)
+
+    def nullCounts: Seq[(String, String, Long)] = Channels.triples(nulls)
+
+    def dvEntries: Seq[(String, String, Long)] = Channels.triples(dvs)
+  }
+
+  private[sources] object Channels {
+    private def noPipe(what: String, parts: String*): Unit =
+      require(!parts.exists(_.contains("|")),
+        s"$what must not contain '|': ${parts.mkString("|")}")
+
+    private def fileCounts(xs: Seq[String]): Seq[(String, Long)] =
+      xs.flatMap { s =>
+        s.split('|') match {
+          case Array(f, n) => scala.util.Try(n.toLong).toOption.map(f -> _)
+          case _ => None
+        }
+      }
+
+    private def triples(xs: Seq[String]): Seq[(String, String, Long)] =
+      xs.flatMap { s =>
+        s.split('|') match {
+          case Array(f, c, n) => scala.util.Try(n.toLong).toOption.map((f, c, _))
+          case _ => None
+        }
+      }
+
+    /** `"stats"`: `file|col|lo|hi` long min/max per (file, stat col). */
+    def stats(xs: Seq[FileStat]): Seq[String] = xs.map { s =>
+      noPipe("stat path/col", s.file, s.col)
+      s"${s.file}|${s.col}|${s.lo}|${s.hi}"
+    }
+
+    /** `"sstats"`: `file|col|lo|hi` string bounds. Bounds are base64
+      * raw UTF-8 bytes (base64 never contains '|' or '"'); an absent
+      * upper bound (all-0xFF truncation overflow) encodes as "*",
+      * outside the base64 alphabet. */
+    def sstats(xs: Seq[StrStat]): Seq[String] = {
+      val b64 = java.util.Base64.getEncoder
+      xs.map { s =>
+        noPipe("stat path/col", s.file, s.col)
+        s"${s.file}|${s.col}|${b64.encodeToString(s.lo)}|" +
+          s.hi.map(b64.encodeToString).getOrElse("*")
+      }
+    }
+
+    /** `"blooms"`: `file|col` markers recording which (file, column)
+      * pairs have a bloom sidecar under `_index/` — replay learns
+      * sidecar existence from metadata, never from listing or probing
+      * the index dir. */
+    def blooms(xs: Seq[(String, String)]): Seq[String] = xs.map { case (f, c) =>
+      noPipe("bloom path/col", f, c)
+      s"$f|$c"
+    }
+
+    /** `"props"`: table-property sets/unsets as `b64(key)|b64(value)`
+      * (unset = `b64(key)|*`) — base64 both sides because keys AND
+      * values are user strings that may contain the separator. Replay
+      * applies entries in version order, latest wins. */
+    def props(xs: Seq[(String, Option[String])]): Seq[String] = {
+      val b64 = java.util.Base64.getEncoder
+      def enc(s: String) =
+        b64.encodeToString(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      xs.map { case (k, v) => s"${enc(k)}|${v.map(enc).getOrElse("*")}" }
+    }
+
+    /** `"sizes"`: `file|bytes` per ADDED file — the Delta `add.size`
+      * idea. Recorded at commit time from the staging move's own
+      * `FileStatus` (zero extra IO), carried through checkpoints for
+      * live files only, so `detail` sums total bytes from replay state
+      * instead of statting every live file on the driver — the op that
+      * turns DESCRIBE DETAIL into minutes of HEAD requests at 10⁵–10⁶
+      * files on an object store. */
+    def sizes(xs: Seq[(String, Long)]): Seq[String] = xs.map { case (f, n) =>
+      noPipe("size path", f)
+      s"$f|$n"
+    }
+
+    /** `"rows"`: `file|rowCount` per ADDED file — the Delta
+      * `add.stats.numRecords` idea. Captured at commit time from the
+      * staging aggregate when one already runs (bloom builds,
+      * stat/constraint passes) or from the staged file's own parquet
+      * FOOTER otherwise (a few-KB tail read per staged file, same
+      * O(staged) driver shape as the staging move itself — never
+      * O(table)). Makes `deleteWhereMoR`'s full-file-tombstone check
+      * and `detail`'s `num_rows` metadata-only; files committed before
+      * row tracking simply have no entry and fall back to a scan. */
+    def rows(xs: Seq[(String, Long)]): Seq[String] = xs.map { case (f, n) =>
+      noPipe("rows path", f)
+      s"$f|$n"
+    }
+
+    /** `"nulls"`: `file|col|nullCount` per staged (file, stat column)
+      * — recorded by the SAME staging aggregate as min/max, so every
+      * write path that records stats records null counts (rewrites
+      * never decay it). Lets `IS NULL` skip files with zero nulls and
+      * `IS NOT NULL` skip all-null files from METADATA alone — at 100k
+      * files the difference between a pruned scan and a full one for
+      * the ubiquitous `WHERE deleted_at IS NULL` shape. Unlike min/max
+      * (which ignore nulls), recorded for a stat column even when every
+      * row is null. */
+    def nulls(xs: Seq[(String, String, Long)]): Seq[String] = xs.map {
+      case (f, c, n) =>
+        noPipe("nulls path/col", f, c)
+        s"$f|$c|$n"
+    }
+
+    /** `"dvs"`: `dataFilePath|sidecarName|deletedCount` per file whose
+      * DELETION VECTOR this commit (re)points — the merge-on-read
+      * DELETE channel (Delta's deletion vectors): the data file stays
+      * live and untouched; a sidecar under `_index/` lists the row
+      * indexes every read must skip. Sidecars are immutable — a new
+      * delete on the same file writes a NEW sidecar holding the union
+      * and repoints here (replay keeps the latest per file; the
+      * superseded generation becomes vacuum-sweepable). `file|*|0` is
+      * the tombstone (no DV — `restore` re-records target-version DV
+      * state with it). */
+    def dvs(xs: Seq[(String, String, Long)]): Seq[String] = xs.map {
+      case (f, s, n) =>
+        noPipe("dv path", f, s)
+        s"$f|$s|$n"
+    }
+  }
+
+  /** One commit's manifest, `_log/NNNNNNNN.json`. Fields serialize in
+    * declaration order; all but `add`/`remove` are omitted when empty,
+    * absent or false. */
+  @JsonInclude(JsonInclude.Include.NON_EMPTY)
+  private[sources] final case class Manifest(
+      @JsonInclude(JsonInclude.Include.ALWAYS) add: Seq[String],
+      @JsonInclude(JsonInclude.Include.ALWAYS) remove: Seq[String],
+      @JsonInclude(JsonInclude.Include.NON_ABSENT) tag: Option[String] = None,
+      // the VERB that produced this commit (DESCRIBE HISTORY's
+      // operation column) — observability only, replay ignores it
+      @JsonInclude(JsonInclude.Include.NON_ABSENT) op: Option[String] = None,
+      stats: Seq[String] = Nil,
+      sstats: Seq[String] = Nil,
+      blooms: Seq[String] = Nil,
+      props: Seq[String] = Nil,
+      sizes: Seq[String] = Nil,
+      rows: Seq[String] = Nil,
+      nulls: Seq[String] = Nil,
+      dvs: Seq[String] = Nil,
+      // keyed marker: this commit's PLAN depended on the live row/key
+      // set (merge/overwrite/restore/compact) — recorded so a
+      // concurrent keyed writer can detect it even when this commit
+      // removed nothing (an append-shaped merge); see `commit`'s
+      // isolation scaladoc
+      @JsonInclude(JsonInclude.Include.NON_DEFAULT) keyed: Boolean = false,
+      // latest-writer schema (Spark StructType JSON): lets readers plan
+      // with ONE recorded schema instead of footer-merging 100k files,
+      // and makes add-a-column appends readable across old files
+      // (missing columns null-fill). Recorded by every commit that
+      // stages a frame; replay keeps the newest.
+      @JsonInclude(JsonInclude.Include.NON_ABSENT) schema: Option[String] = None)
+    extends Channels
+
+  private[sources] object Manifest {
+    def of(add: Seq[String], remove: Seq[String], tag: Option[String],
+        stats: Seq[FileStat], keyed: Boolean, schema: Option[String],
+        sstats: Seq[StrStat], blooms: Seq[(String, String)],
+        props: Seq[(String, Option[String])], sizes: Seq[(String, Long)],
+        rows: Seq[(String, Long)], dvs: Seq[(String, String, Long)],
+        op: Option[String], nulls: Seq[(String, String, Long)]): Manifest =
+      Manifest(add, remove, tag, op, Channels.stats(stats),
+        Channels.sstats(sstats), Channels.blooms(blooms), Channels.props(props),
+        Channels.sizes(sizes), Channels.rows(rows), Channels.nulls(nulls),
+        Channels.dvs(dvs), keyed, schema)
+  }
+
+  /** The fully replayed state at one version,
+    * `_log/NNNNNNNN.checkpoint.json`. `live`, `stats` and `tags` are
+    * always written; the other channels only when non-empty. */
+  @JsonInclude(JsonInclude.Include.NON_EMPTY)
+  private[sources] final case class Checkpoint(
+      @JsonInclude(JsonInclude.Include.ALWAYS) live: Seq[String],
+      @JsonInclude(JsonInclude.Include.ALWAYS) stats: Seq[String],
+      sstats: Seq[String] = Nil,
+      blooms: Seq[String] = Nil,
+      props: Seq[String] = Nil,
+      sizes: Seq[String] = Nil,
+      rows: Seq[String] = Nil,
+      nulls: Seq[String] = Nil,
+      dvs: Seq[String] = Nil,
+      @JsonInclude(JsonInclude.Include.ALWAYS) tags: Seq[String],
+      @JsonInclude(JsonInclude.Include.NON_ABSENT) schema: Option[String] = None)
+    extends Channels {
+
+    def state: TableState = TableState(
+      live = live,
+      stats = fileStats.map(s => (s.file, s.col) -> (s.lo, s.hi)).toMap,
+      sstats = strStats.map(s => (s.file, s.col) -> (s.lo, s.hi)).toMap,
+      tags = tags.toSet,
+      schema = schema,
+      blooms = bloomPairs,
+      props = propChanges.collect { case (k, Some(v)) => k -> v }.toMap,
+      sizes = fileSizes.toMap,
+      dvs = dvEntries.collect { case (f, s, n) if s != "*" => f -> (s, n) }.toMap,
+      rows = rowCounts.toMap,
+      nulls = nullCounts.map(e => (e._1, e._2) -> e._3).toMap)
+  }
+
+  private[sources] object Checkpoint {
+    /** Only LIVE files' channels ride forward: a removed file's ranges
+      * can never prune anything again, and dropping them keeps the
+      * checkpoint O(live files), not O(files ever added). */
+    def of(state: TableState): Checkpoint = {
+      val liveSet = state.live.toSet
+      Checkpoint(
+        live = state.live,
+        stats = Channels.stats(state.stats.collect {
+          case ((f, c), (lo, hi)) if liveSet.contains(f) => FileStat(f, c, lo, hi)
+        }.toSeq.sortBy(s => (s.file, s.col))),
+        sstats = Channels.sstats(state.sstats.collect {
+          case ((f, c), (lo, hi)) if liveSet.contains(f) => StrStat(f, c, lo, hi)
+        }.toSeq.sortBy(s => (s.file, s.col))),
+        blooms = Channels.blooms(
+          state.blooms.toSeq.filter(b => liveSet.contains(b._1)).sorted),
+        props = Channels.props(
+          state.props.toSeq.sorted.map { case (k, v) => k -> Some(v) }),
+        sizes = Channels.sizes(
+          state.sizes.toSeq.filter(s => liveSet.contains(s._1)).sortBy(_._1)),
+        rows = Channels.rows(
+          state.rows.toSeq.filter(s => liveSet.contains(s._1)).sortBy(_._1)),
+        nulls = Channels.nulls(state.nulls.toSeq.collect {
+          case ((f, c), n) if liveSet.contains(f) => (f, c, n)
+        }.sortBy(e => (e._1, e._2))),
+        dvs = Channels.dvs(state.dvs.toSeq.filter(d => liveSet.contains(d._1))
+          .sortBy(_._1).map { case (f, (s, n)) => (f, s, n) }),
+        tags = state.tags.toSeq.sorted,
+        schema = state.schema)
+    }
+  }
 
   /** Deletion-vector sidecar codec: `"GDV1"` magic, int32 count, then
     * count big-endian int64 row indexes (sorted ascending). Dependency-

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.sources.SnapshotTable
+import graft.streaming.SnapshotChangeFeed.{Bootstrap, Cursor, Intent}
+import graft.util.Json
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -58,26 +60,10 @@ final class SnapshotChangeFeed(spark: SparkSession, table: SnapshotTable,
   private def intentPath = new Path(s"$checkpointDir/intent")
   private def bootstrapPath = new Path(s"$checkpointDir/bootstrap")
 
-  private def readInt(p: Path, key: String): Option[Int] = try {
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw = try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 4096, false)
-        new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-      val kIdx = raw.indexOf("\"" + key + "\":")
-      if (kIdx < 0) None
-      else {
-        var i = kIdx + key.length + 3
-        val sb = new StringBuilder
-        while (i < raw.length && raw.charAt(i).isDigit) {
-          sb.append(raw.charAt(i)); i += 1
-        }
-        if (sb.isEmpty) None else Some(sb.toString.toInt)
-      }
-    }
+  /** The checkpoint file at `p`; None on absence or any parse/IO
+    * problem. */
+  private def read[T](p: Path, cls: Class[T]): Option[T] = try {
+    if (!fs.exists(p)) None else Some(Json.read(fs, p, cls))
   } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Test seam: route checkpoint writes through the FileContext branch
@@ -85,12 +71,10 @@ final class SnapshotChangeFeed(spark: SparkSession, table: SnapshotTable,
     * an HDFS cluster). */
   private[streaming] var forceFileContext: Boolean = false
 
-  private def writeAtomic(p: Path, body: String): Unit = {
+  private def writeAtomic(p: Path, body: AnyRef): Unit = {
     fs.mkdirs(new Path(checkpointDir))
     val tmp = new Path(s"$checkpointDir/.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    Json.write(fs, tmp, body)
     if (fs.getUri.getScheme == "file" && !forceFileContext) {
       java.nio.file.Files.move(
         java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath),
@@ -124,10 +108,10 @@ final class SnapshotChangeFeed(spark: SparkSession, table: SnapshotTable,
     * one legitimate cursor-less bootstrapped state is a first batch
     * that crashed before its first commit: the write-ahead intent for
     * `(startAt, _]` is still on disk and pins the verbatim replay. */
-  def cursor: Int = readInt(cursorPath, "version") match {
-    case Some(v) => v
+  def cursor: Int = read(cursorPath, classOf[Cursor]) match {
+    case Some(c) => c.version
     case None if !fs.exists(bootstrapPath) => startAt
-    case None if readInt(intentPath, "from").contains(startAt) => startAt
+    case None if pendingIntent.exists(_.from == startAt) => startAt
     case None => throw new IllegalStateException(
       s"change-feed checkpoint $checkpointDir is bootstrapped but its " +
         "cursor file is missing: committed position lost. Replaying " +
@@ -137,6 +121,11 @@ final class SnapshotChangeFeed(spark: SparkSession, table: SnapshotTable,
         "restart the feed with startAt = that version under a FRESH " +
         "checkpointDir")
   }
+
+  /** The write-ahead range [[next]] persisted and [[commit]] has not
+    * yet retired. */
+  private[graft] def pendingIntent: Option[Intent] =
+    read(intentPath, classOf[Intent])
 
   /** The deterministic idempotence key of range `(from, to]` — feed it
     * to [[SnapshotTable.appendIfAbsent]] (or any tag-deduping sink) so
@@ -162,14 +151,14 @@ final class SnapshotChangeFeed(spark: SparkSession, table: SnapshotTable,
           "checkpointDir)")
     // an unretired intent replays VERBATIM — the head may have moved,
     // but the crashed consumer's range (and tag) must not
-    val (f, t) = (readInt(intentPath, "from"), readInt(intentPath, "to")) match {
-      case (Some(fi), Some(ti)) if fi == from => (fi, ti)
+    val (f, t) = pendingIntent match {
+      case Some(Intent(fi, ti)) if fi == from => (fi, ti)
       case _ =>
         val head = table.currentVersion
         // Long arithmetic: from + Int.MaxValue overflows Int
         val to = math.min(head.toLong, from.toLong + maxVersions).toInt
         if (to <= from) return None
-        writeAtomic(intentPath, s"""{"from":$from,"to":$to}""")
+        writeAtomic(intentPath, Intent(from, to))
         // one-time bootstrap marker, durable AFTER the first intent —
         // ordering matters: a crash between the two writes must leave
         // bootstrap MISSING (cursor falls back to startAt and the
@@ -183,7 +172,7 @@ final class SnapshotChangeFeed(spark: SparkSession, table: SnapshotTable,
         // NEITHER file really is a detected loss (see [[cursor]]),
         // never a recoverable crash state
         if (!fs.exists(bootstrapPath))
-          writeAtomic(bootstrapPath, s"""{"startAt":$startAt}""")
+          writeAtomic(bootstrapPath, Bootstrap(startAt))
         (from, to)
     }
     Some((table.diff(f, t), f, t))
@@ -193,7 +182,7 @@ final class SnapshotChangeFeed(spark: SparkSession, table: SnapshotTable,
     * AFTER the consumer's own write succeeded (its tag is durable). */
   def commit(toVersion: Int): Unit = {
     require(toVersion >= cursor, s"cursor cannot move backward to $toVersion")
-    writeAtomic(cursorPath, s"""{"version":$toVersion}""")
+    writeAtomic(cursorPath, Cursor(toVersion))
     fs.delete(intentPath, false)
   }
 
@@ -213,4 +202,13 @@ final class SnapshotChangeFeed(spark: SparkSession, table: SnapshotTable,
     }
     n
   }
+}
+
+private[graft] object SnapshotChangeFeed {
+  /** `cursor`: the committed position. */
+  final case class Cursor(version: Int)
+  /** `intent`: the write-ahead range `(from, to]`. */
+  final case class Intent(from: Int, to: Int)
+  /** `bootstrap`: the one-time marker. */
+  final case class Bootstrap(startAt: Int)
 }

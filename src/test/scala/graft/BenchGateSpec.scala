@@ -8,7 +8,7 @@ class BenchGateSpec extends AnyFunSuite {
   test("floor file round-trips through the dependency-free parser") {
     val tmp = java.nio.file.Files.createTempFile("floor", ".json")
     java.nio.file.Files.write(tmp,
-      """{"q1_sum_agg":0.123,"e2_ann_lsh":0.521,
+      """{"q1_sum_agg":0.123,"e2_ann_lsh":0.521,"_note":"a: 1.0 aside",
         |"t9_fuzzy_pairs":1.52}""".stripMargin.getBytes("UTF-8"))
     val floors = Bench.loadFloors(tmp)
     assert(floors == Map(

@@ -104,6 +104,11 @@ class QueryServeSpec extends SparkSuite {
     assert(m("op") == "q")
     assert(m("name") == "a \"quoted\" st\\ation")
     assert(m("n") == "2")
+    // standard escapes decode: a \u escape and an escaped solidus
+    val jsonEscape = "\\u00e9" // the six characters \u00e9
+    assert(QueryServe.parse("{\"op\":\"q\",\"station\":\"Caf" + jsonEscape +
+      "\"}")("station") == "Caf\u00e9")
+    assert(QueryServe.parse("""{"op":"q","station":"a\/b"}""")("station") == "a/b")
   }
 
   test("parse rejects unconsumed residue instead of silently dropping keys") {
@@ -117,6 +122,10 @@ class QueryServeSpec extends SparkSuite {
     }
     intercept[IllegalArgumentException] {
       QueryServe.parse("""{"op":"q"} trailing junk""")
+    }
+    // stray punctuation around or inside the object
+    Seq("""{"op":"q"}}""", """"op":"q"""", """,{"op":"q",,}""").foreach { bad =>
+      intercept[IllegalArgumentException](QueryServe.parse(bad))
     }
     // the happy path is unaffected
     assert(QueryServe.parse("""{"op":"q"}""") == Map("op" -> "q"))
@@ -137,7 +146,7 @@ class QueryServeSpec extends SparkSuite {
     val ex = intercept[IllegalArgumentException] {
       QueryServe.parse("""{"op":"q","station":"A","station":"B"}""")
     }
-    assert(ex.getMessage.contains("duplicate"))
+    assert(ex.getMessage.contains("Duplicate field 'station'"), ex.getMessage)
     // non-duplicated requests are untouched
     assert(QueryServe.parse("""{"op":"q","station":"A"}""")("station") == "A")
   }

@@ -15,6 +15,34 @@ class SnapshotCliSpec extends SparkSuite {
     bos.toString("UTF-8")
   }
 
+  test("QueryObs prints the line QueryServe.handle answers; a missing --station throws") {
+    val dir = java.nio.file.Files.createTempDirectory("querycli")
+    java.nio.file.Files.write(dir.resolve("geom_noaa.csv"),
+      "8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A".getBytes)
+    java.nio.file.Files.write(
+      dir.resolve("noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv"),
+      "TIME,STATION,WATER_LEVEL\n2023-04-23T10:00:00,8410140,1.10".getBytes)
+    val storeDir = s"$dir/store"
+    val store = GaugeStore.open(spark, storeDir)
+    store.writeStations(ObsIngest.seedStations(spark, s"$dir/geom_noaa.csv"))
+    IngestCli.sequenceIngest(spark, store, Seq(SourceMeta(
+      data_source = "tidal_gauge", source_name = "noaa",
+      source_archive = "noaa", source_variable = "water_level",
+      filename_prefix = "noaaweb_stationdata_water_level",
+      location_type = "tidal", units = "m")), dir.toString,
+      org.apache.spark.sql.functions.lit("2023-04-24 00:00:00").cast("timestamp"),
+      deleteProcessed = false)
+    val opts = Map("store" -> storeDir, "station" -> "8410140",
+      "start" -> "2023-04-23T00:00:00", "end" -> "2023-04-24T00:00:00")
+    val want = QueryServe.handle(store,
+      opts + ("op" -> "get_obs_timeseries_station_data"))
+    assert(want.contains("\"tidal_gauge_water_level\":1.1"), want)
+    assert(captured(IngestCli.runTask(spark, "QueryObs", opts)) ==
+      want + System.lineSeparator)
+    intercept[RuntimeException](
+      IngestCli.runTask(spark, "QueryObs", opts - "station"))
+  }
+
   test("append/read/merge/compact/vacuum round-trip through the CLI") {
     val dir = java.nio.file.Files.createTempDirectory("snapcli").toString
     val table = s"$dir/tbl"

@@ -352,6 +352,49 @@ class SnapshotTableSpec extends SparkSuite {
     assert(ids(t.read()) == Set(1L, 2L))
     // replay of the weird tag is still recognized as committed
     assert(t.appendIfAbsent(Seq(9L).toDF("id"), tag) == None)
+    // control and non-BMP characters round-trip too, through a fresh
+    // instance's replay
+    val more = Seq("line\nbreak", "tab\there", "soh\u0001", "clef \uD834\uDD1E")
+    more.foreach(m => assert(t.appendIfAbsent(Seq(3L).toDF("id"), m).isDefined))
+    assert(new SnapshotTable(spark, t.root).committedTags == more.toSet + tag)
+    // and every log file is valid JSON to a default (strict) parser
+    val strict = new com.fasterxml.jackson.databind.ObjectMapper()
+    val log = new java.io.File(s"${t.root}/_log")
+    log.listFiles().filterNot(_.getName.startsWith(".")).foreach { f =>
+      val doc = strict.readTree(f)
+      assert(doc.isObject, f.getName)
+    }
+  }
+
+  test("manifest codec: decode(encode(m)) == m over arbitrary Unicode (property)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import SnapshotTable.{Manifest, StrStat}
+    val codePoint = Gen.frequency(
+      5 -> Gen.choose(0x20, 0x7e), 1 -> Gen.choose(0, 0x1f),
+      2 -> Gen.oneOf(Gen.choose(0x7f, 0xd7ff), Gen.choose(0xe000, 0xffff)),
+      2 -> Gen.choose(0x10000, 0x10ffff))
+    val text = Gen.listOf(codePoint).map(cps =>
+      cps.map(cp => new String(Character.toChars(cp))).mkString)
+    val path = text.map(_.replace("|", ""))
+    val bytes = Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue)).map(_.toArray)
+    val sstat = for (f <- path; c <- path; lo <- bytes; hi <- Gen.option(bytes))
+      yield StrStat(f, c, lo, hi)
+    val gen = for {
+      add <- Gen.listOf(path); remove <- Gen.listOf(path)
+      tag <- Gen.option(text); op <- Gen.option(text)
+      ss <- Gen.listOf(sstat); keyed <- Gen.oneOf(true, false)
+    } yield (Manifest.of(add, remove, tag, Nil, keyed, None, ss, Nil, Nil,
+      Nil, Nil, Nil, op, Nil), ss)
+    val strict = new com.fasterxml.jackson.databind.ObjectMapper()
+    val prop = Prop.forAll(gen) { case (m, ss) =>
+      val encoded = graft.util.Json.mapper.writeValueAsBytes(m)
+      val back = graft.util.Json.mapper.readValue(encoded, classOf[Manifest])
+      strict.readTree(encoded).isObject && back == m &&
+        back.strStats.map(s => (s.file, s.col, s.lo.toSeq, s.hi.map(_.toSeq))) ==
+          ss.map(s => (s.file, s.col, s.lo.toSeq, s.hi.map(_.toSeq)))
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(300), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("z-order compact restores metadata pruning after the append stats die") {
