@@ -16,10 +16,13 @@ import org.apache.spark.sql.functions._
   * This class owns everything but the facts. Dims and ledgers are
   * O(#stations)/O(#files) rows: they are rewritten through the driver
   * and park-and-swapped into place, and [[vacuum]] recovers a swap a
-  * crash cut short. The fact surface is declared here and implemented
-  * once, by [[SnapshotGaugeStore]], over a manifest log that needs only
-  * create-if-absent on one small file per commit — atomic on object
-  * stores as well as HDFS/POSIX.
+  * crash cut short. Dims are read from disk once per on-disk version
+  * ([[dim]]): the key is the dir's sorted (name, length, mtime)
+  * data-file listing, which is cross-process safe because every dim
+  * writer lays down new uniquely named part files. The fact surface is
+  * declared here and implemented once, by [[SnapshotGaugeStore]], over
+  * a manifest log that needs only create-if-absent on one small file
+  * per commit — atomic on object stores as well as HDFS/POSIX.
   */
 abstract class GaugeStore(val spark: SparkSession, val root: String) {
 
@@ -121,8 +124,7 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
     def walk(dir: org.apache.hadoop.fs.Path, rel: List[String]): Unit =
       fs.listStatus(dir).foreach { st =>
         if (st.isDirectory) walk(st.getPath, rel :+ st.getPath.getName)
-        else if (!st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".")) {
+        else if (isDataFile(st)) {
           val destDir = rel.foldLeft(rootPath)(
             (p, seg) => new org.apache.hadoop.fs.Path(p, seg))
           fs.mkdirs(destDir)
@@ -152,12 +154,58 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
     if (tableExists(table)) spark.read.parquet(path(table))
     else emptyFrame(schema)
 
+  /** Data files of a table dir, skipping Spark/Hadoop metadata
+    * (`_SUCCESS`, `_committed_*`, `.crc`). */
+  private def isDataFile(f: org.apache.hadoop.fs.FileStatus): Boolean =
+    f.isFile && !f.getPath.getName.startsWith("_") &&
+      !f.getPath.getName.startsWith(".")
+
+  /** table → (sorted (name, length, mtime) of its data files, the frame
+    * read at that listing). */
+  private val dimCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[(String, Long, Long)], DataFrame)]()
+
+  /** A dim read once per on-disk version: one `listStatus` per call
+    * keys the cache; an unchanged listing returns the cached frame with
+    * no Spark job, a changed one re-runs `read` and caches its rows as
+    * a driver-local relation. Cross-process safe without invalidation:
+    * every dim writer (overwrite, [[rewriteSmall]]'s swap, the CLI
+    * upserts, [[binPackCompact]]) lays down new uniquely named part
+    * files, so another JVM's rewrite always changes the listing. The
+    * listing is taken BEFORE the read, so a rewrite racing the read can
+    * only cost a re-read on the next call, never a stale hit. Holding
+    * the rows adds no memory bound: the serving joins `broadcast()`
+    * these dims, which materializes them on the driver anyway.
+    *
+    * The local frame is coalesced to one partition per data file, as
+    * the parquet read had (a local scan splits into at most the default
+    * parallelism, so that caps it): ingest streams `stations` through
+    * its side-table joins, whose output file counts follow that
+    * partitioning. */
+  private def dim(table: String)(read: => DataFrame): DataFrame = {
+    val listing =
+      try fsys.listStatus(new org.apache.hadoop.fs.Path(path(table)))
+      catch { case _: java.io.FileNotFoundException => return read }
+    val key = listing.filter(isDataFile)
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSeq.sorted
+    val hit = dimCache.get(table)
+    if (hit != null && hit._1 == key) hit._2
+    else {
+      val df = read
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(df.collect(): _*), df.schema)
+        .coalesce(math.max(1, key.size))
+      dimCache.put(table, (key, local))
+      local
+    }
+  }
+
   def writeStations(df: DataFrame): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path("stations"))
 
   /** Stations dim; stores seeded before the apsviz_station column was
     * added are defaulted on read (false). */
-  def stations: DataFrame = {
+  def stations: DataFrame = dim("stations") {
     val df = spark.read.parquet(path("stations"))
     if (df.columns.contains("apsviz_station")) df
     else df.withColumn("apsviz_station", lit(false))
@@ -173,7 +221,8 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
   def writeGaugeSource(df: DataFrame): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path("gauge_source"))
 
-  def gaugeSource: DataFrame = spark.read.parquet(path("gauge_source"))
+  def gaugeSource: DataFrame =
+    dim("gauge_source")(spark.read.parquet(path("gauge_source")))
 
   /** Stage writers for an [[atomicCommit]]: each table lands under the
     * staging dir; the facts carry their day partitions, which surface
@@ -253,15 +302,12 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
     val fs = fsys
     val rootP = new org.apache.hadoop.fs.Path(path(table))
     if (!fs.exists(rootP)) return Seq.empty
-    def isData(f: org.apache.hadoop.fs.FileStatus) =
-      f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith(".")
     def walk(dir: org.apache.hadoop.fs.Path, rel: List[String])
         : Seq[(List[String], Long, Int)] = {
       val st = fs.listStatus(dir)
       val sub = st.filter(_.isDirectory)
         .flatMap(d => walk(d.getPath, rel :+ d.getPath.getName)).toSeq
-      val own = st.filter(isData)
+      val own = st.filter(isDataFile)
       if (own.nonEmpty) sub :+ ((rel, own.map(_.getLen).sum, own.length))
       else sub
     }
@@ -386,7 +432,8 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
   def writeModelSource(df: DataFrame): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path("model_source"))
 
-  def modelSource: DataFrame = spark.read.parquet(path("model_source"))
+  def modelSource: DataFrame =
+    dim("model_source")(spark.read.parquet(path("model_source")))
 
   /** Idempotent per-run append: replaces any existing snapshot rows of
     * the same model_run_id (the reference's apsviz_station_file_meta

@@ -19,10 +19,15 @@ import scala.jdk.CollectionConverters._
   * JSON_AGG contract), or `{"error":"..."}`; the loop never dies on a
   * bad request. Blank line or `quit` ends the session.
   *
-  * Scale: dims stay broadcast; each request reads ONLY the fact
-  * files its time range prunes to (`gaugeDataForRange` /
-  * `modelDataForTimemark`), so request cost is window-bounded no matter
-  * how large the store grows.
+  * Scale: each request reads ONLY the fact files its time range prunes
+  * to (`gaugeDataForRange` / `modelDataForTimemark`), so request cost
+  * is window-bounded no matter how large the store grows. The station
+  * and source dims are broadcast into that scan but read from disk once
+  * per on-disk version: the store keys them on their dir's sorted
+  * (name, length, mtime) data-file listing — one metadata call per
+  * request — and every dim writer lays down new uniquely named part
+  * files, so a rewrite by another process (a cron ingest) is seen on
+  * the next request without any invalidation hook.
   */
 object QueryServe {
 
@@ -81,9 +86,14 @@ object QueryServe {
         // [start, end] can contribute — never the whole run history.
         // The silent-pruning CONTRACT and the 35-day default live on
         // SnapshotGaugeStore.modelDataForRange; requests override per call.
+        // A negative horizon would empty the window and answer a
+        // plausible-looking `null`, so it is rejected like a non-integer.
+        val horizonDays = req.get("horizonDays").fold(35) { h =>
+          h.toIntOption.filter(_ >= 0).getOrElse(sys.error(
+            s"'horizonDays' must be a non-negative integer, got '$h'"))
+        }
         val df = QueryApi.nowcastTimeseriesStationData(
-          store.modelDataForRange(p("start"), p("end"),
-            req.getOrElse("horizonDays", "35").toInt),
+          store.modelDataForRange(p("start"), p("end"), horizonDays),
           store.modelSource, store.stations,
           p("station"), p("start"), p("end"),
           p("dataSource"), p("instance"))

@@ -149,4 +149,64 @@ class GaugeStoreSpec extends SparkSuite {
     assert(store.modelLedger.count() == 1)         // dropped stays dropped
     assert(!fs.exists(p("ledger_model_bak_77")))   // superseded copy swept
   }
+
+  test("dims are read once per on-disk version, keep the parquet read's partitioning and the apsviz_station default") {
+    val root = Files.createTempDirectory("graft-store-dim").toString
+    val store = GaugeStore.open(spark, root)
+    // a pre-apsviz_station stations dim laid down as two data files
+    store.writeStations(Seq((1L, "A"), (2L, "B"), (3L, "C"))
+      .toDF("station_id", "station_name").repartition(2))
+    store.writeGaugeSource(Seq((10L, 1L, "tidal_gauge")).toDF(
+      "source_id", "station_id", "data_source").coalesce(1))
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val dataFiles = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/stations"))
+      .count(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+    assert(dataFiles == 2)
+
+    // jobs launched by `body`: counted under a job group, then a
+    // sentinel job in its own group flushes the (asynchronous) bus
+    def jobsDuring(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val flushed = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+            case "dim-probe" => jobs.incrementAndGet()
+            case "dim-sentinel" => flushed.countDown()
+            case _ =>
+          }
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("dim-probe", "dim reads")
+        body
+        sc.setJobGroup("dim-sentinel", "bus flush")
+        sc.parallelize(Seq(1), 1).count()
+        assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+      jobs.get
+    }
+
+    var first: Array[org.apache.spark.sql.Row] = null
+    assert(jobsDuring { first = store.stations.collect(); store.gaugeSource } > 0)
+    // unchanged dirs: the cached frames come back without a Spark job
+    assert(jobsDuring { store.stations; store.gaugeSource } == 0)
+    val cached = store.stations
+    assert(cached.rdd.getNumPartitions == dataFiles)
+    assert(cached.rdd.getNumPartitions ==
+      spark.read.parquet(s"$root/stations").rdd.getNumPartitions)
+    // the column default rides through the cache
+    assert(cached.columns.contains("apsviz_station"))
+    assert(cached.filter(col("apsviz_station")).count() == 0)
+    assert(cached.collect().map(_.toSeq).toSet == first.map(_.toSeq).toSet)
+    assert(first.length == 3)
+
+    // a rewrite changes the listing: the next call re-reads
+    store.markApsVizStations(Seq("B"))
+    assert(jobsDuring(store.stations) > 0)
+    assert(store.stations.filter(col("apsviz_station"))
+      .select("station_name").as[String].collect().toSeq == Seq("B"))
+  }
 }

@@ -18,7 +18,8 @@ class QueryServeSpec extends SparkSuite {
     filename_prefix = "noaaweb_stationdata_water_level",
     location_type = "tidal", units = "m")
 
-  private lazy val store: GaugeStore = {
+  /** A store at `root` holding one station and its two obs rows. */
+  private def seeded(root: String): GaugeStore = {
     Files.write(Paths.get(dir, "geom_noaa.csv"),
       "8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A".getBytes)
     Files.write(
@@ -26,12 +27,18 @@ class QueryServeSpec extends SparkSuite {
       ("TIME,STATION,WATER_LEVEL\n" +
         "2023-04-23T10:00:00,8410140,1.10\n" +
         "2023-04-23T11:00:00,8410140,1.25").getBytes)
-    val s = GaugeStore.open(spark, storeDir)
+    val s = GaugeStore.open(spark, root)
     s.writeStations(ObsIngest.seedStations(spark, s"$dir/geom_noaa.csv"))
     graft.IngestCli.sequenceIngest(spark, s, Seq(meta), dir,
       lit("2023-04-24 00:00:00").cast("timestamp"), deleteProcessed = false)
     s
   }
+
+  private lazy val store: GaugeStore = seeded(storeDir)
+
+  private def obsRequest(station: String) =
+    s"""{"op":"get_obs_timeseries_station_data","station":"$station",""" +
+      """"start":"2023-04-23T00:00:00","end":"2023-04-24T00:00:00"}"""
 
   test("serve answers obs + allparms requests end-to-end and survives bad input") {
     val requests = Iterator(
@@ -97,6 +104,37 @@ class QueryServeSpec extends SparkSuite {
     assert(pruned.nonEmpty && pruned ==
       store.modelDataForTimemark("2023-04-23 12:00:00").inputFiles.toSet)
     assert(store.modelData.inputFiles.length > pruned.size)
+    // a negative horizon (empty window, a plausible `null`) and a
+    // non-integer one are refused, naming the parameter
+    val bad = scala.collection.mutable.ArrayBuffer[String]()
+    QueryServe.serve(store, Iterator("-40", "abc").map(h =>
+      """{"op":"get_nowcast_timeseries_station_data","station":"8410140",""" +
+        """"start":"2023-04-23T00:00:00","end":"2023-04-24T00:00:00",""" +
+        s""""dataSource":"GFSFORECAST_EC95D","instance":"inst1","horizonDays":"$h"}"""),
+      bad += _)
+    assert(bad.length == 2)
+    bad.foreach(r => assert(r.startsWith("{\"error\":") && r.contains("horizonDays"), r))
+  }
+
+  test("a dim rewrite by another store instance is served on the next request") {
+    val root = s"$dir/store-fresh"
+    val a = seeded(root)
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    QueryServe.serve(a, Iterator(obsRequest("8410140")), out += _)
+    assert(out(0).contains("\"tidal_gauge_water_level\":1.1"), out(0))
+    // a second process's view of the same root rewrites the stations
+    // dim: flag the station, then rename it
+    val b = GaugeStore.open(spark, root)
+    b.markApsVizStations(Seq("8410140"))
+    b.writeStations(b.stations.withColumn("station_name",
+      when(col("station_name") === "8410140", lit("Eastport-ME"))
+        .otherwise(col("station_name"))))
+    QueryServe.serve(a, Iterator(obsRequest("Eastport-ME"), obsRequest("8410140")),
+      out += _)
+    assert(out(1).contains("\"tidal_gauge_water_level\":1.1"), out(1))
+    assert(out(2) == "null", out(2))
+    assert(a.stations.filter(col("apsviz_station"))
+      .select("station_name").collect().map(_.getString(0)).toSeq == Seq("Eastport-ME"))
   }
 
   test("parse handles escaped quotes and ignores non-string noise") {
