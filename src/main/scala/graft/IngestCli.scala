@@ -134,6 +134,25 @@ object IngestCli {
         // one parser for every comma-separated column-list option
         def csvOpt(name: String): Seq[String] =
           opts.get(name).map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+        // --mode cow|mor for the DML ops (delete/update/merge/replace):
+        // the graft.dml.mode rule — trimmed, case-insensitive, and an
+        // unknown value is refused rather than silently run as cow
+        lazy val mor = graft.sources.SnapshotDml.isMor(opts.get("mode"), "--mode")
+        // --prune col:lo:hi[,col:lo:hi] (manifest-stat ranges) and
+        // --bloom col:value[,col:value] (bloom-sidecar probes) narrow
+        // the candidate files of delete/update before any scan
+        def prunePreds: Seq[(String, Long, Long)] = csvOpt("prune").map { s =>
+          s.split(':') match {
+            case Array(c, lo, hi) => (c, lo.toLong, hi.toLong)
+            case _ => sys.error(s"bad --prune entry $s (want col:lo:hi)")
+          }
+        }
+        def bloomPreds: Seq[(String, String)] = csvOpt("bloom").map { s =>
+          s.split(':') match {
+            case Array(c, v) => (c, v)
+            case _ => sys.error(s"bad --bloom entry $s (want col:value)")
+          }
+        }
         req("op") match {
           case "append" =>
             val df = spark.read.parquet(req("from"))
@@ -191,12 +210,8 @@ object IngestCli {
               req("toVersion").toInt).count()}")
           case "merge" =>
             // --mode mor upserts via deletion vectors (no file rewrite)
-            val doMerge: (org.apache.spark.sql.DataFrame, Seq[String]) => Int =
-              if (opts.get("mode").contains("mor")) t.mergeMoR(_, _)
-              else t.merge(_, _)
-            println("merged into version " + doMerge(
-              spark.read.parquet(req("from")),
-              csvOpt("keys")))
+            println("merged into version " + t.merge(
+              spark.read.parquet(req("from")), csvOpt("keys"), mor = mor))
           case "replace" =>
             // targeted overwrite: delete rows matching --where, insert
             // --from, ONE commit (replaceWhere); --mode mor tombstones
@@ -205,11 +220,8 @@ object IngestCli {
             val df = spark.read.parquet(req("from"))
             val cond = org.apache.spark.sql.functions.expr(req("where"))
             val check = opts.get("validate").forall(_.trim.toBoolean)
-            val v =
-              if (opts.get("mode").contains("mor"))
-                t.replaceWhereMoR(df, cond, validate = check)
-              else t.replaceWhere(df, cond, validate = check)
-            println("replaced into version " + v)
+            println("replaced into version " +
+              t.replaceWhere(df, cond, validate = check, mor = mor))
           case "compact" =>
             // optional: --zorder c1,c2 re-clusters the rewrite on a
             // Morton curve (strings supported; one dim = exact range
@@ -246,34 +258,15 @@ object IngestCli {
             println(if (v == 0) "nothing to compact"
               else s"compacted small files into version $v")
           case "delete" =>
-            // --where is a SQL boolean over the table's columns; the
-            // optional --prune col:lo:hi[,col:lo:hi] narrows candidate
-            // files from manifest stats BEFORE any scan, and
-            // --bloom col:value[,col:value] prunes by bloom sidecar —
-            // the delete-one-id-from-an-unclustered-table shape;
-            // --bloomCols rebuilds sidecars for the rewritten files
-            val prune = csvOpt("prune").map { s =>
-              s.split(':') match {
-                case Array(c, lo, hi) => (c, lo.toLong, hi.toLong)
-                case _ => sys.error(s"bad --prune entry $s (want col:lo:hi)")
-              }
-            }
-            val bloom = csvOpt("bloom").map { s =>
-              s.split(':') match {
-                case Array(c, v) => (c, v)
-                case _ => sys.error(s"bad --bloom entry $s (want col:value)")
-              }
-            }
+            // --where is a SQL boolean over the table's columns;
+            // --prune/--bloom narrow the candidates (--bloom is the
+            // delete-one-id-from-an-unclustered-table shape);
+            // --bloomCols rebuilds sidecars for the rewritten files.
             // --mode mor = merge-on-read (deletion vectors: no file
             // rewrite, reads skip tombstoned rows until a rewrite
             // materializes); default = copy-on-write rewrite
-            val v = opts.get("mode") match {
-              case Some("mor") =>
-                t.deleteWhereMoR(expr(req("where")), prune, bloom)
-              case _ =>
-                t.deleteWhere(expr(req("where")), prune, csvOpt("statCols"),
-                  bloom, csvOpt("bloomCols"))
-            }
+            val v = t.deleteWhere(expr(req("where")), prunePreds,
+              csvOpt("statCols"), bloomPreds, csvOpt("bloomCols"), mor = mor)
             println(if (v == 0) "nothing matched" else s"deleted into version $v")
           case "feed" =>
             // change-data-feed drain: every available manifest range
@@ -380,7 +373,7 @@ object IngestCli {
             val v = t.renameColumn(oldN, newN)
             println(s"renamed $oldN -> $newN at v$v (no data rewritten)")
           case "update" =>
-            // copy-on-write UPDATE: --where <sql bool>
+            // UPDATE: --where <sql bool>
             // --set "col=expr[;col2=expr2]" [--prune col:lo:hi]
             // [--bloom col:value]
             val cond = org.apache.spark.sql.functions.expr(req("where"))
@@ -391,29 +384,11 @@ object IngestCli {
                 case _ => sys.error("bad --set (want col=expr[;col2=expr2])")
               }
             }
-            val prune = csvOpt("prune").map { s =>
-              s.split(':') match {
-                case Array(c, lo, hi) => (c, lo.toLong, hi.toLong)
-                case _ => sys.error(s"bad --prune entry $s (want col:lo:hi)")
-              }
-            }
-            val bloom = csvOpt("bloom").map { s =>
-              s.split(':') match {
-                case Array(c, v) => (c, v)
-                case _ => sys.error(s"bad --bloom entry $s (want col:value)")
-              }
-            }
             // --mode mor = merge-on-read (tombstone old rows via
             // deletion vectors + append updated copies, one commit,
             // no file rewrite); default = copy-on-write rewrite
-            val v = opts.get("mode") match {
-              case Some("mor") =>
-                t.updateWhereMoR(cond, sets, prunePreds = prune,
-                  bloomPreds = bloom)
-              case _ =>
-                t.updateWhere(cond, sets, prunePreds = prune,
-                  bloomPreds = bloom)
-            }
+            val v = t.updateWhere(cond, sets, prunePreds = prunePreds,
+              bloomPreds = bloomPreds, mor = mor)
             if (v == 0) println("nothing matched; no commit")
             else println(s"updated into version $v")
           case "drop" =>

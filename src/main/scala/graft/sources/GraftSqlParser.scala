@@ -331,7 +331,7 @@ final case class SnapshotConstraintCommand(target: String, name: String,
 
 /** `INSERT INTO <snapshot table> REPLACE WHERE <cond> <query>` — the
   * Delta SQL spelling of the targeted overwrite, routed to
-  * [[SnapshotTable.replaceWhere]] (or the MoR flavor per
+  * [[SnapshotTable.replaceWhere]] (merge-on-read per
   * `graft.dml.mode`): delete-matching + insert the query's rows, ONE
   * commit, inserted rows validated against the condition. The query
   * tail runs through the session's full SQL surface at execution
@@ -345,9 +345,7 @@ final case class SnapshotInsertReplaceCommand(target: String,
       SnapshotTvfs.resolveRoot(session, target))
     val df = session.sql(querySql)
     val cond = org.apache.spark.sql.functions.expr(condSql)
-    Seq(Row(
-      if (SnapshotDml.morOf(t)) t.replaceWhereMoR(df, cond)
-      else t.replaceWhere(df, cond)))
+    Seq(Row(t.replaceWhere(df, cond, mor = SnapshotDml.morOf(t))))
   }
 }
 

@@ -52,8 +52,8 @@ import org.apache.spark.sql.types.IntegerType
   *    for MERGE) because the verbs re-plan their scans from the fresh
   *    head — a captured exprId would not survive into the new plan.
   *  - CoW vs MoR: the table property `graft.dml.mode = mor` routes
-  *    DELETE/UPDATE to the deletion-vector verbs and MERGE to the MoR
-  *    clause engine; default is copy-on-write. One knob on the TABLE,
+  *    DELETE/UPDATE/MERGE to the deletion-vector (`mor = true`) path
+  *    of their verbs; default is copy-on-write. One knob on the TABLE,
   *    not the statement, because the choice is a layout/ops decision
   *    (file size vs read amplification), not a per-query one.
   *
@@ -106,11 +106,17 @@ object SnapshotDml {
     }
 
   private[sources] def morOf(t: SnapshotTable): Boolean =
-    t.properties().get(DmlModeProp).map(_.trim.toLowerCase) match {
+    isMor(t.properties().get(DmlModeProp), DmlModeProp)
+
+  /** The DML mode rule shared by the table property and the CLI's
+    * `--mode`: trimmed, case-insensitive `cow` (the default when
+    * unset) or `mor`; anything else is refused, naming `setting`. */
+  private[graft] def isMor(mode: Option[String], setting: String): Boolean =
+    mode.map(_.trim.toLowerCase) match {
       case Some("mor") => true
       case Some("cow") | None => false
       case Some(other) => throw new IllegalArgumentException(
-        s"$DmlModeProp must be 'cow' or 'mor', got '$other'")
+        s"$setting must be 'cow' or 'mor', got '$other'")
     }
 }
 
@@ -641,7 +647,7 @@ final case class SnapshotShowPropertiesCommand(root: String,
 }
 
 /** `DELETE FROM <snapshot table> WHERE ...` — runs
-  * [[SnapshotTable.deleteWhere]] (or the MoR variant per the
+  * [[SnapshotTable.deleteWhere]] (merge-on-read per the
   * `graft.dml.mode` property) and returns the committed version
   * (0 = nothing matched, no commit). */
 final case class SnapshotDeleteCommand(table: SnapshotTable, cond: Column)
@@ -649,22 +655,18 @@ final case class SnapshotDeleteCommand(table: SnapshotTable, cond: Column)
   override val output: Seq[Attribute] =
     Seq(AttributeReference("version", IntegerType, nullable = false)())
   override def run(session: SparkSession): Seq[Row] = {
-    val v = if (SnapshotDml.morOf(table)) table.deleteWhereMoR(cond)
-    else table.deleteWhere(cond)
-    Seq(Row(v))
+    Seq(Row(table.deleteWhere(cond, mor = SnapshotDml.morOf(table))))
   }
 }
 
 /** `UPDATE <snapshot table> SET ... [WHERE ...]` — runs
-  * [[SnapshotTable.updateWhere]] (or the MoR variant). */
+  * [[SnapshotTable.updateWhere]] (merge-on-read per the property). */
 final case class SnapshotUpdateCommand(table: SnapshotTable, cond: Column,
     set: Seq[(String, Column)]) extends LeafRunnableCommand {
   override val output: Seq[Attribute] =
     Seq(AttributeReference("version", IntegerType, nullable = false)())
   override def run(session: SparkSession): Seq[Row] = {
-    val v = if (SnapshotDml.morOf(table)) table.updateWhereMoR(cond, set)
-    else table.updateWhere(cond, set)
-    Seq(Row(v))
+    Seq(Row(table.updateWhere(cond, set, mor = SnapshotDml.morOf(table))))
   }
 }
 
@@ -682,10 +684,8 @@ final case class SnapshotMergeCommand(table: SnapshotTable,
   override val output: Seq[Attribute] =
     Seq(AttributeReference("version", IntegerType, nullable = false)())
   override def run(session: SparkSession): Seq[Row] = {
-    val run = if (SnapshotDml.morOf(table)) table.mergeIntoMoR _
-    else table.mergeInto _
-    Seq(Row(run(source, cond, matched, notMatched, notMatchedBySource,
-      targetAlias, sourceAlias, Nil, Nil, 0.01, schemaEvolution,
-      declaredSchema)))
+    Seq(Row(table.mergeInto(source, cond, matched, notMatched,
+      notMatchedBySource, targetAlias, sourceAlias, Nil, Nil, 0.01,
+      schemaEvolution, declaredSchema, mor = SnapshotDml.morOf(table))))
   }
 }

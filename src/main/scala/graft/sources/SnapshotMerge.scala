@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.StructField
   * [AND cond] THEN INSERT | WHEN NOT MATCHED BY SOURCE [AND cond]
   * THEN UPDATE/DELETE` clause set (the Delta/SQL:2003 MERGE shape),
   * on both the copy-on-write and merge-on-read commit paths. The
-  * keyed full-row upsert ([[SnapshotTable.merge]]/`mergeMoR`) stays
+  * keyed full-row upsert ([[SnapshotTable.merge]], either path) stays
   * the fast path for the reference's ingest contract; this engine is
   * the superset surface SQL `MERGE INTO` routes to (see
   * [[SnapshotDml]]).
@@ -59,7 +59,7 @@ import org.apache.spark.sql.types.StructField
   *    NOT MATCHED BY SOURCE clauses exist, files containing an
   *    applicable unmatched row) are rewritten on the CoW path;
   *    the MoR path rewrites none (DV tombstones + appended copies in
-  *    ONE commit, the [[SnapshotTable.mergeMoR]] cost shape).
+  *    ONE commit, the MoR [[SnapshotTable.merge]] cost shape).
   *  - NOT MATCHED BY SOURCE must scan every live file by definition
   *    (any row anywhere may be unmatched) — callers pay that only
   *    when they use the clause.
@@ -496,7 +496,7 @@ object SnapshotMerge {
   /** Merge-on-read commit half: tombstone applicable matched /
     * not-matched-by-source rows via DVs, append updated copies and
     * inserts — ONE commit, no data file rewritten (the
-    * [[SnapshotTable.mergeMoR]] cost shape generalized to clauses). */
+    * MoR [[SnapshotTable.merge]] cost shape generalized to clauses). */
   private def runMor(t: SnapshotTable, state: SnapshotTable.TableState,
       base: Int, opName: String, sMarked: DataFrame, condition: Column,
       matched: Seq[Clause], nmbs: Seq[Clause], candidates: Seq[String],
@@ -508,7 +508,7 @@ object SnapshotMerge {
       matchedAny: Option[Column], nmbsAny: Option[Column], tAlias: String,
       statCols: Seq[String], bloomCols: Seq[String],
       bloomFpp: Double): Int = {
-    // tombstones FIRST (the updateWhereMoR ordering): a merge whose
+    // tombstones FIRST (the MoR updateWhere ordering): a merge whose
     // clauses match nothing learns so here and — with no insert
     // clauses — runs zero staging jobs. Without NOT MATCHED BY SOURCE
     // clauses the scan narrows to the files the cardinality pass

@@ -180,14 +180,10 @@ final class SnapshotSourceProvider extends RelationProvider
               .forall(_.trim.toBoolean)
             // graft.dml.mode=mor routes to deletion vectors like the
             // other DML verbs (one table-level knob)
-            if (SnapshotDml.morOf(table))
-              table.replaceWhereMoR(data, condC,
-                statCols = cols("statCols"),
-                bloomCols = cols("bloomCols"), validate = check,
-                partitionBy = pby)
-            else table.replaceWhere(data, condC,
+            table.replaceWhere(data, condC,
               statCols = cols("statCols"), bloomCols = cols("bloomCols"),
-              validate = check, partitionBy = pby)
+              validate = check, partitionBy = pby,
+              mor = SnapshotDml.morOf(table))
           case None =>
             // one staging pass records stats/blooms alongside the
             // write — never a second whole-table rewrite, never a

@@ -497,10 +497,10 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     df.toDF(st.fields.map(_.name): _*)
 
   /** The schema-pinned scan WITHOUT deletion-vector application — the
-    * seam [[deleteWhereMoR]] needs (it must see row indexes of rows a
-    * prior DV already tombstones to build the union sidecar). Every
-    * other consumer goes through [[readFiles]]/[[planFiles]], which
-    * apply DVs. Column-mapped tables scan under PHYSICAL names and
+    * seam the tombstone step of [[dml]] needs (it must see row indexes
+    * of rows a prior DV already tombstones to build the union
+    * sidecar). Every other consumer goes through
+    * [[readFiles]]/[[planFiles]], which apply DVs. Column-mapped tables scan under PHYSICAL names and
     * alias to logical here, so every consumer sees logical names. */
   private[sources] def rawReadFiles(state: SnapshotTable.TableState,
       fl: Seq[String]): DataFrame = state.schema.map(parseSchema) match {
@@ -2344,7 +2344,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     *
     * MoR-delete contract (pinned by spec): bloom sidecars are built
     * from a file's PHYSICAL rows and standard blooms cannot subtract,
-    * so after [[deleteWhereMoR]] a tombstoned key still advertises —
+    * so after a MoR [[deleteWhere]] a tombstoned key still advertises —
     * the lookup scans its file and the DV anti-join returns zero rows
     * (correct, just unpruned: one extra file per deleted key, bounded
     * by the DV debt `detail()` reports). Any rewrite of the file
@@ -2621,16 +2621,13 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     * entirely (no scan, no staging). The exactly-once building block
     * for [[streamingMergeSink]]; same one-live-writer-per-tag-stream
     * contract as [[appendIfAbsent]]. `mor = true` upserts through
-    * deletion vectors ([[mergeMoR]]) instead of rewriting files. */
+    * deletion vectors instead of rewriting files (see [[merge]]). */
   def mergeIfAbsent(source: DataFrame, keyCols: Seq[String], tag: String,
       statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomFpp: Double = 0.01, mor: Boolean = false): Option[Int] =
     if (committedTags.contains(tag)) None
-    else Some(
-      if (mor) mergeMoR(source, keyCols, statCols, bloomCols, bloomFpp,
-        tag = Some(tag))
-      else merge(source, keyCols, statCols, bloomCols, bloomFpp,
-        tag = Some(tag)))
+    else Some(merge(source, keyCols, statCols, bloomCols, bloomFpp,
+      tag = Some(tag), mor = mor))
 
   /** `foreachBatch` adapter: exactly-once micro-batch UPSERTS — the
     * CDC-consumption shape (`stream.writeStream.foreachBatch(
@@ -2955,158 +2952,51 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     throw new IllegalStateException("unreachable")
   }
 
-  /** Copy-on-write MERGE (upsert): every live row whose key matches a
-    * `source` row is replaced by it; source rows with new keys append.
-    * Only the files that actually CONTAIN a matching key are rewritten
-    * — matched via `input_file_name()` on one keys-only scan (column-
-    * pruned to the key columns), so a point update to a 10k-file table
-    * rewrites one file, not the table. Untouched files stay shared
-    * with every older snapshot; the swap is one manifest commit
-    * (add rewritten+source, remove affected), atomic like any other.
-    * Readers of prior snapshots see pre-merge data — MERGE is just
-    * another snapshot.
+  import SnapshotTable.{DmlCommit, DmlMatch, DmlVerb, Staged, noneStaged}
+
+  /** Keyed MERGE (upsert) through the [[dml]] pipeline: every live row
+    * whose key matches a `source` row is replaced by it; source rows
+    * with new keys append. The match scan is a semi-join on the
+    * source's key set, metadata-pruned by that set
+    * ([[keyPruneCandidates]]), so a point upsert into a 10k-file table
+    * touches one file; `mor = true` tombstones the replaced rows and
+    * appends the whole source instead of rewriting. The commit is
+    * keyed and UNSCOPED — it decided which keys were absent, so any
+    * interleaved remove-bearing or keyed commit must conflict (even an
+    * append-shaped merge: a restore could resurrect those keys) — and
+    * always lands, so `tag` rides even a merge that matched nothing.
     *
     * `source` must be key-unique (enforced — a dup-keyed source makes
     * "replace" ill-defined). Empty `statCols`/`bloomCols` fall back to
     * the table-property defaults, so a merge on a stats-defaulted
-    * table keeps the rewritten files prunable. Returns the version. */
+    * table keeps the written files prunable. Returns the version. */
   def merge(source: DataFrame, keyCols: Seq[String],
       statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomFpp: Double = 0.01, tag: Option[String] = None): Int = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit}
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val dupKeys = source.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
-    require(dupKeys == 0, "merge source has duplicate keys")
-    val sc = effStatCols(statCols, source)
-    val bc = effBloomCols(bloomCols, source)
-    def stagedCommit(frame: DataFrame, remove: Seq[String],
-        base: Int): Int = {
-      val (staged, stats, sstats, counts, sizes, nullsCh) =
-        stageFilesWithStats(frame, sc, countFiles = bc.nonEmpty)
-      val blooms = buildBlooms(staged, bc, bloomFpp, counts)
-      commit(staged, remove, tag, stats = stats, base = base, keyed = true,
-        op = "merge", schema = Some(frame.schema.json), sstats = sstats, blooms = blooms,
-        sizes = sizes, rows = counts.toSeq.sortBy(_._1), nulls = nullsCh)
-    }
-    retryingOnConflict("merge") {
-      val base = currentVersion
-      val live = files(Some(base))
-      // keyed = true on every branch: even an append-shaped merge (no
-      // matching live files) must conflict with an interleaved
-      // remove-bearing commit — a restore could have resurrected the
-      // very keys this plan decided were absent
-      if (live.isEmpty) stagedCommit(source, Nil, base)
-      else {
-        val keys = source.select(keyCols.map(col): _*).distinct()
-        // metadata-prune the match scan by the source's own key set (a
-        // point upsert probes the bloom/stat-hit files, not the table)
-        val candidates =
-          keyPruneCandidates(replayStateFull(base), keyCols.head, source)
-        // one column-pruned scan finds the files holding matching keys;
-        // Path-normalize both sides (input_file_name emits file:///-style
-        // URIs, manifests store file:/-style)
-        val affected =
-          (if (candidates.isEmpty)
-            spark.emptyDataset(org.apache.spark.sql.Encoders.STRING).toDF("__f")
-          else readFilesWithSource(candidates, Some(base))
-          .select(keyCols.map(col) :+ col("__src_file").as("__f"): _*)
-          .join(keys, keyCols, "left_semi")
-          .select("__f"))
-          .distinct().collect()
-          .map(r => new Path(r.getString(0)))
-          .map(p => fs.makeQualified(p).toString).toSeq
-        val normLive = live.map(p => fs.makeQualified(new Path(p)).toString)
-        require(affected.forall(normLive.contains),
-          s"merge: matched file outside the live set (path normalization)")
-        if (affected.isEmpty) stagedCommit(source, Nil, base)
-        else {
-          val survivors = readFiles(affected, Some(base))
-            .join(keys, keyCols, "left_anti")
-          stagedCommit(
-            survivors.select(source.columns.map(col): _*).unionAll(source),
-            affected, base)
-        }
-      }
-    }
-  }
-
-  /** Merge-on-read MERGE (upsert without rewriting a data file): live
-    * rows whose key matches a `source` row are tombstoned via deletion
-    * vectors and the ENTIRE source appends as new files — ONE commit
-    * carries both sides, so readers see the old row versions or the
-    * new, never both and never neither. Byte-identical table contents
-    * to [[merge]] on the same inputs; the difference is cost shape: a
-    * trickle upsert into a table of 1 GB files writes one small file
-    * plus a few-hundred-byte sidecar per affected file where the CoW
-    * path rewrites every affected file in full. The MoR trade is
-    * [[deleteWhereMoR]]'s: reads of DV-bearing files pay the sidecar
-    * anti-join until a rewrite ([[compact]]/[[materializeDeletes]]/a
-    * CoW verb) materializes — a file whose union tombstones cover
-    * every row converts to a plain remove. Like [[merge]] the commit
-    * is keyed and UNSCOPED (it decided keys were absent, so any
-    * interleaved remove-bearing or keyed commit must conflict), and
-    * `source` must be key-unique. `statCols`/`bloomCols` record
-    * pruning metadata for the appended source files. Returns the
-    * committed version. */
-  def mergeMoR(source: DataFrame, keyCols: Seq[String],
-      statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomFpp: Double = 0.01, tag: Option[String] = None): Int = {
+      bloomFpp: Double = 0.01, tag: Option[String] = None,
+      mor: Boolean = false): Int = {
     import org.apache.spark.sql.functions.{col, count, lit}
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val dupKeys = source.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
     require(dupKeys == 0, "merge source has duplicate keys")
-    // writer frames are logical: strip any smuggled mapping before the
-    // schema channel re-inherits THIS table's own (commit() does this
-    // for the `schema` param; the schemaTransform path must match)
-    val srcJson = SnapshotTable.stripPhysical(source.schema.json)
-    retryingOnConflict("mergeMoR") {
-      val base = currentVersion
-      val state = replayStateFull(base)
-      val keys = source.select(keyCols.map(col): _*).distinct()
-      // metadata-prune the tombstone scan by the source's key set
-      val candidates =
-        if (state.live.isEmpty) Nil
-        else keyPruneCandidates(state, keyCols.head, source)
-      val (full, partial, _) =
-        if (candidates.isEmpty)
-          (Seq.empty[String], Seq.empty[(String, String, Long)], Nil)
-        else
-          // key membership is a SEMI-JOIN, not a literal predicate —
-          // the generalized matcher carries it into the tombstone scan
-          buildMorTombstonesBy(state, candidates,
-            _.join(keys, keyCols, "left_semi"))
-      val sc = effStatCols(statCols, source)
-      val bc = effBloomCols(bloomCols, source)
-      val (staged, stats, sstats, counts, sizes, nullsCh) =
-        stageFilesWithStats(source, sc, countFiles = bc.nonEmpty)
-      val blooms = buildBlooms(staged, bc, bloomFpp, counts)
-      // append-shaped schema semantics even when fully-covered files
-      // convert to removes: old files stay live in full, so the
-      // recorded schema must UNION with the prior one (the plain
-      // remove-bearing branch would record the source frame verbatim)
-      commit(staged, full, tag, stats = stats, base = base, keyed = true,
-        op = "mergeMoR",
-        schemaTransform = Some(v => resolveSchema(srcJson, v)),
-        sstats = sstats, blooms = blooms, sizes = sizes,
-        rows = counts.toSeq.sortBy(_._1), nulls = nullsCh, dvs = partial,
-        props = if (partial.nonEmpty)
-          protocolBump(state.props, 2, 2) else Nil)
-    }
+    val keys = source.select(keyCols.map(col): _*).distinct()
+    dml(DmlVerb("merge", keyPruneCandidates(_, keyCols.head, source),
+      DmlMatch.Keys(keys, keyCols), DmlCommit.Unscoped,
+      inserts = Some(source), tag = tag), mor, statCols, bloomCols, bloomFpp)
   }
 
-  /** General conditional MERGE (copy-on-write): the full `WHEN MATCHED
-    * [AND cond] THEN UPDATE SET …/DELETE | WHEN NOT MATCHED [AND cond]
-    * THEN INSERT … | WHEN NOT MATCHED BY SOURCE [AND cond] THEN
+  /** General conditional MERGE: the full `WHEN MATCHED [AND cond]
+    * THEN UPDATE SET …/DELETE | WHEN NOT MATCHED [AND cond] THEN
+    * INSERT … | WHEN NOT MATCHED BY SOURCE [AND cond] THEN
     * UPDATE/DELETE` clause set — the surface SQL `MERGE INTO` routes
     * to. Clause conditions and values reference `<targetAlias>.<col>`
     * and `<sourceAlias>.<col>` (defaults `target`/`source`). Semantics,
-    * pruning, and the cost shape are documented on [[SnapshotMerge]];
-    * the keyed full-row upsert ([[merge]]) remains the fast path when
-    * the clause set is exactly "update all matched, insert the rest".
-    * Returns the committed version, or 0 when no clause changed
-    * anything (no empty commit). */
+    * pruning, and the cost shape of both commit paths (`mor = true`:
+    * deletion vectors, no data file rewritten) are documented on
+    * [[SnapshotMerge]]; the keyed full-row upsert ([[merge]]) remains
+    * the fast path when the clause set is exactly "update all matched,
+    * insert the rest". Returns the committed version, or 0 when no
+    * clause changed anything (no empty commit). */
   def mergeInto(source: DataFrame, condition: Column,
       matched: Seq[SnapshotMerge.Clause] = Nil,
       notMatched: Seq[SnapshotMerge.Clause] = Nil,
@@ -3114,31 +3004,11 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       targetAlias: String = "target", sourceAlias: String = "source",
       statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomFpp: Double = 0.01, schemaEvolution: Boolean = false,
-      declaredSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Int =
+      declaredSchema: Option[org.apache.spark.sql.types.StructType] = None,
+      mor: Boolean = false): Int =
     SnapshotMerge.run(this, source, condition, matched, notMatched,
       notMatchedBySource, targetAlias, sourceAlias, statCols, bloomCols,
-      bloomFpp, mor = false, schemaEvolution = schemaEvolution,
-      declaredSchema = declaredSchema)
-
-  /** [[mergeInto]] on the merge-on-read commit path: applicable
-    * matched / not-matched-by-source rows are DV-tombstoned and their
-    * updated copies (plus inserts) append — ONE commit, no data file
-    * rewritten (the [[mergeMoR]] cost shape generalized to clauses).
-    * Byte-identical table contents to [[mergeInto]] on the same
-    * inputs. */
-  def mergeIntoMoR(source: DataFrame, condition: Column,
-      matched: Seq[SnapshotMerge.Clause] = Nil,
-      notMatched: Seq[SnapshotMerge.Clause] = Nil,
-      notMatchedBySource: Seq[SnapshotMerge.Clause] = Nil,
-      targetAlias: String = "target", sourceAlias: String = "source",
-      statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomFpp: Double = 0.01, schemaEvolution: Boolean = false,
-      declaredSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Int =
-    SnapshotMerge.run(this, source, condition, matched, notMatched,
-      notMatchedBySource, targetAlias, sourceAlias, statCols, bloomCols,
-      bloomFpp, mor = true, schemaEvolution = schemaEvolution,
+      bloomFpp, mor = mor, schemaEvolution = schemaEvolution,
       declaredSchema = declaredSchema)
 
   /** File-candidate narrowing shared by the DML verbs: the metadata
@@ -3263,554 +3133,393 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     cand
   }
 
-  /** Copy-on-write DELETE: remove every live row matching `cond` in
-    * one keyed commit. Only the files that actually CONTAIN a matching
-    * row are rewritten — found with one `input_file_name()` scan over
-    * the stat-pruned candidates: ranges and equality probes implied by
-    * `cond`'s own `col <op> literal` conjuncts are DERIVED
-    * automatically ([[SnapshotTable.derivePreds]]); `prunePreds`
-    * (the manifest-stat ranges from [[prunedFilesMulti]]) conjoin for
-    * bounds the derivation can't see (e.g. ranges implied by a UDF).
-    * Untouched files stay shared with older snapshots,
-    * which still read the deleted rows — DELETE is just another
-    * snapshot, vacuumable like any rewrite. Returns the committed
-    * version, or 0 when nothing matched (no empty commit).
-    *
-    * `statCols` re-records pruning stats for the rewritten files (the
-    * originals' stats die with them, exactly like [[compact]]).
-    *
-    * `bloomPreds` are `(col, value)` EQUALITY keys implied by `cond`:
-    * candidate files whose bloom sidecar for `col` rules `value` out
-    * are skipped BEFORE any scan — the right-to-erasure shape (delete
-    * one id from an UNCLUSTERED table, where min/max ranges can't
-    * prune anything) touches only the bloom-hit file(s), not the
-    * table. Files without a sidecar for the column stay candidates
-    * (pruning is never wrong, only incomplete); an absent key prunes
-    * every candidate and commits nothing. `bloomCols` rebuilds
-    * sidecars for the rewritten files, exactly like [[compact]]. */
-  def deleteWhere(cond: org.apache.spark.sql.Column,
+  /** DELETE every live row matching `cond` through the [[dml]]
+    * pipeline: copy-on-write rewrites only the files that hold a
+    * match; `mor = true` tombstones the rows via deletion vectors and
+    * rewrites nothing. Candidates narrow from metadata first: ranges
+    * and equality probes implied by `cond`'s own `col <op> literal`
+    * conjuncts are DERIVED automatically ([[SnapshotTable.derivePreds]]);
+    * `prunePreds` (manifest-stat ranges, as [[prunedFilesMulti]]) and
+    * `bloomPreds` (`(col, value)` equality keys implied by `cond`)
+    * conjoin for bounds the derivation can't see. A bloom probe is the
+    * right-to-erasure shape: deleting one id from an UNCLUSTERED table,
+    * where min/max ranges prune nothing, touches only the bloom-hit
+    * file(s); files without a sidecar for the column stay candidates
+    * (pruning is never wrong, only incomplete). `statCols`/`bloomCols`
+    * re-record pruning metadata for rewritten files, exactly like
+    * [[compact]]. The commit is scoped to the touched files. Returns
+    * the committed version, or 0 when no live row matched (no empty
+    * commit; re-deleting tombstoned rows is such a no-op). */
+  def deleteWhere(cond: Column,
       prunePreds: Seq[(String, Long, Long)] = Nil,
       statCols: Seq[String] = Nil,
       bloomPreds: Seq[(String, String)] = Nil,
-      bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01): Int =
-    retryingOnConflict("deleteWhere") {
-      import org.apache.spark.sql.functions.{col, input_file_name}
-      val base = currentVersion
-      if (base == 0) 0
-      else {
-        // ONE pinned replay feeds every prune tier (a second
-        // resolution could land on a concurrent writer's version)
-        val state = replayStateFull(base)
-        val candidates = dmlCandidates(state, cond, prunePreds, bloomPreds)
-        if (candidates.isEmpty) 0
-        else {
-          // one column-pruned scan finds the files with matches (the
-          // merge shape): a point delete on a 10k-file table rewrites
-          // one file, not every candidate
-          val affected = readFilesWithSource(candidates, Some(base))
-            .filter(cond).select(col("__src_file").as("__f"))
-            .distinct().collect()
-            .map(r => fs.makeQualified(new Path(r.getString(0))).toString).toSeq
-          if (affected.isEmpty) 0
-          else {
-            val survivors = readFiles(affected, Some(base))
-              .filter(!org.apache.spark.sql.functions.coalesce(
-                cond, org.apache.spark.sql.functions.lit(false)))
-            val sc = effStatCols(statCols, survivors)
-            val bc = effBloomCols(bloomCols, survivors)
-            val (staged, stats, sstats, counts, sizes, nullsCh) =
-              stageFilesWithStats(survivors, sc,
-                countFiles = bc.nonEmpty)
-            val blooms = buildBlooms(staged, bc, bloomFpp, counts)
-            commit(staged, affected, stats = stats, base = base, keyed = true,
-              op = "deleteWhere", schema = Some(survivors.schema.json), sstats = sstats,
-              blooms = blooms, sizes = sizes,
-              rows = counts.toSeq.sortBy(_._1), nulls = nullsCh, scope = Some(affected))
-          }
-        }
-      }
-    }
+      bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01,
+      mor: Boolean = false): Int =
+    dml(DmlVerb("deleteWhere", dmlCandidates(_, cond, prunePreds, bloomPreds),
+      DmlMatch.Where(cond), DmlCommit.Scoped),
+      mor, statCols, bloomCols, bloomFpp)
 
   /** Targeted atomic overwrite — the Delta `replaceWhere` contract:
     * delete every live row matching `cond` AND insert `df0`, in ONE
-    * keyed commit (readers see either the old state or the fully
-    * replaced one, never the gap). The write-side idiom for
+    * keyed commit through the [[dml]] pipeline (readers see either the
+    * old state or the fully replaced one, never the gap; `mor = true`
+    * tombstones instead of rewriting). The write-side idiom for
     * "recompute partition k" pipelines; with the recorded layout
-    * ([[SnapshotTable.PartitionColsProp]]) the result is exactly a
+    * ([[SnapshotTable.PartitionColsProp]]) the inserted slab clusters
+    * on the partition columns and the result is exactly a
     * partition-overwrite, without a directory layout.
     *
     * By default every inserted row must itself satisfy `cond` —
-    * refused BEFORE anything commits (the guard that keeps "replace
-    * k = 3" from smuggling rows into other slabs; Delta's
-    * replaceWhere constraint check). `validate = false` opts out.
+    * refused BEFORE anything commits, with the staging cleaned and no
+    * sidecar written (the guard that keeps "replace k = 3" from
+    * smuggling rows into other slabs; Delta's replaceWhere constraint
+    * check). `validate = false` opts out.
     *
-    * Scale shape: `cond` prunes candidates from manifest metadata
-    * (stats/blooms/nulls, the [[deleteWhere]] tiers), one
-    * column-pruned scan finds the files that actually CONTAIN a match,
-    * and only those rewrite — replacing one slab of a 10k-file table
-    * rewrites that slab. The commit is keyed and UNSCOPED, plus
-    * predicate-guarded against blind appends: any interleaved writer
-    * whose commit may add rows matching `cond` conflicts (this plan
-    * decided such rows lived only in the affected files) — keyed and
-    * remove-bearing interleaves always, add-only interleaves unless
-    * their recorded file stats PROVE disjointness from `cond` (the
-    * Delta ConcurrentAppendException rule for replaceWhere; a
-    * provably-disjoint slab append still commutes). A no-match
-    * replace still inserts (one commit); empty `df0` with matches is
-    * a delete; neither = 0, no commit. Returns the committed
-    * version. */
+    * The commit is keyed and UNSCOPED, plus predicate-guarded against
+    * blind appends: any interleaved writer whose commit may add rows
+    * matching `cond` conflicts (this plan decided such rows lived only
+    * in the affected files) — keyed and remove-bearing interleaves
+    * always, add-only interleaves unless their recorded file stats
+    * PROVE disjointness from `cond` (the Delta ConcurrentAppendException
+    * rule; a provably-disjoint slab append still commutes). A no-match
+    * replace still inserts (one commit); empty `df0` with matches is a
+    * delete; neither = 0, no commit. Returns the committed version. */
   def replaceWhere(df0: DataFrame, cond: Column,
       statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomFpp: Double = 0.01, validate: Boolean = true,
-      partitionBy: Seq[String] = Nil): Int =
-    retryingOnConflict("replaceWhere") {
-      import org.apache.spark.sql.functions.{coalesce, col, lit}
-      val base = currentVersion
-      val state = replayStateFull(base)
-      val candidates =
-        if (state.live.isEmpty) Nil
-        else dmlCandidates(state, cond, Nil, Nil)
-      val affected: Seq[String] =
-        if (candidates.isEmpty) Nil
-        else readFilesWithSource(candidates, Some(base))
-          .filter(cond).select(col("__src_file").as("__f"))
-          .distinct().collect()
-          .map(r => fs.makeQualified(new Path(r.getString(0))).toString).toSeq
-      val survivors: Option[DataFrame] =
-        if (affected.isEmpty) None
-        else Some(readFiles(affected, Some(base))
-          .filter(!coalesce(cond, lit(false))))
-      // survivors carry the table shape; unionByName (against their
-      // EMPTY prefix — optimized away) refuses a mismatched incoming
-      // frame with Spark's own clear analysis error and aligns the
-      // incoming columns to the table order. A NO-MATCH replace has no
-      // survivors to align against — reorder the frame to the recorded
-      // schema by name so a column-order difference cannot masquerade
-      // as a schema change in the commit
-      val incoming0 = survivors.map(_.limit(0).unionByName(df0)).getOrElse {
-        state.schema.map(parseSchema) match {
-          case Some(ts) if ts.fieldNames.map(_.toLowerCase).sorted
-              .sameElements(df0.schema.fieldNames.map(_.toLowerCase).sorted) =>
-            df0.select(ts.fieldNames.map(n =>
-              org.apache.spark.sql.functions.col(s"`$n`")).toIndexedSeq: _*)
-          case _ => df0
-        }
-      }
-      val props = state.props
-      val (incoming, layout, layoutProp) =
-        applyLayout(incoming0, partitionBy, props)
-      val sc = (effCols(props, statCols, SnapshotTable.StatColsProp, incoming)
-        ++ layout).distinct
-      val bc = effCols(props, bloomCols, SnapshotTable.BloomColsProp, incoming)
-      // incoming and survivors stage as SEPARATE slabs so the
-      // incoming-frame validation rides the incoming staging's OWN
-      // stats aggregate (per-file violation flags, the CHECK-constraint
-      // shape) — no separate pre-pass over the frame, and a refusal
-      // happens before anything else is written, with the staging
-      // cleaned. Each slab is layout-clustered independently; stat
-      // pruning is per-file either way.
-      val vmsg = s"replaceWhere on $root: the incoming frame contains " +
-        "row(s) that do NOT satisfy the replace condition — they would " +
-        "silently land outside the replaced slab. Fix the frame or " +
-        "pass validate = false to opt out (the Delta constraint " +
-        "check contract)"
-      val (stagedI, statsI, sstatsI, countsI, sizesI, nullsI) =
-        stageFilesWithStats(incoming, sc, countFiles = bc.nonEmpty,
-          requireCond = if (validate) Some((cond, vmsg)) else None)
-      val (stagedS, statsS, sstatsS, countsS, sizesS, nullsS) =
-        survivors match {
-          case Some(s) =>
-            // survivors are EXISTING rows: cluster them, but never
-            // fill generated columns (pre-declaration NULLs are data)
-            stageFilesWithStats(
-              applyLayout(s, partitionBy, props, fillGenerated = false)._1,
-              sc, countFiles = bc.nonEmpty)
-          case None =>
-            (Seq.empty[String], Seq.empty[SnapshotTable.FileStat],
-              Seq.empty[SnapshotTable.StrStat], Map.empty[String, Long],
-              Seq.empty[(String, Long)], Seq.empty[(String, String, Long)])
-        }
-      val staged = stagedI ++ stagedS
-      val counts = countsI ++ countsS
-      val blooms = buildBlooms(staged, bc, bloomFpp, counts)
-      if (staged.isEmpty && affected.isEmpty) 0
-      else commit(staged, affected, stats = statsI ++ statsS, base = base,
-        keyed = true, op = "replaceWhere",
-        schema = Some(incoming.schema.json), sstats = sstatsI ++ sstatsS,
-        blooms = blooms, sizes = sizesI ++ sizesS,
-        rows = counts.toSeq.sortBy(_._1), nulls = nullsI ++ nullsS,
-        props = layoutProp, addGuard = Some(cond))
-    }
+      partitionBy: Seq[String] = Nil, mor: Boolean = false): Int =
+    dml(DmlVerb("replaceWhere", dmlCandidates(_, cond, Nil, Nil),
+      DmlMatch.Where(cond), DmlCommit.Guarded(cond), inserts = Some(df0),
+      layout = Some(partitionBy), validate = validate),
+      mor, statCols, bloomCols, bloomFpp)
 
-  /** Copy-on-write UPDATE: rewrite every live row matching `cond`
-    * with the `set` assignments (`column -> new-value expression`,
-    * evaluated per row; non-matching rows pass through untouched) in
-    * one keyed commit. The DML completion of [[deleteWhere]], same
-    * shape end to end: manifest-stat `prunePreds` and bloom
-    * `bloomPreds` narrow the candidates from METADATA, one
-    * column-pruned scan finds the files that actually contain a match,
-    * and ONLY those are rewritten — a point update on a 10k-file table
-    * rewrites one file. Every assignment casts back to the column's
-    * existing type, so the table schema is invariant under UPDATE
-    * (widen with an append, not an update). A rewritten file that
-    * carried a deletion vector materializes it, like every rewrite.
-    * Returns the committed version, or 0 when nothing matched. */
-  def updateWhere(cond: org.apache.spark.sql.Column,
-      set: Seq[(String, org.apache.spark.sql.Column)],
+  /** UPDATE every live row matching `cond` with the `set` assignments
+    * (`column -> new-value expression`, evaluated per row) through the
+    * [[dml]] pipeline — the completion of [[deleteWhere]], with the
+    * same candidate narrowing (derived, `prunePreds`, `bloomPreds`)
+    * and the same scoped commit. Copy-on-write rewrites the files that
+    * hold a match, non-matching rows passing through; `mor = true`
+    * tombstones the matched rows and appends their updated copies,
+    * taken from the DV-applied scan (a row an earlier MoR delete
+    * tombstoned cannot resurrect as an "updated" copy). Every
+    * assignment casts back to the column's existing type, so the table
+    * schema is invariant under UPDATE (widen with an append, not an
+    * update); mapped tables address the LOGICAL name. Returns the
+    * committed version, or 0 when no live row matched. */
+  def updateWhere(cond: Column, set: Seq[(String, Column)],
       prunePreds: Seq[(String, Long, Long)] = Nil,
       statCols: Seq[String] = Nil,
       bloomPreds: Seq[(String, String)] = Nil,
-      bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01): Int =
-    retryingOnConflict("updateWhere") {
-      import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-      require(set.nonEmpty, "updateWhere needs at least one assignment")
-      val base = currentVersion
-      if (base == 0) 0
-      else {
-        val state = replayStateFull(base)
-        val candidates = dmlCandidates(state, cond, prunePreds, bloomPreds)
-        if (candidates.isEmpty) 0
-        else {
-          val affected = readFilesWithSource(candidates, Some(base))
-            .filter(cond).select(col("__src_file").as("__f"))
-            .distinct().collect()
-            .map(r => fs.makeQualified(new Path(r.getString(0))).toString).toSeq
-          if (affected.isEmpty) 0
-          else {
-            val before = readFiles(affected, Some(base))
-            val byName = set.map { case (c, e) => c.toLowerCase -> e }.toMap
-            require(byName.size == set.size,
-              "updateWhere: duplicate assignment target")
-            val unknown = set.map(_._1).filterNot(c =>
-              before.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
-            require(unknown.isEmpty,
-              s"updateWhere: no such column(s) ${unknown.mkString(", ")} " +
-                s"(have ${before.schema.fieldNames.mkString(", ")})")
-            val hit = coalesce(cond, lit(false))
-            val rewritten = before.select(before.schema.fields.map { f =>
-              byName.get(f.name.toLowerCase) match {
-                case Some(e) =>
-                  when(hit, e.cast(f.dataType)).otherwise(col(f.name))
-                    .as(f.name)
-                case None => col(f.name)
-              }
-            }.toSeq: _*)
-            val sc = effStatCols(statCols, rewritten)
-            val bc = effBloomCols(bloomCols, rewritten)
-            val (staged, stats, sstats, counts, sizes, nullsCh) =
-              stageFilesWithStats(rewritten, sc,
-                countFiles = bc.nonEmpty)
-            val blooms = buildBlooms(staged, bc, bloomFpp, counts)
-            commit(staged, affected, stats = stats, base = base, keyed = true,
-              op = "updateWhere", schema = Some(rewritten.schema.json), sstats = sstats,
-              blooms = blooms, sizes = sizes,
-              rows = counts.toSeq.sortBy(_._1), nulls = nullsCh, scope = Some(affected))
-          }
-        }
-      }
-    }
+      bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01,
+      mor: Boolean = false): Int = {
+    require(set.nonEmpty,
+      s"updateWhere${if (mor) "MoR" else ""} needs at least one assignment")
+    dml(DmlVerb("updateWhere", dmlCandidates(_, cond, prunePreds, bloomPreds),
+      DmlMatch.Where(cond), DmlCommit.Scoped, set = set),
+      mor, statCols, bloomCols, bloomFpp)
+  }
 
-  /** Merge-on-read DELETE (deletion vectors — the Delta DV shape):
-    * marks every live row matching `cond` deleted WITHOUT rewriting
-    * any data file. A point delete on a table of 1 GB files costs one
-    * column-pruned scan of the (stat/bloom-pruned) candidates, one
-    * few-hundred-byte sidecar write per affected file, and ONE
-    * metadata commit — where [[deleteWhere]] (copy-on-write) rewrites
-    * every affected file in full. The trade is the standard MoR one:
-    * reads of DV-bearing files pay an anti-join against the sidecar
-    * rows until a rewrite ([[compact]]/[[compactSmall]]/[[merge]]/
-    * a CoW delete) MATERIALIZES the deletes — every read and rewrite
-    * path goes through the same DV-applying scan, so materialization
-    * is automatic and the rewritten files carry no DV.
+  /** The one DML pipeline behind [[deleteWhere]], [[updateWhere]],
+    * [[replaceWhere]] and [[merge]]. Each attempt pins ONE base version
+    * and its replayed state (a second resolution could land on a
+    * concurrent writer's version), narrows the live files to candidates
+    * from metadata, and finds the matched rows with the verb's matcher.
+    * Then one of two write steps runs:
     *
-    * Sidecars are immutable under `_index/` (`<file>.dv-<id>`): a
-    * second delete on the same file writes a NEW sidecar holding the
-    * UNION of tombstoned row indexes and repoints the manifest entry;
-    * replay keeps the latest per file, superseded generations are
-    * vacuum-swept. Built and written ON EXECUTORS (a mass delete's
-    * row indexes never ride the driver; driver traffic is one
-    * (file, sidecar, count) summary per affected file). The commit is
-    * keyed: it conflicts with any concurrent rewrite/keyed commit —
-    * two racing MoR deletes union correctly because the loser retries
-    * from the winner's sidecar. Returns the version, or 0 when no NEW
-    * row matched (a re-delete of already-tombstoned rows is a no-op,
-    * not a new commit). Older snapshots still read the rows — DELETE
-    * is just another snapshot, exactly like the CoW path. */
-  def deleteWhereMoR(cond: org.apache.spark.sql.Column,
-      prunePreds: Seq[(String, Long, Long)] = Nil,
-      bloomPreds: Seq[(String, String)] = Nil): Int =
-    retryingOnConflict("deleteWhereMoR") {
-      import org.apache.spark.sql.functions.{col, element_at, split}
-      val base = currentVersion
-      if (base == 0) 0
-      else {
-        val state = replayStateFull(base)
-        val candidates = dmlCandidates(state, cond, prunePreds, bloomPreds)
-        if (candidates.isEmpty) 0
-        else {
-          val (full, partial, changedFiles) =
-            buildMorTombstones(state, candidates, cond)
-          if (changedFiles.isEmpty) 0
-          else commit(Nil, full, base = base, keyed = true,
-            op = "deleteWhereMoR",
-            dvs = partial, scope = Some(changedFiles),
-            props = if (partial.nonEmpty)
-              protocolBump(state.props, 2, 2) else Nil)
-        }
-      }
+    *  - REWRITE (copy-on-write, the default): one column-pruned scan of
+    *    the candidates finds the files that actually hold a match, and
+    *    only those are rewritten — their kept rows, the changed copies
+    *    and the inserts stage with stats and blooms, the affected files
+    *    are removed. A point change to a 10k-file table rewrites one
+    *    file; a rewritten file that carried a deletion vector
+    *    materializes it.
+    *  - TOMBSTONE (merge-on-read, `mor`): matched rows are marked deleted
+    *    in deletion-vector sidecars ([[buildMorTombstonesBy]]) and no
+    *    data file is rewritten; only the changed copies and the inserts
+    *    stage, and the commit records the sidecars, a plain remove for
+    *    every file whose tombstones now cover all its rows, and the
+    *    protocol bump. A trickle change to a table of 1 GB files costs
+    *    one small file plus a few-hundred-byte sidecar per affected
+    *    file where the rewrite costs every affected file in full. The
+    *    trade is the standard MoR one: reads of DV-bearing files pay an
+    *    anti-join against the sidecar rows until a rewrite
+    *    ([[compact]], [[compactSmall]], [[materializeDeletes]], a
+    *    copy-on-write verb) materializes them. Inserts stage BEFORE the
+    *    sidecars are written (a refused insert leaves none behind);
+    *    changed copies stage only once a tombstone landed (a no-op
+    *    update runs no write job).
+    *
+    * Both steps produce the same table contents on the same inputs and
+    * commit ONE keyed version under the verb's [[DmlCommit]] policy;
+    * untouched files stay shared with older snapshots, which still read
+    * the prior rows. A matched-file path that does not normalize back
+    * into the candidate set fails the attempt rather than commit a
+    * remove of a file the manifest does not hold. */
+  private def dml(v: DmlVerb, mor: Boolean, statCols: Seq[String],
+      bloomCols: Seq[String], bloomFpp: Double): Int = {
+    import org.apache.spark.sql.functions.col
+    val op = if (mor) v.name + "MoR" else v.name
+    val requireCond = v.matcher match {
+      case DmlMatch.Where(cond) if v.validate => Some((cond,
+        s"$op on $root: the incoming frame contains row(s) that do NOT " +
+          "satisfy the replace condition — they would silently land " +
+          "outside the replaced slab. Fix the frame or pass validate = " +
+          "false to opt out (the Delta constraint check contract)"))
+      case _ => None
     }
-
-  /** Merge-on-read [[replaceWhere]]: tombstone every live row matching
-    * `cond` via deletion vectors AND append `df0` — the targeted
-    * overwrite with NO data file rewritten, ONE commit carrying both
-    * sides. Same validation contract as [[replaceWhere]] (incoming
-    * rows must satisfy `cond` unless `validate = false` — enforced on
-    * the staging stats aggregate, one pass, refusal pre-commit with
-    * the staging cleaned); same recorded-layout contract (the inserted
-    * slab range-clusters on the table's partition columns and records
-    * their stats, symmetric with the CoW path); same concurrency
-    * contract (keyed + predicate-guarded: an interleaved add-only
-    * commit whose stats cannot prove disjointness from `cond`
-    * conflicts); same MoR trade as [[deleteWhereMoR]] (reads pay the
-    * DV anti-join until a rewrite materializes). Returns the committed
-    * version, or 0 when there was nothing to tombstone and nothing to
-    * insert. */
-  def replaceWhereMoR(df0: DataFrame, cond: Column,
-      statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomFpp: Double = 0.01, validate: Boolean = true,
-      partitionBy: Seq[String] = Nil): Int =
-    retryingOnConflict("replaceWhereMoR") {
+    retryingOnConflict(op) {
       val base = currentVersion
       val state = replayStateFull(base)
-      val props = state.props
-      val (result, layout, layoutProp) = applyLayout(df0, partitionBy, props)
-      val sc = (effCols(props, statCols, SnapshotTable.StatColsProp, result)
-        ++ layout).distinct
-      val bc = effCols(props, bloomCols, SnapshotTable.BloomColsProp, result)
-      // stage FIRST (validation rides the staging aggregate): a
-      // refusal then leaves nothing behind — tombstone sidecars are
-      // only built for a frame that already passed
-      val vmsg = s"replaceWhereMoR on $root: the incoming frame " +
-        "contains row(s) that do NOT satisfy the replace condition — " +
-        "they would silently land outside the replaced slab. Fix the " +
-        "frame or pass validate = false to opt out"
-      val (staged, stats, sstats, counts, sizes, nullsCh) =
-        stageFilesWithStats(result, sc, countFiles = bc.nonEmpty,
-          requireCond = if (validate) Some((cond, vmsg)) else None)
-      val blooms = buildBlooms(staged, bc, bloomFpp, counts)
-      val candidates =
-        if (state.live.isEmpty) Nil
-        else dmlCandidates(state, cond, Nil, Nil)
-      val (full, partial, changedFiles) =
-        if (candidates.isEmpty)
-          (Seq.empty[String], Seq.empty[(String, String, Long)],
-            Seq.empty[String])
-        else buildMorTombstones(state, candidates, cond)
-      if (staged.isEmpty && changedFiles.isEmpty) 0
-      else commit(staged, full, stats = stats, base = base, keyed = true,
-        op = "replaceWhereMoR",
-        schemaTransform =
-          Some(v => resolveSchema(SnapshotTable.stripPhysical(
-            df0.schema.json), v)),
-        sstats = sstats, blooms = blooms, sizes = sizes,
-        rows = counts.toSeq.sortBy(_._1), nulls = nullsCh, dvs = partial,
-        addGuard = Some(cond),
-        props = layoutProp ++ (if (partial.nonEmpty)
-          protocolBump(props, 2, 2) else Nil))
-    }
-
-  /** Merge-on-read UPDATE: tombstone every live row matching `cond`
-    * via deletion vectors AND append its updated copy — no data file
-    * rewritten, ONE commit carries both sides, so readers see either
-    * the old rows or the new ones, never both and never neither. A
-    * point update on a table of 1 GB files costs a pruned scan, one
-    * small new file of updated rows, a few-hundred-byte sidecar per
-    * affected file, and one metadata commit — where [[updateWhere]]
-    * (copy-on-write) rewrites every affected file in full. The MoR
-    * trade is [[deleteWhereMoR]]'s: reads of DV-bearing files pay the
-    * anti-join until a rewrite materializes. Updated copies come from
-    * the DV-APPLIED scan (a row an earlier MoR delete tombstoned
-    * cannot resurrect as an "updated" copy); a file whose union
-    * tombstones cover every row converts to a plain remove.
-    * Assignments cast back to the column's type (schema invariant),
-    * and mapped tables address the LOGICAL name. Returns the committed
-    * version, or 0 when no live row matched. */
-  def updateWhereMoR(cond: org.apache.spark.sql.Column,
-      set: Seq[(String, org.apache.spark.sql.Column)],
-      prunePreds: Seq[(String, Long, Long)] = Nil,
-      bloomPreds: Seq[(String, String)] = Nil,
-      statCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01): Int =
-    retryingOnConflict("updateWhereMoR") {
-      import org.apache.spark.sql.functions.col
-      require(set.nonEmpty, "updateWhereMoR needs at least one assignment")
-      val base = currentVersion
-      if (base == 0) 0
-      else {
-        val state = replayStateFull(base)
-        val candidates = dmlCandidates(state, cond, prunePreds, bloomPreds)
-        if (candidates.isEmpty) 0
-        else {
-          // tombstones FIRST: a cond matching only already-tombstoned
-          // rows (or nothing) learns so here and runs ZERO write jobs —
-          // staging the updated copies before knowing would spend an
-          // empty-frame Spark job on every no-op update
-          val (full, partial, changedFiles) =
-            buildMorTombstones(state, candidates, cond)
-          if (changedFiles.isEmpty) 0
-          else {
-            // updated copies: DV-APPLIED scan of the candidates — only
-            // live matches, with every assignment cast to the column
-            val matchedLive = applyDv(state,
-              rawReadFiles(state, candidates), candidates).filter(cond)
-            val byName = set.map { case (c, e) => c.toLowerCase -> e }.toMap
-            require(byName.size == set.size,
-              "updateWhereMoR: duplicate assignment target")
-            val unknown = set.map(_._1).filterNot(c =>
-              matchedLive.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
-            require(unknown.isEmpty,
-              s"updateWhereMoR: no such column(s) ${unknown.mkString(", ")} " +
-                s"(have ${matchedLive.schema.fieldNames.mkString(", ")})")
-            val updated = matchedLive.select(
-              matchedLive.schema.fields.map { f =>
-                byName.get(f.name.toLowerCase) match {
-                  case Some(e) => e.cast(f.dataType).as(f.name)
-                  case None => col(f.name)
-                }
-              }.toSeq: _*)
-            val sc = effStatCols(statCols, updated)
-            val bc = effBloomCols(bloomCols, updated)
-            val (staged, stats, sstats, counts, sizes, nullsCh) =
-              stageFilesWithStats(updated, sc,
-                countFiles = bc.nonEmpty)
-            val blooms = buildBlooms(staged, bc, bloomFpp, counts)
-            commit(staged, full, stats = stats, base = base, keyed = true,
-              op = "updateWhereMoR", schema = Some(updated.schema.json), sstats = sstats,
-              blooms = blooms, sizes = sizes,
-              rows = counts.toSeq.sortBy(_._1), nulls = nullsCh, dvs = partial,
-              scope = Some(changedFiles),
-              props = if (partial.nonEmpty)
-                protocolBump(state.props, 2, 2) else Nil)
-          }
+      val candidates = if (state.live.isEmpty) Nil else v.candidates(state)
+      def qualified(f: String) = fs.makeQualified(new Path(f)).toString
+      // stages the slabs in order; stat/bloom columns follow the first
+      // frame (the inserts' shape when there are any)
+      def stage(slabs: Seq[(DataFrame, Boolean)],
+          layoutCols: Seq[String] = Nil): Staged =
+        slabs.headOption.fold(noneStaged) { case (first, _) =>
+          val sc = (effCols(state.props, statCols, SnapshotTable.StatColsProp,
+            first) ++ layoutCols).distinct
+          val bc = effCols(state.props, bloomCols,
+            SnapshotTable.BloomColsProp, first)
+          val s = slabs.map { case (df, checked) =>
+            val (f, st, ss, n, sz, nl) = stageFilesWithStats(df, sc,
+              countFiles = bc.nonEmpty,
+              requireCond = requireCond.filter(_ => checked))
+            Staged(f, st, ss, n, sz, nl)
+          }.reduce(_ ++ _)
+          s.copy(blooms = buildBlooms(s.files, bc, bloomFpp, s.counts),
+            schema = Some(first.schema.json))
         }
-      }
+      def laidOut(df: DataFrame, fill: Boolean = true) = v.layout.fold(
+        (df, Seq.empty[String], Seq.empty[(String, Option[String])]))(
+        applyLayout(df, _, state.props, fillGenerated = fill))
+      val (staged, remove, dvs, touched, layoutProp) =
+        if (!mor) {
+          val affected =
+            if (candidates.isEmpty) Nil
+            else {
+              val found = v.matcher.hit(readFilesWithSource(candidates,
+                Some(base))).select(col("__src_file")).distinct().collect()
+                .map(r => qualified(r.getString(0))).toSeq
+              val cands = candidates.map(qualified).toSet
+              require(found.forall(cands.contains),
+                s"${v.name}: matched file outside the live set (path normalization)")
+              found
+            }
+          val kept = if (affected.isEmpty) None else Some {
+            val rows = readFiles(affected, Some(base))
+            v.matcher match {
+              case w: DmlMatch.Where if v.set.nonEmpty =>
+                assigned(op, rows, v.set, Some(w.isTrue))
+              case m => m.miss(rows)
+            }
+          }
+          val (slabs, layoutCols, layoutProp) = v.inserts match {
+            case None => (kept.toSeq.map(_ -> false), Nil, Nil)
+            case Some(ins) if v.layout.isEmpty =>
+              (Seq(kept.fold(ins)(_.select(ins.columns.map(col): _*)
+                .unionAll(ins)) -> false), Nil, Nil)
+            case Some(ins) =>
+              // kept rows carry the table shape: unionByName against
+              // their EMPTY prefix refuses a mismatched frame with
+              // Spark's own error and aligns the inserts to the table
+              // order; with nothing kept, reorder by the recorded schema
+              // so a column-order difference cannot pass for a schema
+              // change
+              val aligned = kept.map(_.limit(0).unionByName(ins)).getOrElse {
+                state.schema.map(parseSchema) match {
+                  case Some(ts) if ts.fieldNames.map(_.toLowerCase).sorted
+                      .sameElements(ins.schema.fieldNames.map(_.toLowerCase).sorted) =>
+                    ins.select(ts.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*)
+                  case _ => ins
+                }
+              }
+              val (laid, lc, lp) = laidOut(aligned)
+              // kept rows are EXISTING data: clustered, but never
+              // generated-filled (pre-declaration NULLs are data)
+              (Seq(laid -> true) ++ kept.map(laidOut(_, fill = false)._1 -> false),
+                lc, lp)
+          }
+          (stage(slabs, layoutCols), affected, Nil, affected, layoutProp)
+        } else {
+          val (ins, layoutCols, layoutProp) = v.inserts.map(laidOut(_))
+            .fold((Seq.empty[DataFrame], Seq.empty[String],
+              Seq.empty[(String, Option[String])])) {
+              case (df, lc, lp) => (Seq(df), lc, lp) }
+          val stagedIns = stage(ins.map(_ -> true), layoutCols)
+          val (full, partial, changed) =
+            if (candidates.isEmpty) (Nil, Nil, Nil)
+            else buildMorTombstonesBy(state, candidates, v.matcher.hit)
+          // changed copies from the DV-APPLIED scan: only live matches
+          val copies =
+            if (changed.isEmpty || v.set.isEmpty) Nil
+            else Seq(assigned(op, v.matcher.hit(applyDv(state,
+              rawReadFiles(state, candidates), candidates)), v.set, None))
+          (stagedIns ++ stage(copies.map(_ -> false)), full, partial, changed,
+            layoutProp ++ (if (partial.nonEmpty)
+              protocolBump(state.props, 2, 2) else Nil))
+        }
+      if (touched.isEmpty && staged.files.isEmpty &&
+          v.policy != DmlCommit.Unscoped) 0
+      else commit(staged.files, remove, v.tag, stats = staged.stats,
+        base = base, keyed = true, op = op,
+        // merge-on-read inserts leave every old file live: the recorded
+        // schema unions with the prior one, append-shaped
+        schema = if (mor && v.inserts.isDefined) None else staged.schema,
+        schemaTransform = if (!mor) None else v.inserts.map(ins => {
+          val json = SnapshotTable.stripPhysical(ins.schema.json)
+          (at: Int) => resolveSchema(json, at)
+        }),
+        sstats = staged.sstats, blooms = staged.blooms, sizes = staged.sizes,
+        rows = staged.counts.toSeq.sortBy(_._1), nulls = staged.nulls,
+        dvs = dvs, props = layoutProp,
+        scope = if (v.policy == DmlCommit.Scoped) Some(touched) else None,
+        addGuard = v.policy match {
+          case DmlCommit.Guarded(c) => Some(c)
+          case _ => None
+        })
     }
+  }
 
-  /** Shared MoR-tombstone builder ([[deleteWhereMoR]] /
-    * [[updateWhereMoR]]): union sidecars for rows of `candidates`
-    * matching `cond` at `state`, written on executors. Returns
-    * `(fullFileRemoves, partialDvRecords, changedFiles)` — empty
-    * `changedFiles` = no live row matched (nothing to commit). */
-  private def buildMorTombstones(state: SnapshotTable.TableState,
-      candidates: Seq[String], cond: org.apache.spark.sql.Column)
-      : (Seq[String], Seq[(String, String, Long)], Seq[String]) =
-    buildMorTombstonesBy(state, candidates, _.filter(cond))
+  /** `frame` with the `set` assignments (`column -> value`, names
+    * matched case-insensitively) applied to every row, or only where
+    * `onlyIf` holds; each value casts to its column's type, so an
+    * UPDATE never changes the schema. */
+  private def assigned(op: String, frame: DataFrame,
+      set: Seq[(String, Column)], onlyIf: Option[Column]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, when}
+    val byName = set.map { case (c, e) => c.toLowerCase -> e }.toMap
+    require(byName.size == set.size, s"$op: duplicate assignment target")
+    val have = frame.schema.fieldNames
+    val unknown = set.map(_._1).filterNot(c => have.exists(_.equalsIgnoreCase(c)))
+    require(unknown.isEmpty, s"$op: no such column(s) " +
+      s"${unknown.mkString(", ")} (have ${have.mkString(", ")})")
+    frame.select(frame.schema.fields.map { f =>
+      byName.get(f.name.toLowerCase) match {
+        case Some(e) =>
+          val v = e.cast(f.dataType)
+          onlyIf.fold(v)(when(_, v).otherwise(col(f.name))).as(f.name)
+        case None => col(f.name)
+      }
+    }.toSeq: _*)
+  }
 
-  /** [[buildMorTombstones]] generalized to an arbitrary row `matcher`
-    * (e.g. [[mergeMoR]]'s semi-join against the source keys — key
-    * membership is not a literal predicate). The matcher receives the
-    * RAW candidate scan with `__name`/`__ridx` already materialized
+  /** The tombstone write step of [[dml]] (and [[SnapshotMerge]]'s MoR
+    * path): union deletion-vector sidecars for the rows of `candidates`
+    * that `matcher` keeps at `state`, written on executors. The matcher
+    * (a condition filter, or a semi-join against merge keys) receives
+    * the RAW candidate scan with `__name`/`__ridx` already materialized
     * from the file metadata (hidden `_metadata` columns do not survive
-    * a join) and must only FILTER rows, never alter those columns. */
+    * a join) and must only FILTER rows, never alter those columns.
+    * Returns `(fullFileRemoves, partialDvRecords, changedFiles)` —
+    * empty `changedFiles` = no live row matched (nothing to commit).
+    *
+    * Sidecars are immutable under `_index/` (`<file>.dv-<id>`): a second
+    * tombstone on the same file writes a NEW sidecar holding the UNION
+    * of tombstoned row indexes and repoints the manifest entry; replay
+    * keeps the latest per file, superseded generations are
+    * vacuum-swept. A mass delete's row indexes never ride the driver:
+    * its traffic is one (file, sidecar, count) summary per affected
+    * file. Two racing MoR writers union correctly because the keyed
+    * loser retries from the winner's sidecar. */
   private[sources] def buildMorTombstonesBy(state: SnapshotTable.TableState,
       candidates: Seq[String], matcher: DataFrame => DataFrame)
       : (Seq[String], Seq[(String, String, Long)], Seq[String]) = {
     import org.apache.spark.sql.functions.{col, element_at, split}
-    {
-          // RAW scan (no DV application): the new sidecar must hold
-          // the UNION of old and new tombstones, and the matcher may
-          // re-match rows a prior DV already covers — union dedups them
-          val matched = matcher(rawReadFiles(state, candidates)
-            .select(col("*"),
-              element_at(split(col("_metadata.file_path"), "/"), -1)
-                .as("__name"),
-              col("_metadata.row_index").as("__ridx")))
-            .select(col("__name"), col("__ridx"))
-          val existing = candidates.filter(state.dvs.contains)
-          val all =
-            if (existing.isEmpty) matched
-            else matched.unionAll(
-              dvFrame(existing.map(f => f -> state.dvs(f)._1))
-                .select(col("__dv_name").as("__name"),
-                  col("__dv_ridx").as("__ridx")))
-          // one immutable sidecar per affected file, written IN the
-          // task (conf ships as strings — the bloomSurvivors pattern)
-          val idxRoot = indexDir.toString
-          val confMap: Array[(String, String)] = {
-            val it = spark.sparkContext.hadoopConfiguration.iterator()
-            val buf = Array.newBuilder[(String, String)]
-            while (it.hasNext) {
-              val e = it.next(); buf += ((e.getKey, e.getValue))
-            }
-            buf.result()
-          }
-          fs.mkdirs(indexDir)
-          val strEnc = org.apache.spark.sql.Encoders.STRING
-          val outEnc = org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.STRING,
-            org.apache.spark.sql.Encoders.STRING,
-            org.apache.spark.sql.Encoders.scalaLong)
-          val pairEnc = org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.STRING,
-            org.apache.spark.sql.Encoders.scalaLong)
-          val summaries = all.distinct()
-            .as[(String, Long)](pairEnc)
-            .groupByKey(_._1)(strEnc)
-            .mapGroups { (name, it) =>
-              val rows = Array.newBuilder[Long]
-              it.foreach(rows += _._2)
-              val arr = rows.result()
-              val sidecar = s"$name.dv-${java.util.UUID.randomUUID()
-                .toString.take(8)}"
-              val conf = new org.apache.hadoop.conf.Configuration(false)
-              confMap.foreach { case (k, v2) => conf.set(k, v2) }
-              val p = new Path(s"$idxRoot/$sidecar")
-              val out = p.getFileSystem(conf).create(p, true)
-              try out.write(SnapshotTable.encodeDvBytes(arr))
-              finally out.close()
-              (name, sidecar, arr.length.toLong)
-            }(outEnc)
-            .collect() // bounded: one row per AFFECTED FILE
-          val byName = candidates.map(f => new Path(f).getName -> f).toMap
-          require(byName.size == candidates.size,
-            "MoR tombstones need unique live file names (import guard)")
-          // per-file row totals: a DV that covers EVERY row of a file
-          // converts to a plain manifest REMOVE — the file leaves the
-          // live set instead of surviving as a 100% tombstone that
-          // every read must anti-join against forever. Totals come
-          // from the manifest `rows` channel (metadata-only — no
-          // second data scan in the no-rewrite verb); only files
-          // committed before row tracking fall back to a name-only
-          // count over JUST those files
-          val affectedNames = summaries.map(_._1).toSet
-          val affectedFiles = affectedNames.toSeq.flatMap(byName.get)
-          val tracked: Map[String, Long] = affectedFiles.flatMap(f =>
-            state.rows.get(f).map(new Path(f).getName -> _)).toMap
-          val untracked = affectedFiles.filter(f =>
-            !tracked.contains(new Path(f).getName))
-          val totals: Map[String, Long] =
-            if (untracked.isEmpty) tracked
-            else {
-              morCountScans += 1
-              import org.apache.spark.sql.functions.{count, lit}
-              tracked ++ rawReadFiles(state, untracked)
-                .groupBy(element_at(
-                  split(col("_metadata.file_path"), "/"), -1).as("__n"))
-                .agg(count(lit(1)).as("__c"))
-                .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-            }
-          // only files whose tombstone count GREW commit — a re-delete
-          // of covered rows must not burn a version
-          val changed = summaries.toSeq.flatMap { case (name, sc, n) =>
-            byName.get(name).filter(f =>
-              !state.dvs.get(f).map(_._2).contains(n))
-              .map(f => (f, sc, n))
-          }.sortBy(_._1)
-          val (full, partial) = changed.partition { case (f, _, n) =>
-            totals.get(new Path(f).getName).contains(n)
-          }
-          (full.map(_._1), partial, changed.map(_._1))
+    // RAW scan (no DV application): the new sidecar must hold
+    // the UNION of old and new tombstones, and the matcher may
+    // re-match rows a prior DV already covers — union dedups them
+    val matched = matcher(rawReadFiles(state, candidates)
+      .select(col("*"),
+        element_at(split(col("_metadata.file_path"), "/"), -1)
+          .as("__name"),
+        col("_metadata.row_index").as("__ridx")))
+      .select(col("__name"), col("__ridx"))
+    val existing = candidates.filter(state.dvs.contains)
+    val all =
+      if (existing.isEmpty) matched
+      else matched.unionAll(
+        dvFrame(existing.map(f => f -> state.dvs(f)._1))
+          .select(col("__dv_name").as("__name"),
+            col("__dv_ridx").as("__ridx")))
+    // one immutable sidecar per affected file, written IN the
+    // task (conf ships as strings — the bloomSurvivors pattern)
+    val idxRoot = indexDir.toString
+    val confMap: Array[(String, String)] = {
+      val it = spark.sparkContext.hadoopConfiguration.iterator()
+      val buf = Array.newBuilder[(String, String)]
+      while (it.hasNext) {
+        val e = it.next(); buf += ((e.getKey, e.getValue))
+      }
+      buf.result()
     }
+    fs.mkdirs(indexDir)
+    val strEnc = org.apache.spark.sql.Encoders.STRING
+    val outEnc = org.apache.spark.sql.Encoders.tuple(
+      org.apache.spark.sql.Encoders.STRING,
+      org.apache.spark.sql.Encoders.STRING,
+      org.apache.spark.sql.Encoders.scalaLong)
+    val pairEnc = org.apache.spark.sql.Encoders.tuple(
+      org.apache.spark.sql.Encoders.STRING,
+      org.apache.spark.sql.Encoders.scalaLong)
+    val summaries = all.distinct()
+      .as[(String, Long)](pairEnc)
+      .groupByKey(_._1)(strEnc)
+      .mapGroups { (name, it) =>
+        val rows = Array.newBuilder[Long]
+        it.foreach(rows += _._2)
+        val arr = rows.result()
+        val sidecar = s"$name.dv-${java.util.UUID.randomUUID()
+          .toString.take(8)}"
+        val conf = new org.apache.hadoop.conf.Configuration(false)
+        confMap.foreach { case (k, v2) => conf.set(k, v2) }
+        val p = new Path(s"$idxRoot/$sidecar")
+        val out = p.getFileSystem(conf).create(p, true)
+        try out.write(SnapshotTable.encodeDvBytes(arr))
+        finally out.close()
+        (name, sidecar, arr.length.toLong)
+      }(outEnc)
+      .collect() // bounded: one row per AFFECTED FILE
+    val byName = candidates.map(f => new Path(f).getName -> f).toMap
+    require(byName.size == candidates.size,
+      "MoR tombstones need unique live file names (import guard)")
+    // per-file row totals: a DV that covers EVERY row of a file
+    // converts to a plain manifest REMOVE — the file leaves the
+    // live set instead of surviving as a 100% tombstone that
+    // every read must anti-join against forever. Totals come
+    // from the manifest `rows` channel (metadata-only — no
+    // second data scan in the no-rewrite verb); only files
+    // committed before row tracking fall back to a name-only
+    // count over JUST those files
+    val affectedNames = summaries.map(_._1).toSet
+    val affectedFiles = affectedNames.toSeq.flatMap(byName.get)
+    val tracked: Map[String, Long] = affectedFiles.flatMap(f =>
+      state.rows.get(f).map(new Path(f).getName -> _)).toMap
+    val untracked = affectedFiles.filter(f =>
+      !tracked.contains(new Path(f).getName))
+    val totals: Map[String, Long] =
+      if (untracked.isEmpty) tracked
+      else {
+        morCountScans += 1
+        import org.apache.spark.sql.functions.{count, lit}
+        tracked ++ rawReadFiles(state, untracked)
+          .groupBy(element_at(
+            split(col("_metadata.file_path"), "/"), -1).as("__n"))
+          .agg(count(lit(1)).as("__c"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+    // only files whose tombstone count GREW commit — a re-delete
+    // of covered rows must not burn a version
+    val changed = summaries.toSeq.flatMap { case (name, sc, n) =>
+      byName.get(name).filter(f =>
+        !state.dvs.get(f).map(_._2).contains(n))
+        .map(f => (f, sc, n))
+    }.sortBy(_._1)
+    val (full, partial) = changed.partition { case (f, _, n) =>
+      totals.get(new Path(f).getName).contains(n)
+    }
+    (full.map(_._1), partial, changed.map(_._1))
   }
 
   /** Materialize merge-on-read deletes: rewrite ONLY the live files
@@ -4438,13 +4147,13 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     * driver IO. */
   private[graft] var fileStatCalls: Long = 0L
 
-  /** Diagnostic counter: fallback data scans [[deleteWhereMoR]] ran to
+  /** Diagnostic counter: fallback data scans MoR tombstoning ran to
     * total rows of files with no manifest row count (legacy files) —
     * specs pin it to 0 on a count-tracked table. */
   private[graft] var morCountScans: Long = 0L
 
   /** Diagnostic counter: staging write jobs run — specs pin that a
-    * no-op [[updateWhereMoR]] (cond matching only tombstoned rows)
+    * no-op MoR [[updateWhere]] (cond matching only tombstoned rows)
     * runs ZERO write jobs. */
   private[graft] var stagingRuns: Long = 0L
 
@@ -5380,6 +5089,73 @@ object SnapshotTable {
       num_dv_files: Int, dv_tombstones: Long,
       num_rows: Option[Long], min_reader: Int, min_writer: Int)
 
+  /** A DML verb's row matcher. */
+  private[sources] sealed trait DmlMatch {
+    /** Only the matched rows of `df`. */
+    def hit(df: DataFrame): DataFrame
+    /** Only the unmatched rows of `df`. */
+    def miss(df: DataFrame): DataFrame
+  }
+  private[sources] object DmlMatch {
+    /** Rows where `cond` is TRUE; a NULL condition does not match. */
+    final case class Where(cond: Column) extends DmlMatch {
+      val isTrue: Column =
+        org.apache.spark.sql.functions.coalesce(cond,
+          org.apache.spark.sql.functions.lit(false))
+      def hit(df: DataFrame): DataFrame = df.filter(cond)
+      def miss(df: DataFrame): DataFrame = df.filter(!isTrue)
+    }
+    /** Rows whose `keyCols` appear in `keys` — key membership is a
+      * semi-join, not a literal predicate. */
+    final case class Keys(keys: DataFrame, keyCols: Seq[String])
+        extends DmlMatch {
+      def hit(df: DataFrame): DataFrame = df.join(keys, keyCols, "left_semi")
+      def miss(df: DataFrame): DataFrame = df.join(keys, keyCols, "left_anti")
+    }
+  }
+
+  /** How a DML commit holds up against interleaved writers, on top of
+    * being keyed (any interleaved rewrite or keyed commit conflicts). */
+  private[sources] sealed trait DmlCommit
+  private[sources] object DmlCommit {
+    /** Scoped to the touched files; nothing touched = no commit. */
+    case object Scoped extends DmlCommit
+    /** Unscoped, and conflicts with any interleaved append that may add
+      * rows matching `cond`; nothing touched or staged = no commit. */
+    final case class Guarded(cond: Column) extends DmlCommit
+    /** Unscoped, and always commits. */
+    case object Unscoped extends DmlCommit
+  }
+
+  /** The parts a DML verb plugs into [[SnapshotTable.dml]]: its `name`
+    * (the retried and recorded op; the tombstone step appends `MoR`),
+    * candidate narrowing over the pinned state, the row matcher and the
+    * commit policy. Matched rows are dropped or, with a non-empty `set` (a
+    * `Where` matcher), replaced by a copy carrying the assignments.
+    * `inserts` are the rows the verb adds: with `layout` (replaceWhere's
+    * `partitionBy`) they stage as their own slab, clustered by
+    * `applyLayout` and — with `validate` — refused unless every row
+    * satisfies the matcher's condition; without it (merge) they stage
+    * in one frame with the kept rows. */
+  private[sources] final case class DmlVerb(name: String,
+      candidates: TableState => Seq[String],
+      matcher: DmlMatch, policy: DmlCommit,
+      set: Seq[(String, Column)] = Nil, inserts: Option[DataFrame] = None,
+      layout: Option[Seq[String]] = None, validate: Boolean = false,
+      tag: Option[String] = None)
+
+  /** Files staged by one DML attempt, with their manifest channels. */
+  private[sources] final case class Staged(files: Seq[String],
+      stats: Seq[FileStat], sstats: Seq[StrStat],
+      counts: Map[String, Long], sizes: Seq[(String, Long)],
+      nulls: Seq[(String, String, Long)],
+      blooms: Seq[(String, String)] = Nil, schema: Option[String] = None) {
+    def ++(o: Staged): Staged = Staged(files ++ o.files, stats ++ o.stats,
+      sstats ++ o.sstats, counts ++ o.counts, sizes ++ o.sizes,
+      nulls ++ o.nulls, blooms ++ o.blooms, schema.orElse(o.schema))
+  }
+  private[sources] val noneStaged = Staged(Nil, Nil, Nil, Map.empty, Nil, Nil)
+
   /** Fully replayed table state at one version: live files in add
     * order, per-(file, col) long stats and string bounds, every
     * committed tag, the newest recorded schema, and the (file, col)
@@ -5548,7 +5324,7 @@ object SnapshotTable {
       * stat/constraint passes) or from the staged file's own parquet
       * FOOTER otherwise (a few-KB tail read per staged file, same
       * O(staged) driver shape as the staging move itself — never
-      * O(table)). Makes `deleteWhereMoR`'s full-file-tombstone check
+      * O(table)). Makes MoR tombstoning's full-file check
       * and `detail`'s `num_rows` metadata-only; files committed before
       * row tracking simply have no entry and fall back to a scan. */
     def rows(xs: Seq[(String, Long)]): Seq[String] = xs.map { case (f, n) =>

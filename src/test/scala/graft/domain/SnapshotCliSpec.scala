@@ -224,6 +224,38 @@ class SnapshotCliSpec extends SparkSuite {
     assert(e2.getMessage.contains("bad --column"))
   }
 
+  test("--mode is read like graft.dml.mode: MOR writes a deletion vector, a bogus mode is refused") {
+    val dir = java.nio.file.Files.createTempDirectory("snapclimode").toString
+    val table = s"$dir/tbl"; val in = s"$dir/in"
+    (1L to 10L).toDF("id").coalesce(1).write.parquet(in)
+    def run(op: String, extra: (String, String)*) = captured {
+      IngestCli.runTask(spark, "Snapshot",
+        Map("table" -> table, "op" -> op) ++ extra)
+    }
+    assert(run("append", "from" -> in).contains("committed version 1"))
+    val t = new SnapshotTable(spark, table)
+    val before = t.files()
+    // upper case and padding select merge-on-read, as the table property
+    assert(run("delete", "where" -> "id = 3", "mode" -> " MOR ")
+      .contains("deleted into version 2"))
+    assert(t.files() == before, "a MoR delete must rewrite no data file")
+    val sidecars = new java.io.File(s"$table/_index").list()
+    assert(sidecars != null && sidecars.exists(_.contains(".dv-")),
+      s"no deletion-vector sidecar under _index: ${Option(sidecars)
+        .map(_.toSeq)}")
+    assert(t.read().count() == 9)
+    // an unknown mode fails naming the option, and commits nothing
+    Seq("delete", "update", "merge", "replace").foreach { op =>
+      val e = intercept[IllegalArgumentException] {
+        run(op, "where" -> "id = 4", "set" -> "id=40", "from" -> in,
+          "keys" -> "id", "mode" -> "bogus")
+      }
+      assert(e.getMessage.contains("--mode") &&
+        e.getMessage.contains("bogus"), e.getMessage)
+    }
+    assert(t.currentVersion == 2 && t.read().count() == 9)
+  }
+
   test("rename through the CLI is metadata-only and deletes still resolve the new name") {
     val dir = java.nio.file.Files.createTempDirectory("snapcli").toString
     val table = s"$dir/tbl"; val in = s"$dir/in"

@@ -149,8 +149,8 @@ class SnapshotGaugeStoreSpec extends SparkSuite {
     val filesBefore = store.gaugeTable.files()
     // GDPR purge WITHOUT a rewrite: deletion vector on the fact table
     val day = java.time.LocalDate.parse("2023-04-23").toEpochDay
-    assert(store.gaugeTable.deleteWhereMoR(col("obs_day") === day,
-      prunePreds = Seq(("obs_day", day, day))) > 0)
+    assert(store.gaugeTable.deleteWhere(col("obs_day") === day,
+      prunePreds = Seq(("obs_day", day, day)), mor = true) > 0)
     assert(store.gaugeData.count() == 1)
     // the CDC-driven refresh sees the MoR delete (diff surfaces DV
     // tombstones) and clears exactly the purged day's partition

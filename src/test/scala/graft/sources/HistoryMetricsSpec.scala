@@ -39,7 +39,7 @@ class HistoryMetricsSpec extends SparkSuite {
 
     // MoR delete: DV-only commit — tombstone growth counts as removed,
     // zero files (and bytes) leave the live set
-    val v4 = t.deleteWhereMoR(col("id") === 2L)
+    val v4 = t.deleteWhere(col("id") === 2L, mor = true)
     val (a4, r4, _, rb4) = metricsAt(t, v4)
     assert(a4.contains(0L) && r4.contains(1L) && rb4.contains(0L))
 

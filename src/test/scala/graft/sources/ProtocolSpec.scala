@@ -27,24 +27,24 @@ class ProtocolSpec extends SparkSuite {
   test("MoR deletion vectors raise to (2,2) in the same commit") {
     val t = tmpTable()
     t.appendWithStats((1L to 10L).toDF("id"), statCols = Seq("id"))
-    val v = t.deleteWhereMoR(col("id") === 3L)
+    val v = t.deleteWhere(col("id") === 3L, mor = true)
     assert(v > 0)
     assert(t.protocol() == ((2, 2)))
     // the pre-DV snapshot still demands (1,1) — per-version gating
     assert(t.protocol(Some(v - 1)) == ((1, 1)))
     // a second MoR verb stays at (2,2)
-    t.updateWhereMoR(col("id") === 4L, Seq("id" -> lit(40L)))
+    t.updateWhere(col("id") === 4L, Seq("id" -> lit(40L)), mor = true)
     assert(t.protocol() == ((2, 2)))
   }
 
   test("column mapping raises to (3,3); MoR-then-rename keeps the max") {
     val t = tmpTable()
     t.append(Seq((1L, "a")).toDF("id", "tag"))
-    t.deleteWhereMoR(col("id") === 99L) // no match: no DV, no bump
+    t.deleteWhere(col("id") === 99L, mor = true) // no match: no DV, no bump
     assert(t.protocol() == ((1, 1)))
     t.renameColumn("tag", "label")
     assert(t.protocol() == ((3, 3)))
-    t.updateWhereMoR(col("id") === 1L, Seq("label" -> lit("b")))
+    t.updateWhere(col("id") === 1L, Seq("label" -> lit("b")), mor = true)
     assert(t.protocol() == ((3, 3))) // never lowered by a (2,2) verb
   }
 

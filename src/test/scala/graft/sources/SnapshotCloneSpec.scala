@@ -20,7 +20,7 @@ class SnapshotCloneSpec extends SparkSuite {
         (lo until lo + 100L).toDF("id").repartition(1),
         statCols = Seq("id"), bloomCols = Seq("id"))
     }
-    src.deleteWhereMoR(col("id") === 250L) // DV sidecar rides the clone
+    src.deleteWhere(col("id") === 250L, mor = true) // DV sidecar rides the clone
     src.renameColumn("id", "ident")        // mapping + protocol (3,3)
     src.addCheckConstraint("pos", "ident >= 0")
     val tgtDir = tmp("cltgt")

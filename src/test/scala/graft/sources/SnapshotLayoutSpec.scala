@@ -248,7 +248,7 @@ class SnapshotLayoutSpec extends SparkSuite {
     val t = new SnapshotTable(spark, dir)
     val before = t.files().toSet
     val repl = (0 until 50).map(i => (9000L + i, 2L)).toDF("id", "k")
-    t.replaceWhereMoR(repl, col("k") === 2L)
+    t.replaceWhere(repl, col("k") === 2L, mor = true)
     val inserted = t.files().toSet -- before
     assert(inserted.nonEmpty)
     // the inserted slab must carry k stats (the CoW/append symmetry):

@@ -177,8 +177,7 @@ class SnapshotMergeFuzzSpec extends SparkSuite {
     val src = sc.source.toDF("id", "v", "qty")
     val on = expr("target.id = source.id")
     try {
-      if (mor) t.mergeIntoMoR(src, on, m, i, n)
-      else t.mergeInto(src, on, m, i, n)
+      t.mergeInto(src, on, m, i, n, mor = mor)
       Right(t.read().collect().map(r => (r.getLong(0),
         Option(r.getString(1)), Option(r.get(2)).map(_ => r.getLong(2))))
         .toSeq)

@@ -126,7 +126,7 @@ class SnapshotMergeSpec extends SparkSuite {
     assert((beforeCow -- cow.files().toSet).size == 3)
 
     val beforeMor = mor.files().toSet
-    mor.mergeIntoMoR(srcDf, onKeys, clauses._1, clauses._2, clauses._3)
+    mor.mergeInto(srcDf, onKeys, clauses._1, clauses._2, clauses._3, mor = true)
     // no pre-merge file is REWRITTEN: the only one leaving the live
     // set is the single-row file whose union tombstones cover every
     // row (id 5, nmbs-updated) — the standard fully-covered-to-remove
@@ -187,9 +187,10 @@ class SnapshotMergeSpec extends SparkSuite {
         Some(expr("source.qty > 1000"))))) == 0)
     assert(t.currentVersion == v0)
     t.stagingRuns = 0
-    assert(t.mergeIntoMoR(Seq((99L, "x", 1L)).toDF("id", "v", "qty"), onKeys,
+    assert(t.mergeInto(Seq((99L, "x", 1L)).toDF("id", "v", "qty"), onKeys,
       matched = Seq(Update()),
-      notMatchedBySource = Seq(Delete(Some(expr("target.qty > 1000"))))) == 0)
+      notMatchedBySource = Seq(Delete(Some(expr("target.qty > 1000")))),
+      mor = true) == 0)
     assert(t.currentVersion == v0)
     assert(t.stagingRuns == 0,
       "a no-op MoR merge must not stage anything")
@@ -238,9 +239,9 @@ class SnapshotMergeSpec extends SparkSuite {
     cow.mergeInto(src, onKeys,
       matched = Seq(Update()), notMatched = Seq(Insert()),
       schemaEvolution = true)
-    mor.mergeIntoMoR(src, onKeys,
+    mor.mergeInto(src, onKeys,
       matched = Seq(Update()), notMatched = Seq(Insert()),
-      schemaEvolution = true)
+      schemaEvolution = true, mor = true)
     def got(t: SnapshotTable) = t.read().collect()
       .map(r => r.getLong(0) -> (r.getString(1),
         Option(r.get(r.fieldIndex("score"))))).toMap
@@ -296,9 +297,8 @@ class SnapshotMergeSpec extends SparkSuite {
           val key = (tid + i) % 4L
           val src = Seq((key, s"w$tid-$i")).toDF("id", "v")
           val cl = (Seq(Update()), Seq(Insert()))
-          if (tid == 2)
-            w.mergeIntoMoR(src, onKeys, matched = cl._1, notMatched = cl._2)
-          else w.mergeInto(src, onKeys, matched = cl._1, notMatched = cl._2)
+          w.mergeInto(src, onKeys, matched = cl._1, notMatched = cl._2,
+            mor = tid == 2)
         }
       } catch { case e: Throwable => errors.add(e) })
     }
@@ -345,12 +345,12 @@ class SnapshotMergeSpec extends SparkSuite {
   test("merge-on-read parity under pre-existing deletion vectors") {
     val cow = seed(); val mor = seed()
     // pre-tombstone id 4 on both, then merge source touching 3..5
-    Seq(cow, mor).foreach(_.deleteWhereMoR(col("id") === 4L))
+    Seq(cow, mor).foreach(_.deleteWhere(col("id") === 4L, mor = true))
     val src = Seq((3L, "C2", 3L), (4L, "D2", 4L)).toDF("id", "v", "qty")
     cow.mergeInto(src, onKeys,
       matched = Seq(Update()), notMatched = Seq(Insert()))
-    mor.mergeIntoMoR(src, onKeys,
-      matched = Seq(Update()), notMatched = Seq(Insert()))
+    mor.mergeInto(src, onKeys,
+      matched = Seq(Update()), notMatched = Seq(Insert()), mor = true)
     assert(asMap(cow) == asMap(mor))
     // the tombstoned row 4 is NOT matched (it is deleted), so the
     // source row for 4 INSERTS fresh on both paths
@@ -370,8 +370,8 @@ class SnapshotMergeSpec extends SparkSuite {
     val cow = seed(); val mor = seed()
     cow.mergeInto(src, onKeys, matched = clause,
       notMatched = Seq(Insert()))
-    mor.mergeIntoMoR(src, onKeys, matched = clause,
-      notMatched = Seq(Insert()))
+    mor.mergeInto(src, onKeys, matched = clause,
+      notMatched = Seq(Insert()), mor = true)
     val want = Map( // the clause assigns v only: qty keeps target's 20
       1L -> ("a", 10L), 2L -> ("B!", 20L), 3L -> ("c", 30L),
       4L -> ("d", 40L), 5L -> ("e", 50L), 9L -> ("i", 90L))
@@ -384,7 +384,7 @@ class SnapshotMergeSpec extends SparkSuite {
     val src = Seq((3L, "x", 1L), (3L, "y", 2L)).toDF("id", "v", "qty")
     val cow = seed(); val mor = seed()
     val vc = cow.mergeInto(src, onKeys, matched = Seq(Delete()))
-    val vm = mor.mergeIntoMoR(src, onKeys, matched = Seq(Delete()))
+    val vm = mor.mergeInto(src, onKeys, matched = Seq(Delete()), mor = true)
     assert(vc == 4 && vm == 4)
     val want = Map(1L -> ("a", 10L), 2L -> ("b", 20L),
       4L -> ("d", 40L), 5L -> ("e", 50L))
@@ -408,8 +408,8 @@ class SnapshotMergeSpec extends SparkSuite {
     assert(e2.getMessage.contains("multiple source rows"))
     // unconditional DELETE alongside another clause: not exempt either
     val e3 = intercept[IllegalStateException] {
-      seed().mergeIntoMoR(src, onKeys, matched = Seq(Delete(),
-        Update(None, Seq("v" -> expr("source.v")))))
+      seed().mergeInto(src, onKeys, matched = Seq(Delete(),
+        Update(None, Seq("v" -> expr("source.v")))), mor = true)
     }
     assert(e3.getMessage.contains("multiple source rows"))
   }

@@ -122,7 +122,7 @@ class SnapshotRelationSpec extends SparkSuite {
     val dir = tmpDir()
     val t = new SnapshotTable(spark, dir)
     t.appendWithStats((1L to 10L).toDF("id"), statCols = Seq("id"))
-    t.deleteWhereMoR(col("id") === 5L)
+    t.deleteWhere(col("id") === 5L, mor = true)
     t.renameColumn("id", "ident")
     val df = spark.read.format("snapshot").load(dir)
     assert(df.schema.fieldNames.toSeq == Seq("ident"))

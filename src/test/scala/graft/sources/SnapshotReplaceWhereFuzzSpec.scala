@@ -87,8 +87,7 @@ class SnapshotReplaceWhereFuzzSpec extends SparkSuite {
         val before = state(t)
         val v0 = t.currentVersion
         intercept[IllegalArgumentException] {
-          if (t eq mor) t.replaceWhereMoR(incomingDf, sc.cond.column)
-          else t.replaceWhere(incomingDf, sc.cond.column)
+          t.replaceWhere(incomingDf, sc.cond.column, mor = t eq mor)
         }
         assert(t.currentVersion == v0 && state(t) == before,
           s"seed $seed: refusal must leave the table byte-identical")
@@ -102,8 +101,7 @@ class SnapshotReplaceWhereFuzzSpec extends SparkSuite {
               if (st) Seq("k") else Nil); ()
           }
         }
-        if (t eq mor) t.replaceWhereMoR(incomingDf, sc.cond.column)
-        else t.replaceWhere(incomingDf, sc.cond.column)
+        t.replaceWhere(incomingDf, sc.cond.column, mor = t eq mor)
       }
       val base = sc.appends.flatMap(_._1)
       val appended = sc.injected.map(_._1).getOrElse(Nil)

@@ -96,7 +96,7 @@ class SnapshotReplaceWhereSpec extends SparkSuite {
     val beforeMor = mor.files().toSet
     val repl = Seq((9001L, 2L), (9002L, 2L)).toDF("id", "k")
     cow.replaceWhere(repl, col("k") === 2L)
-    mor.replaceWhereMoR(repl, col("k") === 2L)
+    mor.replaceWhere(repl, col("k") === 2L, mor = true)
     def full(t: SnapshotTable) = t.read().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(full(cow) == full(mor))
@@ -106,7 +106,7 @@ class SnapshotReplaceWhereSpec extends SparkSuite {
       "untouched files must survive as-is on the MoR path")
     // validation contract shared
     intercept[IllegalArgumentException] {
-      mor.replaceWhereMoR(Seq((1L, 7L)).toDF("id", "k"), col("k") === 2L)
+      mor.replaceWhere(Seq((1L, 7L)).toDF("id", "k"), col("k") === 2L, mor = true)
     }
     // dml.mode=mor routes the writer option to the MoR verb
     val routed = seed()
@@ -234,8 +234,10 @@ class SnapshotReplaceWhereSpec extends SparkSuite {
         s"validation must not run extra jobs: $on with vs $off without")
       // MoR path too
       val c = statSeed(); val d = statSeed()
-      val onM = jobs(c.replaceWhereMoR(repl, col("k") === 2L, validate = true))
-      val offM = jobs(d.replaceWhereMoR(repl, col("k") === 2L, validate = false))
+      val onM = jobs(c.replaceWhere(repl, col("k") === 2L, validate = true,
+        mor = true))
+      val offM = jobs(d.replaceWhere(repl, col("k") === 2L, validate = false,
+        mor = true))
       assert(onM == offM,
         s"MoR validation must not run extra jobs: $onM with vs $offM without")
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -250,7 +252,7 @@ class SnapshotReplaceWhereSpec extends SparkSuite {
       t.replaceWhere(bad, col("k") === 2L)
     }
     intercept[IllegalArgumentException] {
-      t.replaceWhereMoR(bad, col("k") === 2L)
+      t.replaceWhere(bad, col("k") === 2L, mor = true)
     }
     assert(t.currentVersion == v0 && t.files().toSet == dataBefore)
     val root = new org.apache.hadoop.fs.Path(t.root)

@@ -214,7 +214,7 @@ class SnapshotTableSpec extends SparkSuite {
       t.merge(Seq((2L, "x"), (2L, "y")).toDF("id", "v"), Seq("id"))
     }
     intercept[IllegalArgumentException] {
-      t.mergeMoR(Seq((2L, "x"), (2L, "y")).toDF("id", "v"), Seq("id"))
+      t.merge(Seq((2L, "x"), (2L, "y")).toDF("id", "v"), Seq("id"), mor = true)
     }
   }
 
@@ -232,7 +232,7 @@ class SnapshotTableSpec extends SparkSuite {
     val cow = seed(); cow.merge(src, Seq("id"))
     val mor = seed()
     val before = mor.files().toSet
-    assert(mor.mergeMoR(src, Seq("id")) == 4)
+    assert(mor.merge(src, Seq("id"), mor = true) == 4)
     // identical contents on identical inputs
     assert(asMap(mor) == asMap(cow))
     assert(asMap(mor) ==
@@ -247,7 +247,7 @@ class SnapshotTableSpec extends SparkSuite {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(old(3L) == "c" && !old.contains(9L))
     // a second upsert of the SAME key unions tombstones (no dup rows)
-    assert(mor.mergeMoR(Seq((3L, "C2")).toDF("id", "v"), Seq("id")) == 5)
+    assert(mor.merge(Seq((3L, "C2")).toDF("id", "v"), Seq("id"), mor = true) == 5)
     assert(asMap(mor)(3L) == "C2" && mor.read().count() == 6)
     // a merge that tombstones EVERY row of a file converts it to a
     // plain remove (the file leaves the live set)
@@ -255,18 +255,18 @@ class SnapshotTableSpec extends SparkSuite {
     t2.append(Seq((1L, "a")).toDF("id", "v").coalesce(1))
     t2.append(Seq((2L, "b"), (3L, "c")).toDF("id", "v").coalesce(1))
     val f2 = t2.files().toSet
-    t2.mergeMoR(Seq((1L, "A")).toDF("id", "v"), Seq("id"))
+    t2.merge(Seq((1L, "A")).toDF("id", "v"), Seq("id"), mor = true)
     assert((f2 -- t2.files().toSet).size == 1,
       "fully-covered file must convert to a plain remove")
     assert(t2.read().count() == 3)
     // materialization purges the DVs; contents unchanged
     val t3 = seed()
-    t3.mergeMoR(src, Seq("id"))
+    t3.merge(src, Seq("id"), mor = true)
     t3.materializeDeletes()
     assert(asMap(t3) == asMap(cow))
     // first merge into an EMPTY table is a plain keyed append
     val t4 = tmpTable()
-    assert(t4.mergeMoR(Seq((1L, "a")).toDF("id", "v"), Seq("id")) == 1)
+    assert(t4.merge(Seq((1L, "a")).toDF("id", "v"), Seq("id"), mor = true) == 1)
     assert(t4.read().count() == 1)
   }
 
@@ -714,7 +714,7 @@ class SnapshotTableSpec extends SparkSuite {
         val w = new SnapshotTable(spark, dir, checkpointInterval = 3)
         (0 until 6).foreach { i =>
           val key = (tid + i) % 4L
-          w.mergeMoR(Seq((key, s"w$tid-$i")).toDF("id", "v"), Seq("id"))
+          w.merge(Seq((key, s"w$tid-$i")).toDF("id", "v"), Seq("id"), mor = true)
         }
       } catch { case e: Throwable => errors.add(e) })
     }
@@ -1502,13 +1502,13 @@ class SnapshotTableSpec extends SparkSuite {
     assert(t.read().count() == 500)
     // MoR point upsert prunes the tombstone scan the same way
     t.lastDmlCandidates = Nil
-    t.mergeMoR(Seq(350L).toDF("id"), Seq("id"))
+    t.merge(Seq(350L).toDF("id"), Seq("id"), mor = true)
     assert(t.lastDmlCandidates.size == 1,
       s"mergeMoR scanned ${t.lastDmlCandidates.size} candidate files")
     assert(t.read().count() == 500)
     // insert-only upsert: zero candidates, still lands as an append
     t.lastDmlCandidates = Nil
-    t.mergeMoR(Seq(9999L).toDF("id"), Seq("id"))
+    t.merge(Seq(9999L).toDF("id"), Seq("id"), mor = true)
     assert(t.lastDmlCandidates.isEmpty ||
       t.lastDmlCandidates.size <= 1) // fpp may admit a file
     assert(t.read().count() == 501)
@@ -1592,7 +1592,7 @@ class SnapshotTableSpec extends SparkSuite {
     assert(t.readWhere(col("id") % 100L === 0L).count() == 5)
     assert(t.lastDmlCandidates.size == 5)
     // DV-aware: MoR-deleted rows stay deleted through readWhere
-    t.deleteWhereMoR(col("id") === 250L)
+    t.deleteWhere(col("id") === 250L, mor = true)
     assert(t.readWhere(col("id") === 250L).isEmpty)
     // version travel reads the pre-delete row
     assert(t.readWhere(col("id") === 250L,
@@ -1667,14 +1667,14 @@ class SnapshotTableSpec extends SparkSuite {
     assert(t.lastDmlCandidates.size == 1,
       s"derived equality must prune to 1 file, got ${t.lastDmlCandidates.size}")
     // range conjuncts derive too (between = >= AND <=)
-    assert(t.deleteWhereMoR(col("id").between(250L, 260L)) > 0)
+    assert(t.deleteWhere(col("id").between(250L, 260L), mor = true) > 0)
     assert(t.lastDmlCandidates.size == 1)
     // strict bounds: id > 290 keeps only the last file
     assert(t.deleteWhere(col("id") > 290L, statCols = Seq("id")) > 0)
     assert(t.lastDmlCandidates.size == 1)
     // IN derives the [min,max] envelope
-    assert(t.updateWhereMoR(col("id").isin(10L, 20L),
-      Seq("id" -> lit(0L)), statCols = Seq("id")) > 0)
+    assert(t.updateWhere(col("id").isin(10L, 20L),
+      Seq("id" -> lit(0L)), statCols = Seq("id"), mor = true) > 0)
     assert(t.lastDmlCandidates.size == 1)
     // manual preds still conjoin as overrides
     assert(t.deleteWhere(col("id") === 30L,
@@ -1720,17 +1720,17 @@ class SnapshotTableSpec extends SparkSuite {
   test("no-op MoR update (cond matches only tombstoned rows) runs ZERO write jobs") {
     val t = tmpTable()
     t.append((1L to 10L).toDF("id").coalesce(1))
-    assert(t.deleteWhereMoR(col("id") === 5L) > 0)
+    assert(t.deleteWhere(col("id") === 5L, mor = true) > 0)
     val v = t.currentVersion
     t.stagingRuns = 0
     // cond matches only the tombstoned row: no live match → no commit,
     // and the updated-copies staging job never runs
-    assert(t.updateWhereMoR(col("id") === 5L, Seq("id" -> lit(99L))) == 0)
+    assert(t.updateWhere(col("id") === 5L, Seq("id" -> lit(99L)), mor = true) == 0)
     assert(t.stagingRuns == 0,
       s"no-op MoR update ran ${t.stagingRuns} staging job(s)")
     assert(t.currentVersion == v)
     // a REAL match still stages exactly once
-    assert(t.updateWhereMoR(col("id") === 6L, Seq("id" -> lit(60L))) > 0)
+    assert(t.updateWhere(col("id") === 6L, Seq("id" -> lit(60L)), mor = true) > 0)
     assert(t.stagingRuns == 1)
     assert(t.read().where(col("id") === 60L).count() == 1)
   }
@@ -1802,7 +1802,7 @@ class SnapshotTableSpec extends SparkSuite {
     }
     // both delete flavors under the logical name
     t.deleteWhere(col("doc_id") === 5L)
-    t.deleteWhereMoR(col("doc_id") === 105L)
+    t.deleteWhere(col("doc_id") === 105L, mor = true)
     assert(t.read().count() == 298)
     // merge with a PLAIN source frame must not lose the mapping
     t.merge(Seq(105L, 301L).toDF("doc_id"), Seq("doc_id"))
@@ -1869,7 +1869,7 @@ class SnapshotTableSpec extends SparkSuite {
     }
     // an update THROUGH a deletion vector materializes it: the
     // tombstoned row stays gone and the rewritten file drops its DV
-    t.deleteWhereMoR(col("id") === 2L)
+    t.deleteWhere(col("id") === 2L, mor = true)
     assert(t.updateWhere(col("id") === 1L, Seq("v" -> lit(111L))) > 0)
     assert(t.read().where(col("id") === 2L).count() == 0,
       "materialized delete must not resurrect")
@@ -1929,7 +1929,7 @@ class SnapshotTableSpec extends SparkSuite {
     val filesBefore = t.files().toSet
     val preUpdate = t.currentVersion
     // point MoR update: old files stay live (tombstoned), one new file
-    val v = t.updateWhereMoR(col("id") === 3L, Seq("v" -> (col("v") + 500L)))
+    val v = t.updateWhere(col("id") === 3L, Seq("v" -> (col("v") + 500L)), mor = true)
     assert(v > 0)
     assert(filesBefore.subsetOf(t.files().toSet),
       "MoR update must not rewrite any existing file")
@@ -1943,27 +1943,27 @@ class SnapshotTableSpec extends SparkSuite {
       .as[Long].collect().toSeq == Seq(30L))
     // a second MoR update of the SAME row hits the updated COPY (new
     // file), tombstones it there, and appends again — still exactly one
-    assert(t.updateWhereMoR(col("id") === 3L, Seq("v" -> lit(999L))) > 0)
+    assert(t.updateWhere(col("id") === 3L, Seq("v" -> lit(999L)), mor = true) > 0)
     assert(t.read().where(col("id") === 3L).select("v")
       .as[Long].collect().toSeq == Seq(999L))
     assert(t.read().count() == 4)
     // a row MoR-DELETED earlier cannot resurrect as an updated copy
-    t.deleteWhereMoR(col("id") === 2L)
-    assert(t.updateWhereMoR(col("id") <= 2L, Seq("v" -> lit(0L))) > 0)
+    t.deleteWhere(col("id") === 2L, mor = true)
+    assert(t.updateWhere(col("id") <= 2L, Seq("v" -> lit(0L)), mor = true) > 0)
     assert(t.read().where(col("id") === 2L).count() == 0,
       "tombstoned row must not resurrect through an update")
     assert(t.read().where(col("id") === 1L).select("v")
       .as[Long].collect().toSeq == Seq(0L))
     // cond matching ONLY tombstoned rows = no commit
     val vHead = t.currentVersion
-    assert(t.updateWhereMoR(col("id") === 2L, Seq("v" -> lit(7L))) == 0)
+    assert(t.updateWhere(col("id") === 2L, Seq("v" -> lit(7L)), mor = true) == 0)
     assert(t.currentVersion == vHead)
     // updating EVERY row of one file converts it to a plain remove
     val dir2 = java.nio.file.Files.createTempDirectory("snaptab").toString
     val t2 = new SnapshotTable(spark, dir2)
     t2.append(Seq((1L, 1L), (2L, 2L)).toDF("id", "v").coalesce(1))
     t2.append(Seq((9L, 9L)).toDF("id", "v").coalesce(1))
-    assert(t2.updateWhereMoR(col("id") <= 2L, Seq("v" -> lit(0L))) > 0)
+    assert(t2.updateWhere(col("id") <= 2L, Seq("v" -> lit(0L)), mor = true) > 0)
     val d2 = t2.detail().collect().head
     assert(d2.getInt(8) == 0,
       s"fully-updated file must convert to a remove, not carry a DV: $d2")
@@ -2111,8 +2111,8 @@ class SnapshotTableSpec extends SparkSuite {
     // MoR delete with NO fallback count scan: totals come from the
     // manifest rows channel; the full-file tombstone still converts
     t2.morCountScans = 0
-    assert(t2.deleteWhereMoR(col("id") === 7L) > 0)
-    assert(t2.deleteWhereMoR(col("id") >= 15L) > 0)
+    assert(t2.deleteWhere(col("id") === 7L, mor = true) > 0)
+    assert(t2.deleteWhere(col("id") >= 15L, mor = true) > 0)
     assert(t2.morCountScans == 0,
       s"count-tracked MoR delete ran ${t2.morCountScans} fallback scans")
     assert(t2.files().size == 3, "fully-tombstoned file must leave the live set")
@@ -2131,7 +2131,7 @@ class SnapshotTableSpec extends SparkSuite {
     val dl = tl.detail().collect().head
     assert(dl.isNullAt(10), "untracked table must report num_rows null")
     tl.morCountScans = 0
-    assert(tl.deleteWhereMoR(col("id") >= 5L) > 0)
+    assert(tl.deleteWhere(col("id") >= 5L, mor = true) > 0)
     assert(tl.morCountScans == 1, "legacy table must fall back to the scan")
     assert(tl.files().size == 1 && ids(tl.read()) == (0L until 5L).toSet)
     // adopted files are count-tracked too (footer reads at import)
@@ -2143,7 +2143,7 @@ class SnapshotTableSpec extends SparkSuite {
     ti.importFiles(src)
     assert(ti.detail().collect().head.getLong(10) == 3L)
     ti.morCountScans = 0
-    assert(ti.deleteWhereMoR(col("id") >= 10L) > 0)
+    assert(ti.deleteWhere(col("id") >= 10L, mor = true) > 0)
     assert(ti.morCountScans == 0 && ti.files().isEmpty)
   }
 
@@ -2193,20 +2193,20 @@ class SnapshotTableSpec extends SparkSuite {
     val filesBefore = t.files()
     assert(filesBefore.size == 4)
     // MoR delete: rows vanish from reads, the FILE SET is unchanged
-    val v1 = t.deleteWhereMoR(col("id") === 12L)
+    val v1 = t.deleteWhere(col("id") === 12L, mor = true)
     assert(v1 == 5)
     assert(t.files() == filesBefore, "MoR delete must not touch files")
     assert(ids(t.read()) == (0L until 20L).toSet - 12L)
     // time travel still sees the row
     assert(ids(t.read(Some(4))).contains(12L))
     // second delete on the SAME file unions into a new sidecar
-    assert(t.deleteWhereMoR(col("id") === 11L) == 6)
+    assert(t.deleteWhere(col("id") === 11L, mor = true) == 6)
     assert(ids(t.read()) == (0L until 20L).toSet -- Set(11L, 12L))
     // re-deleting covered rows is a no-op, not a commit
-    assert(t.deleteWhereMoR(col("id") === 12L) == 0)
+    assert(t.deleteWhere(col("id") === 12L, mor = true) == 0)
     assert(t.currentVersion == 6)
     // absent key: no commit
-    assert(t.deleteWhereMoR(col("id") === 999L) == 0)
+    assert(t.deleteWhere(col("id") === 999L, mor = true) == 0)
     // a COLD reader applies DVs from checkpoint-carried state
     val cold = new SnapshotTable(spark, dir, checkpointInterval = 3)
     assert(ids(cold.read()) == (0L until 20L).toSet -- Set(11L, 12L))
@@ -2227,7 +2227,7 @@ class SnapshotTableSpec extends SparkSuite {
     t.restore(4)
     assert(ids(t.read()) == (0L until 20L).toSet)
     // compact materializes: read back full, then MoR delete + compact
-    t.deleteWhereMoR(col("id") === 3L)
+    t.deleteWhere(col("id") === 3L, mor = true)
     t.compact(coalesceTo = 1)
     assert(ids(t.read()) == (0L until 20L).toSet - 3L)
     assert(t.files().size == 1)
@@ -2253,7 +2253,7 @@ class SnapshotTableSpec extends SparkSuite {
     // matches EVERY row of file 1 and one row of file 2: file 1 must
     // leave the live set (no 100%-tombstoned file surviving forever),
     // file 2 gets a partial DV
-    val v = t.deleteWhereMoR(col("id") < 6L)
+    val v = t.deleteWhere(col("id") < 6L, mor = true)
     assert(v == 3)
     assert(t.files().size == 1, s"full file should be removed: ${t.files()}")
     assert(ids(t.read()) == Set(6L, 7L, 8L, 9L))
@@ -2277,7 +2277,7 @@ class SnapshotTableSpec extends SparkSuite {
     // in the REWRITTEN file
     val other = new SnapshotTable(spark, dir)
     t.raceInjector = () => { other.compact(coalesceTo = 1); () }
-    val v = t.deleteWhereMoR(col("id") === 7L)
+    val v = t.deleteWhere(col("id") === 7L, mor = true)
     assert(v == 4, s"expected retry to land at v4, got $v") // 2 appends + compact + dv
     assert(ids(t.read()) == (0L until 10L).toSet - 7L)
     assert(t.files().size == 1)
@@ -2292,8 +2292,8 @@ class SnapshotTableSpec extends SparkSuite {
     // DV to a sidecar that lacks the second's tombstone, silently
     // resurrecting it — the retry re-unions from the winner's sidecar
     val other = new SnapshotTable(spark, dir)
-    t.raceInjector = () => { other.deleteWhereMoR(col("id") === 4L); () }
-    assert(t.deleteWhereMoR(col("id") === 8L) == 3)
+    t.raceInjector = () => { other.deleteWhere(col("id") === 4L, mor = true); () }
+    assert(t.deleteWhere(col("id") === 8L, mor = true) == 3)
     assert(ids(t.read()) == (0L until 10L).toSet -- Set(4L, 8L))
     assert(t.files().size == 1)
   }
@@ -2302,7 +2302,7 @@ class SnapshotTableSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("snaptab").toString
     val t = new SnapshotTable(spark, dir, checkpointInterval = 2)
     t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1))
-    assert(t.deleteWhereMoR(col("id") === 2L) == 2)
+    assert(t.deleteWhere(col("id") === 2L, mor = true) == 2)
     // widening append AFTER the DV: old file null-fills the new
     // column AND its tombstone still applies under the pinned schema
     t.append(Seq((3L, "c", 9L)).toDF("id", "v", "extra"))
@@ -2320,7 +2320,7 @@ class SnapshotTableSpec extends SparkSuite {
     t.append((0L until 5L).toDF("id").coalesce(1))
     t.append((5L until 10L).toDF("id").coalesce(1))
     t.append((10L until 15L).toDF("id").coalesce(1))
-    assert(t.deleteWhereMoR(col("id") === 6L) > 0)
+    assert(t.deleteWhere(col("id") === 6L, mor = true) > 0)
     val dvFile = t.files()(1) // add-order: the 5..9 file carries the DV
     val before = t.files().toSet
     val v = t.materializeDeletes(statCols = Seq("id"))
@@ -2349,7 +2349,7 @@ class SnapshotTableSpec extends SparkSuite {
     t.importFiles(src)
     // the adopted file lives OUTSIDE data/ — the dv sweep must key on
     // retained-version references, not on a data-dir listing
-    assert(t.deleteWhereMoR(col("id") === 4L) == 2)
+    assert(t.deleteWhere(col("id") === 4L, mor = true) == 2)
     t.append(Seq(100L).toDF("id"))
     t.vacuum(retainFrom = t.currentVersion, stagingGraceMs = -1000L)
     assert(ids(t.read()) == (0L until 10L).toSet - 4L + 100L)
@@ -2365,8 +2365,8 @@ class SnapshotTableSpec extends SparkSuite {
       bloomCols = Seq("id"))
     t.appendWithStats((50L until 100L).toDF("id").coalesce(1), Seq("id"),
       bloomCols = Seq("id"))
-    val v = t.deleteWhereMoR(col("id") === 7L,
-      prunePreds = Seq(("id", 7L, 7L)), bloomPreds = Seq(("id", "7")))
+    val v = t.deleteWhere(col("id") === 7L,
+      prunePreds = Seq(("id", 7L, 7L)), bloomPreds = Seq(("id", "7")), mor = true)
     assert(v == 3)
     // stat-pruned and bloom-pruned reads both skip the tombstone
     // (pruning narrows FILES; the caller's row predicate still applies)
@@ -2389,7 +2389,7 @@ class SnapshotTableSpec extends SparkSuite {
     t.appendWithStats((10L until 20L).toDF("id").coalesce(1),
       statCols = Nil, bloomCols = Seq("id"))
     assert(t.prunedFilesBloom("id", "5").size == 1)
-    t.deleteWhereMoR(col("id") === 5L)
+    t.deleteWhere(col("id") === 5L, mor = true)
     // the CONTRACT: the stale bloom still advertises the deleted key —
     // its file is scanned (no prune regression into wrong-pruning) and
     // the DV anti-join returns zero rows (correctness)
@@ -2423,8 +2423,8 @@ class SnapshotTableSpec extends SparkSuite {
         val base = 1000L + tid * 1000L + i * 10L
         w.append((base until base + 5L).toDF("id").coalesce(1))
         // one seed id + one own-append id per round, both MoR
-        w.deleteWhereMoR(col("id") === (tid * 10L + (i % 10)))
-        w.deleteWhereMoR(col("id") === (base + 2L))
+        w.deleteWhere(col("id") === (tid * 10L + (i % 10)), mor = true)
+        w.deleteWhere(col("id") === (base + 2L), mor = true)
         if (i % 3 == tid % 3) w.compactSmall(targetBytes = 1L << 20)
         if (i % 4 == 2) w.materializeDeletes()
       }

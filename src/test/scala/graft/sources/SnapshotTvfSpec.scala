@@ -19,7 +19,7 @@ class SnapshotTvfSpec extends SparkSuite {
       Seq((1L, "a"), (2L, "b")).toDF("id", "tag").repartition(1),
       statCols = Seq("id"))
     t.append(Seq((3L, "c")).toDF("id", "tag"))
-    t.deleteWhereMoR(col("id") === 1L)
+    t.deleteWhere(col("id") === 1L, mor = true)
     d
   }
 

@@ -59,7 +59,7 @@ class CdfStreamSourceSpec extends SparkSuite {
     assert(contents(sink) == Set((1L, "insert"), (2L, "insert"),
       (3L, "insert"), (4L, "insert"), (2L, "delete")))
     // a merge-on-read delete flows as delete rows
-    src.deleteWhereMoR(col("id") === 4L)
+    src.deleteWhere(col("id") === 4L, mor = true)
     drainBoth()
     assert(contents(sink) == Set((1L, "insert"), (2L, "insert"),
       (3L, "insert"), (4L, "insert"), (2L, "delete"), (4L, "delete")))
@@ -144,7 +144,7 @@ class CdfStreamSourceSpec extends SparkSuite {
     // source moves on while the pipeline is down; restart resumes and
     // the batch tags dedup any redelivery
     src.append(Seq(3L).toDF("id"))
-    src.deleteWhereMoR(col("id") === 1L)
+    src.deleteWhere(col("id") === 1L, mor = true)
     replicate()
     assert(contents(sink) == Set((1L, "insert"), (2L, "insert"),
       (3L, "insert"), (1L, "delete")))
@@ -366,7 +366,7 @@ class CdfStreamSourceSpec extends SparkSuite {
     t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
     val v1 = t.currentVersion
     t.append(Seq((3L, "c")).toDF("id", "tag"))
-    t.deleteWhereMoR(col("id") === 1L)
+    t.deleteWhere(col("id") === 1L, mor = true)
     val v3 = t.currentVersion
     t.append(Seq((4L, "d")).toDF("id", "tag"))
     def chg(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =

@@ -55,7 +55,7 @@ class SnapshotStreamSourceSpec extends SparkSuite {
     drain(srcDir, ckpt, got)
     assert(got.size == 2, s"compaction leaked rows: $got")
     // a MoR delete now fails the stream with the named remedy
-    src.deleteWhereMoR(col("id") === 1L)
+    src.deleteWhere(col("id") === 1L, mor = true)
     src.append(Seq((4L, "d")).toDF("id", "tag"))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       drain(srcDir, ckpt, got)

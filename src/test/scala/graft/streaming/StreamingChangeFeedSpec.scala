@@ -106,7 +106,7 @@ class StreamingChangeFeedSpec extends SparkSuite {
     feed.drainAvailableNow((df, tag) => { sink.appendIfAbsent(df, tag); () })
     // a deletion-vector commit has NO remove set — the feed must still
     // surface it (diff's fast path rules out dv-bearing ranges)
-    assert(src.deleteWhereMoR(col("id") === 2L) > 0)
+    assert(src.deleteWhere(col("id") === 2L, mor = true) > 0)
     assert(feed.drainAvailableNow((df, tag) => {
       sink.appendIfAbsent(df, tag); ()
     }) == 1)
