@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
   *   IngestCli BuildAnnIndex   --embeddings <parquet> --index <dir> [--k N --iters N --scale N]
   *   IngestCli QueryAnn        --index <dir> --queries <parquet> [--k N --nprobe N --limit N]
   *   IngestCli Rollup          --store <dir>   (incremental daily OHLC tier)
+  *   IngestCli Sql             --query "<statement>"   (one JSON line per result row)
+  *   IngestCli Snapshot        --table <dir> --op protocol|upgradeProtocol|rename|vacuumLog|aggRefresh
   */
 object IngestCli {
 
@@ -126,207 +128,23 @@ object IngestCli {
           req("watchDir"), s"${req("store")}/_checkpoints/model_manifests")
         println("streamed model-run drain complete")
 
+      case "Sql" =>
+        // one statement through the session's SQL surface (the
+        // GraftExtensions DML, maintenance statements and TVFs), run
+        // once; each result row prints as one JSON object line (null
+        // columns kept), streamed so a large SELECT never collects
+        val df = spark.sql(req("query"))
+        df.select(to_json(struct(col("*")), Map("ignoreNullFields" -> "false")))
+          .as(org.apache.spark.sql.Encoders.STRING).toLocalIterator()
+          .forEachRemaining(line => println(line))
+
       case "Snapshot" =>
-        // control surface for the manifest-log table format
-        // (sources.SnapshotTable): append/read/history/diff/merge/
-        // compact/vacuum — the lakehouse maintenance verbs as CLI ops
+        // the snapshot-table operations SQL has no statement for;
+        // every other maintenance verb runs through `Sql`
         val t = new graft.sources.SnapshotTable(spark, req("table"))
-        // one parser for every comma-separated column-list option
         def csvOpt(name: String): Seq[String] =
           opts.get(name).map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-        // --mode cow|mor for the DML ops (delete/update/merge/replace):
-        // the graft.dml.mode rule — trimmed, case-insensitive, and an
-        // unknown value is refused rather than silently run as cow
-        lazy val mor = graft.sources.SnapshotDml.isMor(opts.get("mode"), "--mode")
-        // --prune col:lo:hi[,col:lo:hi] (manifest-stat ranges) and
-        // --bloom col:value[,col:value] (bloom-sidecar probes) narrow
-        // the candidate files of delete/update before any scan
-        def prunePreds: Seq[(String, Long, Long)] = csvOpt("prune").map { s =>
-          s.split(':') match {
-            case Array(c, lo, hi) => (c, lo.toLong, hi.toLong)
-            case _ => sys.error(s"bad --prune entry $s (want col:lo:hi)")
-          }
-        }
-        def bloomPreds: Seq[(String, String)] = csvOpt("bloom").map { s =>
-          s.split(':') match {
-            case Array(c, v) => (c, v)
-            case _ => sys.error(s"bad --bloom entry $s (want col:value)")
-          }
-        }
         req("op") match {
-          case "append" =>
-            val df = spark.read.parquet(req("from"))
-            // --statCols: per-file min/max in the manifest (numeric
-            // ranges; string columns record truncated string bounds);
-            // --bloomCols: per-file bloom sidecars under _index/ for
-            // point lookups the table is not clustered by
-            val v =
-              if (csvOpt("statCols").nonEmpty || csvOpt("bloomCols").nonEmpty)
-                t.appendWithStats(df, csvOpt("statCols"), csvOpt("bloomCols"),
-                  opts.getOrElse("bloomFpp", "0.01").toDouble)
-              else t.append(df)
-            println(s"committed version $v")
-          case "read" =>
-            // --version N for version travel; --asOf <epochMillis |
-            // ISO-8601 instant | local datetime (read as UTC)> for
-            // timestamp travel (largest version committed at or
-            // before the instant)
-            def parseTs(s: String): Long =
-              s.toLongOption.getOrElse {
-                try java.time.Instant.parse(s).toEpochMilli
-                catch {
-                  case _: java.time.format.DateTimeParseException =>
-                    java.time.LocalDateTime.parse(s)
-                      .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-                }
-              }
-            val version = opts.get("version").map(_.toInt)
-              .orElse(opts.get("asOf").map(ts => t.versionAt(parseTs(ts))))
-            // --where <sql bool>: metadata-pruned filtered read (preds
-            // derived from the condition; see SnapshotTable.readWhere)
-            val frame = opts.get("where") match {
-              case Some(w) =>
-                t.readWhere(org.apache.spark.sql.functions.expr(w), version)
-              case None => t.read(version)
-            }
-            println(s"rows=${frame.count()} " +
-              s"files=${t.files(version).size} " +
-              s"version=${version.getOrElse(t.currentVersion)}")
-          case "history" =>
-            // newest-first commit log (--limit, default 20): version,
-            // wall-clock, add/remove counts, tag, keyed marker — reads
-            // only the last N manifests, never a cost that grows with
-            // table lifetime (the old loop replayed EVERY version)
-            t.history(opts.getOrElse("limit", "20").toInt)
-              .collect().foreach { r =>
-                println(s"v${r.getInt(0)} at=${r.getTimestamp(1)} " +
-                  s"add=${r.getInt(2)} remove=${r.getInt(3)} " +
-                  s"tag=${Option(r.get(4)).getOrElse("-")} " +
-                  s"keyed=${r.getBoolean(5)} " +
-                  s"op=${Option(r.get(6)).getOrElse("-")}")
-              }
-          case "diff" =>
-            println(s"changes=${t.diff(req("fromVersion").toInt,
-              req("toVersion").toInt).count()}")
-          case "merge" =>
-            // --mode mor upserts via deletion vectors (no file rewrite)
-            println("merged into version " + t.merge(
-              spark.read.parquet(req("from")), csvOpt("keys"), mor = mor))
-          case "replace" =>
-            // targeted overwrite: delete rows matching --where, insert
-            // --from, ONE commit (replaceWhere); --mode mor tombstones
-            // via deletion vectors instead of rewriting;
-            // --validate false opts out of the inserted-rows check
-            val df = spark.read.parquet(req("from"))
-            val cond = org.apache.spark.sql.functions.expr(req("where"))
-            val check = opts.get("validate").forall(_.trim.toBoolean)
-            println("replaced into version " +
-              t.replaceWhere(df, cond, validate = check, mor = mor))
-          case "compact" =>
-            // optional: --zorder c1,c2 re-clusters the rewrite on a
-            // Morton curve (strings supported; one dim = exact range
-            // sort); --statCols c1,c2 records per-file min/max in the
-            // manifest (metadata-only pruning on later reads);
-            // --bloomCols rebuilds bloom sidecars for the rewrite
-            println("compacted into version " +
-              t.compact(opts.getOrElse("coalesceTo", "1").toInt,
-                csvOpt("zorder"), opts.getOrElse("zorderBits", "6").toInt,
-                csvOpt("statCols"), csvOpt("bloomCols"),
-                opts.getOrElse("bloomFpp", "0.01").toDouble))
-          case "materializeDeletes" =>
-            // rewrite ONLY the deletion-vector-bearing files (MoR
-            // purge): reads stop paying the anti-join, vacuum reclaims
-            // the sidecars; untouched files stay shared with history
-            val v = t.materializeDeletes(csvOpt("statCols"),
-              csvOpt("bloomCols"),
-              opts.getOrElse("bloomFpp", "0.01").toDouble)
-            println(if (v == 0) "no deletion vectors"
-              else s"materialized deletes into version $v")
-          case "compactSmall" =>
-            // size-aware OPTIMIZE: rewrites ONLY live files below
-            // --targetBytes (manifest-size selection, metadata-only),
-            // bin-packed to ~targetBytes outputs; files at or above
-            // the target are untouched — the maintenance shape that
-            // survives a 100 TB table
-            // optional --zorder c1,c2 re-clusters the rewritten tail
-            // (fresh stats/blooms make the packed files prunable too)
-            val v = t.compactSmall(
-              opts.getOrElse("targetBytes", (128L << 20).toString).toLong,
-              csvOpt("statCols"), csvOpt("bloomCols"),
-              opts.getOrElse("bloomFpp", "0.01").toDouble,
-              csvOpt("zorder"), opts.getOrElse("zorderBits", "6").toInt)
-            println(if (v == 0) "nothing to compact"
-              else s"compacted small files into version $v")
-          case "delete" =>
-            // --where is a SQL boolean over the table's columns;
-            // --prune/--bloom narrow the candidates (--bloom is the
-            // delete-one-id-from-an-unclustered-table shape);
-            // --bloomCols rebuilds sidecars for the rewritten files.
-            // --mode mor = merge-on-read (deletion vectors: no file
-            // rewrite, reads skip tombstoned rows until a rewrite
-            // materializes); default = copy-on-write rewrite
-            val v = t.deleteWhere(expr(req("where")), prunePreds,
-              csvOpt("statCols"), bloomPreds, csvOpt("bloomCols"), mor = mor)
-            println(if (v == 0) "nothing matched" else s"deleted into version $v")
-          case "feed" =>
-            // change-data-feed drain: every available manifest range
-            // flows once (write-ahead intent under --checkpoint; with
-            // --into, exactly-once into a sink SnapshotTable via
-            // range-tag dedup). --startAt V tails changes after V
-            // (default 0 = initial snapshot as inserts).
-            val feed = new graft.streaming.SnapshotChangeFeed(spark, t,
-              req("checkpoint"), opts.getOrElse("startAt", "0").toInt)
-            val maxV = opts.get("maxVersions").map(_.toInt)
-              .getOrElse(Int.MaxValue)
-            val n = opts.get("into") match {
-              case Some(dst) =>
-                val sink = new graft.sources.SnapshotTable(spark, dst)
-                feed.drainAvailableNow((df, tag) => {
-                  sink.appendIfAbsent(df, tag); ()
-                }, maxV)
-              case None =>
-                feed.drainAvailableNow((df, tag) =>
-                  println(s"$tag: ${df.count()} change row(s)"), maxV)
-            }
-            println(s"fed $n range(s); cursor at v${feed.cursor}")
-          case "import" =>
-            // adopt an existing parquet dir as the FIRST snapshot by
-            // reference (no copy) — the CONVERT-TO-DELTA migration
-            // shape; refuses Hive-partitioned layouts (values live in
-            // dir names and would be lost)
-            println("imported into version " +
-              t.importFiles(req("from"), csvOpt("statCols")))
-          case "copyInto" =>
-            // --from <dir|glob> --format csv|parquet|json
-            // [--pattern '*.csv'] [--options k=v;;k=v] [--force true]
-            // [--lookbackDays n]: exactly-once batch file loading —
-            // the ledger rides the data commit (SnapshotCopyInto)
-            val fmtOpts = opts.getOrElse("options", "").split(";;")
-              .filter(_.contains("=")).map { kv =>
-                val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1)
-              }.toMap
-            val r = graft.sources.SnapshotCopyInto.copyInto(t,
-              req("from"), req("format"), fmtOpts, opts.get("pattern"),
-              force = opts.getOrElse("force", "false").toBoolean,
-              lookbackDays = opts.get("lookbackDays").map(_.toInt)
-                .getOrElse(graft.sources.SnapshotCopyInto.DefaultLookbackDays))
-            println(s"copied ${r.filesLoaded} file(s), ${r.rowsLoaded} " +
-              s"row(s) into version ${r.version}; skipped ${r.filesSkipped}")
-          case "setProperty" =>
-            println(s"property set in version " +
-              t.setProperty(req("key"), req("value")))
-          case "removeProperty" =>
-            println(s"property removed in version " +
-              t.removeProperty(req("key")))
-          case "properties" =>
-            t.properties().toSeq.sorted.foreach { case (k, v) =>
-              println(s"$k=$v")
-            }
-          case "clone" =>
-            // --target <dir> [--version N]: zero-copy shallow clone
-            println(s"cloned into " + req("target") + " version " +
-              t.shallowCloneTo(req("target"),
-                opts.get("version").map(_.toInt)))
           case "protocol" =>
             val (r, w) = t.protocol()
             println(s"minReader=$r minWriter=$w " +
@@ -336,31 +154,10 @@ object IngestCli {
             println(s"protocol raised in version " +
               t.upgradeProtocol(req("minReader").toInt,
                 req("minWriter").toInt))
-          case "addConstraint" =>
-            // CHECK constraint: existing rows must satisfy --expr;
-            // every later write validates its staged rows against it
-            println(s"constraint added in version " +
-              t.addCheckConstraint(req("name"), req("expr")))
-          case "addGeneratedColumn" =>
-            // GENERATED ALWAYS AS: --name --expr; writes omitting the
-            // column compute it, writes carrying it are validated
-            println(s"generated column added in version " +
-              t.addGeneratedColumn(req("name"), req("expr")))
-          case "dropGeneratedColumn" =>
-            println(s"generated column dropped in version " +
-              t.dropGeneratedColumn(req("name")))
-          case "dropConstraint" =>
-            println(s"constraint dropped in version " +
-              t.dropConstraint(req("name")))
-          case "restore" =>
-            // metadata-only rollback: re-adds snapshot v's files as a
-            // new commit, no data rewrite (refuses if vacuumed)
-            println(s"restored snapshot ${req("version")} as version " +
-              t.restore(req("version").toInt))
           case "vacuumLog" =>
             // log-only retention: truncate manifests below the newest
             // checkpoint that keeps the last N snapshots replayable
-            // (data files untouched — see vacuum for the data sweep)
+            // (data files untouched — SQL VACUUM is the data sweep)
             val n = t.vacuumLog(req("retainVersions").toInt)
             println(s"deleted $n log files (retention floor now ${t.retentionFloor})")
           case "rename" =>
@@ -372,53 +169,6 @@ object IngestCli {
             }
             val v = t.renameColumn(oldN, newN)
             println(s"renamed $oldN -> $newN at v$v (no data rewritten)")
-          case "update" =>
-            // UPDATE: --where <sql bool>
-            // --set "col=expr[;col2=expr2]" [--prune col:lo:hi]
-            // [--bloom col:value]
-            val cond = org.apache.spark.sql.functions.expr(req("where"))
-            val sets = req("set").split(";").toSeq.map { kv =>
-              kv.split("=", 2) match {
-                case Array(c, e) =>
-                  c.trim -> org.apache.spark.sql.functions.expr(e.trim)
-                case _ => sys.error("bad --set (want col=expr[;col2=expr2])")
-              }
-            }
-            // --mode mor = merge-on-read (tombstone old rows via
-            // deletion vectors + append updated copies, one commit,
-            // no file rewrite); default = copy-on-write rewrite
-            val v = t.updateWhere(cond, sets, prunePreds = prunePreds,
-              bloomPreds = bloomPreds, mor = mor)
-            if (v == 0) println("nothing matched; no commit")
-            else println(s"updated into version $v")
-          case "drop" =>
-            // metadata-only column drop: the physical name stays
-            // reserved until an overwrite retires the on-disk data
-            val v = t.dropColumn(req("column"))
-            println(s"dropped ${req("column")} at v$v (no data rewritten)")
-          case "detail" =>
-            // one-row DESCRIBE DETAIL summary
-            val r = t.detail().collect().head
-            println(s"version=${r.getInt(0)} files=${r.getInt(1)} " +
-              s"bytes=${r.getLong(2)} tags=${r.getInt(3)} " +
-              s"props=[${r.getSeq[String](4).mkString(";")}] " +
-              s"constraints=[${r.getSeq[String](5).mkString(";")}] " +
-              s"floor=${r.getInt(6)} checkpoint=${r.getInt(7)} " +
-              s"dvFiles=${r.getInt(8)} dvTombstones=${r.getLong(9)} " +
-              s"rows=${if (r.isNullAt(10)) "unknown" else r.getLong(10)} " +
-              s"protocol=(${r.getInt(11)},${r.getInt(12)})")
-          case "vacuum" =>
-            // graceMs: in-flight-commit protection window (default 1h);
-            // files under data/ younger than this are never reaped even
-            // when unreferenced — they may be a commit mid-publish
-            // truncateLog=false: Delta-style split knob — reap data
-            // but keep the manifest history (see SnapshotTable.vacuum)
-            // dryRun=true: report the doomed count, change nothing
-            val dry = opts.getOrElse("dryRun", "false").toBoolean
-            val n = t.vacuum(req("retainFrom").toInt,
-              opts.getOrElse("graceMs", "3600000").toLong,
-              opts.getOrElse("truncateLog", "true").toBoolean, dry)
-            println(if (dry) s"would reap $n files" else s"reaped $n files")
           case "aggRefresh" =>
             // CDC-maintained rollup: keep a COUNT/SUM state of this
             // table in a second snapshot table (--state), refreshed

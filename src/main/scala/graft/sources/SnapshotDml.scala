@@ -105,18 +105,14 @@ object SnapshotDml {
           .create(x.eval(), x.dataType)
     }
 
+  /** The table's `graft.dml.mode`: trimmed, case-insensitive `cow`
+    * (the default when unset) or `mor`; anything else is refused. */
   private[sources] def morOf(t: SnapshotTable): Boolean =
-    isMor(t.properties().get(DmlModeProp), DmlModeProp)
-
-  /** The DML mode rule shared by the table property and the CLI's
-    * `--mode`: trimmed, case-insensitive `cow` (the default when
-    * unset) or `mor`; anything else is refused, naming `setting`. */
-  private[graft] def isMor(mode: Option[String], setting: String): Boolean =
-    mode.map(_.trim.toLowerCase) match {
+    t.properties().get(DmlModeProp).map(_.trim.toLowerCase) match {
       case Some("mor") => true
       case Some("cow") | None => false
       case Some(other) => throw new IllegalArgumentException(
-        s"$setting must be 'cow' or 'mor', got '$other'")
+        s"$DmlModeProp must be 'cow' or 'mor', got '$other'")
     }
 }
 

@@ -224,8 +224,7 @@ object SnapshotMerge {
         .map(SnapshotDml.foldConsts)
       val cand0 =
         if (tOnly.isEmpty) { t.lastDmlCandidates = state.live; state.live }
-        else t.dmlCandidates(state,
-          ColumnBridge.toColumn(tOnly.reduce(And)), Nil, Nil)
+        else t.dmlCandidates(state, ColumnBridge.toColumn(tOnly.reduce(And)))
       // tier 2: the first `target.col = <source expr>` equi-conjunct
       // prunes by the source's own (bounded) key set — the point-upsert
       // shape scans the bloom-hit file, not the table

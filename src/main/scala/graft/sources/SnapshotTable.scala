@@ -1905,7 +1905,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
           val stateHead = replayStateFull(head)
           val liveSet = stateHead.live.toSet
           val surv = dmlCandidates(
-            stateHead.copy(live = fresh.filter(liveSet)), g, Nil, Nil)
+            stateHead.copy(live = fresh.filter(liveSet)), g)
           if (surv.nonEmpty) {
             fs.delete(tmp, false)
             throw new SnapshotTable.CommitConflict(
@@ -2170,7 +2170,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       s"snapshot $v does not exist (current ${currentVersion})")
     // ONE pinned replay supplies files, stats AND schema
     val state = replayStateFull(v)
-    planFiles(state, v, dmlCandidates(state, cond, Nil, Nil)).filter(cond)
+    planFiles(state, v, dmlCandidates(state, cond)).filter(cond)
   }
 
   // ---- string-stat pruning -------------------------------------------
@@ -3012,26 +3012,21 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       declaredSchema = declaredSchema)
 
   /** File-candidate narrowing shared by the DML verbs: the metadata
-    * prune tiers (long stats, string stats, bloom sidecars) applied as
-    * the CONJUNCTION of caller-passed preds and preds
-    * [[SnapshotTable.derivePreds derived]] from `cond`'s own
-    * `col <op> literal` conjuncts — `updateWhere($"id" === k)` with no
-    * manual preds scans only the stat/bloom-surviving files instead of
-    * every live file. Derivation is sound (only implied ranges), so
-    * conjoining can only shrink the candidate set, never lose a match;
-    * conditions derivation can't see through (disjunctions,
-    * non-literal operands) simply fall back to the caller's preds or
-    * the full live set. `lastDmlCandidates` records the result for
-    * the scan-counting specs. */
+    * prune tiers (long stats, string stats, bloom sidecars) applied
+    * with the preds [[SnapshotTable.derivePreds derived]] from `cond`'s
+    * own `col <op> literal` conjuncts — `updateWhere($"id" === k)`
+    * scans only the stat/bloom-surviving files instead of every live
+    * file. Derivation is sound (only implied ranges), so pruning can
+    * never lose a match; conditions derivation can't see through
+    * (disjunctions, non-literal operands) simply keep the full live
+    * set. `lastDmlCandidates` records the result for the
+    * scan-counting specs. */
   private[sources] def dmlCandidates(state: SnapshotTable.TableState,
-      cond: org.apache.spark.sql.Column,
-      prunePreds: Seq[(String, Long, Long)],
-      bloomPreds: Seq[(String, String)]): Seq[String] = {
+      cond: org.apache.spark.sql.Column): Seq[String] = {
     val (autoLong, autoStr, autoBloom, autoBloomAny, autoNulls) =
       SnapshotTable.derivePreds(cond)
-    val pp = prunePreds ++ autoLong
     var candidates = state.live.filter { f =>
-      pp.forall { case (c, lo, hi) =>
+      autoLong.forall { case (c, lo, hi) =>
         state.stats.get((f, c)).forall { case (flo, fhi) =>
           fhi >= lo && flo <= hi }
       } && strStatSurvives(state.sstats, f, autoStr) &&
@@ -3045,7 +3040,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
               .exists { case (n, r) => n == r }
         }
     }
-    (bloomPreds ++ autoBloom).foreach { case (c, v) =>
+    autoBloom.foreach { case (c, v) =>
       if (candidates.nonEmpty) {
         val keep = bloomSurvivors(state.copy(live = candidates), c, v)
         candidates = candidates.filter(keep.contains)
@@ -3138,25 +3133,19 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     * match; `mor = true` tombstones the rows via deletion vectors and
     * rewrites nothing. Candidates narrow from metadata first: ranges
     * and equality probes implied by `cond`'s own `col <op> literal`
-    * conjuncts are DERIVED automatically ([[SnapshotTable.derivePreds]]);
-    * `prunePreds` (manifest-stat ranges, as [[prunedFilesMulti]]) and
-    * `bloomPreds` (`(col, value)` equality keys implied by `cond`)
-    * conjoin for bounds the derivation can't see. A bloom probe is the
-    * right-to-erasure shape: deleting one id from an UNCLUSTERED table,
-    * where min/max ranges prune nothing, touches only the bloom-hit
-    * file(s); files without a sidecar for the column stay candidates
-    * (pruning is never wrong, only incomplete). `statCols`/`bloomCols`
-    * re-record pruning metadata for rewritten files, exactly like
-    * [[compact]]. The commit is scoped to the touched files. Returns
+    * conjuncts are DERIVED automatically ([[SnapshotTable.derivePreds]]).
+    * An equality's bloom probe is the right-to-erasure shape: deleting
+    * one id from an UNCLUSTERED table, where min/max ranges prune
+    * nothing, touches only the bloom-hit file(s); files without a
+    * sidecar for the column stay candidates (pruning is never wrong,
+    * only incomplete). `statCols`/`bloomCols` re-record pruning
+    * metadata for rewritten files, exactly like [[compact]]. The commit is scoped to the touched files. Returns
     * the committed version, or 0 when no live row matched (no empty
     * commit; re-deleting tombstoned rows is such a no-op). */
-  def deleteWhere(cond: Column,
-      prunePreds: Seq[(String, Long, Long)] = Nil,
-      statCols: Seq[String] = Nil,
-      bloomPreds: Seq[(String, String)] = Nil,
+  def deleteWhere(cond: Column, statCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01,
       mor: Boolean = false): Int =
-    dml(DmlVerb("deleteWhere", dmlCandidates(_, cond, prunePreds, bloomPreds),
+    dml(DmlVerb("deleteWhere", dmlCandidates(_, cond),
       DmlMatch.Where(cond), DmlCommit.Scoped),
       mor, statCols, bloomCols, bloomFpp)
 
@@ -3189,7 +3178,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomFpp: Double = 0.01, validate: Boolean = true,
       partitionBy: Seq[String] = Nil, mor: Boolean = false): Int =
-    dml(DmlVerb("replaceWhere", dmlCandidates(_, cond, Nil, Nil),
+    dml(DmlVerb("replaceWhere", dmlCandidates(_, cond),
       DmlMatch.Where(cond), DmlCommit.Guarded(cond), inserts = Some(df0),
       layout = Some(partitionBy), validate = validate),
       mor, statCols, bloomCols, bloomFpp)
@@ -3197,9 +3186,9 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
   /** UPDATE every live row matching `cond` with the `set` assignments
     * (`column -> new-value expression`, evaluated per row) through the
     * [[dml]] pipeline — the completion of [[deleteWhere]], with the
-    * same candidate narrowing (derived, `prunePreds`, `bloomPreds`)
-    * and the same scoped commit. Copy-on-write rewrites the files that
-    * hold a match, non-matching rows passing through; `mor = true`
+    * same derived candidate narrowing and the same scoped commit.
+    * Copy-on-write rewrites the files that hold a match, non-matching
+    * rows passing through; `mor = true`
     * tombstones the matched rows and appends their updated copies,
     * taken from the DV-applied scan (a row an earlier MoR delete
     * tombstoned cannot resurrect as an "updated" copy). Every
@@ -3208,14 +3197,12 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     * update); mapped tables address the LOGICAL name. Returns the
     * committed version, or 0 when no live row matched. */
   def updateWhere(cond: Column, set: Seq[(String, Column)],
-      prunePreds: Seq[(String, Long, Long)] = Nil,
       statCols: Seq[String] = Nil,
-      bloomPreds: Seq[(String, String)] = Nil,
       bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01,
       mor: Boolean = false): Int = {
     require(set.nonEmpty,
       s"updateWhere${if (mor) "MoR" else ""} needs at least one assignment")
-    dml(DmlVerb("updateWhere", dmlCandidates(_, cond, prunePreds, bloomPreds),
+    dml(DmlVerb("updateWhere", dmlCandidates(_, cond),
       DmlMatch.Where(cond), DmlCommit.Scoped, set = set),
       mor, statCols, bloomCols, bloomFpp)
   }
@@ -3272,6 +3259,9 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       val base = currentVersion
       val state = replayStateFull(base)
       val candidates = if (state.live.isEmpty) Nil else v.candidates(state)
+      // refuse a bad assignment before either write step writes a file
+      if (v.set.nonEmpty) state.schema.foreach(js =>
+        checkAssignments(op, parseSchema(js).fieldNames.toSeq, v.set))
       def qualified(f: String) = fs.makeQualified(new Path(f)).toString
       // stages the slabs in order; stat/bloom columns follow the first
       // frame (the inserts' shape when there are any)
@@ -3389,12 +3379,8 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
   private def assigned(op: String, frame: DataFrame,
       set: Seq[(String, Column)], onlyIf: Option[Column]): DataFrame = {
     import org.apache.spark.sql.functions.{col, when}
+    checkAssignments(op, frame.schema.fieldNames.toSeq, set)
     val byName = set.map { case (c, e) => c.toLowerCase -> e }.toMap
-    require(byName.size == set.size, s"$op: duplicate assignment target")
-    val have = frame.schema.fieldNames
-    val unknown = set.map(_._1).filterNot(c => have.exists(_.equalsIgnoreCase(c)))
-    require(unknown.isEmpty, s"$op: no such column(s) " +
-      s"${unknown.mkString(", ")} (have ${have.mkString(", ")})")
     frame.select(frame.schema.fields.map { f =>
       byName.get(f.name.toLowerCase) match {
         case Some(e) =>
@@ -3403,6 +3389,17 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
         case None => col(f.name)
       }
     }.toSeq: _*)
+  }
+
+  /** Refuses `set` when it repeats a target or names a column not in
+    * `have` (names matched case-insensitively). */
+  private def checkAssignments(op: String, have: Seq[String],
+      set: Seq[(String, Column)]): Unit = {
+    require(set.map(_._1.toLowerCase).distinct.size == set.size,
+      s"$op: duplicate assignment target")
+    val unknown = set.map(_._1).filterNot(c => have.exists(_.equalsIgnoreCase(c)))
+    require(unknown.isEmpty, s"$op: no such column(s) " +
+      s"${unknown.mkString(", ")} (have ${have.mkString(", ")})")
   }
 
   /** The tombstone write step of [[dml]] (and [[SnapshotMerge]]'s MoR
@@ -4566,9 +4563,9 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
 object SnapshotTable {
   /** Prune predicates DERIVED from a DML condition's own top-level
     * `col <op> literal` conjuncts — `(longRanges, stringRanges,
-    * bloomProbes)`. At 100 TB the difference between "the user
-    * remembered to pass prunePreds" and "the engine derives them from
-    * the condition" is whether `updateWhere($"id" === k)` scans one
+    * bloomProbes)`. At 100 TB the difference between "the caller
+    * passed prune hints" and "the engine derives them from the
+    * condition" is whether `updateWhere($"id" === k)` scans one
     * bloom-surviving file or every live file — the whole point of the
     * stats channel. Sound by construction: only conjuncts that MUST
     * hold for the condition to be true contribute, each mapped to a
@@ -4576,7 +4573,7 @@ object SnapshotTable {
     * casts are monotone, so integral-literal bounds survive them);
     * disjunctions, non-literal operands and exotic literal types
     * derive NOTHING — those conditions simply fall back to the full
-    * candidate set. Derived preds conjoin with caller-passed ones. */
+    * candidate set. */
   private[graft] def derivePreds(cond: org.apache.spark.sql.Column)
       : (Seq[(String, Long, Long)],
          Seq[(String, Array[Byte], Option[Array[Byte]])],

@@ -129,7 +129,7 @@ class SnapshotGaugeStoreSpec extends SparkSuite {
     // GDPR-style purge of day 23 via the snapshot DELETE
     val day = java.time.LocalDate.parse("2023-04-23").toEpochDay
     assert(store.gaugeTable.deleteWhere(col("obs_day") === day,
-      prunePreds = Seq(("obs_day", day, day)), statCols = Seq("obs_day")) > 0)
+      statCols = Seq("obs_day")) > 0)
     val rebuilt = store.rollupDaily()
     assert(rebuilt.map(_._2) == Seq("2023-04-23"))
     // the emptied day's rollup partition must be GONE, not stale —
@@ -150,7 +150,7 @@ class SnapshotGaugeStoreSpec extends SparkSuite {
     // GDPR purge WITHOUT a rewrite: deletion vector on the fact table
     val day = java.time.LocalDate.parse("2023-04-23").toEpochDay
     assert(store.gaugeTable.deleteWhere(col("obs_day") === day,
-      prunePreds = Seq(("obs_day", day, day)), mor = true) > 0)
+      mor = true) > 0)
     assert(store.gaugeData.count() == 1)
     // the CDC-driven refresh sees the MoR delete (diff surfaces DV
     // tombstones) and clears exactly the purged day's partition

@@ -601,8 +601,7 @@ class SnapshotTableSpec extends SparkSuite {
     val before = t.files().toSet
     // delete 10 rows that live entirely in file 2; the stat ranges
     // prune files 1 and 3 before any IO
-    val v = t.deleteWhere(col("id").between(150L, 159L),
-      prunePreds = Seq(("id", 150L, 159L)), statCols = Seq("id"))
+    val v = t.deleteWhere(col("id").between(150L, 159L), statCols = Seq("id"))
     assert(v == 4)
     assert(t.read().count() == 290)
     assert(t.read().filter(col("id").between(150L, 159L)).count() == 0)
@@ -1174,7 +1173,6 @@ class SnapshotTableSpec extends SparkSuite {
     assert(hitFiles.nonEmpty && hitFiles.size < 20)
     val before = t.files().toSet
     val v = t.deleteWhere(col("doc_id") === victim,
-      bloomPreds = Seq(("doc_id", victim)),
       statCols = Seq("doc_id"), bloomCols = Seq("doc_id"))
     assert(v > 0)
     val after = t.files().toSet
@@ -1193,8 +1191,7 @@ class SnapshotTableSpec extends SparkSuite {
     // absent key: bloom prunes every candidate BEFORE any scan — no
     // data-file IO, no commit, version unchanged
     val cur = t.currentVersion
-    assert(t.deleteWhere(col("doc_id") === "doc-nope",
-      bloomPreds = Seq(("doc_id", "doc-nope"))) == 0)
+    assert(t.deleteWhere(col("doc_id") === "doc-nope") == 0)
     assert(t.currentVersion == cur)
   }
 
@@ -1676,10 +1673,6 @@ class SnapshotTableSpec extends SparkSuite {
     assert(t.updateWhere(col("id").isin(10L, 20L),
       Seq("id" -> lit(0L)), statCols = Seq("id"), mor = true) > 0)
     assert(t.lastDmlCandidates.size == 1)
-    // manual preds still conjoin as overrides
-    assert(t.deleteWhere(col("id") === 30L,
-      prunePreds = Seq(("id", 30L, 30L)), statCols = Seq("id")) > 0)
-    assert(t.lastDmlCandidates.size == 1)
     // a DISJUNCTION derives nothing: all live files stay candidates
     val liveNow = t.files().size
     assert(t.deleteWhere(col("id") === 5L || col("id") === 205L,
@@ -1715,6 +1708,27 @@ class SnapshotTableSpec extends SparkSuite {
       s"IN-list bloom probe kept ${t2.lastDmlCandidates.size} files, " +
         s"union of per-value hits is ${inHits.size}")
     assert(t2.read().where(col("doc_id").isin(vics: _*)).count() == 0)
+  }
+
+  test("a MoR update naming an unknown or repeated column is refused before any sidecar is written") {
+    val t = tmpTable()
+    t.append((1L to 10L).toDF("id").coalesce(1))
+    val index = new java.io.File(s"${t.root}/_index")
+    def sidecars = Option(index.list()).map(_.toSeq.sorted).getOrElse(Nil)
+    val (files0, v0) = (sidecars, t.currentVersion)
+    val unknown = intercept[IllegalArgumentException] {
+      t.updateWhere(col("id") === 3L, Seq("nope" -> lit(1L)), mor = true)
+    }
+    assert(unknown.getMessage.contains("no such column(s) nope"),
+      unknown.getMessage)
+    val repeated = intercept[IllegalArgumentException] {
+      t.updateWhere(col("id") === 3L,
+        Seq("id" -> lit(1L), "ID" -> lit(2L)), mor = true)
+    }
+    assert(repeated.getMessage.contains("duplicate assignment target"),
+      repeated.getMessage)
+    assert(sidecars == files0, s"refused update left files under _index: $sidecars")
+    assert(t.currentVersion == v0 && t.read().count() == 10)
   }
 
   test("no-op MoR update (cond matches only tombstoned rows) runs ZERO write jobs") {
@@ -1843,7 +1857,7 @@ class SnapshotTableSpec extends SparkSuite {
     val preUpdate = t.currentVersion
     // point update: stat pruning narrows to one candidate, one rewrite
     val v = t.updateWhere(col("id") === 3L, Seq("v" -> (col("v") + 500L)),
-      prunePreds = Seq(("id", 3L, 3L)), statCols = Seq("id"))
+      statCols = Seq("id"))
     assert(v > 0)
     assert((filesBefore.toSet -- t.files().toSet).size == 1,
       "exactly one file may leave the live set")
@@ -2365,8 +2379,7 @@ class SnapshotTableSpec extends SparkSuite {
       bloomCols = Seq("id"))
     t.appendWithStats((50L until 100L).toDF("id").coalesce(1), Seq("id"),
       bloomCols = Seq("id"))
-    val v = t.deleteWhere(col("id") === 7L,
-      prunePreds = Seq(("id", 7L, 7L)), bloomPreds = Seq(("id", "7")), mor = true)
+    val v = t.deleteWhere(col("id") === 7L, mor = true)
     assert(v == 3)
     // stat-pruned and bloom-pruned reads both skip the tombstone
     // (pruning narrows FILES; the caller's row predicate still applies)
