@@ -14,7 +14,10 @@ import org.apache.spark.sql.functions._
   * other. Scenarios deliberately include duplicate join keys on both
   * sides, so every multi-match shape (applicable → refuse,
   * non-applying → keep once, delete-only → delete once) is exercised
-  * by chance on every run; seeds are fixed, so failures reproduce. */
+  * by chance on every run; seeds are fixed, so failures reproduce.
+  * Each API seed runs twice: on one fresh file, and on a target spread
+  * over two files, one carrying a merge-on-read tombstone — which also
+  * pins which files each path rewrites. */
 class SnapshotMergeFuzzSpec extends SparkSuite {
   import spark.implicits._
 
@@ -75,16 +78,29 @@ class SnapshotMergeFuzzSpec extends SparkSuite {
 
   /** Returns Left(()) when the scenario must REFUSE (cardinality),
     * else Right(final multiset of rows). */
+  private def mApplies(c: MClause, t: (Long, String, Long),
+      s: (Long, String, Long)): Boolean = c match {
+    case MUpdate(cond, _) => cond.forall(_.eval(Some(t._3), Some(s._3)))
+    case MDelete(cond) => cond.forall(_.eval(Some(t._3), Some(s._3)))
+    case _ => false
+  }
+
+  /** Whether some clause APPLIES to target row `t` — the rows a merge
+    * changes, so the files CoW must rewrite and MoR must tombstone. */
+  private def touches(sc: Scenario, t: (Long, String, Long)): Boolean = {
+    val ms = sc.source.filter(_._1 == t._1)
+    if (ms.nonEmpty) sc.matched.exists(c => ms.exists(mApplies(c, t, _)))
+    else sc.nmbs.exists {
+      case NUpdate(c) => c.forall(_.eval(Some(t._3), None))
+      case NDelete(c) => c.forall(_.eval(Some(t._3), None))
+      case _ => false
+    }
+  }
+
   private def model(sc: Scenario)
       : Either[Unit, Seq[(Long, Option[String], Option[Long])]] = {
     val deleteOnlyUncond = sc.matched match {
       case Seq(MDelete(None)) => true
-      case _ => false
-    }
-    def mApplies(c: MClause, t: (Long, String, Long),
-        s: (Long, String, Long)): Boolean = c match {
-      case MUpdate(cond, _) => cond.forall(_.eval(Some(t._3), Some(s._3)))
-      case MDelete(cond) => cond.forall(_.eval(Some(t._3), Some(s._3)))
       case _ => false
     }
     // cardinality: any target row with >1 matches where SOME matched
@@ -168,19 +184,56 @@ class SnapshotMergeFuzzSpec extends SparkSuite {
       case other => sys.error(s"bad nmbs $other")
     })
 
-  private def runEngine(sc: Scenario, mor: Boolean)
+  /** `spread = false`: the target is one fresh file. `spread = true`:
+    * the target's first half (row `t0` included) and second half are two
+    * files, and `t0` is then deleted merge-on-read, so the first file
+    * carries a deletion vector and the merge sees the target WITHOUT
+    * `t0`. A spread run also checks, per pre-merge file, that CoW
+    * rewrote exactly the files holding a row some clause applies to,
+    * that MoR rewrote none (only a file whose every live row was
+    * touched may leave, fully tombstoned), and that the pre-merge
+    * snapshot still reads its rows. */
+  private def runEngine(sc: Scenario, mor: Boolean, spread: Boolean = false)
       : Either[Unit, Seq[(Long, Option[String], Option[Long])]] = {
     val dir = java.nio.file.Files.createTempDirectory("mergefuzz").toString
     val t = new SnapshotTable(spark, dir)
-    t.append(sc.target.toDF("id", "v", "qty").coalesce(1))
+    val preFiles: Seq[(Seq[(Long, String, Long)], String)] =
+      if (!spread) {
+        t.append(sc.target.toDF("id", "v", "qty").coalesce(1))
+        Nil
+      } else {
+        val (a, b) = sc.target.splitAt(sc.target.size / 2)
+        val halves = Seq(a, b).map { rows =>
+          val before = t.files().toSet
+          t.append(rows.toDF("id", "v", "qty").coalesce(1))
+          rows -> (t.files().toSet -- before).head
+        }
+        t.deleteWhere(col("v") === sc.target.head._2, mor = true)
+        halves.map { case (rows, f) => rows.filterNot(_ == sc.target.head) -> f }
+      }
+    val pre = t.currentVersion
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0),
+        Option(r.getString(1)), Option(r.get(2)).map(_ => r.getLong(2))))
+        .toSeq
     val (m, i, n) = engineClauses(sc)
     val src = sc.source.toDF("id", "v", "qty")
     val on = expr("target.id = source.id")
     try {
       t.mergeInto(src, on, m, i, n, mor = mor)
-      Right(t.read().collect().map(r => (r.getLong(0),
-        Option(r.getString(1)), Option(r.get(2)).map(_ => r.getLong(2))))
-        .toSeq)
+      val live = t.files().toSet
+      preFiles.foreach { case (rows, f) =>
+        val hit = rows.exists(touches(sc, _))
+        if (mor) assert(live.contains(f) || rows.forall(touches(sc, _)),
+          s"MoR rewrote $f (touched=$hit) for $sc")
+        else assert(live.contains(f) == !hit,
+          s"CoW ${if (hit) "kept a touched" else "rewrote an untouched"} " +
+            s"file $f for $sc")
+      }
+      if (spread) assert(canon(rowsOf(t.read(Some(pre)))) ==
+        canon(preFiles.flatMap(_._1).map(r => (r._1, Some(r._2), Some(r._3)))),
+        s"the pre-merge snapshot changed for $sc")
+      Right(rowsOf(t.read()))
     } catch {
       case e: IllegalStateException
           if e.getMessage.contains("multiple source rows") => Left(())
@@ -273,6 +326,25 @@ class SnapshotMergeFuzzSpec extends SparkSuite {
       val mor = runEngine(sc, mor = true)
       (want, cow, mor) match {
         case (Left(()), Left(()), Left(())) => () // all refuse
+        case (Right(w), Right(c), Right(m)) =>
+          assert(canon(c) == canon(w),
+            s"CoW diverged from the model for $sc")
+          assert(canon(m) == canon(w),
+            s"MoR diverged from the model for $sc")
+        case other =>
+          fail(s"refusal disagreement (model, cow, mor) = ${other
+            .productIterator.map(_.getClass.getSimpleName).mkString(",")} for $sc")
+      }
+    }
+  }
+
+  (1 to 14).foreach { seed =>
+    test(s"differential merge fuzz, seed $seed: a two-file target carrying a deletion vector matches the model") {
+      val sc = gen(seed)
+      val want = model(sc.copy(target = sc.target.tail))
+      (want, runEngine(sc, mor = false, spread = true),
+          runEngine(sc, mor = true, spread = true)) match {
+        case (Left(()), Left(()), Left(())) => ()
         case (Right(w), Right(c), Right(m)) =>
           assert(canon(c) == canon(w),
             s"CoW diverged from the model for $sc")
