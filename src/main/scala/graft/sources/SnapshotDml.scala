@@ -666,8 +666,9 @@ final case class SnapshotUpdateCommand(table: SnapshotTable, cond: Column,
   }
 }
 
-/** `MERGE INTO <snapshot table> USING ... ON ... WHEN ...` — runs the
-  * [[SnapshotMerge]] clause engine (CoW, or MoR per the property). */
+/** `MERGE INTO <snapshot table> USING ... ON ... WHEN ...` — runs
+  * [[SnapshotTable.mergeInto]] (copy-on-write, or merge-on-read per the
+  * property). */
 final case class SnapshotMergeCommand(table: SnapshotTable,
     source: org.apache.spark.sql.DataFrame, cond: Column,
     matched: Seq[SnapshotMerge.Clause],

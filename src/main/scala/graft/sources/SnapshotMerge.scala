@@ -1,23 +1,26 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference,
   EqualTo, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, Project}
-import org.apache.spark.sql.functions.{col, count, lit, max, when}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, when}
 import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
-import org.apache.spark.sql.types.StructField
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** General conditional MERGE over a [[SnapshotTable]] — the full
   * `WHEN MATCHED [AND cond] THEN UPDATE/DELETE | WHEN NOT MATCHED
   * [AND cond] THEN INSERT | WHEN NOT MATCHED BY SOURCE [AND cond]
-  * THEN UPDATE/DELETE` clause set (the Delta/SQL:2003 MERGE shape),
-  * on both the copy-on-write and merge-on-read commit paths. The
-  * keyed full-row upsert ([[SnapshotTable.merge]], either path) stays
-  * the fast path for the reference's ingest contract; this engine is
-  * the superset surface SQL `MERGE INTO` routes to (see
-  * [[SnapshotDml]]).
+  * THEN UPDATE/DELETE` clause set (the Delta/SQL:2003 MERGE shape).
+  * This object owns the MERGE semantics — clause validation, ON
+  * resolution and pruning, the cardinality check, insert routing —
+  * and hands them to [[SnapshotTable.dml]] as one verb whose matcher
+  * applies the clauses; the write steps (copy-on-write REWRITE,
+  * merge-on-read TOMBSTONE) and the commit are `dml`'s, shared with
+  * every other DML verb. The keyed full-row upsert
+  * ([[SnapshotTable.merge]], either step) stays the fast path for the
+  * reference's ingest contract; this engine is the superset surface
+  * SQL `MERGE INTO` routes to (see [[SnapshotDml]]).
   *
   * Semantics (SQL/Delta):
   *  - clause order is FIRST-WINS within each group; a clause with no
@@ -57,8 +60,8 @@ import org.apache.spark.sql.types.StructField
   *    re-evaluates the real condition.
   *  - only files that CONTAIN an applicable matched row (plus, when
   *    NOT MATCHED BY SOURCE clauses exist, files containing an
-  *    applicable unmatched row) are rewritten on the CoW path;
-  *    the MoR path rewrites none (DV tombstones + appended copies in
+  *    applicable unmatched row) are rewritten by copy-on-write;
+  *    merge-on-read rewrites none (DV tombstones + appended copies in
   *    ONE commit, the MoR [[SnapshotTable.merge]] cost shape).
   *  - NOT MATCHED BY SOURCE must scan every live file by definition
   *    (any row anywhere may be unmatched) — callers pay that only
@@ -83,26 +86,37 @@ object SnapshotMerge {
   final case class Insert(condition: Option[Column] = None,
       values: Seq[(String, Column)] = Nil) extends Clause
 
-  /** Source-row marker column: survives the left-outer rewrite join as
-    * the matched/unmatched discriminator (`isNotNull` ⇔ matched) —
-    * join-key null tricks would misread genuinely-null key values. */
-  private val Marker = "__graft_merge_smatch"
-  /** Clause indexes ≥ this are NOT MATCHED BY SOURCE clauses in the
-    * shared chosen-clause chain (matched clauses count from 0). */
-  private val NmbsBase = 1000
   private val NoClause = -1
+  /** A clause with its normalized assignments (empty for DELETE). */
+  private type Routed = (Clause, Map[String, Column])
 
   private def qcol(alias: String, name: String): Column =
     col(s"`$alias`.`$name`")
 
   private def clauseCond(c: Clause): Column = c.condition.getOrElse(lit(true))
 
-  /** First-wins chain: the index of the first clause whose condition
-    * passes under its `gate`, else [[NoClause]]. */
-  private def chosenChain(pairs: Seq[(Column, Int)]): Column =
-    pairs.foldRight(lit(NoClause)) { case ((c, i), acc) =>
-      when(c, lit(i)).otherwise(acc)
+  /** `rows` with `__chosen`: the index of the first clause of `cs`
+    * whose condition passes (first-wins), else [[NoClause]]. */
+  private def choose(rows: DataFrame, cs: Seq[Routed]): DataFrame =
+    rows.withColumn("__chosen", cs.zipWithIndex.foldRight(lit(NoClause)) {
+      case (((c, _), i), acc) => when(clauseCond(c), lit(i)).otherwise(acc)
+    })
+
+  /** The result-shape projection of rows routed by `__chosen`: each
+    * column of `tCols` takes the chosen clause's assignment, cast to
+    * the column's type, else `prior(column)`. */
+  private def routed(cs: Seq[Routed], tCols: Seq[StructField],
+      prior: StructField => Column): Seq[Column] =
+    tCols.map { f =>
+      cs.zipWithIndex.foldRight(prior(f)) { case (((_, a), i), acc) =>
+        a.get(f.name.toLowerCase).fold(acc)(v =>
+          when(col("__chosen") === i, v.cast(f.dataType)).otherwise(acc))
+      }.as(f.name)
     }
+
+  /** Whether any clause of `cs` applies (`None`: no clauses). */
+  private def anyApplies(cs: Seq[Routed]): Option[Column] =
+    cs.map(c => clauseCond(c._1)).reduceOption(_ || _)
 
   /** Normalized assignment map (lower-cased target column -> value),
     * validating targets exist and are unique; empty `set` expands to
@@ -131,15 +145,11 @@ object SnapshotMerge {
     }
   }
 
-  // ---- the engine ----------------------------------------------------
-
-  private[sources] def run(t: SnapshotTable, source0: DataFrame,
-      condition: Column, matched: Seq[Clause], notMatched: Seq[Clause],
-      nmbs: Seq[Clause], tAlias: String, sAlias: String,
-      statCols: Seq[String], bloomCols: Seq[String], bloomFpp: Double,
-      mor: Boolean, schemaEvolution: Boolean = false,
-      declaredSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Int = {
+  /** Refuses a malformed clause set, or a source carrying a column the
+    * engine reserves, before any attempt runs. */
+  private[sources] def validate(source: DataFrame, matched: Seq[Clause],
+      notMatched: Seq[Clause], nmbs: Seq[Clause], tAlias: String,
+      sAlias: String): Unit = {
     require(matched.nonEmpty || notMatched.nonEmpty || nmbs.nonEmpty,
       "mergeInto needs at least one WHEN clause")
     require(matched.forall(!_.isInstanceOf[Insert]),
@@ -150,445 +160,223 @@ object SnapshotMerge {
       "WHEN NOT MATCHED BY SOURCE clauses must be UPDATE or DELETE")
     require(tAlias != sAlias,
       s"target and source aliases must differ (both '$tAlias')")
-    require(!source0.columns.contains(Marker),
-      s"source must not carry a column named $Marker")
-    require(!source0.columns.exists(c =>
+    require(!source.columns.exists(c =>
       c == "__file" || c == "__ridx" || c == "__name"),
       "source must not carry columns named __file/__ridx/__name " +
         "(reserved for the merge engine's row identity)")
-    val opName = if (mor) "mergeIntoMoR" else "mergeInto"
-
-    t.retryingOnConflict(opName) {
-      val base = t.currentVersion
-      // no committed version: the initial-load shape — every source
-      // row is unmatched, so only NOT MATCHED INSERT clauses can do
-      // anything (Delta populates an empty table the same way)
-      require(base > 0 || notMatched.nonEmpty,
-        s"$opName: target snapshot table ${t.root} has no committed " +
-          "version to merge into (an initial-load MERGE needs WHEN NOT " +
-          "MATCHED INSERT clauses)")
-      val state = t.replayStateFull(base)
-      val tCols0: Seq[StructField] =
-        t.schemaAt(Some(base)).orElse(declaredSchema).getOrElse(
-          t.read(Some(base)).schema).fields.toSeq
-      // WITH SCHEMA EVOLUTION: source columns absent from the target
-      // join the result schema (nullable — pre-merge rows read null,
-      // the commit's schema-union contract records the widened shape).
-      // Same-named columns keep the TARGET type (assignments cast) —
-      // evolution here ADDS columns, never retypes them.
-      val newCols: Seq[StructField] =
-        if (!schemaEvolution) Nil
-        else source0.schema.fields.toSeq
-          .filterNot(f => tCols0.exists(_.name.equalsIgnoreCase(f.name)))
-          .map(_.copy(nullable = true))
-      val tCols: Seq[StructField] = tCols0 ++ newCols
-      val isNewCol: Set[String] = newCols.map(_.name.toLowerCase).toSet
-      val srcCols = source0.columns.toSeq
-      val sMarked = source0.withColumn(Marker, lit(true)).alias(sAlias)
-
-      // resolve the ON condition once against a (target, source) probe
-      // join: yields the resolved conjuncts split by side — the inputs
-      // to metadata pruning. Analysis only; no job runs. A no-version
-      // target resolves against an empty frame of the declared shape
-      // (read() has nothing to plan yet).
-      val targetShape: DataFrame =
-        if (base == 0) t.spark.createDataFrame(
-          t.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(tCols0))
-        else t.read(Some(base))
-      val probePlan = targetShape.alias(tAlias)
-        .join(source0.alias(sAlias), condition, "inner")
-        .queryExecution.analyzed
-      val jn = probePlan.collectFirst { case j: Join => j }.getOrElse(
-        throw new IllegalStateException(s"$opName: probe plan lost its join"))
-      val condR = jn.condition.getOrElse(
-        throw new IllegalArgumentException(s"$opName: merge needs an ON condition"))
-      require(!condR.exists(_.isInstanceOf[SubqueryExpression]),
-        s"$opName: subqueries in the ON condition are not supported")
-      val lOut = jn.left.outputSet
-      val rOut = jn.right.outputSet
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case And(l, r) => conjuncts(l) ++ conjuncts(r)
-        case o => Seq(o)
-      }
-      val conj = conjuncts(condR)
-
-      // candidate pruning tier 1: target-only conjuncts (literal
-      // ranges/probes the derivePreds walk understands) prune from
-      // manifest stats/blooms/null counts. The probe plan is ANALYZED
-      // but not optimized, so type coercion leaves literals wrapped in
-      // casts (`id = cast(42 as bigint)`) the derivation would not
-      // see — fold foldable subtrees down to bare literals first.
-      val tOnly = conj.filter(c =>
-        c.references.nonEmpty && c.references.subsetOf(lOut))
-        .map(SnapshotDml.foldConsts)
-      val cand0 =
-        if (tOnly.isEmpty) { t.lastDmlCandidates = state.live; state.live }
-        else t.dmlCandidates(state, ColumnBridge.toColumn(tOnly.reduce(And)))
-      // tier 2: the first `target.col = <source expr>` equi-conjunct
-      // prunes by the source's own (bounded) key set — the point-upsert
-      // shape scans the bloom-hit file, not the table
-      val equi = conj.collectFirst {
-        case EqualTo(a: AttributeReference, b)
-            if lOut.contains(a) && b.references.nonEmpty &&
-              b.references.subsetOf(rOut) => (a, b)
-        case EqualTo(b, a: AttributeReference)
-            if lOut.contains(a) && b.references.nonEmpty &&
-              b.references.subsetOf(rOut) => (a, b)
-      }
-      val candidates = equi match {
-        case Some((a, b)) if cand0.nonEmpty =>
-          val srcKeys = PlanBridge.ofRows(t.spark,
-            Project(Seq(Alias(b, a.name)()), jn.right))
-          t.keyPruneCandidates(state.copy(live = cand0), a.name, srcKeys)
-        case _ => cand0
-      }
-
-      def scanPlain(files: Seq[String]): DataFrame =
-        t.applyDv(state, t.rawReadFiles(state, files), files)
-      def scanWithId(files: Seq[String]): DataFrame = {
-        val raw = t.rawReadFiles(state, files).select(col("*"),
-          col("_metadata.file_path").as("__file"),
-          col("_metadata.row_index").as("__ridx"))
-        t.applyDv(state, raw, files)
-      }
-      def norm(p: String): String =
-        t.fs.makeQualified(new Path(p)).toString
-
-      val matchedAny: Option[Column] =
-        if (matched.isEmpty) None else Some(matched.map(clauseCond).reduce(_ || _))
-      val nmbsAny: Option[Column] =
-        if (nmbs.isEmpty) None else Some(nmbs.map(clauseCond).reduce(_ || _))
-
-      // Delta's documented multi-match exception: a single
-      // unconditional DELETE is deterministic however many source rows
-      // match (the row deletes once), so the cardinality gate stands
-      // down for exactly that clause set.
-      val deleteOnlyUncond = matched match {
-        case Seq(Delete(None)) => true
-        case _ => false
-      }
-
-      // cardinality check + applicable-file detection in ONE pass over
-      // the pruned candidates (the Delta findTouchedFiles shape): per
-      // target row, how many source rows matched and whether any
-      // matched clause applies; per file, whether any row VIOLATES
-      // (multiply matched AND a matched clause applies — only such a
-      // row's outcome would be nondeterministic) and whether any row
-      // is applicable at all.
-      val matchedFiles: Seq[String] =
-        if (matched.isEmpty || candidates.isEmpty) Nil
-        else {
-          val pairs = scanWithId(candidates).alias(tAlias)
-            .join(sMarked, condition, "inner")
-          val perFile = pairs
-            .groupBy(col("__file"), col("__ridx"))
-            .agg(count(lit(1)).as("__n"),
-              max(when(matchedAny.get, lit(1)).otherwise(lit(0))).as("__app"))
-            .groupBy(col("__file"))
-            .agg(
-              max(when(col("__n") > 1 && col("__app") === 1, lit(1))
-                .otherwise(lit(0))).as("__viol"),
-              max(col("__app")).as("__anyapp"))
-            .collect() // bounded: one row per CANDIDATE FILE
-          val viol = perFile.filter(_.getAs[Int]("__viol") == 1)
-          if (viol.nonEmpty && !deleteOnlyUncond)
-            throw new IllegalStateException(
-              s"$opName: a matched clause applies to a target row that " +
-                s"multiple source rows matched (e.g. in " +
-                s"${viol.head.getString(0)}) — its outcome would be " +
-                "nondeterministic. Deduplicate the source on the join " +
-                "keys. (Multiply-matched rows no matched clause applies " +
-                "to, and a single unconditional WHEN MATCHED THEN " +
-                "DELETE, are permitted.)")
-          perFile.filter(_.getAs[Int]("__anyapp") == 1)
-            .map(r => norm(r.getString(0))).toSeq
-        }
-
-      val nmbsFiles: Seq[String] =
-        if (nmbs.isEmpty || state.live.isEmpty) Nil
-        else scanWithId(state.live).alias(tAlias)
-          .join(sMarked, condition, "left_anti")
-          .filter(nmbsAny.get)
-          .select(col("__file")).distinct().collect()
-          .map(r => norm(r.getString(0))).toSeq
-
-      // clause machinery shared by both commit paths
-      val mIdx = matched.zipWithIndex
-      val nIdx = nmbs.zipWithIndex.map { case (c, i) => (c, NmbsBase + i) }
-      val updates: Seq[(Update, Int)] =
-        (mIdx ++ nIdx).collect { case (u: Update, i) => (u, i) }
-      val deleteIdxs: Seq[Int] =
-        (mIdx ++ nIdx).collect { case (_: Delete, i) => i }
-      val assignsOf: Map[Int, Map[String, Column]] = updates.map {
-        case (u, i) =>
-          i -> normAssigns(s"$opName clause ${i % NmbsBase}", u.set, tCols,
-            srcCols, sAlias, starAllowed = i < NmbsBase)
-      }.toMap
-      def valueCols(updIdxs: Seq[(Update, Int)]): Seq[Column] =
-        tCols.map { f =>
-          // an evolution-added column has no target side to read: its
-          // pre-assignment value is NULL of the declared type
-          val base0: Column =
-            if (isNewCol(f.name.toLowerCase)) lit(null).cast(f.dataType)
-            else qcol(tAlias, f.name)
-          updIdxs.foldRight(base0) { case ((_, i), acc) =>
-            assignsOf(i).get(f.name.toLowerCase) match {
-              case Some(v) => when(col("__chosen") === i,
-                v.cast(f.dataType)).otherwise(acc)
-              case None => acc
-            }
-          }.as(f.name)
-        }
-
-      // INSERT half (identical on both paths): source rows matching NO
-      // target row, routed through the first-passing insert clause.
-      // Anti-joining against the pruned candidates is sound: a pruned
-      // file cannot contain a row matching ANY source row (that is
-      // what pruning proved), so it cannot turn an unmatched source
-      // row into a matched one.
-      val inserts: Option[DataFrame] =
-        if (notMatched.isEmpty) None
-        else {
-          val unmatched =
-            if (candidates.isEmpty) sMarked
-            else sMarked.join(scanPlain(candidates).alias(tAlias),
-              condition, "left_anti")
-          val iIdx = notMatched.zipWithIndex
-            .collect { case (c: Insert, i) => (c, i) }
-          val iAssigns: Map[Int, Map[String, Column]] = iIdx.map {
-            case (c, i) => i -> normAssigns(s"$opName insert clause $i",
-              c.values, tCols, srcCols, sAlias, starAllowed = true)
-          }.toMap
-          val chain = chosenChain(iIdx.map { case (c, i) => (clauseCond(c), i) })
-          val vals = tCols.map { f =>
-            iIdx.foldRight(lit(null).cast(f.dataType): Column) {
-              case ((_, i), acc) =>
-                iAssigns(i).get(f.name.toLowerCase) match {
-                  case Some(v) => when(col("__ichosen") === i,
-                    v.cast(f.dataType)).otherwise(acc)
-                  case None => acc
-                }
-            }.as(f.name)
-          }
-          Some(unmatched.withColumn("__ichosen", chain)
-            .filter(col("__ichosen") =!= NoClause).select(vals: _*))
-        }
-
-      if (mor) runMor(t, state, base, opName, sMarked, condition, matched,
-        nmbs, candidates, matchedFiles, nmbsFiles, inserts, mIdx, nIdx,
-        updates, valueCols, scanPlain, matchedAny, nmbsAny, tAlias,
-        statCols, bloomCols, bloomFpp)
-      else {
-        // ---- copy-on-write: rewrite ONLY the applicable files -------
-        val affected = (matchedFiles ++ nmbsFiles).distinct.sorted
-        if (affected.isEmpty && notMatched.isEmpty) 0
-        else {
-          val keepFlag =
-            if (deleteIdxs.isEmpty) lit(true)
-            else !col("__chosen").isin(deleteIdxs: _*)
-          val anyCondMatched = matched.exists(_.condition.nonEmpty)
-          val rewritten: Option[DataFrame] =
-            if (affected.isEmpty) None
-            else if (matched.isEmpty) {
-              // NOT-MATCHED-BY-SOURCE-only rewrite: never join-fan the
-              // target. A target row matched by MULTIPLE source rows is
-              // LEGAL here (no matched clause can touch it, so SQL
-              // imposes no cardinality constraint and the check above
-              // was rightly skipped) — but a left-outer join would
-              // duplicate it. Semi/anti split instead: matched rows
-              // keep verbatim, unmatched rows run the NMBS chain.
-              val before = scanPlain(affected).alias(tAlias)
-              val keepMatched = before
-                .join(sMarked, condition, "left_semi")
-                .select(valueCols(Nil): _*)
-              val nmbsRows = before
-                .join(sMarked, condition, "left_anti")
-                .withColumn("__chosen", chosenChain(
-                  nIdx.map { case (c, i) => (clauseCond(c), i) }))
-                .filter(keepFlag)
-                .select(valueCols(updates): _*)
-              Some(keepMatched.unionAll(nmbsRows))
-            } else if (deleteOnlyUncond) {
-              // single unconditional DELETE: every matched row goes
-              // (multi-match legal — the row deletes once by NOT
-              // surviving the anti-join), unmatched rows run the NMBS
-              // chain. Never join-fans the target. Only the NMBS
-              // updates feed valueCols: an anti-join result has no
-              // source side for matched assignments to reference.
-              val nmbsRows = scanPlain(affected).alias(tAlias)
-                .join(sMarked, condition, "left_anti")
-                .withColumn("__chosen", chosenChain(
-                  nIdx.map { case (c, i) => (clauseCond(c), i) }))
-                .filter(keepFlag)
-                .select(valueCols(updates.filter(_._2 >= NmbsBase)): _*)
-              Some(nmbsRows)
-            } else if (anyCondMatched) {
-              // conditional matched clauses: a row matched by several
-              // source rows is legal when NO clause applies to it (the
-              // cardinality gate refused the applicable ones), but a
-              // left-outer join would duplicate it. Three-way split,
-              // none of whose branches can fan out:
-              //  - rows a matched clause APPLIES to — exactly one
-              //    matching pair each (gate-guaranteed), inner join
-              //  - rows matched but NON-applying — kept verbatim ONCE
-              //    (anti on condition∧applies, semi on condition)
-              //  - unmatched rows — the NMBS chain
-              val before = scanPlain(affected).alias(tAlias)
-              val applied = before
-                .join(sMarked, condition, "inner")
-                .filter(matchedAny.get)
-                .withColumn("__chosen", chosenChain(
-                  mIdx.map { case (c, i) => (clauseCond(c), i) }))
-                .filter(keepFlag)
-                .select(valueCols(updates.filter(_._2 < NmbsBase)): _*)
-              val nonApplying = before
-                .join(sMarked, condition && matchedAny.get, "left_anti")
-              val keptMatched = nonApplying
-                .join(sMarked, condition, "left_semi")
-                .select(valueCols(Nil): _*)
-              val nmbsRows = nonApplying
-                .join(sMarked, condition, "left_anti")
-                .withColumn("__chosen", chosenChain(
-                  nIdx.map { case (c, i) => (clauseCond(c), i) }))
-                .filter(keepFlag)
-                .select(valueCols(updates.filter(_._2 >= NmbsBase)): _*)
-              Some(applied.unionAll(keptMatched).unionAll(nmbsRows))
-            } else {
-              // every matched clause is unconditional (and not the
-              // single-DELETE shape): any multi-match was refused by
-              // the gate, so the left-outer join cannot fan out
-              val joined = scanPlain(affected).alias(tAlias)
-                .join(sMarked, condition, "left_outer")
-              val isM = col(Marker).isNotNull
-              val chain = chosenChain(
-                mIdx.map { case (c, i) => (isM && clauseCond(c), i) } ++
-                  nIdx.map { case (c, i) => (!isM && clauseCond(c), i) })
-              Some(joined.withColumn("__chosen", chain)
-                .filter(keepFlag).select(valueCols(updates): _*))
-            }
-          val parts = rewritten.toSeq ++ inserts.toSeq
-          val result = parts.reduce(_ unionAll _)
-          val sc = t.effStatCols(statCols, result)
-          val bc = t.effBloomCols(bloomCols, result)
-          val (staged, stats, sstats, counts, sizes, nullsCh) =
-            t.stageFilesWithStats(result, sc, countFiles = bc.nonEmpty)
-          val blooms = t.buildBlooms(staged, bc, bloomFpp, counts)
-          // an insert-only merge whose clauses admitted zero source
-          // rows changed nothing — no empty commit, return 0 (the
-          // deleteWhere contract)
-          if (staged.isEmpty && affected.isEmpty) 0
-          else
-            // keyed and UNSCOPED, like merge: this plan decided
-            // rows/keys were absent, so any interleaved remove-bearing
-            // or keyed commit must conflict and force a recompute
-            t.commit(staged, affected, stats = stats, base = base,
-              keyed = true, op = opName,
-              schema = Some(result.schema.json), sstats = sstats,
-              blooms = blooms, sizes = sizes,
-              rows = counts.toSeq.sortBy(_._1), nulls = nullsCh)
-        }
-      }
-    }
   }
 
-  /** Merge-on-read commit half: tombstone applicable matched /
-    * not-matched-by-source rows via DVs, append updated copies and
-    * inserts — ONE commit, no data file rewritten (the
-    * MoR [[SnapshotTable.merge]] cost shape generalized to clauses). */
-  private def runMor(t: SnapshotTable, state: SnapshotTable.TableState,
-      base: Int, opName: String, sMarked: DataFrame, condition: Column,
-      matched: Seq[Clause], nmbs: Seq[Clause], candidates: Seq[String],
-      matchedFiles: Seq[String], nmbsFiles: Seq[String],
-      inserts: Option[DataFrame],
-      mIdx: Seq[(Clause, Int)], nIdx: Seq[(Clause, Int)],
-      updates: Seq[(Update, Int)], valueCols: Seq[(Update, Int)] => Seq[Column],
-      scanPlain: Seq[String] => DataFrame,
-      matchedAny: Option[Column], nmbsAny: Option[Column], tAlias: String,
-      statCols: Seq[String], bloomCols: Seq[String],
-      bloomFpp: Double): Int = {
-    // tombstones FIRST (the MoR updateWhere ordering): a merge whose
-    // clauses match nothing learns so here and — with no insert
-    // clauses — runs zero staging jobs. Without NOT MATCHED BY SOURCE
-    // clauses the scan narrows to the files the cardinality pass
-    // proved hold an APPLICABLE matched row — tighter than the full
-    // candidate set
-    val matchedSet = matchedFiles.toSet
-    val tombScope =
-      if (nmbs.nonEmpty) state.live
-      else if (matchedFiles.nonEmpty)
-        candidates.filter(f =>
-          matchedSet.contains(t.fs.makeQualified(
-            new org.apache.hadoop.fs.Path(f)).toString))
-      else Nil
-    val (full, partial, changedFiles) =
-      if (tombScope.isEmpty) (Seq.empty[String],
-        Seq.empty[(String, String, Long)], Seq.empty[String])
-      else t.buildMorTombstonesBy(state, tombScope, { df0 =>
-        val tdf = df0.alias(tAlias)
-        val m =
-          if (matched.isEmpty || candidates.isEmpty) None
-          else Some(tdf.join(sMarked, condition, "inner")
-            .filter(matchedAny.get)
-            .select(col("__name"), col("__ridx")))
-        val n =
-          if (nmbs.isEmpty) None
-          else Some(tdf.join(sMarked, condition, "left_anti")
-            .filter(nmbsAny.get)
-            .select(col("__name"), col("__ridx")))
-        (m.toSeq ++ n.toSeq).reduce(_ unionAll _)
-      })
-    val mUpd = updates.filter(_._2 < NmbsBase)
-    val nUpd = updates.filter(_._2 >= NmbsBase)
-    // updated copies come from the DV-APPLIED scan (a row an earlier
-    // MoR delete tombstoned cannot resurrect), and only when some
-    // tombstone actually landed — zero staging jobs otherwise
-    val copies: Seq[DataFrame] =
-      if (changedFiles.isEmpty) Nil
-      else {
-        val mc =
-          if (mUpd.isEmpty || candidates.isEmpty) None
-          else Some(scanPlain(candidates).alias(tAlias)
-            .join(sMarked, condition, "inner")
-            .withColumn("__chosen",
-              chosenChain(mIdx.map { case (c, i) => (clauseCond(c), i) }))
-            .filter(col("__chosen").isin(mUpd.map(_._2): _*))
-            .select(valueCols(mUpd): _*))
-        val nc =
-          if (nUpd.isEmpty || state.live.isEmpty) None
-          else Some(scanPlain(state.live).alias(tAlias)
-            .join(sMarked, condition, "left_anti")
-            .withColumn("__chosen",
-              chosenChain(nIdx.map { case (c, i) => (clauseCond(c), i) }))
-            .filter(col("__chosen").isin(nUpd.map(_._2): _*))
-            .select(valueCols(nUpd): _*))
-        (mc.toSeq ++ nc.toSeq)
+  /** The MERGE verb at one attempt's pinned `base` version and `state`:
+    * resolves the ON condition, prunes the candidates, runs the
+    * cardinality check, routes the inserts and builds the clause
+    * matcher. The verb's scope is every live file when NOT MATCHED BY
+    * SOURCE clauses exist, else the pruned candidates (none for an
+    * insert-only merge). */
+  private[sources] def verb(t: SnapshotTable, source0: DataFrame,
+      condition: Column, matched: Seq[Clause], notMatched: Seq[Clause],
+      nmbs: Seq[Clause], tAlias: String, sAlias: String,
+      schemaEvolution: Boolean, declaredSchema: Option[StructType])(
+      base: Int, state: SnapshotTable.TableState): SnapshotTable.DmlVerb = {
+    // no committed version: the initial-load shape — every source
+    // row is unmatched, so only NOT MATCHED INSERT clauses can do
+    // anything (Delta populates an empty table the same way)
+    require(base > 0 || notMatched.nonEmpty,
+      s"mergeInto: target snapshot table ${t.root} has no committed " +
+        "version to merge into (an initial-load MERGE needs WHEN NOT " +
+        "MATCHED INSERT clauses)")
+    val tCols0: Seq[StructField] =
+      t.schemaAt(Some(base)).orElse(declaredSchema).getOrElse(
+        t.read(Some(base)).schema).fields.toSeq
+    // WITH SCHEMA EVOLUTION: source columns absent from the target
+    // join the result schema (nullable — pre-merge rows read null,
+    // the commit's schema-union contract records the widened shape).
+    // Same-named columns keep the TARGET type (assignments cast) —
+    // evolution here ADDS columns, never retypes them.
+    val newCols: Seq[StructField] =
+      if (!schemaEvolution) Nil
+      else source0.schema.fields.toSeq
+        .filterNot(f => tCols0.exists(_.name.equalsIgnoreCase(f.name)))
+        .map(_.copy(nullable = true))
+    val tCols: Seq[StructField] = tCols0 ++ newCols
+    val srcCols = source0.columns.toSeq
+    val src = source0.alias(sAlias)
+
+    // resolve the ON condition once against a (target, source) probe
+    // join: yields the resolved conjuncts split by side — the inputs
+    // to metadata pruning. Analysis only; no job runs. A no-version
+    // target resolves against an empty frame of the declared shape
+    // (read() has nothing to plan yet).
+    val targetShape: DataFrame =
+      if (base == 0) t.spark.createDataFrame(
+        t.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(tCols0))
+      else t.read(Some(base))
+    val probePlan = targetShape.alias(tAlias)
+      .join(source0.alias(sAlias), condition, "inner")
+      .queryExecution.analyzed
+    val jn = probePlan.collectFirst { case j: Join => j }.getOrElse(
+      throw new IllegalStateException("mergeInto: probe plan lost its join"))
+    val condR = jn.condition.getOrElse(
+      throw new IllegalArgumentException("mergeInto: merge needs an ON condition"))
+    require(!condR.exists(_.isInstanceOf[SubqueryExpression]),
+      "mergeInto: subqueries in the ON condition are not supported")
+    val lOut = jn.left.outputSet
+    val rOut = jn.right.outputSet
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case o => Seq(o)
+    }
+    val conj = conjuncts(condR)
+
+    // candidate pruning tier 1: target-only conjuncts (literal
+    // ranges/probes the derivePreds walk understands) prune from
+    // manifest stats/blooms/null counts. The probe plan is ANALYZED
+    // but not optimized, so type coercion leaves literals wrapped in
+    // casts (`id = cast(42 as bigint)`) the derivation would not
+    // see — fold foldable subtrees down to bare literals first.
+    val tOnly = conj.filter(c =>
+      c.references.nonEmpty && c.references.subsetOf(lOut))
+      .map(SnapshotDml.foldConsts)
+    val cand0 =
+      if (tOnly.isEmpty) { t.lastDmlCandidates = state.live; state.live }
+      else t.dmlCandidates(state, ColumnBridge.toColumn(tOnly.reduce(And)))
+    // tier 2: the first `target.col = <source expr>` equi-conjunct
+    // prunes by the source's own (bounded) key set — the point-upsert
+    // shape scans the bloom-hit file, not the table
+    val equi = conj.collectFirst {
+      case EqualTo(a: AttributeReference, b)
+          if lOut.contains(a) && b.references.nonEmpty &&
+            b.references.subsetOf(rOut) => (a, b)
+      case EqualTo(b, a: AttributeReference)
+          if lOut.contains(a) && b.references.nonEmpty &&
+            b.references.subsetOf(rOut) => (a, b)
+    }
+    val candidates = equi match {
+      case Some((a, b)) if cand0.nonEmpty =>
+        val srcKeys = PlanBridge.ofRows(t.spark,
+          Project(Seq(Alias(b, a.name)()), jn.right))
+        t.keyPruneCandidates(state.copy(live = cand0), a.name, srcKeys)
+      case _ => cand0
+    }
+    def scan(files: Seq[String]): DataFrame =
+      t.applyDv(state, t.rawReadFiles(state, files), files)
+
+    def withAssigns(cs: Seq[Clause], what: String,
+        star: Boolean): Seq[Routed] = cs.zipWithIndex.map { case (c, i) =>
+      val set = c match {
+        case Update(_, s) => Some(s)
+        case Insert(_, vs) => Some(vs)
+        case _: Delete => None
       }
-    val parts = copies ++ inserts.toSeq
-    if (changedFiles.isEmpty && parts.isEmpty) 0
-    else if (parts.isEmpty)
-      // pure tombstone commit (all applicable clauses were deletes)
-      t.commit(Nil, full, base = base, keyed = true, op = opName,
-        dvs = partial,
-        props = if (partial.nonEmpty)
-          t.protocolBump(state.props, 2, 2) else Nil)
-    else {
-      val result = parts.reduce(_ unionAll _)
-      val srcJson = SnapshotTable.stripPhysical(result.schema.json)
-      val sc = t.effStatCols(statCols, result)
-      val bc = t.effBloomCols(bloomCols, result)
-      val (staged, stats, sstats, counts, sizes, nullsCh) =
-        t.stageFilesWithStats(result, sc, countFiles = bc.nonEmpty)
-      val blooms = t.buildBlooms(staged, bc, bloomFpp, counts)
-      // zero tombstones AND zero staged rows = nothing changed
-      if (staged.isEmpty && changedFiles.isEmpty) 0
-      else t.commit(staged, full, stats = stats, base = base, keyed = true,
-        op = opName,
-        schemaTransform = Some(v => t.resolveSchema(srcJson, v)),
-        sstats = sstats, blooms = blooms, sizes = sizes,
-        rows = counts.toSeq.sortBy(_._1), nulls = nullsCh, dvs = partial,
-        props = if (partial.nonEmpty)
-          t.protocolBump(state.props, 2, 2) else Nil)
+      c -> set.fold(Map.empty[String, Column])(normAssigns(
+        s"mergeInto $what clause $i", _, tCols, srcCols, sAlias, star))
+    }
+    val mRouted = withAssigns(matched, "WHEN MATCHED", star = true)
+    val nRouted = withAssigns(nmbs, "WHEN NOT MATCHED BY SOURCE", star = false)
+    val iRouted = withAssigns(notMatched, "WHEN NOT MATCHED", star = true)
+
+    // cardinality check over the pruned candidates: a target row
+    // multiply matched is refused only when a matched clause APPLIES
+    // to it (only then is its outcome nondeterministic). Delta's
+    // documented exception — a single unconditional DELETE is
+    // deterministic however many source rows match (the row deletes
+    // once) — skips the check.
+    val deleteOnlyUncond = matched match {
+      case Seq(Delete(None)) => true
+      case _ => false
+    }
+    if (matched.nonEmpty && candidates.nonEmpty && !deleteOnlyUncond) {
+      val raw = t.rawReadFiles(state, candidates).select(col("*"),
+        col("_metadata.file_path").as("__file"),
+        col("_metadata.row_index").as("__ridx"))
+      val viol = t.applyDv(state, raw, candidates).alias(tAlias)
+        .join(src, condition, "inner")
+        .groupBy(col("__file"), col("__ridx"))
+        .agg(count(lit(1)).as("__n"), max(when(anyApplies(mRouted).get,
+          lit(1)).otherwise(lit(0))).as("__app"))
+        .filter(col("__n") > 1 && col("__app") === 1)
+        .select(col("__file")).limit(1).collect()
+      if (viol.nonEmpty)
+        throw new IllegalStateException(
+          "mergeInto: a matched clause applies to a target row that " +
+            s"multiple source rows matched (e.g. in ${viol.head.getString(0)})" +
+            " — its outcome would be nondeterministic. Deduplicate the " +
+            "source on the join keys. (Multiply-matched rows no matched " +
+            "clause applies to, and a single unconditional WHEN MATCHED " +
+            "THEN DELETE, are permitted.)")
+    }
+
+    // INSERT: source rows matching NO target row, routed through the
+    // first-passing insert clause. Anti-joining against the pruned
+    // candidates is sound: a pruned file cannot contain a row matching
+    // ANY source row (that is what pruning proved), so it cannot turn
+    // an unmatched source row into a matched one.
+    val inserts: Option[DataFrame] =
+      if (notMatched.isEmpty) None
+      else {
+        val unmatched =
+          if (candidates.isEmpty) src
+          else src.join(scan(candidates).alias(tAlias), condition, "left_anti")
+        Some(choose(unmatched, iRouted).filter(col("__chosen") =!= NoClause)
+          .select(routed(iRouted, tCols, f => lit(null).cast(f.dataType)): _*))
+      }
+
+    val isNewCol = newCols.map(_.name.toLowerCase).toSet
+    val scope =
+      if (nmbs.nonEmpty) state.live else if (matched.nonEmpty) candidates else Nil
+    SnapshotTable.DmlVerb(_ => scope,
+      new ClauseMatch(tAlias, src, condition, mRouted, nRouted, tCols,
+        // an evolution-added column has no target side to read: its
+        // pre-assignment value is NULL of the declared type
+        f => if (isNewCol(f.name.toLowerCase)) lit(null).cast(f.dataType)
+          else qcol(tAlias, f.name)),
+      SnapshotTable.DmlCommit.Unscoped, inserts = inserts)
+  }
+
+  /** MERGE's row matcher: a target row is HIT when a WHEN MATCHED
+    * clause applies to one of its matching source rows, or when no
+    * source row matches it and a NOT MATCHED BY SOURCE clause applies.
+    * `hit` only filters (the tombstone step reads row identity through
+    * it); `miss` and `copies` project to the result shape `tCols`,
+    * `prior` giving a column's pre-assignment value. None of the three
+    * can fan a target row out: a matched row some clause applies to
+    * has exactly one matching source row (the cardinality check), and
+    * the other shapes are semi/anti-joins. */
+  private final class ClauseMatch(tAlias: String, src: DataFrame,
+      on: Column, matched: Seq[Routed], nmbs: Seq[Routed],
+      tCols: Seq[StructField], prior: StructField => Column)
+      extends SnapshotTable.DmlMatch {
+    private val matchedAny = anyApplies(matched)
+    private val nmbsAny = anyApplies(nmbs)
+    private def target(df: DataFrame) = df.alias(tAlias)
+    private def unmatched(df: DataFrame) =
+      target(df).join(src, on, "left_anti")
+
+    def hit(df: DataFrame): DataFrame =
+      (matchedAny.map(a => target(df).join(src, on && a, "left_semi")) ++
+        nmbsAny.map(unmatched(df).filter(_)))
+        .reduceOption(_ unionAll _).getOrElse(df.limit(0))
+
+    def miss(df: DataFrame): DataFrame = {
+      val notApplied =
+        matchedAny.fold(df)(a => target(df).join(src, on && a, "left_anti"))
+      val kept = nmbsAny.fold(notApplied)(n =>
+        target(notApplied).join(src, on, "left_semi")
+          .unionAll(unmatched(notApplied).filter(!coalesce(n, lit(false)))))
+      target(kept).select(routed(Nil, tCols, prior): _*)
+    }
+
+    override def copies: Option[DataFrame => DataFrame] = {
+      // rows whose first applying clause is an UPDATE, assigned
+      def updated(rows: DataFrame, cs: Seq[Routed]): Option[DataFrame] = {
+        val upd = cs.indices.filter(cs(_)._1.isInstanceOf[Update])
+        if (upd.isEmpty) None
+        else Some(choose(rows, cs).filter(col("__chosen").isin(upd: _*))
+          .select(routed(cs, tCols, prior): _*))
+      }
+      if (!(matched ++ nmbs).exists(_._1.isInstanceOf[Update])) None
+      else Some(df => (updated(target(df).join(src, on, "inner"), matched) ++
+        updated(unmatched(df), nmbs)).reduce(_ unionAll _))
     }
   }
 }

@@ -614,7 +614,9 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
   /** Read snapshot `version` (default newest), planned with the
     * RECORDED schema when one exists (see [[readFiles]] — add-a-column
     * appends read correctly over old files, which null-fill). Empty
-    * snapshots read as an empty frame of the schema. */
+    * snapshots read as an empty frame of the schema; a root with no
+    * data and no schema is refused, naming the statements that make
+    * its first commit. */
   def read(version: Option[Int] = None): DataFrame = {
     val v = version.getOrElse(currentVersion)
     require(v >= 0 && v <= currentVersion,
@@ -627,7 +629,13 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
       case None =>
         val any = files(None)
-        require(any.nonEmpty, s"snapshot table $root has no data files at all")
+        require(any.nonEmpty, s"snapshot table $root has no data and no " +
+          "recorded schema (no first commit yet), so there is nothing to " +
+          "read and no shape to insert into. Create " +
+          s"its first version with COPY INTO snapshot.`$root` FROM " +
+          "'<path>' FILEFORMAT = CSV|PARQUET|JSON, with CREATE TABLE … " +
+          s"USING snapshot OPTIONS (path '$root') [AS SELECT …], or with " +
+          "the table API (SnapshotTable.append)")
         spark.read.parquet(any: _*).limit(0)
     }
   }
@@ -2980,9 +2988,11 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
     require(dupKeys == 0, "merge source has duplicate keys")
     val keys = source.select(keyCols.map(col): _*).distinct()
-    dml(DmlVerb("merge", keyPruneCandidates(_, keyCols.head, source),
-      DmlMatch.Keys(keys, keyCols), DmlCommit.Unscoped,
-      inserts = Some(source), tag = tag), mor, statCols, bloomCols, bloomFpp)
+    dml("merge", mor, statCols, bloomCols, bloomFpp) { (_, _) =>
+      DmlVerb(keyPruneCandidates(_, keyCols.head, source),
+        DmlMatch.Keys(keys, keyCols), DmlCommit.Always,
+        inserts = Some(source), tag = tag)
+    }
   }
 
   /** General conditional MERGE: the full `WHEN MATCHED [AND cond]
@@ -2990,13 +3000,15 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     * INSERT … | WHEN NOT MATCHED BY SOURCE [AND cond] THEN
     * UPDATE/DELETE` clause set — the surface SQL `MERGE INTO` routes
     * to. Clause conditions and values reference `<targetAlias>.<col>`
-    * and `<sourceAlias>.<col>` (defaults `target`/`source`). Semantics,
-    * pruning, and the cost shape of both commit paths (`mor = true`:
-    * deletion vectors, no data file rewritten) are documented on
-    * [[SnapshotMerge]]; the keyed full-row upsert ([[merge]]) remains
-    * the fast path when the clause set is exactly "update all matched,
-    * insert the rest". Returns the committed version, or 0 when no
-    * clause changed anything (no empty commit). */
+    * and `<sourceAlias>.<col>` (defaults `target`/`source`). Semantics
+    * and pruning are [[SnapshotMerge]]'s, which hands the clause set
+    * to the [[dml]] pipeline as a matcher: copy-on-write rewrites only
+    * the files holding a row some clause applies to, `mor = true`
+    * tombstones those rows with deletion vectors and rewrites no data
+    * file. The commit is keyed and unscoped. The keyed full-row upsert
+    * ([[merge]]) remains the fast path when the clause set is exactly
+    * "update all matched, insert the rest". Returns the committed
+    * version, or 0 when no clause changed anything (no empty commit). */
   def mergeInto(source: DataFrame, condition: Column,
       matched: Seq[SnapshotMerge.Clause] = Nil,
       notMatched: Seq[SnapshotMerge.Clause] = Nil,
@@ -3005,11 +3017,14 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomFpp: Double = 0.01, schemaEvolution: Boolean = false,
       declaredSchema: Option[org.apache.spark.sql.types.StructType] = None,
-      mor: Boolean = false): Int =
-    SnapshotMerge.run(this, source, condition, matched, notMatched,
-      notMatchedBySource, targetAlias, sourceAlias, statCols, bloomCols,
-      bloomFpp, mor = mor, schemaEvolution = schemaEvolution,
-      declaredSchema = declaredSchema)
+      mor: Boolean = false): Int = {
+    SnapshotMerge.validate(source, matched, notMatched, notMatchedBySource,
+      targetAlias, sourceAlias)
+    dml("mergeInto", mor, statCols, bloomCols, bloomFpp)(
+      SnapshotMerge.verb(this, source, condition, matched, notMatched,
+        notMatchedBySource, targetAlias, sourceAlias, schemaEvolution,
+        declaredSchema))
+  }
 
   /** File-candidate narrowing shared by the DML verbs: the metadata
     * prune tiers (long stats, string stats, bloom sidecars) applied
@@ -3145,9 +3160,9 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
   def deleteWhere(cond: Column, statCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01,
       mor: Boolean = false): Int =
-    dml(DmlVerb("deleteWhere", dmlCandidates(_, cond),
-      DmlMatch.Where(cond), DmlCommit.Scoped),
-      mor, statCols, bloomCols, bloomFpp)
+    dml("deleteWhere", mor, statCols, bloomCols, bloomFpp) { (_, _) =>
+      DmlVerb(dmlCandidates(_, cond), DmlMatch.Where(cond), DmlCommit.Scoped)
+    }
 
   /** Targeted atomic overwrite — the Delta `replaceWhere` contract:
     * delete every live row matching `cond` AND insert `df0`, in ONE
@@ -3178,10 +3193,11 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomFpp: Double = 0.01, validate: Boolean = true,
       partitionBy: Seq[String] = Nil, mor: Boolean = false): Int =
-    dml(DmlVerb("replaceWhere", dmlCandidates(_, cond),
-      DmlMatch.Where(cond), DmlCommit.Guarded(cond), inserts = Some(df0),
-      layout = Some(partitionBy), validate = validate),
-      mor, statCols, bloomCols, bloomFpp)
+    dml("replaceWhere", mor, statCols, bloomCols, bloomFpp) { (_, _) =>
+      DmlVerb(dmlCandidates(_, cond), DmlMatch.Where(cond),
+        DmlCommit.Guarded(cond), inserts = Some(df0),
+        layout = Some(partitionBy), validate = validate)
+    }
 
   /** UPDATE every live row matching `cond` with the `set` assignments
     * (`column -> new-value expression`, evaluated per row) through the
@@ -3202,23 +3218,28 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       mor: Boolean = false): Int = {
     require(set.nonEmpty,
       s"updateWhere${if (mor) "MoR" else ""} needs at least one assignment")
-    dml(DmlVerb("updateWhere", dmlCandidates(_, cond),
-      DmlMatch.Where(cond), DmlCommit.Scoped, set = set),
-      mor, statCols, bloomCols, bloomFpp)
+    dml("updateWhere", mor, statCols, bloomCols, bloomFpp) { (_, _) =>
+      DmlVerb(dmlCandidates(_, cond), DmlMatch.Where(cond), DmlCommit.Scoped,
+        set = set)
+    }
   }
 
   /** The one DML pipeline behind [[deleteWhere]], [[updateWhere]],
-    * [[replaceWhere]] and [[merge]]. Each attempt pins ONE base version
-    * and its replayed state (a second resolution could land on a
-    * concurrent writer's version), narrows the live files to candidates
-    * from metadata, and finds the matched rows with the verb's matcher.
-    * Then one of two write steps runs:
+    * [[replaceWhere]], [[merge]] and [[mergeInto]] (SQL `DELETE`,
+    * `UPDATE`, `INSERT … REPLACE WHERE` and `MERGE INTO`). Each attempt
+    * pins ONE base version and its replayed state (a second resolution
+    * could land on a concurrent writer's version) and builds the verb's
+    * parts from them (`verb`: a merge's candidates, cardinality check
+    * and inserts read the pinned state), narrows the live files to
+    * candidates from metadata, and finds the matched rows with the
+    * verb's matcher. `name` is the retried and recorded op; the
+    * tombstone step appends `MoR`. Then one of two write steps runs:
     *
     *  - REWRITE (copy-on-write, the default): one column-pruned scan of
     *    the candidates finds the files that actually hold a match, and
-    *    only those are rewritten — their kept rows, the changed copies
-    *    and the inserts stage with stats and blooms, the affected files
-    *    are removed. A point change to a 10k-file table rewrites one
+    *    only those are rewritten — their unmatched rows, the changed
+    *    copies and the inserts stage with stats and blooms, the affected
+    *    files are removed. A point change to a 10k-file table rewrites one
     *    file; a rewritten file that carried a deletion vector
     *    materializes it.
     *  - TOMBSTONE (merge-on-read, `mor`): matched rows are marked deleted
@@ -3243,21 +3264,23 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     * the prior rows. A matched-file path that does not normalize back
     * into the candidate set fails the attempt rather than commit a
     * remove of a file the manifest does not hold. */
-  private def dml(v: DmlVerb, mor: Boolean, statCols: Seq[String],
-      bloomCols: Seq[String], bloomFpp: Double): Int = {
+  private def dml(name: String, mor: Boolean, statCols: Seq[String],
+      bloomCols: Seq[String], bloomFpp: Double)(
+      verb: (Int, SnapshotTable.TableState) => DmlVerb): Int = {
     import org.apache.spark.sql.functions.col
-    val op = if (mor) v.name + "MoR" else v.name
-    val requireCond = v.matcher match {
-      case DmlMatch.Where(cond) if v.validate => Some((cond,
-        s"$op on $root: the incoming frame contains row(s) that do NOT " +
-          "satisfy the replace condition — they would silently land " +
-          "outside the replaced slab. Fix the frame or pass validate = " +
-          "false to opt out (the Delta constraint check contract)"))
-      case _ => None
-    }
+    val op = if (mor) name + "MoR" else name
     retryingOnConflict(op) {
       val base = currentVersion
       val state = replayStateFull(base)
+      val v = verb(base, state)
+      val requireCond = v.matcher match {
+        case DmlMatch.Where(cond) if v.validate => Some((cond,
+          s"$op on $root: the incoming frame contains row(s) that do NOT " +
+            "satisfy the replace condition — they would silently land " +
+            "outside the replaced slab. Fix the frame or pass validate = " +
+            "false to opt out (the Delta constraint check contract)"))
+        case _ => None
+      }
       val candidates = if (state.live.isEmpty) Nil else v.candidates(state)
       // refuse a bad assignment before either write step writes a file
       if (v.set.nonEmpty) state.schema.foreach(js =>
@@ -3284,7 +3307,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       def laidOut(df: DataFrame, fill: Boolean = true) = v.layout.fold(
         (df, Seq.empty[String], Seq.empty[(String, Option[String])]))(
         applyLayout(df, _, state.props, fillGenerated = fill))
-      val (staged, remove, dvs, touched, layoutProp) =
+      val (staged, remove, dvs, touched, layoutProp, shape) =
         if (!mor) {
           val affected =
             if (candidates.isEmpty) Nil
@@ -3294,7 +3317,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
                 .map(r => qualified(r.getString(0))).toSeq
               val cands = candidates.map(qualified).toSet
               require(found.forall(cands.contains),
-                s"${v.name}: matched file outside the live set (path normalization)")
+                s"$name: matched file outside the live set (path normalization)")
               found
             }
           val kept = if (affected.isEmpty) None else Some {
@@ -3302,7 +3325,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
             v.matcher match {
               case w: DmlMatch.Where if v.set.nonEmpty =>
                 assigned(op, rows, v.set, Some(w.isTrue))
-              case m => m.miss(rows)
+              case m => m.copies.foldLeft(m.miss(rows))((k, c) => k.unionAll(c(rows)))
             }
           }
           val (slabs, layoutCols, layoutProp) = v.inserts match {
@@ -3331,7 +3354,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
               (Seq(laid -> true) ++ kept.map(laidOut(_, fill = false)._1 -> false),
                 lc, lp)
           }
-          (stage(slabs, layoutCols), affected, Nil, affected, layoutProp)
+          (stage(slabs, layoutCols), affected, Nil, affected, layoutProp, None)
         } else {
           val (ins, layoutCols, layoutProp) = v.inserts.map(laidOut(_))
             .fold((Seq.empty[DataFrame], Seq.empty[String],
@@ -3342,25 +3365,31 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
             if (candidates.isEmpty) (Nil, Nil, Nil)
             else buildMorTombstonesBy(state, candidates, v.matcher.hit)
           // changed copies from the DV-APPLIED scan: only live matches
-          val copies =
-            if (changed.isEmpty || v.set.isEmpty) Nil
-            else Seq(assigned(op, v.matcher.hit(applyDv(state,
-              rawReadFiles(state, candidates), candidates)), v.set, None))
-          (stagedIns ++ stage(copies.map(_ -> false)), full, partial, changed,
+          lazy val live = applyDv(state, rawReadFiles(state, candidates),
+            candidates)
+          val (updated, copies) =
+            if (changed.isEmpty) (None, None)
+            else if (v.set.nonEmpty)
+              (Some(assigned(op, v.matcher.hit(live), v.set, None)), None)
+            else (None, v.matcher.copies.map(_(live)))
+          // merge-on-read leaves every untouched file live: the recorded
+          // schema of what the verb adds in its own shape (inserts, clause
+          // copies) unions with the prior one, append-shaped
+          val shape = (v.inserts.toSeq ++ copies).reduceOption(_ unionAll _)
+          (stagedIns ++ stage((updated ++ copies).toSeq.map(_ -> false)),
+            full, partial, changed,
             layoutProp ++ (if (partial.nonEmpty)
-              protocolBump(state.props, 2, 2) else Nil))
+              protocolBump(state.props, 2, 2) else Nil), shape)
         }
       if (touched.isEmpty && staged.files.isEmpty &&
-          v.policy != DmlCommit.Unscoped) 0
+          v.policy != DmlCommit.Always) 0
       else commit(staged.files, remove, v.tag, stats = staged.stats,
         base = base, keyed = true, op = op,
-        // merge-on-read inserts leave every old file live: the recorded
-        // schema unions with the prior one, append-shaped
-        schema = if (mor && v.inserts.isDefined) None else staged.schema,
-        schemaTransform = if (!mor) None else v.inserts.map(ins => {
-          val json = SnapshotTable.stripPhysical(ins.schema.json)
+        schema = if (shape.isDefined) None else staged.schema,
+        schemaTransform = shape.map { df =>
+          val json = SnapshotTable.stripPhysical(df.schema.json)
           (at: Int) => resolveSchema(json, at)
-        }),
+        },
         sstats = staged.sstats, blooms = staged.blooms, sizes = staged.sizes,
         rows = staged.counts.toSeq.sortBy(_._1), nulls = staged.nulls,
         dvs = dvs, props = layoutProp,
@@ -3402,8 +3431,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       s"${unknown.mkString(", ")} (have ${have.mkString(", ")})")
   }
 
-  /** The tombstone write step of [[dml]] (and [[SnapshotMerge]]'s MoR
-    * path): union deletion-vector sidecars for the rows of `candidates`
+  /** The tombstone write step of [[dml]]: union deletion-vector sidecars for the rows of `candidates`
     * that `matcher` keeps at `state`, written on executors. The matcher
     * (a condition filter, or a semi-join against merge keys) receives
     * the RAW candidate scan with `__name`/`__ridx` already materialized
@@ -5087,11 +5115,16 @@ object SnapshotTable {
       num_rows: Option[Long], min_reader: Int, min_writer: Int)
 
   /** A DML verb's row matcher. */
-  private[sources] sealed trait DmlMatch {
-    /** Only the matched rows of `df`. */
+  private[sources] trait DmlMatch {
+    /** Only the matched rows of `df` — a pure filter: every column of
+      * `df` passes through unchanged. */
     def hit(df: DataFrame): DataFrame
     /** Only the unmatched rows of `df`. */
     def miss(df: DataFrame): DataFrame
+    /** The changed copies of a frame's matched rows, when the matcher
+      * itself decides them ([[SnapshotMerge]]'s clauses); `None` drops
+      * the matched rows (or leaves them to the verb's `set`). */
+    def copies: Option[DataFrame => DataFrame] = None
   }
   private[sources] object DmlMatch {
     /** Rows where `cond` is TRUE; a NULL condition does not match. */
@@ -5120,21 +5153,23 @@ object SnapshotTable {
     /** Unscoped, and conflicts with any interleaved append that may add
       * rows matching `cond`; nothing touched or staged = no commit. */
     final case class Guarded(cond: Column) extends DmlCommit
-    /** Unscoped, and always commits. */
+    /** Unscoped; nothing touched or staged = no commit. */
     case object Unscoped extends DmlCommit
+    /** Unscoped, and always commits (a `tag` rides even a no-op). */
+    case object Always extends DmlCommit
   }
 
-  /** The parts a DML verb plugs into [[SnapshotTable.dml]]: its `name`
-    * (the retried and recorded op; the tombstone step appends `MoR`),
-    * candidate narrowing over the pinned state, the row matcher and the
-    * commit policy. Matched rows are dropped or, with a non-empty `set` (a
-    * `Where` matcher), replaced by a copy carrying the assignments.
-    * `inserts` are the rows the verb adds: with `layout` (replaceWhere's
-    * `partitionBy`) they stage as their own slab, clustered by
-    * `applyLayout` and — with `validate` — refused unless every row
-    * satisfies the matcher's condition; without it (merge) they stage
-    * in one frame with the kept rows. */
-  private[sources] final case class DmlVerb(name: String,
+  /** The parts a DML verb plugs into [[SnapshotTable.dml]]: candidate
+    * narrowing over the pinned state, the row matcher and the commit
+    * policy. Matched rows are dropped, replaced by the matcher's own
+    * copies, or, with a non-empty `set` (a `Where` matcher), replaced
+    * by a copy carrying the assignments. `inserts` are the rows the
+    * verb adds: with `layout` (replaceWhere's `partitionBy`) they stage
+    * as their own slab, clustered by `applyLayout` and — with
+    * `validate` — refused unless every row satisfies the matcher's
+    * condition; without it (the merges) they stage in one frame with
+    * the kept rows. */
+  private[sources] final case class DmlVerb(
       candidates: TableState => Seq[String],
       matcher: DmlMatch, policy: DmlCommit,
       set: Seq[(String, Column)] = Nil, inserts: Option[DataFrame] = None,

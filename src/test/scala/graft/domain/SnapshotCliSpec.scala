@@ -108,6 +108,23 @@ class SnapshotCliSpec extends SparkSuite {
     assert(t.currentVersion == 3)
   }
 
+  test("Sql INSERT into a root with no first commit names COPY INTO, prints nothing, writes no log") {
+    val table = java.nio.file.Files.createTempDirectory("snapclifresh") + "/tbl"
+    val out = new java.io.ByteArrayOutputStream()
+    val e = intercept[Exception] {
+      Console.withOut(new java.io.PrintStream(out)) {
+        IngestCli.runTask(ext, "Sql", Map("query" ->
+          s"INSERT INTO snapshot.`$table` SELECT 1L AS id"))
+      }
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("COPY INTO") &&
+      m.contains("CREATE TABLE") && m.contains("SnapshotTable.append")), msgs)
+    assert(out.size == 0, out.toString("UTF-8"))
+    assert(!new java.io.File(s"$table/_log").exists())
+  }
+
   test("append/read/merge/compact/vacuum round-trip through the CLI") {
     val dir = java.nio.file.Files.createTempDirectory("snapcli").toString
     val table = s"$dir/tbl"
