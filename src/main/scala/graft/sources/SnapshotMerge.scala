@@ -217,7 +217,8 @@ object SnapshotMerge {
     val jn = probePlan.collectFirst { case j: Join => j }.getOrElse(
       throw new IllegalStateException("mergeInto: probe plan lost its join"))
     val condR = jn.condition.getOrElse(
-      throw new IllegalArgumentException("mergeInto: merge needs an ON condition"))
+      throw new IllegalArgumentException(
+        "mergeInto: merge needs an ON condition"))
     require(!condR.exists(_.isInstanceOf[SubqueryExpression]),
       "mergeInto: subqueries in the ON condition are not supported")
     val lOut = jn.left.outputSet
@@ -323,7 +324,9 @@ object SnapshotMerge {
 
     val isNewCol = newCols.map(_.name.toLowerCase).toSet
     val scope =
-      if (nmbs.nonEmpty) state.live else if (matched.nonEmpty) candidates else Nil
+      if (nmbs.nonEmpty) state.live
+      else if (matched.nonEmpty) candidates
+      else Nil
     SnapshotTable.DmlVerb(_ => scope,
       new ClauseMatch(tAlias, src, condition, mRouted, nRouted, tCols,
         // an evolution-added column has no target side to read: its

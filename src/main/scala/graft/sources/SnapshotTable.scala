@@ -3325,7 +3325,8 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
             v.matcher match {
               case w: DmlMatch.Where if v.set.nonEmpty =>
                 assigned(op, rows, v.set, Some(w.isTrue))
-              case m => m.copies.foldLeft(m.miss(rows))((k, c) => k.unionAll(c(rows)))
+              case m =>
+                m.copies.foldLeft(m.miss(rows))((k, c) => k.unionAll(c(rows)))
             }
           }
           val (slabs, layoutCols, layoutProp) = v.inserts match {
@@ -3431,9 +3432,10 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       s"${unknown.mkString(", ")} (have ${have.mkString(", ")})")
   }
 
-  /** The tombstone write step of [[dml]]: union deletion-vector sidecars for the rows of `candidates`
-    * that `matcher` keeps at `state`, written on executors. The matcher
-    * (a condition filter, or a semi-join against merge keys) receives
+  /** The tombstone write step of [[dml]]: union deletion-vector
+    * sidecars for the rows of `candidates` that `matcher` keeps at
+    * `state`, written on executors. The matcher (a condition filter, a
+    * semi-join against merge keys, or MERGE's clause matcher) receives
     * the RAW candidate scan with `__name`/`__ridx` already materialized
     * from the file metadata (hidden `_metadata` columns do not survive
     * a join) and must only FILTER rows, never alter those columns.

@@ -76,8 +76,6 @@ class SnapshotMergeFuzzSpec extends SparkSuite {
 
   // ---- the independent model ------------------------------------------
 
-  /** Returns Left(()) when the scenario must REFUSE (cardinality),
-    * else Right(final multiset of rows). */
   private def mApplies(c: MClause, t: (Long, String, Long),
       s: (Long, String, Long)): Boolean = c match {
     case MUpdate(cond, _) => cond.forall(_.eval(Some(t._3), Some(s._3)))
@@ -97,6 +95,8 @@ class SnapshotMergeFuzzSpec extends SparkSuite {
     }
   }
 
+  /** Returns Left(()) when the scenario must REFUSE (cardinality),
+    * else Right(final multiset of rows). */
   private def model(sc: Scenario)
       : Either[Unit, Seq[(Long, Option[String], Option[Long])]] = {
     val deleteOnlyUncond = sc.matched match {
@@ -318,42 +318,35 @@ class SnapshotMergeFuzzSpec extends SparkSuite {
   private def canon(rs: Seq[(Long, Option[String], Option[Long])]) =
     rs.sortBy(r => (r._1, r._2.getOrElse(""), r._3.getOrElse(-1L)))
 
+  /** Runs `sc` through both write steps (see [[runEngine]] for
+    * `spread`) and checks each against the model — a spread run's model
+    * target lacks the tombstoned `t0`. */
+  private def differential(sc: Scenario, spread: Boolean): Unit = {
+    val want = model(if (spread) sc.copy(target = sc.target.tail) else sc)
+    val cow = runEngine(sc, mor = false, spread)
+    val mor = runEngine(sc, mor = true, spread)
+    (want, cow, mor) match {
+      case (Left(()), Left(()), Left(())) => () // all refuse
+      case (Right(w), Right(c), Right(m)) =>
+        assert(canon(c) == canon(w),
+          s"CoW diverged from the model for $sc")
+        assert(canon(m) == canon(w),
+          s"MoR diverged from the model for $sc")
+      case other =>
+        fail(s"refusal disagreement (model, cow, mor) = ${other
+          .productIterator.map(_.getClass.getSimpleName).mkString(",")} for $sc")
+    }
+  }
+
   (1 to 14).foreach { seed =>
     test(s"differential merge fuzz, seed $seed: CoW and MoR match the row-level model") {
-      val sc = gen(seed)
-      val want = model(sc)
-      val cow = runEngine(sc, mor = false)
-      val mor = runEngine(sc, mor = true)
-      (want, cow, mor) match {
-        case (Left(()), Left(()), Left(())) => () // all refuse
-        case (Right(w), Right(c), Right(m)) =>
-          assert(canon(c) == canon(w),
-            s"CoW diverged from the model for $sc")
-          assert(canon(m) == canon(w),
-            s"MoR diverged from the model for $sc")
-        case other =>
-          fail(s"refusal disagreement (model, cow, mor) = ${other
-            .productIterator.map(_.getClass.getSimpleName).mkString(",")} for $sc")
-      }
+      differential(gen(seed), spread = false)
     }
   }
 
   (1 to 14).foreach { seed =>
     test(s"differential merge fuzz, seed $seed: a two-file target carrying a deletion vector matches the model") {
-      val sc = gen(seed)
-      val want = model(sc.copy(target = sc.target.tail))
-      (want, runEngine(sc, mor = false, spread = true),
-          runEngine(sc, mor = true, spread = true)) match {
-        case (Left(()), Left(()), Left(())) => ()
-        case (Right(w), Right(c), Right(m)) =>
-          assert(canon(c) == canon(w),
-            s"CoW diverged from the model for $sc")
-          assert(canon(m) == canon(w),
-            s"MoR diverged from the model for $sc")
-        case other =>
-          fail(s"refusal disagreement (model, cow, mor) = ${other
-            .productIterator.map(_.getClass.getSimpleName).mkString(",")} for $sc")
-      }
+      differential(gen(seed), spread = true)
     }
   }
 

@@ -380,6 +380,28 @@ class SnapshotMergeSpec extends SparkSuite {
     assert(asMap(mor) == want)
   }
 
+  test("a multi-matched row with NON-applying matched clauses, sharing a rewritten file with an applying row, is kept once") {
+    // one file: id 2's single pair applies (the file is rewritten), id
+    // 3's two pairs apply to no clause — the rewrite must keep id 3
+    // once and the tombstone step must leave it alone
+    val src = Seq((3L, "x", 1L), (3L, "y", 2L), (2L, "B!", 200L))
+      .toDF("id", "v", "qty")
+    val clause = Seq(Update(Some(expr("source.qty >= 100")),
+      Seq("v" -> expr("source.v"))))
+    val want = Map(1L -> ("a", 10L), 2L -> ("B!", 20L), 3L -> ("c", 30L))
+    Seq(false, true).foreach { mor =>
+      val t = tmpTable()
+      t.append(Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
+        .toDF("id", "v", "qty").coalesce(1))
+      val before = t.files().toSet
+      assert(t.mergeInto(src, onKeys, matched = clause, mor = mor) == 2)
+      assert(t.files().toSet.intersect(before).isEmpty == !mor,
+        "copy-on-write rewrites the file; merge-on-read keeps it")
+      assert(t.read().count() == 3, s"mor=$mor: id 3 must be kept ONCE")
+      assert(asMap(t) == want)
+    }
+  }
+
   test("Delta parity: single unconditional DELETE multi-match deletes once") {
     val src = Seq((3L, "x", 1L), (3L, "y", 2L)).toDF("id", "v", "qty")
     val cow = seed(); val mor = seed()
