@@ -772,12 +772,8 @@ object IngestCli {
         sourceInstance, forcingMetclass, tm)) {
         // the swapped run_date partition may also hold OTHER timemarks
         // of the same date — they ride through the rewrite untouched
-        val scoped = store.modelDataForTimemark(tmStr)
-        val repaired = graft.operators.KeepLatestDedup(
-          scoped.filter(col("timemark") === tm),
-          Seq("source_id", "time"), Seq(col("proc_ts")))
-          .unionByName(scoped.filter(col("timemark") =!= tm || col("timemark").isNull))
-        store.swapModelRunDatePartitions(repaired)
+        store.swapModelRunDatePartitions(ModelIngest.dedupRun(
+          store.modelDataForTimemark(tmStr), tm, col("proc_ts")))
       }
     }
     // apsviz station snapshot from meta_* files (+ active obs stations)

@@ -264,7 +264,8 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
     * (loDate, hiDate) in session-timezone `yyyy-MM-dd` — the ingested
     * batch's bounds, the reference's per-file dedup scope
     * (ingestObsTasks.py:392-399); `dataSource` narrows it to one
-    * source. No scope → the whole fact. */
+    * source. No scope → the whole fact. One commit that rewrites only
+    * the files holding an in-scope row; no in-scope row, no commit. */
   def compactGaugeData(
       scope: Option[(String, String)] = None,
       dataSource: Option[String] = None): Unit
@@ -285,7 +286,10 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
   def hasModelData: Boolean
 
   /** Rerun repair: `df` holds the REPAIRED rows of one (or few) run
-    * timemarks and replaces every row of those run days. */
+    * timemarks and replaces every row of those run days, in one
+    * commit; rows of other days sharing a rewritten file (one with no
+    * run day too) are kept. A `df` row without a timemark is refused
+    * before anything is written. */
   def swapModelRunDatePartitions(df: DataFrame): Unit
 
   /** Incremental daily OHLC rollup of the obs fact; returns the

@@ -24,6 +24,14 @@ import graft.sources.SnapshotTable
   * (tag = commit id), so a crash-rerun of a stranded commit is
   * idempotent through [[SnapshotTable.appendIfAbsent]].
   *
+  * The two fact repairs — keep-latest ([[compactGaugeData]]) and the
+  * rerun repair ([[swapModelRunDatePartitions]]) — are copy-on-write
+  * verbs of the table's DML pipeline ([[SnapshotTable.keepLatestWhere]],
+  * [[SnapshotTable.swapWhere]]). Each commits keyed and unscoped, and
+  * the pipeline's conflict retry is their only retry: an interleaved
+  * rewrite or keyed commit forces a recompute from the new head, a
+  * blind append commutes.
+  *
   * Daily rollup maintenance is CDC-DRIVEN: [[rollupDaily]] diffs the
   * fact table since the version the rollup last reflected and
   * rebuilds exactly the (source, date) groups the CDC touched — on
@@ -85,73 +93,24 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
 
   override def hasGaugeData: Boolean = gaugeTable.currentVersion > 0
 
-  /** Scoped keep-latest repair as a copy-on-write snapshot commit:
-    * only the files whose `obs_day` stats intersect the scope are
-    * rewritten (out-of-scope ROWS inside them are carried through
-    * untouched); everything else stays shared with older snapshots.
-    * Conflicts with a concurrent keyed commit re-resolve and retry —
-    * the loser recomputes against the new head. */
+  /** Scoped keep-latest repair, one [[SnapshotTable.keepLatestWhere]]
+    * commit: the rows in scope (`obs_day` in the dates, `data_source_part`
+    * the source) keep their latest `timemark` per `(source_id, time)`.
+    * Only the files holding an in-scope row are rewritten — the day
+    * and source stats prune the candidates from metadata, one scan
+    * finds the hits — and their out-of-scope rows are carried through;
+    * everything else stays shared with older snapshots. */
   override def compactGaugeData(
       scope: Option[(String, String)],
       dataSource: Option[String]): Unit = {
     if (!hasGaugeData) return
-    var attempt = 0
-    while (attempt < 20) {
-      val base = gaugeTable.currentVersion
-      val dayPruned = scope match {
-        case Some((lo, hi)) =>
-          gaugeTable.prunedFiles("obs_day", dayOf(lo), dayOf(hi), Some(base))
-        case None => gaugeTable.files(Some(base))
-      }
-      // a data-source scope narrows the FILE set too: first from the
-      // manifest's data_source_part string stats (metadata-only —
-      // append-time files carry lo == hi source bounds), then one
-      // column-pruned content scan over the survivors for exactness
-      // (compaction-rewritten files can mix sources; stat-less legacy
-      // files are kept by the prune and resolved by the scan) —
-      // otherwise a one-source dedup on an 11-source store rewrites
-      // every file of the table
-      val affected = (dataSource, dayPruned.nonEmpty) match {
-        case (Some(ds), true) =>
-          val fs = fsys
-          val srcPruned = gaugeTable
-            .prunedFilesEq("data_source_part", ds, Some(base)).toSet
-          val candidates = dayPruned.filter(srcPruned.contains)
-          if (candidates.isEmpty) Nil
-          // __src_file, not input_file_name(): the latter returns ""
-          // above a deletion-vector anti-join (see readFilesWithSource)
-          else gaugeTable.readFilesWithSource(candidates, Some(base))
-            .filter(col("data_source_part") === ds)
-            .select(col("__src_file").as("__f")).distinct().collect()
-            .map(r => fs.makeQualified(
-              new org.apache.hadoop.fs.Path(r.getString(0))).toString).toSeq
-        case _ => dayPruned
-      }
-      if (affected.isEmpty) return
-      // schema-pinned read: footer sampling could drop a later-added
-      // measure column from the rewrite
-      val rows = gaugeTable.readFiles(affected, Some(base))
-      val inScope = Seq(
-        scope.map { case (lo, hi) => col("obs_day").between(dayOf(lo), dayOf(hi)) },
-        dataSource.map(ds => col("data_source_part") === ds)
-      ).flatten.reduceOption(_ && _).getOrElse(lit(true))
-      val deduped = graft.operators.KeepLatestDedup(
-        rows.filter(inScope),
-        keys = Seq("source_id", "time"), precedence = Seq(col("timemark")))
-      val replacement = rows.filter(!coalesce(inScope, lit(false)))
-        .unionByName(deduped)
-      try {
-        gaugeTable.replaceFiles(base, affected, replacement,
-          Seq("obs_day", "data_source_part"))
-        return
-      } catch {
-        case _: SnapshotTable.CommitConflict =>
-          attempt += 1
-          Thread.sleep(math.min(1600L, 25L << math.min(attempt, 6)) +
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(50))
-      }
-    }
-    sys.error(s"compactGaugeData lost 20 recompute rounds on $root")
+    val inScope = Seq(
+      scope.map { case (lo, hi) => col("obs_day").between(dayOf(lo), dayOf(hi)) },
+      dataSource.map(ds => col("data_source_part") === ds)
+    ).flatten.reduceOption(_ && _).getOrElse(lit(true))
+    gaugeTable.keepLatestWhere(inScope, Seq("source_id", "time"),
+      Seq(col("timemark")), Seq("obs_day", "data_source_part"))
+    ()
   }
 
   override def appendModelData(df: DataFrame): Unit = {
@@ -194,43 +153,22 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
 
   override def hasModelData: Boolean = modelTable.currentVersion > 0
 
-  /** Rerun repair: replace the repaired run-dates' rows in one keyed
-    * commit, preserving other runs' rows sharing the same files. Only
-    * files whose `run_day` stats meet the repaired days are rewritten,
-    * so a rerun costs one run's data, not the table size. The
-    * repaired-run list is O(few) — one driver collect. */
+  /** Rerun repair, one [[SnapshotTable.swapWhere]] commit: every row
+    * of the repaired run days is replaced by `df`, other runs' rows
+    * sharing the rewritten files (a NULL `run_day` too) are carried
+    * through. The `run_day` stats prune the candidates, so a rerun
+    * costs one run's data, not the table size. The repaired-day list
+    * is O(few) — one driver collect. */
   override def swapModelRunDatePartitions(df: DataFrame): Unit = {
     val repaired = withModelParts(df)
+    val days = repaired.select(col("run_day")).distinct().collect()
     // a repair is per-run: null-timemark rows have no run to replace
-    require(repaired.filter(col("run_day").isNull).limit(1).count() == 0,
+    require(!days.exists(_.isNullAt(0)),
       "swapModelRunDatePartitions: repair rows must carry a timemark")
-    val days = repaired.select(col("run_day")).distinct()
-      .collect().map(_.getLong(0))
     if (days.isEmpty) return
-    var attempt = 0
-    while (attempt < 20) {
-      val base = modelTable.currentVersion
-      val affected =
-        if (modelTable.currentVersion == 0) Seq.empty
-        else modelTable.prunedFiles("run_day", days.min, days.max, Some(base))
-      if (affected.isEmpty) { appendModelData(df); return }
-      val rows = modelTable.readFiles(affected, Some(base))
-      // null-safe keep-predicate: a co-located row with NULL run_day
-      // must be carried through, not silently dropped (NULL isin = NULL)
-      val replacement = rows.filter(
-        !coalesce(col("run_day").isin(days.toSeq: _*), lit(false)))
-        .unionByName(repaired)
-      try {
-        modelTable.replaceFiles(base, affected, replacement, Seq("run_day"))
-        return
-      } catch {
-        case _: SnapshotTable.CommitConflict =>
-          attempt += 1
-          Thread.sleep(math.min(1600L, 25L << math.min(attempt, 6)) +
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(50))
-      }
-    }
-    sys.error(s"swapModelRunDatePartitions lost 20 recompute rounds on $root")
+    modelTable.swapWhere(repaired,
+      col("run_day").isin(days.map(_.getLong(0)).toSeq: _*), Seq("run_day"))
+    ()
   }
 
   /** Staged fact parquet publishes as ONE tagged manifest commit per

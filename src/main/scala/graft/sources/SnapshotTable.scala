@@ -462,9 +462,9 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
   /** [[readFiles]] plus a `__src_file` column carrying each row's
     * source data file — planted ON the scan (see applyDv), because
     * `input_file_name()` above the DV anti-join evaluates outside the
-    * file source and returns "". The merge/deleteWhere affected-file
-    * scans read this. */
-  private[graft] def readFilesWithSource(fl: Seq[String],
+    * file source and returns "". The [[dml]] affected-file scan reads
+    * this. */
+  private[sources] def readFilesWithSource(fl: Seq[String],
       version: Option[Int]): DataFrame = {
     val v = version.getOrElse(currentVersion)
     require(v >= 0 && v <= currentVersion,
@@ -3224,13 +3224,47 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     }
   }
 
+  /** Keep-latest repair through the [[dml]] pipeline's REWRITE step:
+    * among the live rows matching `cond`, keep one row per `keys` —
+    * the one ranking first by `precedence`, descending
+    * ([[graft.operators.KeepLatestDedup]]) — and carry every other row
+    * of the rewritten files through. Only the files holding a matched
+    * row are rewritten, with `statCols` recorded. The commit is keyed
+    * and unscoped: an interleaved rewrite or keyed commit forces a
+    * recompute from the new head, while a blind append commutes (its
+    * rows wait for the next repair). Returns the committed version, or
+    * 0 when no live row matched. */
+  private[graft] def keepLatestWhere(cond: Column, keys: Seq[String],
+      precedence: Seq[Column], statCols: Seq[String]): Int =
+    dml("keepLatestWhere", mor = false, statCols, Nil, 0.01) { (_, _) =>
+      DmlVerb(dmlCandidates(_, cond),
+        DmlMatch.KeepLatest(cond, keys, precedence), DmlCommit.Unscoped)
+    }
+
+  /** Rerun-repair swap through the [[dml]] pipeline's REWRITE step:
+    * every live row matching `cond` is replaced by `df`, the other rows
+    * of the rewritten files are carried through, `statCols` recorded.
+    * Unlike [[replaceWhere]] the commit is keyed and unscoped with no
+    * append guard: `df` is computed by the caller before the swap, so
+    * a guarded retry would re-insert it over a row a blind append
+    * landed meanwhile — here that row commutes and survives. Returns
+    * the committed version. */
+  private[graft] def swapWhere(df: DataFrame, cond: Column,
+      statCols: Seq[String]): Int =
+    dml("swapWhere", mor = false, statCols, Nil, 0.01) { (_, _) =>
+      DmlVerb(dmlCandidates(_, cond), DmlMatch.Where(cond),
+        DmlCommit.Unscoped, inserts = Some(df))
+    }
+
   /** The one DML pipeline behind [[deleteWhere]], [[updateWhere]],
     * [[replaceWhere]], [[merge]] and [[mergeInto]] (SQL `DELETE`,
-    * `UPDATE`, `INSERT … REPLACE WHERE` and `MERGE INTO`). Each attempt
-    * pins ONE base version and its replayed state (a second resolution
-    * could land on a concurrent writer's version) and builds the verb's
-    * parts from them (`verb`: a merge's candidates, cardinality check
-    * and inserts read the pinned state), narrows the live files to
+    * `UPDATE`, `INSERT … REPLACE WHERE` and `MERGE INTO`), and behind
+    * the fact store's two repairs ([[keepLatestWhere]], [[swapWhere]]).
+    * Each attempt pins ONE base version and its replayed state (a
+    * second resolution could land on a concurrent writer's version)
+    * and builds the verb's parts from them (`verb`: a merge's
+    * candidates, cardinality check and inserts read the pinned
+    * state), narrows the live files to
     * candidates from metadata, and finds the matched rows with the
     * verb's matcher. `name` is the retried and recorded op; the
     * tombstone step appends `MoR`. Then one of two write steps runs:
@@ -3583,34 +3617,6 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
         }
       }
     }
-
-  /** Copy-on-write rewrite of a SUBSET of live files in one keyed
-    * commit: exactly `affected` leaves the live set, the staged rows
-    * of `replacement` enter it, every other live file is untouched —
-    * the primitive behind scoped repairs (a bounded keep-latest dedup,
-    * a partition-aligned rerun swap) where the caller has already
-    * resolved WHICH files hold the rows being rewritten (typically via
-    * [[prunedFilesMulti]]) and rebuilt their full contents.
-    *
-    * `base` must be the version `affected` was resolved against; a
-    * concurrent keyed/remove-bearing commit after it throws
-    * [[SnapshotTable.CommitConflict]] — the caller re-resolves from
-    * the new head and retries (unlike [[merge]], the recompute needs
-    * the caller's scope predicate, so the retry loop lives with the
-    * caller). Returns the committed version. */
-  def replaceFiles(base: Int, affected: Seq[String],
-      replacement: DataFrame,
-      statCols: Seq[String] = Nil): Int = {
-    val liveNow = files(Some(base)).map(p => fs.makeQualified(new Path(p)).toString).toSet
-    val norm = affected.map(p => fs.makeQualified(new Path(p)).toString)
-    require(norm.forall(liveNow.contains),
-      s"replaceFiles: affected file not live at v$base")
-    val (staged, stats, sstats, counts, sizes, nullsCh) =
-      stageFilesWithStats(replacement, statCols)
-    commit(staged, norm, stats = stats, base = base, keyed = true,
-      op = "replaceFiles", schema = Some(replacement.schema.json), sstats = sstats,
-      sizes = sizes, rows = counts.toSeq.sortBy(_._1), nulls = nullsCh)
-  }
 
   /** Row-level change-data-capture between two snapshots, as a frame
     * with a `_change` column (`insert` / `delete`).
@@ -4723,7 +4729,8 @@ object SnapshotTable {
       case other => other // =, <=> are symmetric
     }
     def handle(op: String, n: String, l: Literal): Unit = op match {
-      case "=" | "<=>" | "==" => eq(n, l)
+      // a one-value IN arrives as a two-argument function: an equality
+      case "=" | "<=>" | "==" | "in" => eq(n, l)
       case ">" =>
         range(n, l, lo = true, strict = true); strRange(n, l, lo = true)
       case ">=" =>
@@ -5143,6 +5150,16 @@ object SnapshotTable {
         extends DmlMatch {
       def hit(df: DataFrame): DataFrame = df.join(keys, keyCols, "left_semi")
       def miss(df: DataFrame): DataFrame = df.join(keys, keyCols, "left_anti")
+    }
+    /** Rows where `cond` is TRUE, whose copies are their keep-latest
+      * survivors: one row per `keys`, the first by `precedence`. */
+    final case class KeepLatest(cond: Column, keys: Seq[String],
+        precedence: Seq[Column]) extends DmlMatch {
+      private val where = Where(cond)
+      def hit(df: DataFrame): DataFrame = where.hit(df)
+      def miss(df: DataFrame): DataFrame = where.miss(df)
+      override def copies: Option[DataFrame => DataFrame] = Some(df =>
+        graft.operators.KeepLatestDedup(hit(df), keys, precedence))
     }
   }
 

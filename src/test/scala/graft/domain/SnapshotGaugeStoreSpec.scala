@@ -76,6 +76,30 @@ class SnapshotGaugeStoreSpec extends SparkSuite {
     assert(store.modelData.count() == 3)
   }
 
+  test("swapModelRunDatePartitions refuses a null-timemark repair and carries a NULL run_day row through") {
+    val store = mkStore()
+    // one file: a row of the repaired run and a row with no timemark
+    store.appendModelData(model(
+      (1L, "2023-04-23 00:00:00", "2023-04-23 01:00:00", 1.0),
+      (1L, null, "2023-04-23 02:00:00", 3.0)).coalesce(1))
+    val v0 = store.modelTable.currentVersion
+    val err = intercept[IllegalArgumentException](
+      store.swapModelRunDatePartitions(model(
+        (1L, "2023-04-23 00:00:00", "2023-04-23 01:00:00", 5.5),
+        (1L, null, "2023-04-23 02:00:00", 4.0))))
+    assert(err.getMessage.contains("must carry a timemark"), err.getMessage)
+    assert(store.modelTable.currentVersion == v0,
+      "a refused repair must not commit")
+    val filesBefore = store.modelTable.files().toSet
+    store.swapModelRunDatePartitions(model(
+      (1L, "2023-04-23 00:00:00", "2023-04-23 01:00:00", 5.5)))
+    assert(store.modelTable.files().toSet.intersect(filesBefore).isEmpty,
+      "the shared file must be rewritten")
+    val got = store.modelData.select("water_level").collect()
+      .map(_.getDouble(0)).sorted.toSeq
+    assert(got == Seq(3.0, 5.5), s"the NULL run_day row must survive: $got")
+  }
+
   test("crash-stranded commit publishes the fact exactly once across re-runs") {
     val store = mkStore()
     val root = store.root
@@ -181,6 +205,36 @@ class SnapshotGaugeStoreSpec extends SparkSuite {
     val rows = store.gaugeData.select("source_id", "water_level").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toSet
     assert(rows == Set(1L -> 9.0, 2L -> 5.0), s"got $rows")
+  }
+
+  test("both repairs plan from day and source stats and record their dml verb") {
+    val store = mkStore()
+    store.appendGaugeData(fact(
+      (1L, "2023-04-23 00:00:00", "2023-04-23 01:00:00", 1.0)).coalesce(1), "tidal_gauge")
+    store.appendGaugeData(fact(
+      (1L, "2023-04-23 12:00:00", "2023-04-23 01:00:00", 9.0)).coalesce(1), "tidal_gauge")
+    store.appendGaugeData(fact(
+      (2L, "2023-04-23 00:00:00", "2023-04-23 02:00:00", 5.0)).coalesce(1), "river_gauge")
+    store.appendGaugeData(fact(
+      (1L, "2023-05-01 00:00:00", "2023-05-01 01:00:00", 2.0)).coalesce(1), "tidal_gauge")
+    store.compactGaugeData(Some(("2023-04-23", "2023-04-23")), Some("tidal_gauge"))
+    // the other source's file and the other day's file never plan
+    assert(graft.sources.SnapshotTable.lastPlannedCandidates(
+      store.gaugeTable.root).map(_.size).contains(2))
+    def lastOp(t: graft.sources.SnapshotTable) =
+      t.history(1).select("op").head().getString(0)
+    assert(lastOp(store.gaugeTable) == "keepLatestWhere")
+    assert(store.gaugeData.count() == 3)
+    store.appendModelData(model(
+      (1L, "2023-04-23 00:00:00", "2023-04-23 01:00:00", 1.0)).coalesce(1))
+    store.appendModelData(model(
+      (1L, "2023-04-24 00:00:00", "2023-04-24 01:00:00", 2.0)).coalesce(1))
+    store.swapModelRunDatePartitions(model(
+      (1L, "2023-04-24 00:00:00", "2023-04-24 01:00:00", 4.0)))
+    // a one-day repair is a one-value IN: it prunes like an equality
+    assert(graft.sources.SnapshotTable.lastPlannedCandidates(
+      store.modelTable.root).map(_.size).contains(1))
+    assert(lastOp(store.modelTable) == "swapWhere")
   }
 
   test("GaugeStore.open refuses a plain-layout root and writes nothing into an --index dir") {
