@@ -754,9 +754,7 @@ object IngestCli {
           store.modelSource.filter(!col("source_id").isin(ids: _*))
             .unionByName(current)
         } else current
-      val local = merged.collect().toIndexedSeq
-      store.writeModelSource(spark.createDataFrame(
-        spark.sparkContext.parallelize(local, 1), merged.schema))
+      store.writeModelSource(merged)
     }
     // rerun repair (J8/J9 model variant): the gate reads the LEDGER
     // history for this run's (source keys, timemark) scope. More ledger
@@ -842,20 +840,16 @@ object IngestCli {
     total
   }
 
-  /** The source dim is O(catalog × stations) rows — tiny. Materialize
-    * to the driver before overwriting the path being read. */
-  private def upsertGaugeSource(store: GaugeStore, src: org.apache.spark.sql.DataFrame, meta: SourceMeta): Unit = {
-    val spark = src.sparkSession
-    val merged =
+  /** Replace this source's rows of the (tiny, O(catalog × stations))
+    * source dim; `writeGaugeSource` materializes the frame before it
+    * swaps the path being read. */
+  private def upsertGaugeSource(store: GaugeStore, src: org.apache.spark.sql.DataFrame, meta: SourceMeta): Unit =
+    store.writeGaugeSource(
       if (store.tableExists("gauge_source"))
         store.gaugeSource
           .filter(!(col("data_source") === meta.data_source &&
             col("source_name") === meta.source_name &&
             col("source_archive") === meta.source_archive))
           .unionByName(src)
-      else src
-    val local = merged.collect().toIndexedSeq
-    store.writeGaugeSource(
-      spark.createDataFrame(spark.sparkContext.parallelize(local, 1), merged.schema))
-  }
+      else src)
 }

@@ -468,8 +468,8 @@ object Dedup {
     // tried and refuted. (a) A shared repartition(shingle) feeding
     // both the firsts aggregate and the join probe — AQE's stage
     // cache does not dedup the two REPARTITION_BY_COL stages over the
-    // memoized scan (T20Probe showed both materializing), so the
-    // "one reused exchange" form silently shuffles RAW bytes twice,
+    // memoized scan (both were seen materializing, OPTIMIZATION_r18.md),
+    // so the "one reused exchange" form silently shuffles RAW bytes twice,
     // strictly worse than this map-side-combined aggregate arm.
     // (b) min(idCol) over (partition by shingle) — one exchange and
     // no join, 3.6 → 2.4 s at sf0.1, but a WindowExec partition pins

@@ -218,8 +218,9 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
       when(col("station_name").isin(stationNames: _*), lit(true))
         .otherwise(col("apsviz_station"))))
 
-  def writeGaugeSource(df: DataFrame): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path("gauge_source"))
+  /** Replace the gauge-source dim (park-and-swap: a failed write
+    * leaves the previous dim in place). `df` may read the dim itself. */
+  def writeGaugeSource(df: DataFrame): Unit = rewriteSmall("gauge_source", df)
 
   def gaugeSource: DataFrame =
     dim("gauge_source")(spark.read.parquet(path("gauge_source")))
@@ -433,8 +434,8 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
       s"compacted ${(table +: rel).mkString("/")} to $n file(s)" } ++ skipped
   }
 
-  def writeModelSource(df: DataFrame): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path("model_source"))
+  /** Replace the model-source dim, like [[writeGaugeSource]]. */
+  def writeModelSource(df: DataFrame): Unit = rewriteSmall("model_source", df)
 
   def modelSource: DataFrame =
     dim("model_source")(spark.read.parquet(path("model_source")))

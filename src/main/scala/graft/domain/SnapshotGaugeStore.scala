@@ -80,16 +80,13 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
   override def gaugeData: DataFrame =
     gaugeTable.read().drop("data_source_part", "obs_date", "obs_day")
 
-  /** File-pruned fact scan: the manifest `obs_day` stats bound IO to
-    * the files of the window — without this, a [start,end] query over
-    * 100 TB scans every file; the row-level day predicate still
-    * applies downstream. */
-  override def gaugeDataForRange(startDate: String, endDate: String): DataFrame = {
-    val (lo, hi) = (dayOf(startDate), dayOf(endDate))
-    gaugeTable.readPruned("obs_day", lo, hi)
-      .filter(col("obs_day").between(lo, hi))
+  /** File-pruned fact scan: `readWhere` plans the day window from the
+    * manifest `obs_day` stats, so IO is bounded to the files of the
+    * window — without this, a [start,end] query over 100 TB scans
+    * every file — and applies the same predicate to the rows. */
+  override def gaugeDataForRange(startDate: String, endDate: String): DataFrame =
+    gaugeTable.readWhere(col("obs_day").between(dayOf(startDate), dayOf(endDate)))
       .drop("data_source_part", "obs_date", "obs_day")
-  }
 
   override def hasGaugeData: Boolean = gaugeTable.currentVersion > 0
 
@@ -121,12 +118,10 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
   override def modelData: DataFrame =
     modelTable.read().drop("run_date", "run_day")
 
-  override def modelDataForTimemark(timemark: String): DataFrame = {
-    val d = dayOf(timemark)
-    modelTable.readPruned("run_day", d, d)
-      .filter(col("run_date") === to_date(lit(timemark)))
+  override def modelDataForTimemark(timemark: String): DataFrame =
+    modelTable.readWhere(col("run_day") === dayOf(timemark) &&
+        col("run_date") === to_date(lit(timemark)))
       .drop("run_date", "run_day")
-  }
 
   /** Pruned model scan for a TIME-range query (the nowcast serving
     * path): a nowcast row's run timemark sits within `horizonDays` of
@@ -144,12 +139,10 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
     * monthly run cadences; a deployment with longer hindcasts must
     * pass its own. */
   override def modelDataForRange(startDate: String, endDate: String,
-      horizonDays: Int): DataFrame = {
-    val (lo, hi) = (dayOf(startDate) - horizonDays, dayOf(endDate) + horizonDays)
-    modelTable.readPruned("run_day", lo, hi)
-      .filter(col("run_day").between(lo, hi))
+      horizonDays: Int): DataFrame =
+    modelTable.readWhere(col("run_day").between(
+        dayOf(startDate) - horizonDays, dayOf(endDate) + horizonDays))
       .drop("run_date", "run_day")
-  }
 
   override def hasModelData: Boolean = modelTable.currentVersion > 0
 
@@ -271,8 +264,8 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
     val pred = stale.map { case (ds, d) =>
       col("data_source_part") === ds && col("obs_date") === to_date(lit(d))
     }.reduce(_ || _)
-    val fact = gaugeTable.readPruned("obs_day", days.min, days.max)
-      .filter(pred)
+    val fact = gaugeTable.readWhere(
+      col("obs_day").between(days.min, days.max) && pred)
     val present = Schemas.obsMeasures.filter(fact.columns.contains)
     val value =
       if (present.isEmpty) lit(null).cast("double")

@@ -54,9 +54,10 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    target-only conjuncts of the ON condition feed
   *    [[SnapshotTable.dmlCandidates]] (stat/bloom/null pruning), and
   *    the first `target.col = <source expr>` equi-conjunct feeds
-  *    [[SnapshotTable.keyPruneCandidates]] with the source's own
-  *    (bounded) key set — a point upsert probes the bloom/stat-hit
-  *    file(s), not the table. Pruning is advisory: every row decision
+  *    [[SnapshotTable.keyPruneCandidates]], which collects the
+  *    source's own (bounded) key set and plans `target.col IN (keys)`
+  *    through the same `dmlCandidates` — a point upsert probes the
+  *    bloom/stat-hit file(s), not the table. Pruning is advisory: every row decision
   *    re-evaluates the real condition.
   *  - only files that CONTAIN an applicable matched row (plus, when
   *    NOT MATCHED BY SOURCE clauses exist, files containing an

@@ -859,8 +859,8 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     * [[SnapshotTable.StatTruncateBytes]] UTF-8 bytes (lower bound = a
     * prefix, upper bound = incremented prefix — the Iceberg
     * `truncate(col)` stats transform), so clustered string keys
-    * (url, doc_id) get metadata-only point/prefix/range pruning via
-    * [[readPrunedEq]]/[[readPrunedPrefix]]/[[readPrunedStrRange]]
+    * (url, doc_id) get metadata-only point/prefix/range pruning from
+    * a [[readWhere]] condition (`===`, `startsWith`, `<=`/`>=`, `isin`)
     * while a 100k-file checkpoint's stat payload stays a few MB. */
   private[sources] def stageFilesWithStats(df: DataFrame, statCols: Seq[String],
       countFiles: Boolean = false, mapToPhysical: Boolean = true,
@@ -2000,7 +2000,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
 
   /** Append with per-file min/max recorded in the manifest for the
     * (long-valued) `statCols` — the Iceberg-style scan-planning stats
-    * that let [[prunedFiles]] skip files from METADATA alone: at 100k
+    * that let [[readWhere]] skip files from METADATA alone: at 100k
     * files, pruning from manifests is a driver-side replay, where even
     * parquet-footer pruning is 100k reads before the first task.
     * Empty `statCols`/`bloomCols` fall back to the table-property
@@ -2093,98 +2093,119 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       }
     }
 
-  /** ONE checkpoint-seeded replay producing both the live file list
-    * and the per-(file, col) stat map — the pruning entry points share
-    * it so a k-predicate prune costs one O(tail) driver pass, not 2k. */
-  private def liveFilesAndStats(version: Option[Int])
-      : (Seq[String], Map[(String, String), (Long, Long)]) = {
-    val v = version.getOrElse(currentVersion)
-    require(v >= 0 && v <= currentVersion,
-      s"snapshot $v does not exist (current ${currentVersion})")
-    val state = replayStateFull(v)
-    (state.live, state.stats)
-  }
-
-  /** Live files of snapshot `version` that can contain a `colName`
-    * value in `[lo, hi]`: files with a recorded disjoint range are
-    * skipped, files with NO recorded stat for the column are kept
-    * (pruning must never be wrong, only incomplete). */
-  def prunedFiles(colName: String, lo: Long, hi: Long,
-      version: Option[Int] = None): Seq[String] =
-    prunedFilesMulti(Seq((colName, lo, hi)), version)
-
-  /** Read only the files that can satisfy `colName BETWEEN lo AND hi`
-    * (manifest-stat pruning); the caller still applies the row-level
-    * predicate — pruning narrows IO, it never filters rows. */
-  def readPruned(colName: String, lo: Long, hi: Long,
-      version: Option[Int] = None): DataFrame =
-    readPrunedMulti(Seq((colName, lo, hi)), version)
-
-  /** Conjunctive multi-column stat pruning: files that can satisfy
-    * EVERY `(col, lo, hi)` range at once — the read-path payoff of
-    * Z-order compaction, whose whole point is stats tight on several
-    * dimensions simultaneously (one-column pruning only ever uses the
-    * primary sort dimension). Per predicate, a file with no recorded
-    * stat is kept — pruning is never wrong, only incomplete. */
-  def prunedFilesMulti(preds: Seq[(String, Long, Long)],
-      version: Option[Int] = None): Seq[String] = {
-    require(preds.nonEmpty, "need at least one (col, lo, hi) predicate")
-    val (live, stats) = liveFilesAndStats(version)
-    live.filter { f =>
-      preds.forall { case (c, lo, hi) =>
-        stats.get((f, c)).forall { case (flo, fhi) => fhi >= lo && flo <= hi }
-      }
-    }
-  }
-
-  /** [[prunedFilesMulti]] as a frame; row-level predicates still apply
-    * downstream. */
-  def readPrunedMulti(preds: Seq[(String, Long, Long)],
-      version: Option[Int] = None): DataFrame = {
-    require(preds.nonEmpty, "need at least one (col, lo, hi) predicate")
-    // ONE pinned replay supplies the file list AND the schema: a
-    // second resolution could land on a concurrent writer's newer
-    // version and plan these files with the wrong schema
-    val v = version.getOrElse(currentVersion)
-    require(v >= 0 && v <= currentVersion,
-      s"snapshot $v does not exist (current ${currentVersion})")
-    val state = replayStateFull(v)
-    val fl = state.live.filter { f =>
-      preds.forall { case (c, lo, hi) =>
-        state.stats.get((f, c)).forall { case (flo, fhi) =>
-          fhi >= lo && flo <= hi }
-      }
-    }
-    planFiles(state, v, fl)
-  }
-
   /** Read with AUTOMATIC metadata pruning + the row filter applied:
-    * every prune tier the table carries (long stats, string stats,
-    * bloom sidecars — single values and IN lists) is driven by preds
-    * [[SnapshotTable.derivePreds derived]] from `cond`'s own
-    * `col <op> literal` conjuncts, then `cond` itself filters the
-    * surviving rows. The one-call read-path counterpart of the DML
-    * verbs' derivation: `readWhere($"id" === k)` on a stats+bloom
-    * table plans the matching file(s), not the table — no manual
-    * `readPruned*` choreography. Conditions derivation can't see
-    * through (disjunctions, UDFs) fall back to a full (still
-    * correct) scan; derived pruning is sound, so results are always
-    * identical to `read().filter(cond)`. `lastDmlCandidates` records
-    * the planned file set for the scan-counting specs. */
+    * the files [[dmlCandidates]] plans for `cond` are read, then
+    * `cond` itself filters the surviving rows. Every prune tier the
+    * table carries (long stats, string stats and prefixes, null
+    * counts, bloom sidecars — single values and IN lists) is driven
+    * by preds [[SnapshotTable.derivePreds derived]] from `cond`'s own
+    * `col <op> literal` conjuncts: `readWhere($"id" === k)` on a
+    * stats+bloom table plans the matching file(s), not the table.
+    * Conditions derivation can't see through (disjunctions, UDFs)
+    * fall back to a full (still correct) scan; derived pruning is
+    * sound, so results are always identical to `read().filter(cond)`.
+    * `lastDmlCandidates` records the planned file set for the
+    * scan-counting specs. */
   def readWhere(cond: org.apache.spark.sql.Column,
       version: Option[Int] = None): DataFrame = {
     val v = version.getOrElse(currentVersion)
     require(v >= 0 && v <= currentVersion,
       s"snapshot $v does not exist (current ${currentVersion})")
-    // ONE pinned replay supplies files, stats AND schema
+    // ONE pinned replay supplies files, stats AND schema: a second
+    // resolution could land on a concurrent writer's newer version and
+    // plan these files with the wrong schema
     val state = replayStateFull(v)
     planFiles(state, v, dmlCandidates(state, cond)).filter(cond)
   }
 
+  /** THE file planner: of `state.live`, the files that can hold a row
+    * matching `cond`. It serves [[readWhere]] (SQL scans and the store
+    * reads), every DML verb, both MERGE tiers and the replaceWhere
+    * append guard. The metadata prune tiers (long stats, string
+    * stats, null counts, bloom sidecars) are applied with the preds
+    * [[SnapshotTable.derivePreds derived]] from `cond`'s own
+    * `col <op> literal` conjuncts — `updateWhere($"id" === k)` scans
+    * only the stat/bloom-surviving files instead of every live file.
+    * Derivation is sound (only implied ranges), so pruning can never
+    * lose a match; conditions derivation can't see through
+    * (disjunctions, non-literal operands) simply keep the full live
+    * set. `lastDmlCandidates` records the result for the
+    * scan-counting specs. */
+  private[sources] def dmlCandidates(state: SnapshotTable.TableState,
+      cond: org.apache.spark.sql.Column): Seq[String] = {
+    val (autoLong, autoStr, autoBloom, autoNulls) =
+      SnapshotTable.derivePreds(cond)
+    var candidates = state.live.filter { f =>
+      autoLong.forall { case (c, lo, hi) =>
+        state.stats.get((f, c)).forall { case (flo, fhi) =>
+          fhi >= lo && flo <= hi }
+      } && strStatSurvives(state.sstats, f, autoStr) &&
+        autoNulls.forall {
+          // IS NULL: a file with a RECORDED zero null count cannot match
+          case (c, true) => state.nulls.get((f, c)).forall(_ > 0L)
+          // IS NOT NULL: an all-null file (nulls == its row count,
+          // both recorded) cannot match; unknown counts keep the file
+          case (c, false) =>
+            !state.nulls.get((f, c)).zip(state.rows.get(f))
+              .exists { case (n, r) => n == r }
+        }
+    }
+    // a file survives a probe if its sidecar admits ANY listed value
+    autoBloom.foreach { case (c, vs) =>
+      if (candidates.nonEmpty) {
+        val keep = bloomSurvivors(state.copy(live = candidates), c, vs)
+        candidates = candidates.filter(keep.contains)
+      }
+    }
+    lastDmlCandidates = candidates
+    candidates
+  }
+
+  /** Candidate set of the most recent prune on THIS handle — scan-
+    * planning observability (what did the last readWhere/DML verb
+    * plan?), also mirrored into the companion's per-root registry
+    * ([[SnapshotTable.lastPlannedCandidates]]) so callers that never
+    * see the handle (SQL statements build their own) can still read
+    * the diagnostic. Not part of the concurrency-safe API surface. */
+  private[sources] def lastDmlCandidates: Seq[String] = lastDmlCandidates0
+  private[sources] def lastDmlCandidates_=(v: Seq[String]): Unit = {
+    lastDmlCandidates0 = v
+    SnapshotTable.recordPrune(root, v)
+  }
+  private var lastDmlCandidates0: Seq[String] = Nil
+
+  /** Merge-candidate narrowing by the SOURCE's own key values: collect
+    * up to [[SnapshotTable.InListPruneMax]] distinct non-null values of
+    * the FIRST key column (bounded — `limit` short-circuits a bulk
+    * source before it can flood the driver) and plan
+    * `keyCol IN (values)` through [[dmlCandidates]]: the stats and
+    * string envelopes plus the ANY-of-values bloom probe. Sound for
+    * composite keys too: a file containing a matched composite key
+    * necessarily contains its first component's value. A source past
+    * the bound (or with non-integral/string keys) skips the collect
+    * and scans the live set — the trickle-upsert case this exists for
+    * is exactly the small-key-set one. */
+  private[sources] def keyPruneCandidates(state: SnapshotTable.TableState,
+      keyCol: String, source: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    val supported = source.schema.fields
+      .find(_.name.equalsIgnoreCase(keyCol)).map(_.dataType).exists {
+        case ByteType | ShortType | IntegerType | LongType | StringType => true
+        case _ => false
+      }
+    if (!supported) return state.live
+    val vals = source.select(col(keyCol)).na.drop().distinct()
+      .limit(SnapshotTable.InListPruneMax + 1).collect().map(_.get(0))
+    if (vals.isEmpty || vals.length > SnapshotTable.InListPruneMax)
+      return state.live
+    dmlCandidates(state, col(keyCol).isin(vals.toIndexedSeq: _*))
+  }
+
   // ---- string-stat pruning -------------------------------------------
   //
-  // The byte-bound query shape shared by the public string pruning
-  // entry points: (col, inclusive lower bytes, inclusive upper bytes
+  // The byte-bound query shape derivePreds emits for string
+  // conjuncts: (col, inclusive lower bytes, inclusive upper bytes
   // or None = unbounded above). A file survives a predicate when its
   // recorded [[SnapshotTable.StrStat]] interval overlaps the query
   // interval under byte-wise unsigned comparison — exactly Spark's
@@ -2203,85 +2224,36 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       }
     }
 
-  /** Files of snapshot `version` that can contain `colName == value`
-    * for a STRING column whose bounds were recorded by
-    * [[appendWithStats]]/[[compact]]. Point lookups on a key the
-    * table is clustered by (`compact(zorderCols = Seq(col))` or a
-    * range-partitioned write) prune to O(1) files from METADATA
-    * alone — at 100k files that is the difference between one task
-    * and a full scan before the first byte of data is read. */
-  def prunedFilesEq(colName: String, value: String,
-      version: Option[Int] = None): Seq[String] = {
-    val b = SnapshotTable.utf8(value)
-    val v = version.getOrElse(currentVersion)
-    require(v >= 0 && v <= currentVersion,
-      s"snapshot $v does not exist (current ${currentVersion})")
-    val state = replayStateFull(v)
-    state.live.filter(f =>
-      strStatSurvives(state.sstats, f, Seq((colName, b, Some(b)))))
-  }
-
-  /** Read only the files that can contain `colName == value` (string
-    * bound pruning); the caller still applies the row-level predicate
-    * — pruning narrows IO, it never filters rows. */
-  def readPrunedEq(colName: String, value: String,
-      version: Option[Int] = None): DataFrame = {
-    val b = SnapshotTable.utf8(value)
-    readPrunedStr0(Seq((colName, b, Some(b))), version)
-  }
-
-  /** Read only the files that can contain `colName BETWEEN lo AND hi`
-    * (string bounds, both inclusive, Spark's byte-wise ordering). */
-  def readPrunedStrRange(colName: String, lo: String, hi: String,
-      version: Option[Int] = None): DataFrame =
-    readPrunedStr0(Seq((colName,
-      SnapshotTable.utf8(lo), Some(SnapshotTable.utf8(hi)))), version)
-
-  /** Read only the files that can contain a string starting with
-    * `prefix` (`colName LIKE 'prefix%'`): candidate interval
-    * `[prefix, smallest-byte-string-above-all-prefix-matches]` —
-    * unbounded above when the prefix is all 0xFF bytes. */
-  def readPrunedPrefix(colName: String, prefix: String,
-      version: Option[Int] = None): DataFrame = {
-    val p = SnapshotTable.utf8(prefix)
-    readPrunedStr0(Seq((colName, p, SnapshotTable.prefixUpper(p))), version)
-  }
-
-  /** Shared impl: ONE pinned replay supplies files, string stats AND
-    * the schema (same single-resolution discipline as
-    * [[readPrunedMulti]] — a second resolution could land on a
-    * concurrent writer's newer version). */
-  private def readPrunedStr0(
-      preds: Seq[(String, Array[Byte], Option[Array[Byte]])],
-      version: Option[Int]): DataFrame = {
-    val v = version.getOrElse(currentVersion)
-    require(v >= 0 && v <= currentVersion,
-      s"snapshot $v does not exist (current ${currentVersion})")
-    val state = replayStateFull(v)
-    planFiles(state, v,
-      state.live.filter(f => strStatSurvives(state.sstats, f, preds)))
-  }
-
   // ---- bloom-sidecar pruning -----------------------------------------
 
-  /** Of `state.live`, the files whose bloom sidecar admits `value`
-    * (plus every file with NO bloom for the column — pruning is never
-    * wrong, only incomplete; an unreadable/lost sidecar likewise keeps
-    * its file). ≤ 32 candidates test on the driver (a handful of
-    * small GETs); beyond that the membership tests run as ONE
-    * distributed job over the candidate file list — each task reads
-    * its sidecars directly, the driver never sees a filter's bytes,
-    * so a 100k-file probe is a 100k-small-read job, not a 100 GB
-    * driver download. */
+  /** Of `state.live`, the files whose bloom sidecar (built by
+    * [[appendWithStats]]/[[compact]] with `bloomCols`) admits ANY of
+    * `values`, plus every file with NO bloom for the column — pruning
+    * is never wrong, only incomplete; an unreadable/lost sidecar
+    * likewise keeps its file. Membership is a disjunction, so one
+    * sidecar read tests every value of an IN list. The point-lookup
+    * prune for keys the table is NOT clustered by: min/max bounds keep
+    * every file when a key is scattered across all of them; a bloom
+    * answers per file regardless of layout (fpp false-positive files
+    * remain — the row filter still applies downstream). ≤ 32
+    * candidates test on the driver (a handful of small GETs); beyond
+    * that the membership tests run as ONE distributed job over the
+    * candidate file list — each task reads its sidecars directly, the
+    * driver never sees a filter's bytes, so a 100k-file probe is a
+    * 100k-small-read job, not a 100 GB driver download.
+    *
+    * MoR-delete contract (pinned by spec): bloom sidecars are built
+    * from a file's PHYSICAL rows and standard blooms cannot subtract,
+    * so after a MoR [[deleteWhere]] a tombstoned key still advertises —
+    * the lookup scans its file and the DV anti-join returns zero rows
+    * (correct, just unpruned: one extra file per deleted key, bounded
+    * by the DV debt `detail()` reports). Any rewrite of the file
+    * ([[materializeDeletes]], [[compact]], CoW delete) rebuilds its
+    * bloom from surviving rows and restores the prune. Probe-time
+    * subtraction was REJECTED: it would read the DV sidecar per
+    * probed file on every lookup, charging the MoR tax to reads that
+    * never touched a deleted key. */
   private def bloomSurvivors(state: SnapshotTable.TableState,
-      colName: String, value: String): Set[String] =
-    bloomSurvivorsAny(state, colName, Seq(value))
-
-  /** Multi-value [[bloomSurvivors]]: files whose sidecar admits ANY of
-    * `values` — the IN-list probe (membership is a disjunction, so one
-    * sidecar read tests every value; a per-value intersection would be
-    * wrong and k separate passes would read each sidecar k times). */
-  private def bloomSurvivorsAny(state: SnapshotTable.TableState,
       colName: String, values: Seq[String]): Set[String] = {
     val (withBloom, without) =
       state.live.partition(f => state.blooms.contains((f, colName)))
@@ -2340,53 +2312,6 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
           }.collect().toSeq
       }
     surviving.toSet ++ without
-  }
-
-  /** Files of snapshot `version` that can contain `colName == value`
-    * per their bloom sidecars (built by [[appendWithStats]]/
-    * [[compact]] with `bloomCols`). The point-lookup prune for keys
-    * the table is NOT clustered by: min/max bounds keep every file
-    * when a key is scattered across all of them; a bloom answers per
-    * file regardless of layout (fpp false-positive files remain —
-    * the row filter still applies downstream).
-    *
-    * MoR-delete contract (pinned by spec): bloom sidecars are built
-    * from a file's PHYSICAL rows and standard blooms cannot subtract,
-    * so after a MoR [[deleteWhere]] a tombstoned key still advertises —
-    * the lookup scans its file and the DV anti-join returns zero rows
-    * (correct, just unpruned: one extra file per deleted key, bounded
-    * by the DV debt `detail()` reports). Any rewrite of the file
-    * ([[materializeDeletes]], [[compact]], CoW delete) rebuilds its
-    * bloom from surviving rows and restores the prune. Probe-time
-    * subtraction was REJECTED: it would read the DV sidecar per
-    * probed file on every lookup, charging the MoR tax to reads that
-    * never touched a deleted key. */
-  def prunedFilesBloom(colName: String, value: String,
-      version: Option[Int] = None): Seq[String] = {
-    val v = version.getOrElse(currentVersion)
-    require(v >= 0 && v <= currentVersion,
-      s"snapshot $v does not exist (current ${currentVersion})")
-    val state = replayStateFull(v)
-    val keep = bloomSurvivors(state, colName, value)
-    state.live.filter(keep.contains)
-  }
-
-  /** Read only the files that can contain `colName == value`,
-    * combining BOTH prunes from one pinned replay: string min/max
-    * bounds (clustered layouts) AND bloom sidecars (any layout). The
-    * caller still applies the row-level predicate. */
-  def readPrunedBloom(colName: String, value: String,
-      version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion)
-    require(v >= 0 && v <= currentVersion,
-      s"snapshot $v does not exist (current ${currentVersion})")
-    val state = replayStateFull(v)
-    val b = SnapshotTable.utf8(value)
-    val byBounds = state.live.filter(f =>
-      strStatSurvives(state.sstats, f, Seq((colName, b, Some(b)))))
-    val keep = bloomSurvivors(
-      state.copy(live = byBounds), colName, value)
-    planFiles(state, v, byBounds.filter(keep.contains))
   }
 
   /** Restore the table to the contents of snapshot `version` as a NEW
@@ -2814,7 +2739,7 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     * `zorderCols` re-clusters the rewrite on a Morton curve
     * ([[graft.operators.ZOrderLayout]]) so min/max stats stay tight on
     * EVERY clustered dimension; `statCols` records per-file min/max in
-    * the new manifest — together they make [[readPruned]] effective
+    * the new manifest — together they make [[readWhere]]'s pruning effective
     * again after compaction (append-time stats die with the removed
     * files). This is the Delta/Iceberg `OPTIMIZE ... ZORDER BY` shape:
     * maintenance that trades one rewrite for metadata-only scan
@@ -3024,123 +2949,6 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
       SnapshotMerge.verb(this, source, condition, matched, notMatched,
         notMatchedBySource, targetAlias, sourceAlias, schemaEvolution,
         declaredSchema))
-  }
-
-  /** File-candidate narrowing shared by the DML verbs: the metadata
-    * prune tiers (long stats, string stats, bloom sidecars) applied
-    * with the preds [[SnapshotTable.derivePreds derived]] from `cond`'s
-    * own `col <op> literal` conjuncts — `updateWhere($"id" === k)`
-    * scans only the stat/bloom-surviving files instead of every live
-    * file. Derivation is sound (only implied ranges), so pruning can
-    * never lose a match; conditions derivation can't see through
-    * (disjunctions, non-literal operands) simply keep the full live
-    * set. `lastDmlCandidates` records the result for the
-    * scan-counting specs. */
-  private[sources] def dmlCandidates(state: SnapshotTable.TableState,
-      cond: org.apache.spark.sql.Column): Seq[String] = {
-    val (autoLong, autoStr, autoBloom, autoBloomAny, autoNulls) =
-      SnapshotTable.derivePreds(cond)
-    var candidates = state.live.filter { f =>
-      autoLong.forall { case (c, lo, hi) =>
-        state.stats.get((f, c)).forall { case (flo, fhi) =>
-          fhi >= lo && flo <= hi }
-      } && strStatSurvives(state.sstats, f, autoStr) &&
-        autoNulls.forall {
-          // IS NULL: a file with a RECORDED zero null count cannot match
-          case (c, true) => state.nulls.get((f, c)).forall(_ > 0L)
-          // IS NOT NULL: an all-null file (nulls == its row count,
-          // both recorded) cannot match; unknown counts keep the file
-          case (c, false) =>
-            !state.nulls.get((f, c)).zip(state.rows.get(f))
-              .exists { case (n, r) => n == r }
-        }
-    }
-    autoBloom.foreach { case (c, v) =>
-      if (candidates.nonEmpty) {
-        val keep = bloomSurvivors(state.copy(live = candidates), c, v)
-        candidates = candidates.filter(keep.contains)
-      }
-    }
-    // IN-list: a file survives if its sidecar admits ANY listed value
-    autoBloomAny.foreach { case (c, vs) =>
-      if (candidates.nonEmpty) {
-        val keep = bloomSurvivorsAny(state.copy(live = candidates), c, vs)
-        candidates = candidates.filter(keep.contains)
-      }
-    }
-    lastDmlCandidates = candidates
-    candidates
-  }
-
-  /** Candidate set of the most recent prune on THIS handle — scan-
-    * planning observability (what did the last readWhere/DML verb
-    * plan?), also mirrored into the companion's per-root registry
-    * ([[SnapshotTable.lastPlannedCandidates]]) so callers that never
-    * see the handle (SQL statements build their own) can still read
-    * the diagnostic. Not part of the concurrency-safe API surface. */
-  private[sources] def lastDmlCandidates: Seq[String] = lastDmlCandidates0
-  private[sources] def lastDmlCandidates_=(v: Seq[String]): Unit = {
-    lastDmlCandidates0 = v
-    SnapshotTable.recordPrune(root, v)
-  }
-  private var lastDmlCandidates0: Seq[String] = Nil
-
-  /** Merge-candidate narrowing by the SOURCE's own key values: collect
-    * up to [[SnapshotTable.MergePruneKeys]] distinct values of the
-    * FIRST key column (bounded — `limit` short-circuits a bulk source
-    * before it can flood the driver) and prune the live set through
-    * the stats envelope and ANY-of-values blooms. Sound for composite
-    * keys too: a file containing a matched composite key necessarily
-    * contains its first component's value. A source past the bound (or
-    * with non-integral/string keys) skips the collect and scans the
-    * live set as before — the trickle-upsert case this exists for is
-    * exactly the small-key-set one. */
-  private[sources] def keyPruneCandidates(state: SnapshotTable.TableState,
-      keyCol: String, source: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    val supported = source.schema.fields
-      .find(_.name.equalsIgnoreCase(keyCol)).map(_.dataType).exists {
-        case org.apache.spark.sql.types.ByteType |
-            org.apache.spark.sql.types.ShortType |
-            org.apache.spark.sql.types.IntegerType |
-            org.apache.spark.sql.types.LongType |
-            org.apache.spark.sql.types.StringType => true
-        case _ => false
-      }
-    if (!supported) return state.live
-    val vals = source.select(col(keyCol)).na.drop().distinct()
-      .limit(SnapshotTable.MergePruneKeys + 1).collect().map(_.get(0))
-    if (vals.isEmpty || vals.length > SnapshotTable.MergePruneKeys)
-      return state.live
-    var cand = state.live
-    val longs = vals.collect { case n: java.lang.Number => n.longValue }
-    if (longs.length == vals.length) {
-      val (lo, hi) = (longs.min, longs.max)
-      cand = cand.filter(f => state.stats.get((f, keyCol))
-        .forall { case (flo, fhi) => fhi >= lo && flo <= hi })
-    }
-    val strs = vals.collect { case s: String => s }
-    if (strs.length == vals.length) {
-      val bs = strs.map(SnapshotTable.utf8)
-      val lo = bs.min(SnapshotTable.byteOrdering)
-      val hi = bs.max(SnapshotTable.byteOrdering)
-      cand = cand.filter(f =>
-        strStatSurvives(state.sstats, f, Seq((keyCol, lo, Some(hi)))))
-    }
-    // bloom values hash the column cast to string — integral and
-    // string keys render identically under that cast
-    val probes = vals.map {
-      case s: String => s
-      case n: java.lang.Number => n.longValue.toString
-      case other => other.toString
-    }
-    if (cand.nonEmpty) {
-      val keep =
-        bloomSurvivorsAny(state.copy(live = cand), keyCol, probes.toSeq)
-      cand = cand.filter(keep.contains)
-    }
-    lastDmlCandidates = cand
-    cand
   }
 
   /** DELETE every live row matching `cond` through the [[dml]]
@@ -4597,13 +4405,14 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
 }
 
 object SnapshotTable {
-  /** Prune predicates DERIVED from a DML condition's own top-level
+  /** Prune predicates DERIVED from a condition's own top-level
     * `col <op> literal` conjuncts — `(longRanges, stringRanges,
-    * bloomProbes)`. At 100 TB the difference between "the caller
-    * passed prune hints" and "the engine derives them from the
-    * condition" is whether `updateWhere($"id" === k)` scans one
-    * bloom-surviving file or every live file — the whole point of the
-    * stats channel. Sound by construction: only conjuncts that MUST
+    * bloomProbes, nullChecks)`, the input of
+    * [[SnapshotTable.dmlCandidates]]. At 100 TB the difference
+    * between "the caller passed prune hints" and "the engine derives
+    * them from the condition" is whether `updateWhere($"id" === k)`
+    * scans one bloom-surviving file or every live file — the whole
+    * point of the stats channel. Sound by construction: only conjuncts that MUST
     * hold for the condition to be true contribute, each mapped to a
     * range the matching rows' stat values provably fall in (stat
     * casts are monotone, so integral-literal bounds survive them);
@@ -4613,7 +4422,6 @@ object SnapshotTable {
   private[graft] def derivePreds(cond: org.apache.spark.sql.Column)
       : (Seq[(String, Long, Long)],
          Seq[(String, Array[Byte], Option[Array[Byte]])],
-         Seq[(String, String)],
          Seq[(String, Seq[String])],
          Seq[(String, Boolean)]) = {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
@@ -4635,6 +4443,7 @@ object SnapshotTable {
           case GreaterThanOrEqual(a, b) => Some((">=", a, b))
           case LessThan(a, b) => Some(("<", a, b))
           case LessThanOrEqual(a, b) => Some(("<=", a, b))
+          case StartsWith(a, b) => Some(("startswith", a, b))
           case _ => None
         }
     }
@@ -4683,22 +4492,24 @@ object SnapshotTable {
       }
     val longs = Seq.newBuilder[(String, Long, Long)]
     val strs = Seq.newBuilder[(String, Array[Byte], Option[Array[Byte]])]
-    val blooms = Seq.newBuilder[(String, String)]
-    val bloomAny = Seq.newBuilder[(String, Seq[String])]
+    // bloom probes: a file survives if its sidecar admits ANY value
+    val blooms = Seq.newBuilder[(String, Seq[String])]
     // (col, wantNull): IS NULL / IS NOT NULL conjuncts — pruned against
     // the per-file null-count channel (see nullsJsonField)
     val nullPs = Seq.newBuilder[(String, Boolean)]
-    // an IN list implies (a) the [min,max] envelope on the stats
-    // channel and (b) an ANY-of-values bloom probe (one sidecar read
-    // tests every value) — bounded so a pathological 1M-key IN does
-    // not balloon the probe array shipped to every task
-    val InBloomMax = 256
+    // an IN list implies (a) the [min,max] envelope on the long or
+    // string stats channel and (b) an ANY-of-values bloom probe (one
+    // sidecar read tests every value) — bounded so a pathological
+    // 1M-key IN does not balloon the probe array shipped to every task
     def inList(n: String, lits: Seq[Literal]): Unit = {
       val vs = lits.flatMap(longOf).map(_._1)
       if (vs.size == lits.size) longs += ((n, vs.min, vs.max))
+      val ss = lits.flatMap(strOf)
+      if (ss.size == lits.size)
+        strs += ((n, ss.min(byteOrdering), Some(ss.max(byteOrdering))))
       val bs = lits.flatMap(bloomOf)
-      if (bs.size == lits.size && bs.size <= InBloomMax)
-        bloomAny += ((n, bs))
+      if (bs.size == lits.size && bs.size <= InListPruneMax)
+        blooms += ((n, bs))
     }
     def range(n: String, l: Literal, lo: Boolean, strict: Boolean): Unit =
       longOf(l).foreach { case (v, exact) =>
@@ -4718,7 +4529,7 @@ object SnapshotTable {
     def eq(n: String, l: Literal): Unit = {
       longOf(l).foreach { case (v, _) => longs += ((n, v, v)) }
       strOf(l).foreach(b => strs += ((n, b, Some(b))))
-      bloomOf(l).foreach(v => blooms += ((n, v)))
+      bloomOf(l).foreach(v => blooms += ((n, Seq(v))))
     }
     // flip: `lit <op> col` reads as `col <flipped-op> lit`
     def flip(op: String): String = op match {
@@ -4726,6 +4537,8 @@ object SnapshotTable {
       case ">=" => "<="
       case "<" => ">"
       case "<=" => ">="
+      // `lit startsWith col` bounds nothing about col
+      case "startswith" => ""
       case other => other // =, <=> are symmetric
     }
     def handle(op: String, n: String, l: Literal): Unit = op match {
@@ -4739,6 +4552,8 @@ object SnapshotTable {
         range(n, l, lo = false, strict = true); strRange(n, l, lo = false)
       case "<=" =>
         range(n, l, lo = false, strict = false); strRange(n, l, lo = false)
+      // every match lies in [p, the smallest string above all p-prefixed]
+      case "startswith" => strOf(l).foreach(p => strs += ((n, p, prefixUpper(p))))
       case _ => ()
     }
     val condExpr =
@@ -4772,8 +4587,7 @@ object SnapshotTable {
         nullPs += ((nameOf(f.arguments.head).get, false))
       case _ => () // not a col-vs-literal conjunct: derives nothing
     }
-    (longs.result(), strs.result(), blooms.result(), bloomAny.result(),
-      nullPs.result())
+    (longs.result(), strs.result(), blooms.result(), nullPs.result())
   }
 
   /** The merged type for a shared column whose writer/table types
@@ -5048,11 +4862,12 @@ object SnapshotTable {
   private[sources] def utf8(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  /** Source-key collection bound for merge-candidate pruning: a
-    * trickle upsert's keys prune the match scan from metadata; a
-    * source past this many distinct keys scans the live set (its
-    * matches plausibly touch every file anyway). */
-  val MergePruneKeys: Int = 1024
+  /** Most values an IN list may carry and still get a bloom probe,
+    * and most distinct source keys a merge collects to prune its
+    * match scan (a trickle upsert's keys prune from metadata; a source
+    * past this many keys scans the live set — its matches plausibly
+    * touch every file anyway). */
+  val InListPruneMax: Int = 1024
 
   private[sources] val byteOrdering: Ordering[Array[Byte]] =
     (a: Array[Byte], b: Array[Byte]) => cmpBytes(a, b)
@@ -5087,8 +4902,8 @@ object SnapshotTable {
 
   /** Smallest byte string GREATER than every string starting with
     * `prefix` (increment the last non-0xFF byte); `None` when no such
-    * bound exists. The inclusive upper bound [[readPrunedPrefix]]
-    * prunes with. */
+    * bound exists. The inclusive upper bound a derived
+    * `col.startsWith(p)` prunes with. */
   private[sources] def prefixUpper(prefix: Array[Byte]): Option[Array[Byte]] = {
     var i = prefix.length - 1
     while (i >= 0 && (prefix(i) & 0xff) == 0xff) i -= 1

@@ -209,4 +209,29 @@ class GaugeStoreSpec extends SparkSuite {
     assert(store.stations.filter(col("apsviz_station"))
       .select("station_name").as[String].collect().toSeq == Seq("B"))
   }
+
+  test("a source-dim write whose frame fails mid-job leaves the previous dim readable") {
+    val root = Files.createTempDirectory("graft-store-dimfail").toString
+    val store = GaugeStore.open(spark, root)
+    store.writeGaugeSource(Seq((10L, 1L, "tidal_gauge")).toDF(
+      "source_id", "station_id", "data_source").coalesce(1))
+    store.writeModelSource(Seq((20L, 1L, "adcirc")).toDF(
+      "source_id", "station_id", "data_source").coalesce(1))
+    // the replacement frame raises on its second row: the write job
+    // fails after the writer has committed to replacing the dim
+    def failing(n: Long) = spark.range(1, 3).select(
+      when(col("id") === 2L, raise_error(lit("boom")))
+        .otherwise(col("id") + n).cast("long").as("source_id"),
+      lit(1L).as("station_id"), lit("x").as("data_source"))
+    intercept[Exception](store.writeGaugeSource(failing(10L)))
+    intercept[Exception](store.writeModelSource(failing(20L)))
+    val fresh = GaugeStore.open(spark, root)
+    assert(fresh.gaugeSource.select("source_id").as[Long].collect().toSeq == Seq(10L))
+    assert(fresh.modelSource.select("source_id").as[Long].collect().toSeq == Seq(20L))
+    // a frame that reads the dim it replaces still lands whole
+    store.writeGaugeSource(store.gaugeSource.unionByName(Seq((11L, 2L, "tidal_gauge"))
+      .toDF("source_id", "station_id", "data_source")))
+    assert(GaugeStore.open(spark, root).gaugeSource.select("source_id").as[Long]
+      .collect().toSet == Set(10L, 11L))
+  }
 }

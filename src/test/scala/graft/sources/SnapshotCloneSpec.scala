@@ -77,7 +77,9 @@ class SnapshotCloneSpec extends SparkSuite {
     // every live file carries a bloom: a point probe for a value in
     // ONE source half must prune both the other half and the append —
     // only possible if the copied sidecars survived the sweep
-    val probed = tgt.prunedFilesBloom("id", "42")
+    // a string literal on the long column derives only the bloom probe
+    tgt.readWhere(col("id") === "42")
+    val probed = tgt.lastDmlCandidates
     assert(probed.size == 1 && tgt.files().size == 3,
       s"bloom sidecars lost: probe planned ${probed.size} of ${tgt.files().size}")
   }

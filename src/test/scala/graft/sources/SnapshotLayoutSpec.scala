@@ -253,7 +253,8 @@ class SnapshotLayoutSpec extends SparkSuite {
     assert(inserted.nonEmpty)
     // the inserted slab must carry k stats (the CoW/append symmetry):
     // a DIFFERENT partition's point read prunes every inserted file
-    val survivors = t.prunedFiles("k", 0L, 0L).toSet
+    t.readWhere(col("k").between(0L, 0L))
+    val survivors = t.lastDmlCandidates.toSet
     assert(inserted.intersect(survivors).isEmpty,
       s"MoR-inserted files must be stat-prunable on the layout column; " +
         s"a k=0 read still plans ${inserted.intersect(survivors).size} " +

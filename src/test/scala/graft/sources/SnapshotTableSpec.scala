@@ -17,6 +17,16 @@ class SnapshotTableSpec extends SparkSuite {
   private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select("id").collect().map(_.getLong(0)).toSet
 
+  /** The files `readWhere(cond)` plans (planning runs eagerly). A
+    * `c BETWEEN v AND v` condition prunes by the stats alone, `c === v`
+    * by the stats plus the bloom; on a long column a string literal
+    * (`col("id") === "5"`) derives only the bloom probe. */
+  private def planned(t: SnapshotTable,
+      cond: org.apache.spark.sql.Column): Seq[String] = {
+    t.readWhere(cond)
+    t.lastDmlCandidates
+  }
+
   test("append creates versions; every old snapshot stays readable") {
     val t = tmpTable()
     assert(t.currentVersion == 0)
@@ -279,14 +289,13 @@ class SnapshotTableSpec extends SparkSuite {
     // plus one append WITHOUT stats: must always be scanned
     t.append(Seq(9999L).toDF("id").coalesce(1))
     assert(t.files().size == 4)
-    val pruned = t.prunedFiles("id", 150L, 160L)
+    val pruned = planned(t, col("id").between(150L, 160L))
     assert(pruned.size == 2, "the matching file + the stat-less file")
-    val rows = t.readPruned("id", 150L, 160L)
-      .filter(col("id").between(150L, 160L))
+    val rows = t.readWhere(col("id").between(150L, 160L))
     assert(rows.count() == 11)
     assert(rows.inputFiles.length == 2)
     // a range nothing matches still scans only the stat-less file
-    assert(t.prunedFiles("id", 500L, 600L).size == 1)
+    assert(planned(t, col("id").between(500L, 600L)).size == 1)
     // stats survive compaction-free merges of other keys; full read intact
     assert(t.read().count() == 301)
   }
@@ -404,15 +413,15 @@ class SnapshotTableSpec extends SparkSuite {
     t.appendWithStats((1L to 400L by 4).toDF("id").coalesce(1), Seq("id"))
     t.appendWithStats((2L to 400L by 4).toDF("id").coalesce(1), Seq("id"))
     t.appendWithStats((3L to 400L by 4).toDF("id").coalesce(1), Seq("id"))
-    assert(t.prunedFiles("id", 10L, 20L).size == 3, "interleaved: no pruning possible")
+    assert(planned(t, col("id").between(10L, 20L)).size == 3,
+      "interleaved: no pruning possible")
     // z-order compact into 4 files with fresh stats: the rewrite
     // clusters by id, so a narrow range hits ~1 file from METADATA
     t.compact(coalesceTo = 4, zorderCols = Seq("id"), statCols = Seq("id"))
     assert(t.files().size == 4)
-    val pruned = t.prunedFiles("id", 10L, 20L)
+    val pruned = planned(t, col("id").between(10L, 20L))
     assert(pruned.size <= 2, s"clustered stats must prune, got ${pruned.size} files")
-    val rows = t.readPruned("id", 10L, 20L)
-      .filter(col("id").between(10L, 20L))
+    val rows = t.readWhere(col("id").between(10L, 20L))
     // residues 1,2,3 mod 4 in [10,20]: 13,17 / 10,14,18 / 11,15,19
     assert(rows.count() == 8)
     // full read intact and time travel still resolves pre-compaction
@@ -462,13 +471,14 @@ class SnapshotTableSpec extends SparkSuite {
     t.appendWithStats(Seq((10L, 100L), (11L, 110L)).toDF("a", "b").coalesce(1),
       Seq("a", "b"))
     // b alone cannot prune (both files span 100..110); a narrows to 1
-    assert(t.prunedFiles("b", 100L, 105L).size == 2)
-    assert(t.prunedFilesMulti(Seq(("a", 1L, 5L), ("b", 100L, 105L))).size == 1)
-    val rows = t.readPrunedMulti(Seq(("a", 1L, 5L), ("b", 100L, 105L)))
-      .filter(col("a").between(1L, 5L) && col("b").between(100L, 105L))
-    assert(rows.count() == 1)
+    assert(planned(t, col("b").between(100L, 105L)).size == 2)
+    val both = col("a").between(1L, 5L) && col("b").between(100L, 105L)
+    assert(planned(t, both).size == 1)
+    assert(t.readWhere(both).count() == 1)
     // a range matching nothing reads empty with the right schema
-    assert(t.readPrunedMulti(Seq(("a", 500L, 600L), ("b", 0L, 1L))).count() == 0)
+    val none = t.readWhere(col("a").between(500L, 600L) && col("b").between(0L, 1L))
+    assert(t.lastDmlCandidates.isEmpty && none.count() == 0 &&
+      none.columns.sameElements(Array("a", "b")))
   }
 
   test("restore rolls back to an old snapshot as a new metadata-only commit") {
@@ -546,9 +556,10 @@ class SnapshotTableSpec extends SparkSuite {
     val t2 = new SnapshotTable(spark, dir, checkpointInterval = 3)
     t2.metaReads = 0
     // stats recorded BEFORE the checkpoint must still prune after it
-    assert(t2.prunedFiles("id", 150L, 160L).size == 1)
+    assert(planned(t2, col("id").between(150L, 160L)).size == 1)
     assert(t2.metaReads <= 2, s"ckpt+1 manifest expected, got ${t2.metaReads}")
-    assert(t2.readPruned("id", 350L, 360L).count() == 100)
+    val late = t2.readWhere(col("id").between(350L, 360L))
+    assert(late.count() == 11 && late.inputFiles.length == 1)
   }
 
   test("vacuum keep-set is a single log pass (checkpoint-seeded), same semantics") {
@@ -610,7 +621,7 @@ class SnapshotTableSpec extends SparkSuite {
     // the pre-delete snapshot still reads all 300 rows
     assert(t.read(Some(3)).count() == 300)
     // the rewritten file's fresh stats still prune
-    assert(t.prunedFiles("id", 110L, 120L).size == 1)
+    assert(planned(t, col("id").between(110L, 120L)).size == 1)
     // a delete matching nothing commits nothing
     assert(t.deleteWhere(col("id") === 9999L) == 0)
     assert(t.currentVersion == 4)
@@ -1056,23 +1067,61 @@ class SnapshotTableSpec extends SparkSuite {
     val hit = "u://site17/p"
     // range partitioning makes per-file url ranges disjoint: the point
     // lookup prunes 4 files to exactly 1 — from the manifest, no scan
-    assert(t.prunedFilesEq("url", hit).size == 1)
-    assert(t.readPrunedEq("url", hit)
-      .where(col("url") === hit).count() == 1)
+    assert(planned(t, col("url") === hit).size == 1)
+    assert(t.readWhere(col("url") === hit).count() == 1)
     // a value outside every range prunes to ZERO files; the empty
     // frame still carries the recorded schema
-    val miss = t.readPrunedEq("url", "zzz://nowhere")
-    assert(t.prunedFilesEq("url", "zzz://nowhere").isEmpty)
+    val miss = t.readWhere(col("url") === "zzz://nowhere")
+    assert(t.lastDmlCandidates.isEmpty)
     assert(miss.count() == 0 && miss.columns.sameElements(Array("url")))
     // prefix pruning: 'u://site1' matches site10..site19, clustered
     // into a strict subset of files; row results match a full scan
-    val pref = t.readPrunedPrefix("url", "u://site1")
+    val pref = t.readWhere(col("url").startsWith("u://site1"))
     assert(pref.inputFiles.length < 4)
-    assert(pref.where(col("url").startsWith("u://site1")).count() == 10)
+    assert(pref.count() == 10)
     // inclusive string range agrees with the row-level BETWEEN
-    val r = t.readPrunedStrRange("url", "u://site20/p", "u://site23/p")
-    assert(r.where(col("url") >= "u://site20/p" &&
-      col("url") <= "u://site23/p").count() == 4)
+    val r = t.readWhere(col("url").between("u://site20/p", "u://site23/p"))
+    assert(t.lastDmlCandidates.size < 4 && r.count() == 4)
+  }
+
+  test("readWhere and SQL LIKE 'p%' prune a prefix through the string stats") {
+    val t = tmpTable()
+    val urls = (0 until 64).map(i => f"u://site$i%02d/p")
+    t.appendWithStats(urls.toDF("url").repartitionByRange(4, col("url")),
+      Seq("url"))
+    assert(t.files().size == 4)
+    val full = t.read().where(col("url").startsWith("u://site1"))
+      .as[String].collect().toSet
+    assert(full.size == 10)
+    // 'u://site1' spans site10..site19: a strict subset of the files
+    val byCol = t.readWhere(col("url").startsWith("u://site1"))
+    assert(t.lastDmlCandidates.size < 4,
+      s"startsWith planned ${t.lastDmlCandidates.size} of 4 files")
+    assert(byCol.as[String].collect().toSet == full)
+    // SQL LIKE 'p%' pushes down as StringStartsWith and plans the same
+    val bySql = SparkSuite.extSession.sql(
+      s"SELECT url FROM snapshot.`${t.root}` WHERE url LIKE 'u://site1%'")
+      .as[String].collect().toSet
+    val sqlPlanned = SnapshotTable.lastPlannedCandidates(t.root).get
+    assert(sqlPlanned.size < 4, s"LIKE planned ${sqlPlanned.size} of 4 files")
+    assert(bySql == full)
+    // a literal on the LEFT bounds nothing about the column
+    val flipped = lit("u://").startsWith(col("url"))
+    val (l, str, b, n) = SnapshotTable.derivePreds(flipped)
+    assert(l.isEmpty && str.isEmpty && b.isEmpty && n.isEmpty)
+    assert(planned(t, flipped).size == 4)
+  }
+
+  test("a string IN list prunes by its byte-wise envelope on a table with no bloom") {
+    val t = tmpTable()
+    val urls = (0 until 64).map(i => f"u://site$i%02d/p")
+    t.appendWithStats(urls.toDF("url").repartitionByRange(4, col("url")),
+      Seq("url"))
+    val cond = col("url").isin("u://site20/p", "u://site23/p")
+    val got = t.readWhere(cond)
+    assert(t.lastDmlCandidates.size < 4,
+      s"IN planned ${t.lastDmlCandidates.size} of 4 files")
+    assert(got.as[String].collect().toSet == Set("u://site20/p", "u://site23/p"))
   }
 
   test("string stats: 32-byte truncation never prunes a present value; bounds survive checkpoints") {
@@ -1092,18 +1141,16 @@ class SnapshotTableSpec extends SparkSuite {
     // a COLD instance plans from the checkpoint-carried string stats
     val cold = new SnapshotTable(spark, dir, checkpointInterval = 2)
     vals.grouped(24).map(_.head).foreach { v =>
-      assert(cold.readPrunedEq("doc_id", v)
-        .where(col("doc_id") === v).count() == 1, s"lost $v")
+      assert(cold.readWhere(col("doc_id") === v).count() == 1, s"lost $v")
     }
     // and a value ABOVE every truncated-incremented upper bound prunes
     // to zero files even through the truncated stats
-    assert(cold.prunedFilesEq("doc_id", "Q").isEmpty)
+    assert(planned(cold, col("doc_id") === "Q").isEmpty)
     // compact clustered by the key re-establishes tight-enough bounds;
     // history survives (older snapshot unaffected)
     t.compact(coalesceTo = 3, zorderCols = Seq("doc_id"),
       statCols = Seq("doc_id"))
-    assert(t.readPrunedEq("doc_id", vals(50))
-      .where(col("doc_id") === vals(50)).count() == 1)
+    assert(t.readWhere(col("doc_id") === vals(50)).count() == 1)
   }
 
   test("bloom sidecars: point lookups prune an UNCLUSTERED table; blooms survive checkpoints, compaction and vacuum") {
@@ -1121,27 +1168,28 @@ class SnapshotTableSpec extends SparkSuite {
     val hit = vals(50)
     // bounds keep (nearly) everything; the bloom keeps only the
     // file(s) that can contain the key
-    val byBounds = t.prunedFilesEq("doc_id", hit).size
-    val byBloom = t.prunedFilesBloom("doc_id", hit).size
+    val byBounds = planned(t, col("doc_id").between(hit, hit)).size
+    val byBloom = planned(t, col("doc_id") === hit).size
     assert(byBounds == nFiles, s"expected unclustered bounds to keep all")
     assert(byBloom < nFiles, s"bloom kept $byBloom of $nFiles")
-    assert(t.readPrunedBloom("doc_id", hit)
-      .where(col("doc_id") === hit).count() == 1)
+    assert(t.readWhere(col("doc_id") === hit).count() == 1)
     // an absent key prunes everything (fpp 0.01 on a handful of
-    // files; deterministic for fixed data)
-    assert(t.prunedFilesBloom("doc_id", "doc-nope").isEmpty)
-    val missing = t.readPrunedBloom("doc_id", "doc-nope")
+    // files; deterministic for fixed data). It sorts inside every
+    // file's bounds, so the bloom alone does the pruning
+    val absent = "doc0050-nope"
+    assert(planned(t, col("doc_id").between(absent, absent)).size == nFiles)
+    assert(planned(t, col("doc_id") === absent).isEmpty)
+    val missing = t.readWhere(col("doc_id") === absent)
     assert(missing.count() == 0 &&
       missing.columns.sameElements(Array("doc_id")))
     // a COLD instance prunes from checkpoint-carried bloom markers
     val cold = new SnapshotTable(spark, dir, checkpointInterval = 2)
-    assert(cold.prunedFilesBloom("doc_id", hit).size == byBloom)
+    assert(planned(cold, col("doc_id") === hit).size == byBloom)
     // compaction rebuilds sidecars for the rewritten files
     t.compact(coalesceTo = 2, statCols = Seq("doc_id"),
       bloomCols = Seq("doc_id"))
-    assert(t.prunedFilesBloom("doc_id", hit).size <= 2)
-    assert(t.readPrunedBloom("doc_id", hit)
-      .where(col("doc_id") === hit).count() == 1)
+    assert(planned(t, col("doc_id") === hit).size <= 2)
+    assert(t.readWhere(col("doc_id") === hit).count() == 1)
     // vacuum sweeps the reaped files' sidecars with them: exactly one
     // sidecar per LIVE file remains
     t.vacuum(retainFrom = t.currentVersion, stagingGraceMs = -1000L)
@@ -1151,8 +1199,7 @@ class SnapshotTableSpec extends SparkSuite {
       new org.apache.hadoop.fs.Path(s"$dir/_index")).map(_.getPath.getName)
     assert(sidecars.length == t.files().size, sidecars.mkString(","))
     // and the table still answers the lookup afterwards
-    assert(t.readPrunedBloom("doc_id", hit)
-      .where(col("doc_id") === hit).count() == 1)
+    assert(t.readWhere(col("doc_id") === hit).count() == 1)
   }
 
   test("bloom-driven deleteWhere rewrites only bloom-hit files; absent key commits nothing") {
@@ -1169,7 +1216,7 @@ class SnapshotTableSpec extends SparkSuite {
     }
     assert(t.files().size == 20)
     val victim = vals(50)
-    val hitFiles = t.prunedFilesBloom("doc_id", victim).toSet
+    val hitFiles = planned(t, col("doc_id") === victim).toSet
     assert(hitFiles.nonEmpty && hitFiles.size < 20)
     val before = t.files().toSet
     val v = t.deleteWhere(col("doc_id") === victim,
@@ -1186,8 +1233,7 @@ class SnapshotTableSpec extends SparkSuite {
     // rewritten survivors got fresh sidecars: later bloom lookups on
     // the SURVIVING keys in the rewritten file still prune
     val sibling = vals.slice(50, 55).filter(_ != victim).head
-    assert(t.readPrunedBloom("doc_id", sibling)
-      .where(col("doc_id") === sibling).count() == 1)
+    assert(t.readWhere(col("doc_id") === sibling).count() == 1)
     // absent key: bloom prunes every candidate BEFORE any scan — no
     // data-file IO, no commit, version unchanged
     val cur = t.currentVersion
@@ -1205,14 +1251,14 @@ class SnapshotTableSpec extends SparkSuite {
       bloomCols = Seq("k"))
     assert(t.files().size == 40)
     val hit = vals(123)
-    val kept = t.prunedFilesBloom("k", hit)
+    val kept = planned(t, col("k") === hit)
     assert(kept.size < 40 && kept.nonEmpty)
-    assert(t.readPrunedBloom("k", hit).where(col("k") === hit).count() == 1)
+    assert(t.readWhere(col("k") === hit).count() == 1)
     // every value is found through the prune (no false negatives)
     Seq(0, 57, 199, 399).map(vals).foreach { v =>
-      assert(t.readPrunedBloom("k", v).where(col("k") === v).count() == 1)
+      assert(t.readWhere(col("k") === v).count() == 1)
     }
-    assert(t.prunedFilesBloom("k", "k-none").isEmpty)
+    assert(planned(t, col("k") === "k-none").isEmpty)
   }
 
   test("timestamp time travel: versionAt binary-searches manifest times; vacuumed times error cleanly") {
@@ -1345,8 +1391,8 @@ class SnapshotTableSpec extends SparkSuite {
     assert(!fsys.exists(new org.apache.hadoop.fs.Path(s"$dir/data")) ||
       fsys.listStatus(new org.apache.hadoop.fs.Path(s"$dir/data")).isEmpty)
     // imported stats prune from the manifest (range-partitioned ids)
-    assert(t.prunedFiles("id", 5L, 5L).size == 1)
-    assert(t.prunedFilesEq("u", "u050").size == 1)
+    assert(planned(t, col("id").between(5L, 5L)).size == 1)
+    assert(planned(t, col("u").between("u050", "u050")).size == 1)
     // adoption records null counts: zero-null columns prune IS NULL
     assert(t.readWhere(col("u").isNull).isEmpty)
     assert(t.lastDmlCandidates.isEmpty,
@@ -1516,7 +1562,7 @@ class SnapshotTableSpec extends SparkSuite {
     val vals = (0 until 100).map(i => f"doc${(i * 37) % 100}%04d")
     (0 until 10).foreach(g => t2.append(
       vals.slice(g * 10, (g + 1) * 10).sorted.toDF("doc_id").coalesce(1)))
-    val hits = t2.prunedFilesBloom("doc_id", vals(42)).toSet
+    val hits = planned(t2, col("doc_id") === vals(42)).toSet
     t2.lastDmlCandidates = Nil
     t2.merge(Seq(vals(42)).toDF("doc_id"), Seq("doc_id"))
     assert(t2.lastDmlCandidates.toSet.subsetOf(hits))
@@ -1603,18 +1649,18 @@ class SnapshotTableSpec extends SparkSuite {
     // PLAIN append records stats + blooms from the defaults
     t.append((1L to 100L).toDF("id").coalesce(1))
     t.append((101L to 200L).toDF("id").coalesce(1))
-    assert(t.prunedFiles("id", 150L, 160L).size == 1,
+    assert(planned(t, col("id").between(150L, 160L)).size == 1,
       "defaulted statCols must make plain appends prunable")
-    assert(t.prunedFilesBloom("id", "150").size == 1)
+    assert(planned(t, col("id") === "150").size == 1) // bloom alone
     // MERGE rewrite keeps the rewritten files prunable (this used to
     // silently drop stats: merge had no statCols at all) — a probe
     // disjoint from the rewritten 101-200 range excludes them all
     t.merge(Seq(150L).toDF("id"), Seq("id"))
-    assert(t.prunedFiles("id", 1L, 50L).size == 1,
+    assert(planned(t, col("id").between(1L, 50L)).size == 1,
       "merge rewrite must re-record stats from the defaults")
     // CoW delete rewrite keeps them too, with NO per-call args
     t.deleteWhere(col("id") === 120L)
-    assert(t.prunedFiles("id", 1L, 50L).size == 1)
+    assert(planned(t, col("id").between(1L, 50L)).size == 1)
     assert(t.read().count() == 199)
     // derived preds + defaulted blooms compose: a point delete with no
     // manual args prunes to the bloom-hit file(s)
@@ -1623,24 +1669,24 @@ class SnapshotTableSpec extends SparkSuite {
       s"got ${t.lastDmlCandidates.size} candidates")
     // compactSmall re-records from defaults
     t.compactSmall(targetBytes = 1L << 20)
-    assert(t.prunedFiles("id", 150L, 160L).size == 1)
+    assert(planned(t, col("id").between(150L, 160L)).size == 1)
     // a defaulted column ABSENT from a widened writer's frame is
     // skipped, not an analysis failure
     t.setProperty(SnapshotTable.StatColsProp, "id,missing_col")
     t.append(Seq(500L).toDF("id").coalesce(1))
-    assert(t.prunedFiles("id", 500L, 500L).size == 1)
+    assert(planned(t, col("id").between(500L, 500L)).size == 1)
     // explicit per-call args still override the defaults entirely
     val t2 = tmpTable()
     t2.setProperty(SnapshotTable.StatColsProp, "id")
     t2.appendWithStats(Seq((1L, 5L)).toDF("id", "v").coalesce(1), Seq("v"))
-    assert(t2.prunedFilesMulti(Seq(("v", 5L, 5L))).size == 1)
+    assert(planned(t2, col("v").between(5L, 5L)).size == 1)
     // exactly-once tagged appends inherit defaults (the streaming sink)
     val t3 = tmpTable()
     t3.setProperty(SnapshotTable.StatColsProp, "id")
     t3.appendIfAbsent((1L to 50L).toDF("id").coalesce(1), "b0")
-    assert(t3.prunedFiles("id", 500L, 600L).isEmpty
-      || t3.prunedFiles("id", 500L, 600L).size < t3.files().size)
-    assert(t3.prunedFiles("id", 10L, 10L).size == 1)
+    assert(planned(t3, col("id").between(500L, 600L)).isEmpty
+      || planned(t3, col("id").between(500L, 600L)).size < t3.files().size)
+    assert(planned(t3, col("id").between(10L, 10L)).size == 1)
     // configure-then-adopt: importFiles inherits the defaults too
     val src = java.nio.file.Files.createTempDirectory("snapimp").toString
     (1L to 100L).toDF("id").repartitionByRange(4, col("id"))
@@ -1648,7 +1694,7 @@ class SnapshotTableSpec extends SparkSuite {
     val t4 = tmpTable()
     t4.setProperty(SnapshotTable.StatColsProp, "id")
     t4.importFiles(src)
-    assert(t4.prunedFiles("id", 10L, 12L).size == 1,
+    assert(planned(t4, col("id").between(10L, 12L)).size == 1,
       "adopted table must be prunable from the property defaults")
   }
 
@@ -1688,7 +1734,7 @@ class SnapshotTableSpec extends SparkSuite {
         Seq("doc_id"), bloomCols = Seq("doc_id"))
     }
     val victim = vals(55)
-    val hits = t2.prunedFilesBloom("doc_id", victim).toSet
+    val hits = planned(t2, col("doc_id") === victim).toSet
     assert(t2.deleteWhere(col("doc_id") === victim,
       statCols = Seq("doc_id"), bloomCols = Seq("doc_id")) > 0)
     assert(t2.lastDmlCandidates.toSet.subsetOf(hits),
@@ -1701,7 +1747,7 @@ class SnapshotTableSpec extends SparkSuite {
     // IN-list: the batch right-to-erasure shape — files surviving ANY
     // listed value's bloom stay candidates, the rest prune before IO
     val vics = Seq(vals(11), vals(77))
-    val inHits = vics.flatMap(v => t2.prunedFilesBloom("doc_id", v)).toSet
+    val inHits = vics.flatMap(v => planned(t2, col("doc_id") === v)).toSet
     assert(t2.deleteWhere(col("doc_id").isin(vics: _*),
       statCols = Seq("doc_id"), bloomCols = Seq("doc_id")) > 0)
     assert(t2.lastDmlCandidates.toSet.subsetOf(inHits),
@@ -1800,12 +1846,12 @@ class SnapshotTableSpec extends SparkSuite {
     // time travel below the rename still reads the OLD name
     assert(t.read(Some(preRename)).schema.fieldNames.toSeq == Seq("id"))
     // stat pruning by the new name still prunes pre-rename files
-    assert(t.prunedFiles("doc_id", 150L, 160L).size == 1)
+    assert(planned(t, col("doc_id").between(150L, 160L)).size == 1)
     // post-rename appends interleave with pre-rename files
     t.appendWithStats((201L to 300L).toDF("doc_id").coalesce(1), Seq("doc_id"))
     assert(t.read().agg(sum("doc_id")).as[Long].collect().head ==
       (1L to 300L).sum)
-    assert(t.prunedFiles("doc_id", 250L, 260L).size == 1)
+    assert(planned(t, col("doc_id").between(250L, 260L)).size == 1)
     // drop+add is STILL refused; adding a column named like the
     // reserved physical name is refused too
     intercept[SnapshotTable.SchemaEvolutionViolation] {
@@ -2352,7 +2398,7 @@ class SnapshotTableSpec extends SparkSuite {
     // idempotent
     assert(t.materializeDeletes() == 0)
     // rewritten file carries fresh stats: a pruned read still works
-    assert(t.readPruned("id", 7L, 7L).where(col("id") === 7L).count() == 1)
+    assert(t.readWhere(col("id").between(7L, 7L)).count() == 1)
   }
 
   test("deletion vectors on an importFiles-adopted table survive vacuum") {
@@ -2383,11 +2429,13 @@ class SnapshotTableSpec extends SparkSuite {
     assert(v == 3)
     // stat-pruned and bloom-pruned reads both skip the tombstone
     // (pruning narrows FILES; the caller's row predicate still applies)
-    assert(t.readPruned("id", 0L, 10L).where(col("id") === 7L).count() == 0)
-    assert(t.readPruned("id", 0L, 10L)
-      .where(col("id").between(0L, 10L)).count() == 10)
-    assert(t.readPruned("id", 0L, 10L).count() == 49) // file minus tombstone
-    assert(t.readPrunedBloom("id", "7").where(col("id") === 7L).count() == 0)
+    assert(t.readWhere(col("id").between(0L, 10L))
+      .where(col("id") === 7L).count() == 0)
+    assert(t.readWhere(col("id").between(0L, 10L)).count() == 10)
+    // the one file holding 0..49 reads minus its tombstone
+    assert(planned(t, col("id").between(0L, 49L)).size == 1)
+    assert(t.readWhere(col("id").between(0L, 49L)).count() == 49)
+    assert(t.readWhere(col("id") === 7L).count() == 0)
     // merge over a DV'd file keeps the tombstone out of the rewrite
     t.merge(Seq(8L).toDF("id"), Seq("id"))
     assert(t.read().where(col("id") === 7L).count() == 0)
@@ -2401,24 +2449,22 @@ class SnapshotTableSpec extends SparkSuite {
       statCols = Nil, bloomCols = Seq("id"))
     t.appendWithStats((10L until 20L).toDF("id").coalesce(1),
       statCols = Nil, bloomCols = Seq("id"))
-    assert(t.prunedFilesBloom("id", "5").size == 1)
+    assert(planned(t, col("id") === 5L).size == 1)
     t.deleteWhere(col("id") === 5L, mor = true)
     // the CONTRACT: the stale bloom still advertises the deleted key —
     // its file is scanned (no prune regression into wrong-pruning) and
     // the DV anti-join returns zero rows (correctness)
-    assert(t.prunedFilesBloom("id", "5").size == 1,
+    assert(planned(t, col("id") === 5L).size == 1,
       "pre-materialize lookup must still scan the DV-bearing file")
-    assert(t.readPrunedBloom("id", "5")
-      .filter(col("id") === 5L).count() == 0)
+    assert(t.readWhere(col("id") === 5L).count() == 0)
     // an undeleted key in the same file is untouched
-    assert(t.readPrunedBloom("id", "6")
-      .filter(col("id") === 6L).count() == 1)
+    assert(t.readWhere(col("id") === 6L).count() == 1)
     // materializeDeletes rebuilds the bloom from surviving rows: the
     // deleted key now prunes to ZERO files
     t.materializeDeletes(bloomCols = Seq("id"))
-    assert(t.prunedFilesBloom("id", "5").isEmpty,
+    assert(planned(t, col("id") === 5L).isEmpty,
       "materialize must rebuild blooms without the tombstoned key")
-    assert(t.prunedFilesBloom("id", "6").size == 1)
+    assert(planned(t, col("id") === 6L).size == 1)
     assert(t.read().count() == 19)
   }
 
