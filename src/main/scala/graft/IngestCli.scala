@@ -465,8 +465,9 @@ object IngestCli {
   }
 
   /** The obs SequenceIngest pipeline (SURVEY §3.1): per catalog source
-    * — discover files, anti-join the ledger, ingest the new ones,
-    * dedup scoped to the batch window, commit ledger rows. Sources are
+    * — discover files, anti-join the ledger, ingest the new ones, and
+    * commit the batch with keep-latest over its source and dates, then
+    * its ledger rows. Sources are
     * independent; failures skip the source and continue (reference
     * log-and-continue semantics, runObsIngest.py:116-117).
     */
@@ -542,39 +543,20 @@ object IngestCli {
           // fact batch + ledger rows publish as ONE atomic commit (the
           // reference's COPY + UPDATE ingested inside one transaction,
           // ingestObsTasks.py:145-149/:405-409): ledger rows stage
-          // already ingested=true — there is no observable state where
-          // the fact landed without its ledger mark or vice versa, so
-          // crash recovery needs no rerun-gate repair for this window
-          var bounds: Option[(String, String)] = None
+          // already ingested=true and land only after the fact commit,
+          // which applies keep-latest against earlier timemarks in the
+          // batch's own source and dates — no observable state has a
+          // ledger mark without its fact, or a row next to the one that
+          // supersedes it
           store.atomicCommit(store.newCommitId("obs")) { staging =>
-            if (loadable.nonEmpty) {
-              val fact = ObsIngest.ingestSource(spark, meta, stations,
-                loadable.toIndexedSeq.map(f => s"$harvestDir/$f"): _*)
-              // bounds as session-TZ strings: Timestamp.toString renders
-              // in the JVM default zone and can shift the scope across a
-              // partition-date boundary when driver TZ != session TZ
-              val b = fact.agg(
-                date_format(min("time"), "yyyy-MM-dd HH:mm:ss").as("lo"),
-                date_format(max("time"), "yyyy-MM-dd HH:mm:ss").as("hi")).collect()(0)
-              // all rows may have been dropped (e.g. only unregistered
-              // stations): nothing to load, but the ledger must still
-              // commit or the file re-fails forever
-              if (!b.isNullAt(0)) {
-                bounds = Some((b.getString(0), b.getString(1)))
-                store.stageGaugeData(ObsIngest.dedupFact(fact,
-                  lit(b.getString(0)), lit(b.getString(1))), meta.data_source, staging)
-              }
-            }
+            // a batch whose rows were all dropped (e.g. only
+            // unregistered stations) commits no fact, but the ledger
+            // must still commit or the file re-fails forever
+            if (loadable.nonEmpty)
+              store.stageGaugeData(ObsIngest.ingestSource(spark, meta, stations,
+                loadable.toIndexedSeq.map(f => s"$harvestDir/$f"): _*),
+                meta.data_source, staging)
             store.stageLedger(fresh.withColumn("ingested", lit(true)), staging)
-          }
-          // overlap repair scoped to this source's batch date range —
-          // other sources/dates never rewrite. (Runs after the commit:
-          // it resolves data-overlap between this batch and earlier
-          // timemarks, not crash states.)
-          bounds.foreach { case (lo, hi) =>
-            if (store.hasGaugeData) store.compactGaugeData(
-              Some((lo.substring(0, 10), hi.substring(0, 10))),
-              Some(meta.data_source))
           }
           upsertGaugeSource(store, ObsIngest.buildGaugeSource(stations, meta), meta)
         total += freshNames.length

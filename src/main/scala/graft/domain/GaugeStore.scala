@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   *   ledger_obs/, ledger_model/              — harvest-file ledgers
   *   gauge_data/, model_data/                — the facts: manifest-log
   *                                             [[graft.sources.SnapshotTable]]s
-  *   _staging/, _commits/                    — [[atomicCommit]] protocol dirs
+  *   _staging/                               — [[atomicCommit]]'s staged
+  *                                             ledger rows
   *
   * This class owns everything but the facts. Dims and ledgers are
   * O(#stations)/O(#files) rows: they are rewritten through the driver
@@ -68,23 +69,35 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
     swapInto(table, tmp)
   }
 
-  // ---- atomic multi-table commit (manifest-dir protocol) -----------
+  // ---- atomic batch commit (one tagged fact commit + ledger rows) ---
 
   /** Unique commit id, ordered across process restarts. */
   def newCommitId(prefix: String): String = s"${prefix}_${bakSuffix()}"
 
-  /** All-or-nothing publish of parquet staged for SEVERAL tables at
-    * once (a fact batch plus its ledger rows). The caller writes each
-    * table under `<staging>/<table>/…` in the live table's relative
-    * layout; the COMMIT POINT is ONE atomic rename of the staging dir
-    * into `_commits/`. [[publishCommit]] then lands every staged table
-    * and drops the commit dir — idempotent and crash-resumable
-    * ([[vacuum]] re-publishes any stranded commit). Readers only ever
-    * see live tables, so the pair of mutations is atomic: a crash
-    * before the rename leaves invisible staging garbage (swept by
-    * vacuum), after it the commit completes exactly once on the next
-    * publish. A `stage` that throws leaves nothing behind: its
-    * uncommitted staging dir is deleted before the error propagates.
+  /** The fact commit handed to a running [[atomicCommit]], by its
+    * staging dir; it commits under the tag it is given. */
+  private val stagedFacts =
+    new java.util.concurrent.ConcurrentHashMap[String, String => Unit]()
+
+  /** Hand the fact commit to the [[atomicCommit]] staging at
+    * `stagingDir` (the fact stage writers' one way in); one commit
+    * point holds one fact batch. */
+  protected def stageFact(stagingDir: String)(commit: String => Unit): Unit =
+    require(stagedFacts.putIfAbsent(stagingDir, commit) == null,
+      s"$stagingDir already holds a fact batch")
+
+  /** All-or-nothing commit of a fact batch and the ledger rows that mark
+    * its files. `stage` hands the fact frame over ([[stageGaugeData]],
+    * [[stageModelData]]) and writes the ledger rows under
+    * `<staging>/<table>/…` in the live table's relative layout. The
+    * COMMIT POINT is the fact's one manifest commit, tagged
+    * `commit-<commitId>`; the staged ledger rows then move into their
+    * tables. A crash before the tagged commit leaves invisible staging,
+    * which [[vacuum]] deletes; a crash after it leaves ledger rows that
+    * [[vacuum]] moves in. So the ledger is never ahead of the facts, and
+    * a replayed id skips its fact by the tag. A batch with no fact rows
+    * moves its ledger rows in at once. A `stage` or fact commit that
+    * throws before the commit point leaves nothing behind.
     *
     * This is the reference's BEGIN / COPY / UPDATE ingested / COMMIT
     * transaction (ingestObsTasks.py:145-149, :405-409) restated on
@@ -92,33 +105,31 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
   def atomicCommit(commitId: String)(stage: String => Unit): Unit = {
     val fs = fsys
     val staging = new org.apache.hadoop.fs.Path(path(s"_staging/$commitId"))
+    val key = staging.toString
+    val tag = s"commit-$commitId"
     fs.delete(staging, true)
     fs.mkdirs(staging)
-    try stage(staging.toString)
-    catch {
+    stagedFacts.remove(key)
+    try {
+      stage(key)
+      Option(stagedFacts.remove(key)).foreach(_(tag))
+    } catch {
       case scala.util.control.NonFatal(e) =>
-        fs.delete(staging, true)
+        stagedFacts.remove(key)
+        if (!factCommitted(tag)) fs.delete(staging, true)
         throw e
     }
-    val commitsRoot = new org.apache.hadoop.fs.Path(path("_commits"))
-    fs.mkdirs(commitsRoot)
-    val committed = new org.apache.hadoop.fs.Path(commitsRoot, commitId)
-    require(fs.rename(staging, committed), s"commit rename failed: $commitId")
-    publishCommit(committed)
+    finalizeCommit(staging)
   }
 
-  /** Publish one committed-but-unpublished commit dir into the live
-    * tables — the step [[atomicCommit]] runs right after its commit
-    * rename and [[vacuum]] re-runs for commits stranded by a crash.
-    * MUST be idempotent under re-runs. Non-fact tables publish through
-    * [[finalizeCommit]]. */
-  protected def publishCommit(committed: org.apache.hadoop.fs.Path): Unit
+  /** Whether a fact table holds the commit tagged `tag`. */
+  protected def factCommitted(tag: String): Boolean
 
   /** Move every staged data file into its table at the same relative
-    * path, then drop the commit dir. Spark metadata files (`_SUCCESS`)
+    * path, then drop the staging dir. Spark metadata files (`_SUCCESS`)
     * are skipped — each live table keeps its own; part-file names are
     * job-unique so a resumed move cannot collide. */
-  protected final def finalizeCommit(committed: org.apache.hadoop.fs.Path): Unit = {
+  private def finalizeCommit(committed: org.apache.hadoop.fs.Path): Unit = {
     val fs = fsys
     val rootPath = new org.apache.hadoop.fs.Path(root)
     def walk(dir: org.apache.hadoop.fs.Path, rel: List[String]): Unit =
@@ -225,23 +236,10 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
   def gaugeSource: DataFrame =
     dim("gauge_source")(spark.read.parquet(path("gauge_source")))
 
-  /** Stage writers for an [[atomicCommit]]: each table lands under the
-    * staging dir; the facts carry their day partitions, which surface
-    * as columns when [[publishCommit]] reads them back. */
-  def stageGaugeData(df: DataFrame, dataSource: String, stagingDir: String): Unit =
-    df.withColumn("data_source_part", lit(dataSource))
-      .withColumn("obs_date", to_date(col("time")))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("data_source_part", "obs_date")
-      .parquet(s"$stagingDir/gauge_data")
-
+  /** Ledger stage writers for an [[atomicCommit]]: the rows land under
+    * the staging dir. */
   def stageLedger(df: DataFrame, stagingDir: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(s"$stagingDir/ledger_obs")
-
-  def stageModelData(df: DataFrame, stagingDir: String): Unit =
-    df.withColumn("run_date", to_date(col("timemark")))
-      .write.mode(SaveMode.Overwrite).partitionBy("run_date")
-      .parquet(s"$stagingDir/model_data")
 
   def stageModelLedger(df: DataFrame, stagingDir: String): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy("model_run_id")
@@ -249,8 +247,15 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
 
   // ---- fact tables (implemented by SnapshotGaugeStore) -------------
 
-  /** Append a batch of obs fact rows of one data source; the caller
-    * has already deduplicated within the batch. */
+  /** Fact stage writer for an [[atomicCommit]]: an obs batch of one
+    * data source, committed with keep-latest applied in its commit. */
+  def stageGaugeData(df: DataFrame, dataSource: String, stagingDir: String): Unit
+
+  /** Fact stage writer for an [[atomicCommit]]: a model batch. */
+  def stageModelData(df: DataFrame, stagingDir: String): Unit
+
+  /** Append a batch of obs fact rows of one data source as they are,
+    * with no keep-latest. */
   def appendGaugeData(df: DataFrame, dataSource: String): Unit
 
   def gaugeData: DataFrame
@@ -261,7 +266,7 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
 
   def hasGaugeData: Boolean
 
-  /** Cross-batch keep-latest repair (J8 across appends). `scope` =
+  /** Whole-table keep-latest repair (J8 across appends). `scope` =
     * (loDate, hiDate) in session-timezone `yyyy-MM-dd` — the ingested
     * batch's bounds, the reference's per-file dedup scope
     * (ingestObsTasks.py:392-399); `dataSource` narrows it to one
@@ -470,8 +475,8 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
   def retainObsStations: DataFrame = spark.read.parquet(path("retain_obs_station"))
 
   /** Obs harvest-file ledger. Rows are only ever written by an
-    * [[atomicCommit]] that stages them already `ingested=true`
-    * together with the fact batch they describe. */
+    * [[atomicCommit]] that stages them already `ingested=true`, and
+    * they land after the fact batch they describe. */
   def ledger: DataFrame = readOrEmpty("ledger_obs", Schemas.harvestObsFileMeta)
 
   // ---- model harvest-file ledger (drf_harvest_model_file_meta,
@@ -531,9 +536,10 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
   }
 
   /** Crash recovery + janitor, safe to run any time (e.g. at process
-    * start). Commits stranded after their commit rename are
-    * re-published and uncommitted staging is swept; then two swap
-    * crash shapes are repaired, then strays are swept:
+    * start). An [[atomicCommit]] staging dir whose tagged fact commit
+    * landed has its ledger rows moved in, and every other staging dir
+    * is swept; then two swap crash shapes are repaired, then strays are
+    * swept:
     *
     *  1. whole-table swap ([[swapInto]]) interrupted between park and
     *     swap: the live table dir is missing, the original sits in
@@ -563,21 +569,22 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
     val bak = "^(.*)_bak_([0-9]+)$".r   // does NOT match `_pbak_` names
     val pbak = "^(.*)_pbak_([0-9]+)$".r
     val actions = scala.collection.mutable.ArrayBuffer[String]()
-    // phase 0: publish committed-but-unfinalized atomic commits (crash
-    // after the commit rename), then sweep uncommitted staging (crash
-    // before it — invisible, safe to drop: its files re-derive on the
-    // next ingest of the same inputs)
-    val commitsRoot = new org.apache.hadoop.fs.Path(rootPath, "_commits")
-    if (fs.exists(commitsRoot))
-      fs.listStatus(commitsRoot).filter(_.isDirectory)
-        .sortBy(_.getPath.getName).foreach { c =>
-          publishCommit(c.getPath)
-          actions += s"finalized commit ${c.getPath.getName}"
-        }
+    // phase 0: finish the atomic commits whose tagged fact commit
+    // landed (crash before their ledger rows moved), then sweep the
+    // rest (crash before the commit point — invisible, safe to drop:
+    // its rows re-derive on the next ingest of the same inputs)
     val stagingRoot = new org.apache.hadoop.fs.Path(rootPath, "_staging")
-    if (fs.exists(stagingRoot) && fs.listStatus(stagingRoot).nonEmpty) {
-      fs.delete(stagingRoot, true)
-      actions += "swept uncommitted staging"
+    if (fs.exists(stagingRoot)) {
+      val (done, open) = fs.listStatus(stagingRoot).sortBy(_.getPath.getName)
+        .partition(c => factCommitted(s"commit-${c.getPath.getName}"))
+      done.foreach { c =>
+        finalizeCommit(c.getPath)
+        actions += s"finalized commit ${c.getPath.getName}"
+      }
+      if (open.nonEmpty) {
+        open.foreach(c => fs.delete(c.getPath, true))
+        actions += "swept uncommitted staging"
+      }
     }
     val byBase = entries.flatMap(p => p.getName match {
       case pbak(_, _) => None

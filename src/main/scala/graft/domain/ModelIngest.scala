@@ -207,7 +207,6 @@ object ModelIngest {
     val inScope = col("timemark") === timemark
     // null-timemark rows pass through UNTOUCHED: === is NULL for them,
     // so filter(inScope) and filter(!inScope) would BOTH drop the row
-    // (the silent-loss shape KeepLatestDedup.scoped already guards)
     KeepLatestDedup(fact.filter(inScope), Seq("source_id", "time"), Seq(precedence))
       .unionByName(fact.filter(!coalesce(inScope, lit(false))))
   }

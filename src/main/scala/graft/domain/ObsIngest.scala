@@ -1,6 +1,5 @@
 package graft.domain
 
-import graft.operators.KeepLatestDedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,8 +13,8 @@ import org.apache.spark.sql.functions._
   * Scale design: harvest files become input splits of a single
   * `spark.read.csv` (not a driver loop); per-file metadata is recovered
   * with `input_file_name()` + one aggregation; dimension joins
-  * broadcast; the fact dedup shuffles once, scoped to the batch's time
-  * window.
+  * broadcast; the fact dedup shuffles once, inside the batch's commit,
+  * scoped to the batch's source and days.
   */
 object ObsIngest {
 
@@ -205,15 +204,6 @@ object ObsIngest {
     routeMeasure(attachSourceId(data, gaugeSource, stations), meta.source_variable)
       .filter(col("source_id").isNotNull)
   }
-
-  /** Keep-latest dedup over the fact (J8), scoped to the ingested
-    * batch's [min(time), max(time)] like the reference
-    * (ingestObsTasks.py:392-399). Precedence: timemark — a later
-    * harvest file's value wins for the same (source_id, time).
-    */
-  def dedupFact(fact: DataFrame, lo: Column, hi: Column): DataFrame =
-    KeepLatestDedup.scoped(fact, "time", lo, hi,
-      keys = Seq("source_id", "time"), precedence = Seq(col("timemark")))
 
   /** Meta-file name for a harvest data file: `stationdata` →
     * `stationdata_meta` (runObsIngest.py:125). */

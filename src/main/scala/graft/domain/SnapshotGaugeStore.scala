@@ -1,6 +1,6 @@
 package graft.domain
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.SnapshotTable
@@ -19,18 +19,20 @@ import graft.sources.SnapshotTable
   * they are O(#stations)/O(#files)-sized, rewritten through the
   * driver, and gain nothing from a manifest log.
   *
-  * [[publishCommit]] turns the staged fact parquet of an
-  * [[atomicCommit]] into ONE tagged manifest commit per fact table
-  * (tag = commit id), so a crash-rerun of a stranded commit is
-  * idempotent through [[SnapshotTable.appendIfAbsent]].
+  * An [[atomicCommit]]'s fact batch is written once, as ONE manifest
+  * commit tagged by the commit id (the tag is the exactly-once key,
+  * like a streaming sink's batch id). An obs batch commits through the
+  * keep-latest verb itself ([[SnapshotTable.keepLatestWhere]] with the
+  * batch as its inserts), so no version holds a row next to the one
+  * that supersedes it; a model batch commits through
+  * [[SnapshotTable.appendIfAbsentWithStats]].
   *
-  * The two fact repairs — keep-latest ([[compactGaugeData]]) and the
-  * rerun repair ([[swapModelRunDatePartitions]]) — are copy-on-write
-  * verbs of the table's DML pipeline ([[SnapshotTable.keepLatestWhere]],
-  * [[SnapshotTable.swapWhere]]). Each commits keyed and unscoped, and
-  * the pipeline's conflict retry is their only retry: an interleaved
-  * rewrite or keyed commit forces a recompute from the new head, a
-  * blind append commutes.
+  * Keep-latest and the rerun repair ([[swapModelRunDatePartitions]])
+  * are copy-on-write verbs of the table's DML pipeline
+  * ([[SnapshotTable.keepLatestWhere]], [[SnapshotTable.swapWhere]]).
+  * Each commits keyed and unscoped, and the pipeline's conflict retry
+  * is their only retry: an interleaved rewrite or keyed commit forces
+  * a recompute from the new head, a blind append commutes.
   *
   * Daily rollup maintenance is CDC-DRIVEN: [[rollupDaily]] diffs the
   * fact table since the version the rollup last reflected and
@@ -90,25 +92,56 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
 
   override def hasGaugeData: Boolean = gaugeTable.currentVersion > 0
 
-  /** Scoped keep-latest repair, one [[SnapshotTable.keepLatestWhere]]
-    * commit: the rows in scope (`obs_day` in the dates, `data_source_part`
-    * the source) keep their latest `timemark` per `(source_id, time)`.
-    * Only the files holding an in-scope row are rewritten — the day
-    * and source stats prune the candidates from metadata, one scan
-    * finds the hits — and their out-of-scope rows are carried through;
-    * everything else stays shared with older snapshots. */
-  override def compactGaugeData(
-      scope: Option[(String, String)],
-      dataSource: Option[String]): Unit = {
-    if (!hasGaugeData) return
-    val inScope = Seq(
-      scope.map { case (lo, hi) => col("obs_day").between(dayOf(lo), dayOf(hi)) },
-      dataSource.map(ds => col("data_source_part") === ds)
-    ).flatten.reduceOption(_ && _).getOrElse(lit(true))
+  /** One [[SnapshotTable.keepLatestWhere]] commit: the rows in scope
+    * (and `inserts`) keep their latest `timemark` per
+    * `(source_id, time)`. Only the files holding an in-scope row are
+    * rewritten — the day and source stats prune the candidates from
+    * metadata, one scan finds the hits — and their out-of-scope rows
+    * are carried through; everything else stays shared with older
+    * snapshots. */
+  private def keepLatest(inScope: Column,
+      inserts: Option[DataFrame] = None, tag: Option[String] = None): Unit = {
     gaugeTable.keepLatestWhere(inScope, Seq("source_id", "time"),
-      Seq(col("timemark")), Seq("obs_day", "data_source_part"))
+      Seq(col("timemark")), Seq("obs_day", "data_source_part"), inserts, tag)
     ()
   }
+
+  /** The batch's commit is keep-latest over its rows and the live rows
+    * of its scope: its `obs_day` window and `data_source_part`. A batch
+    * with no dated row commits nothing. */
+  override def stageGaugeData(df: DataFrame, dataSource: String,
+      stagingDir: String): Unit =
+    stageFact(stagingDir) { tag =>
+      // one read of the batch serves its day bounds and both sides of
+      // the fold (its unmatched and its matched rows)
+      val rows = withGaugeParts(df, dataSource).cache()
+      try {
+        val days = rows.agg(min("obs_day"), max("obs_day")).collect()(0)
+        if (!days.isNullAt(0))
+          keepLatest(col("obs_day").between(days.getLong(0), days.getLong(1)) &&
+            col("data_source_part") === dataSource, Some(rows), Some(tag))
+      } finally rows.unpersist()
+    }
+
+  /** The batch's commit is one tagged append, laid out one file set
+    * per run day so the `run_day` stats prune to a run's own files. */
+  override def stageModelData(df: DataFrame, stagingDir: String): Unit =
+    stageFact(stagingDir) { tag =>
+      modelTable.appendIfAbsentWithStats(
+        withModelParts(df).repartition(col("run_day")), tag, Seq("run_day"))
+      ()
+    }
+
+  override protected def factCommitted(tag: String): Boolean =
+    Seq(gaugeTable, modelTable).exists(_.committedTags.contains(tag))
+
+  override def compactGaugeData(
+      scope: Option[(String, String)],
+      dataSource: Option[String]): Unit =
+    if (hasGaugeData) keepLatest(Seq(
+      scope.map { case (lo, hi) => col("obs_day").between(dayOf(lo), dayOf(hi)) },
+      dataSource.map(ds => col("data_source_part") === ds)
+    ).flatten.reduceOption(_ && _).getOrElse(lit(true)))
 
   override def appendModelData(df: DataFrame): Unit = {
     modelTable.appendWithStats(withModelParts(df), Seq("run_day"))
@@ -162,45 +195,6 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
     modelTable.swapWhere(repaired,
       col("run_day").isin(days.map(_.getLong(0)).toSeq: _*), Seq("run_day"))
     ()
-  }
-
-  /** Staged fact parquet publishes as ONE tagged manifest commit per
-    * fact table (tag = atomic-commit id → idempotent crash re-runs);
-    * ledgers and any other staged table fall through to the base
-    * rename finalize. Deleting a fact staging subdir AFTER its tagged
-    * commit keeps re-publication idempotent across every crash point:
-    * crash before the tag lands → full re-run; after → the tag check
-    * skips the fact and the remaining tables finalize. */
-  override protected def publishCommit(
-      committed: org.apache.hadoop.fs.Path): Unit = {
-    val fs = fsys
-    val commitId = committed.getName
-    def publishFact(sub: String, table: SnapshotTable,
-        derive: DataFrame => DataFrame, statCols: Seq[String]): Unit = {
-      val staged = new org.apache.hadoop.fs.Path(committed, sub)
-      if (fs.exists(staged)) {
-        val df = derive(spark.read.parquet(staged.toString))
-        if (table.committedTags.contains(s"commit-$commitId")) ()
-        else {
-          val v = table.appendIfAbsentWithStats(df, s"commit-$commitId", statCols)
-          require(v.isDefined || table.committedTags.contains(s"commit-$commitId"))
-        }
-        fs.delete(staged, true)
-      }
-    }
-    // staged partition dirs surface data_source_part/obs_date (and
-    // run_date) as partition columns on read; only the pruning day
-    // column is derived here. Gauge facts record data_source_part
-    // string bounds too — this ingest path must match appendGaugeData,
-    // or source-scoped maintenance loses its metadata prune for every
-    // atomically-committed file
-    publishFact("gauge_data", gaugeTable,
-      df => df.withColumn("obs_day", unix_date(to_date(col("time"))).cast("long")),
-      Seq("obs_day", "data_source_part"))
-    publishFact("model_data", modelTable,
-      df => df.withColumn("run_day", unix_date(to_date(col("timemark"))).cast("long")),
-      Seq("run_day"))
-    finalizeCommit(committed)
   }
 
   // ---- CDC-driven rollup maintenance ------------------------------

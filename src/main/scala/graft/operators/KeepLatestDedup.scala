@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale: one shuffle on `keys`. At 100 TB the fact table is
   * partitioned by source/date, and the caller scopes the dedup to the
-  * incoming batch's `[min(time), max(time)]` window first
-  * (ingestObsTasks.py:392-399) so only affected partitions shuffle.
+  * incoming batch's source and days first (ingestObsTasks.py:392-399)
+  * so only affected files shuffle.
   */
 object KeepLatestDedup {
 
@@ -25,22 +25,5 @@ object KeepLatestDedup {
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-  }
-
-  /** Dedup only rows inside a time window, passing the rest through
-    * untouched — mirrors the reference's per-file `[min,max]` dedup
-    * scope. On partitioned storage the `in-window` side prunes to the
-    * affected partitions; the passthrough side is never shuffled.
-    */
-  def scoped(
-      df: DataFrame,
-      timeCol: String,
-      lo: Column,
-      hi: Column,
-      keys: Seq[String],
-      precedence: Seq[Column]): DataFrame = {
-    val inWindow = col(timeCol).between(lo, hi)
-    apply(df.filter(inWindow), keys, precedence)
-      .unionByName(df.filter(!inWindow || col(timeCol).isNull))
   }
 }

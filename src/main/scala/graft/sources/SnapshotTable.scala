@@ -3032,21 +3032,29 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
     }
   }
 
-  /** Keep-latest repair through the [[dml]] pipeline's REWRITE step:
-    * among the live rows matching `cond`, keep one row per `keys` —
-    * the one ranking first by `precedence`, descending
-    * ([[graft.operators.KeepLatestDedup]]) — and carry every other row
-    * of the rewritten files through. Only the files holding a matched
-    * row are rewritten, with `statCols` recorded. The commit is keyed
-    * and unscoped: an interleaved rewrite or keyed commit forces a
-    * recompute from the new head, while a blind append commutes (its
-    * rows wait for the next repair). Returns the committed version, or
-    * 0 when no live row matched. */
+  /** Keep-latest through the [[dml]] pipeline's REWRITE step: among
+    * the live rows matching `cond` and the `inserts` matching it, keep
+    * one row per `keys` — the one ranking first by `precedence`,
+    * descending ([[graft.operators.KeepLatestDedup]]) — and carry every
+    * other row of the rewritten files (and every other insert) through.
+    * Only the files holding a matched row are rewritten, with
+    * `statCols` recorded; with none, the commit adds just the inserts'
+    * survivors. So a batch that lands through here is never visible
+    * next to a row it supersedes. The commit is keyed and unscoped: an
+    * interleaved rewrite or keyed commit forces a recompute from the
+    * new head, while a blind append commutes (its rows wait for the
+    * next keep-latest). A `tag` makes the verb idempotent: an already
+    * committed tag returns 0 with nothing read, and otherwise the tag
+    * rides the commit even when nothing changed. Returns the committed
+    * version, or 0 when nothing matched and nothing was inserted. */
   private[graft] def keepLatestWhere(cond: Column, keys: Seq[String],
-      precedence: Seq[Column], statCols: Seq[String]): Int =
-    dml("keepLatestWhere", mor = false, statCols, Nil, 0.01) { (_, _) =>
+      precedence: Seq[Column], statCols: Seq[String],
+      inserts: Option[DataFrame] = None, tag: Option[String] = None): Int =
+    if (tag.exists(committedTags.contains)) 0
+    else dml("keepLatestWhere", mor = false, statCols, Nil, 0.01) { (_, _) =>
       DmlVerb(dmlCandidates(_, cond),
-        DmlMatch.KeepLatest(cond, keys, precedence), DmlCommit.Unscoped)
+        DmlMatch.KeepLatest(cond, keys, precedence, inserts),
+        if (tag.isDefined) DmlCommit.Always else DmlCommit.Unscoped, tag = tag)
     }
 
   /** Rerun-repair swap through the [[dml]] pipeline's REWRITE step:
@@ -3067,7 +3075,8 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
   /** The one DML pipeline behind [[deleteWhere]], [[updateWhere]],
     * [[replaceWhere]], [[merge]] and [[mergeInto]] (SQL `DELETE`,
     * `UPDATE`, `INSERT … REPLACE WHERE` and `MERGE INTO`), and behind
-    * the fact store's two repairs ([[keepLatestWhere]], [[swapWhere]]).
+    * the fact store's keep-latest batch commit and rerun repair
+    * ([[keepLatestWhere]], [[swapWhere]]).
     * Each attempt pins ONE base version and its replayed state (a
     * second resolution could land on a concurrent writer's version)
     * and builds the verb's parts from them (`verb`: a merge's
@@ -3162,14 +3171,14 @@ final class SnapshotTable(private[sources] val spark: SparkSession,
                 s"$name: matched file outside the live set (path normalization)")
               found
             }
-          val kept = if (affected.isEmpty) None else Some {
-            val rows = readFiles(affected, Some(base))
-            v.matcher match {
-              case w: DmlMatch.Where if v.set.nonEmpty =>
-                assigned(op, rows, v.set, Some(w.isTrue))
-              case m =>
-                m.copies.foldLeft(m.miss(rows))((k, c) => k.unionAll(c(rows)))
-            }
+          val rows = if (affected.isEmpty) None
+            else Some(readFiles(affected, Some(base)))
+          val kept = v.matcher match {
+            case k: DmlMatch.KeepLatest => k.survivors(rows)
+            case w: DmlMatch.Where if v.set.nonEmpty =>
+              rows.map(assigned(op, _, v.set, Some(w.isTrue)))
+            case m => rows.map(rows =>
+              m.copies.foldLeft(m.miss(rows))((k, c) => k.unionAll(c(rows))))
           }
           val (slabs, layoutCols, layoutProp) = v.inserts match {
             case None => (kept.toSeq.map(_ -> false), Nil, Nil)
@@ -4966,15 +4975,22 @@ object SnapshotTable {
       def hit(df: DataFrame): DataFrame = df.join(keys, keyCols, "left_semi")
       def miss(df: DataFrame): DataFrame = df.join(keys, keyCols, "left_anti")
     }
-    /** Rows where `cond` is TRUE, whose copies are their keep-latest
-      * survivors: one row per `keys`, the first by `precedence`. */
+    /** Rows where `cond` is TRUE, folded with the verb's `inserts`
+      * into their keep-latest survivors: one row per `keys`, the first
+      * by `precedence`. */
     final case class KeepLatest(cond: Column, keys: Seq[String],
-        precedence: Seq[Column]) extends DmlMatch {
+        precedence: Seq[Column], inserts: Option[DataFrame])
+        extends DmlMatch {
       private val where = Where(cond)
       def hit(df: DataFrame): DataFrame = where.hit(df)
       def miss(df: DataFrame): DataFrame = where.miss(df)
-      override def copies: Option[DataFrame => DataFrame] = Some(df =>
-        graft.operators.KeepLatestDedup(hit(df), keys, precedence))
+      /** What a rewrite stages for the affected files' `rows` (None: no
+        * file affected) and the inserts: the unmatched rows as they
+        * are, and the survivors of the matched ones. */
+      def survivors(rows: Option[DataFrame]): Option[DataFrame] =
+        (rows ++ inserts).reduceOption(_ unionByName _).map(all =>
+          miss(all).unionAll(
+            graft.operators.KeepLatestDedup(hit(all), keys, precedence)))
     }
   }
 

@@ -12,8 +12,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  - ledger table + `ingested` flag + J4 anti-join  → file-source
   *    checkpoint (exactly-once file processing, no ledger scan needed)
   *  - 31-day ledger lookback                         → `maxFileAge`
-  *  - overlapping files, keep-latest (J8)            → per-batch window
-  *    dedup inside `foreachBatch` + cross-batch compaction
+  *  - overlapping files, keep-latest (J8)            → each batch's one
+  *    commit inside `foreachBatch` is the keep-latest fold of the batch
+  *    and the stored rows of its source and dates
   *  - `UPDATE ingested=True` commit marker           → checkpoint commit
   *    in the same foreachBatch transaction boundary
   *
@@ -63,9 +64,10 @@ object StreamingIngest {
       .start()
   }
 
-  /** One micro-batch: normalize → enrich → route → in-batch keep-latest
-    * → append → cross-batch compaction. Mirrors ObsIngest.ingestSource
-    * exactly, minus the read. */
+  /** One micro-batch: normalize → enrich → route → one
+    * [[GaugeStore.atomicCommit]] of the fact, the keep-latest fold the
+    * batch path commits too. Mirrors ObsIngest.ingestSource exactly,
+    * minus the read. */
   private[streaming] def ingestBatch(
       spark: SparkSession, meta: SourceMeta, store: GaugeStore, batch: DataFrame): Unit = {
     if (batch.isEmpty) return
@@ -76,22 +78,9 @@ object StreamingIngest {
         ObsIngest.attachSourceId(data, gaugeSource, stations), meta.source_variable)
       .filter(col("source_id").isNotNull)
       .cache()
-    try {
-      // session-TZ strings (Timestamp.toString renders in JVM zone)
-      val bounds = fact.agg(
-        date_format(min("time"), "yyyy-MM-dd HH:mm:ss").as("lo"),
-        date_format(max("time"), "yyyy-MM-dd HH:mm:ss").as("hi")).collect()(0)
-      if (!bounds.isNullAt(0)) {
-        val deduped = ObsIngest.dedupFact(fact,
-          lit(bounds.getString(0)), lit(bounds.getString(1)))
-        store.appendGaugeData(deduped, meta.data_source)
-        // cross-batch keep-latest repair, scoped to this source+dates
-        store.compactGaugeData(
-          Some((bounds.getString(0).substring(0, 10),
-            bounds.getString(1).substring(0, 10))),
-          Some(meta.data_source))
-      }
-    } finally fact.unpersist()
+    try store.atomicCommit(store.newCommitId("stream"))(
+      store.stageGaugeData(fact, meta.data_source, _))
+    finally fact.unpersist()
   }
 
   /** Drain everything currently in the harvest dir and stop — the

@@ -4,12 +4,14 @@ import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** Crash-injection coverage for the manifest-dir atomic commit: the
-  * old append-ledger/mark-ingested pair had a crash window where the
-  * fact was visible but unmarked (repaired by the widened rerun gate);
-  * with [[GaugeStore.atomicCommit]] the pair publishes at ONE rename,
-  * so both crash sides recover with zero duplicate and zero lost rows
-  * and no rerun-gate involvement.
+/** Crash coverage at the two sides of the atomic batch commit's
+  * commit point. [[GaugeStore.atomicCommit]] writes the fact batch as
+  * ONE manifest commit tagged `commit-<id>` and only then moves the
+  * staged ledger rows in, so the ledger is never ahead of the facts:
+  * a crash before the tagged commit leaves staging that vacuum sweeps,
+  * a crash after it leaves ledger rows that vacuum moves in — zero
+  * duplicate and zero lost rows either way, with no rerun-gate
+  * involvement. [[CrashPointSpec]] sweeps every mutating call.
   */
 class AtomicCommitSpec extends SparkSuite {
   import spark.implicits._
@@ -21,8 +23,8 @@ class AtomicCommitSpec extends SparkSuite {
 
   private def factRows(ts: String*) =
     ts.map(t => (7L, t, 1.0)).toDF("source_id", "t", "water_level")
-      .select(col("source_id"), col("t").cast("timestamp").as("time"),
-        col("water_level"))
+      .select(col("source_id"), col("t").cast("timestamp").as("timemark"),
+        col("t").cast("timestamp").as("time"), col("water_level"))
 
   test("crash AFTER the commit point: vacuum finalizes, zero dup, zero lost") {
     val root = Files.createTempDirectory("graft-ac1").toString
@@ -34,24 +36,24 @@ class AtomicCommitSpec extends SparkSuite {
     }
     assert(store.gaugeData.count() == 1 && store.ledger.count() == 1)
 
-    // simulate a crash immediately after the commit rename: stage a
-    // second batch and rename it into _commits by hand, skipping
-    // finalize — exactly the on-disk state a kill there leaves
+    // simulate a crash immediately after the commit point: commit a
+    // second batch's fact under tag commit-c1, then stage its ledger
+    // rows by hand with no finalize — exactly the on-disk state a kill
+    // there leaves
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
-    store.stageGaugeData(factRows("2023-04-24 10:00:00"), "tidal_gauge",
-      s"$root/_staging/c1")
+    store.atomicCommit("c1")(
+      store.stageGaugeData(factRows("2023-04-24 10:00:00"), "tidal_gauge", _))
     store.stageLedger(ledgerRow("b.csv"), s"$root/_staging/c1")
-    assert(fs.rename(p("_staging/c1"), p("_commits/c1")))
-    // committed but unfinalized: not yet visible
-    assert(store.gaugeData.count() == 1 && store.ledger.count() == 1)
+    // the fact landed; its ledger rows are not yet visible
+    assert(store.gaugeData.count() == 2 && store.ledger.count() == 1)
 
     val actions = store.vacuum()
     assert(actions.exists(_.contains("finalized commit c1")), actions.toString)
-    assert(store.gaugeData.count() == 2)                       // fact published once
+    assert(store.gaugeData.count() == 2)                       // fact committed once
     assert(store.ledger.count() == 2)
     assert(store.ledger.filter(col("ingested")).count() == 2)  // marked atomically
-    assert(!fs.exists(p("_commits/c1")))
+    assert(!fs.exists(p("_staging/c1")))
     assert(store.vacuum().isEmpty)                             // idempotent
   }
 
@@ -68,6 +70,7 @@ class AtomicCommitSpec extends SparkSuite {
     val actions = store.vacuum()
     assert(actions.contains("swept uncommitted staging"))
     assert(store.ledger.count() == 1)          // b.csv never became visible
+    assert(!store.hasGaugeData)                // nor did its fact
     assert(!new java.io.File(s"$root/_staging").exists() ||
       new java.io.File(s"$root/_staging").list().isEmpty)
     // ...so the next ingest of b.csv re-processes it from scratch: the
@@ -96,7 +99,7 @@ class AtomicCommitSpec extends SparkSuite {
       val f = new java.io.File(s"$root/store/$d")
       f.exists() && f.list().nonEmpty
     }
-    assert(!residue("_commits") && !residue("_staging"))
+    assert(!residue("_staging"))
     // and a re-run is gated to zero by the ledger alone
     assert(graft.IngestCli.sequenceIngest(spark, store, Seq(meta), harvest,
       lit("2023-04-24 00:00:00")) == 0)

@@ -1,0 +1,137 @@
+package graft.domain
+
+import graft.SparkSuite
+import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
+
+/** The obs batch commit is keep-latest itself: the batch's rows are
+  * written once, in ONE tagged commit that also drops every stored row
+  * they supersede in the batch's source and days. So no snapshot
+  * version shows a row next to the one that supersedes it, and no
+  * crash can leave such a pair behind.
+  */
+class BatchCommitSpec extends SparkSuite {
+
+  private val meta = SourceMeta("tidal_gauge", "noaa", "noaa", "water_level",
+    "noaaweb_stationdata_water_level", "tidal", "m")
+
+  /** A store with one station and an empty harvest dir. */
+  private def fixture(name: String): (String, String) = {
+    val root = Files.createTempDirectory(name).toString
+    val harvest = s"$root/harvest"; Files.createDirectories(Paths.get(harvest))
+    Files.write(Paths.get(root, "geom.csv"),
+      "8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A".getBytes)
+    GaugeStore.open(spark, s"$root/store")
+      .writeStations(ObsIngest.seedStations(spark, s"$root/geom.csv"))
+    (s"$root/store", harvest)
+  }
+
+  private def drop(harvest: String, tm: String, rows: String*): Unit =
+    Files.write(Paths.get(harvest, s"noaaweb_stationdata_water_level_$tm.csv"),
+      ("TIME,STATION,WATER_LEVEL\n" + rows.mkString("\n")).getBytes)
+
+  private def ingest(store: GaugeStore, harvest: String): Long =
+    graft.IngestCli.sequenceIngest(spark, store, Seq(meta), harvest,
+      lit("2023-04-24 00:00:00"))
+
+  private val batch1 = Seq("2023-04-23T10:00:00,8410140,1.10",
+    "2023-04-23T11:00:00,8410140,1.20", "2023-04-23T12:00:00,8410140,1.30")
+  // the later harvest rewrites 12:00
+  private val batch2 = Seq("2023-04-23T12:00:00,8410140,9.99",
+    "2023-04-23T13:00:00,8410140,1.40")
+  private val oracle = Seq("10:00:00" -> 1.10, "11:00:00" -> 1.20,
+    "12:00:00" -> 9.99, "13:00:00" -> 1.40)
+
+  private def served(store: GaugeStore): Seq[(String, Double)] =
+    store.gaugeData.select(date_format(col("time"), "HH:mm:ss"), col("water_level"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq.sorted
+
+  test("no gauge_data log version holds two live rows for one (source_id, time) across overlapping batches") {
+    val (root, harvest) = fixture("graft-versions")
+    val store = GaugeStore.open(spark, root)
+    drop(harvest, "2023-04-23T12_00_00", batch1: _*)
+    assert(ingest(store, harvest) == 1)
+    drop(harvest, "2023-04-23T18_00_00", batch2: _*)
+    assert(ingest(store, harvest) == 1)
+    val table = new graft.sources.SnapshotTable(spark, s"$root/gauge_data")
+    val versions = 1 to table.currentVersion
+    assert(versions.nonEmpty)
+    versions.foreach { v =>
+      val dup = table.read(Some(v)).groupBy("source_id", "time").count()
+        .filter(col("count") > 1).count()
+      assert(dup == 0, s"version $v holds $dup (source_id, time) key(s) twice")
+    }
+    assert(served(store) == oracle)
+  }
+
+  test("an obs batch stopped after its fact append and before keep-latest converges to the keep-latest oracle") {
+    val (root, harvest) = fixture("graft-stopped")
+    drop(harvest, "2023-04-23T12_00_00", batch1: _*)
+    assert(ingest(GaugeStore.open(spark, root), harvest) == 1)
+    drop(harvest, "2023-04-23T18_00_00", batch2: _*)
+    // the process stops at the first keep-latest repair after the batch
+    // is in: whatever the batch commit wrote stays as it is on disk
+    val stopping = new SnapshotGaugeStore(spark, root) {
+      override def compactGaugeData(scope: Option[(String, String)],
+          dataSource: Option[String]): Unit =
+        throw new IllegalStateException("stopped before keep-latest")
+    }
+    try ingest(stopping, harvest)
+    catch { case _: IllegalStateException => }
+    val fresh = GaugeStore.open(spark, root)
+    fresh.vacuum()
+    ingest(fresh, harvest)
+    assert(served(fresh) == oracle)
+  }
+
+  test("one obs batch with no overlap writes each of its fact rows into gauge_data once") {
+    val (root, harvest) = fixture("graft-writes")
+    val store = GaugeStore.open(spark, root)
+    drop(harvest, "2023-04-23T12_00_00", batch1: _*)
+    // rows written by the tasks of each SQL execution, and the output
+    // path each execution's write command names; a sentinel job in its
+    // own group flushes the (asynchronous) bus
+    val written = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    val outputs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val stageExec = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    // a write command's node lists its output path first among its
+    // arguments in the formatted plan text
+    val insert = "(?s)InsertIntoHadoopFsRelationCommand.*?Arguments: (file:/[^,\\s\\]]+)".r
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            insert.findFirstMatchIn(s.physicalPlanDescription)
+              .foreach(m => outputs.put(s.executionId, m.group(1)))
+          case _ =>
+        }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.map(_.getProperty("spark.jobGroup.id")).contains("write-sentinel"))
+          flushed.countDown()
+        props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => e.stageIds.foreach(stageExec.put(_, id.toLong)))
+      }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && stageExec.containsKey(e.stageId))
+          written.merge(stageExec.get(e.stageId),
+            e.taskMetrics.outputMetrics.recordsWritten, (a, b) => a + b)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      assert(ingest(store, harvest) == 1)
+      sc.setJobGroup("write-sentinel", "bus flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    import scala.jdk.CollectionConverters._
+    val factWrites = outputs.asScala.toSeq.filter(_._2.contains("/gauge_data"))
+    assert(factWrites.nonEmpty, outputs.toString)
+    val rows = factWrites.map { case (id, _) => written.getOrDefault(id, 0L) }.sum
+    assert(store.gaugeData.count() == batch1.size)
+    assert(rows == batch1.size,
+      s"$rows fact rows written for a batch of ${batch1.size}: $factWrites")
+  }
+}

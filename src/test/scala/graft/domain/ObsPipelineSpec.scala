@@ -99,32 +99,45 @@ class ObsPipelineSpec extends SparkSuite {
     assert(fact.filter(col("water_level").isNotNull).count() == 6)
   }
 
-  test("dedupFact: keep-latest wins inside batch window, passthrough outside (J8)") {
+  test("keep-latest fold: the later timemark wins inside the batch's scope, rows outside pass through (J8)") {
     fixtures
+    val store = mkStore(Files.createTempDirectory("graft-fold").toString)
+    // outside the batch's scope (another day): a duplicate pair the
+    // batch commit must not touch
+    import spark.implicits._
+    store.appendGaugeData(Seq(("2023-04-22 12:00:00", 0.5), ("2023-04-22 18:00:00", 0.6))
+      .toDF("tm", "v").select(lit(2L).as("source_id"),
+        col("tm").cast("timestamp").as("timemark"),
+        lit("2023-04-22 10:00:00").cast("timestamp").as("time"),
+        col("v").as("water_level"), lit(null).cast("double").as("wave_height"),
+        lit(null).cast("double").as("wind_speed"),
+        lit(null).cast("double").as("air_pressure"),
+        lit(null).cast("double").as("stream_elevation"),
+        lit(null).cast("double").as("flow_volume")), "tidal_gauge")
     val fact = ObsIngest.ingestSource(spark, meta, stations,
       s"$dir/noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv",
       s"$dir/noaaweb_stationdata_water_level_2023-04-23T18_00_00.csv")
-    val deduped = ObsIngest.dedupFact(fact,
-      lit("2023-04-23 12:00:00").cast("timestamp"),
-      lit("2023-04-23 13:00:00").cast("timestamp"))
-    assert(deduped.count() == 5)                    // one (source,time) collision resolved
-    val t12 = deduped.filter(col("time") === lit("2023-04-23 12:00:00").cast("timestamp"))
+    def commit(): Unit = store.atomicCommit(store.newCommitId("obs"))(
+      store.stageGaugeData(fact, meta.data_source, _))
+    def inScope = store.gaugeData.filter(to_date(col("time")) === lit("2023-04-23"))
+    commit()
+    assert(inScope.count() == 5)                    // one (source,time) collision resolved
+    val t12 = inScope.filter(col("time") === lit("2023-04-23 12:00:00").cast("timestamp"))
       .collect()
     assert(t12.length == 1 && t12(0).getAs[Double]("water_level") == 9.99) // later timemark won
-    // idempotence: dedup twice == once (SURVEY §5 property)
-    assert(ObsIngest.dedupFact(deduped,
-      lit("2023-04-23 12:00:00").cast("timestamp"),
-      lit("2023-04-23 13:00:00").cast("timestamp")).count() == 5)
+    assert(store.gaugeData.count() == 7)            // the out-of-scope pair kept
+    // idempotence: the fold twice == once (SURVEY §5 property)
+    commit()
+    assert(inScope.count() == 5 && store.gaugeData.count() == 7)
   }
 
   test("obsTimeseriesStationData: fixed-category pivot + JSON_AGG contract (A7/A8)") {
     fixtures
-    val fact = ObsIngest.dedupFact(
+    val fact = graft.operators.KeepLatestDedup(
       ObsIngest.ingestSource(spark, meta, stations,
         s"$dir/noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv",
         s"$dir/noaaweb_stationdata_water_level_2023-04-23T18_00_00.csv"),
-      lit("2023-04-23 10:00:00").cast("timestamp"),
-      lit("2023-04-23 13:00:00").cast("timestamp"))
+      Seq("source_id", "time"), Seq(col("timemark")))
     val source = ObsIngest.buildGaugeSource(stations, meta)
     val out = QueryApi.obsTimeseriesStationData(fact, source, stations,
       "8410140", "2023-04-23 10:00:00", "2023-04-23 13:00:00")

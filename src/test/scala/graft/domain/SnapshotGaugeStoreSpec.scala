@@ -106,24 +106,26 @@ class SnapshotGaugeStoreSpec extends SparkSuite {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
-    // on-disk state of a kill right after the commit rename
-    store.stageGaugeData(fact((7L, "2023-04-23 00:00:00", "2023-04-23 10:00:00", 1.0)),
-      "tidal_gauge", s"$root/_staging/c1")
-    fs.mkdirs(p("_commits"))
-    assert(fs.rename(p("_staging/c1"), p("_commits/c1")))
-    assert(!store.hasGaugeData) // committed-but-unpublished: invisible
+    // on-disk state of a kill right after the commit point: the fact's
+    // tagged commit landed, its staged ledger rows never moved in
+    store.atomicCommit("c1")(store.stageGaugeData(
+      fact((7L, "2023-04-23 00:00:00", "2023-04-23 10:00:00", 1.0)), "tidal_gauge", _))
+    store.stageLedger(Seq(("a.csv", true)).toDF("file_name", "ingested"),
+      s"$root/_staging/c1")
+    assert(store.ledger.count() == 0)
     val actions = store.vacuum()
     assert(actions.exists(_.contains("finalized commit c1")), actions.toString)
-    assert(store.gaugeData.count() == 1)
-    // crash WINDOW inside publish: fact's tagged manifest landed but
-    // the commit dir survived (kill before the staged-subdir delete) —
-    // the re-run must skip the fact via its tag, not append it again
-    store.stageGaugeData(fact((7L, "2023-04-23 00:00:00", "2023-04-23 10:00:00", 1.0)),
-      "tidal_gauge", s"$root/_staging/c1")
-    assert(fs.rename(p("_staging/c1"), p("_commits/c1")))
-    store.vacuum()
-    assert(store.gaugeData.count() == 1,
-      "re-published commit duplicated the fact despite its tag")
+    assert(store.gaugeData.count() == 1 && store.ledger.count() == 1)
+    // a replay of the same commit id skips the fact by its tag and
+    // moves its ledger rows in again
+    store.atomicCommit("c1") { staging =>
+      store.stageGaugeData(
+        fact((7L, "2023-04-23 00:00:00", "2023-04-23 10:00:00", 2.0)), "tidal_gauge", staging)
+      store.stageLedger(Seq(("a.csv", true)).toDF("file_name", "ingested"), staging)
+    }
+    assert(store.gaugeData.select("water_level").collect().map(_.getDouble(0)).toSeq ==
+      Seq(1.0), "re-published commit rewrote the fact despite its tag")
+    assert(!fs.exists(p("_staging/c1")))
     assert(store.gaugeTable.committedTags.contains("commit-c1"))
   }
 

@@ -31,11 +31,11 @@ class StreamingSnapshotRetentionSpec extends SparkSuite {
     Files.write(Paths.get(root, "geom.csv"),
       "8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A".getBytes)
 
-    // interval 3 so eight waves (2 commits each: append + scoped
-    // keep-latest repair) span >5 checkpoint intervals
+    // interval 2 so eight waves (one commit each: the batch's
+    // keep-latest commit) span four checkpoint intervals
     val store = new SnapshotGaugeStore(spark, storeDir) {
       override lazy val gaugeTable =
-        new SnapshotTable(spark, path("gauge_data"), checkpointInterval = 3)
+        new SnapshotTable(spark, path("gauge_data"), checkpointInterval = 2)
     }
     store.writeStations(ObsIngest.seedStations(spark, s"$root/geom.csv"))
 
@@ -51,7 +51,7 @@ class StreamingSnapshotRetentionSpec extends SparkSuite {
           s"2023-04-23T${hh(i - 1)}:00:00,8410140,${i - 1}.5").getBytes)
 
     def coldGauge() =
-      new SnapshotTable(spark, s"$storeDir/gauge_data", checkpointInterval = 3)
+      new SnapshotTable(spark, s"$storeDir/gauge_data", checkpointInterval = 2)
 
     def finalRows(): Map[String, Double] =
       store.gaugeData.collect().map(r =>
@@ -66,7 +66,7 @@ class StreamingSnapshotRetentionSpec extends SparkSuite {
       // metadata reads, however many commits the stream has made
       val t = coldGauge()
       val v = t.currentVersion
-      assert(v == 2 * i, s"wave $i: expected ${2 * i} commits, got $v")
+      assert(v == i, s"wave $i: expected $i commits, got $v")
       t.read().count()
       if (v >= 3) {
         assert(t.logLists == 0,
@@ -83,10 +83,10 @@ class StreamingSnapshotRetentionSpec extends SparkSuite {
     assert(store.gaugeTable.appendIfAbsent(probe, "replay-probe").nonEmpty)
     assert(store.gaugeTable.appendIfAbsent(probe, "replay-probe").isEmpty)
 
-    // mid-stream log truncation: version 11, retain 4 -> floor at the
-    // newest checkpoint <= 8, i.e. 6
-    assert(store.gaugeTable.vacuumLog(retainVersions = 4) > 0)
-    assert(store.gaugeTable.retentionFloor == 6)
+    // mid-stream log truncation: version 6, retain 2 -> floor at the
+    // newest checkpoint <= 5, i.e. 4
+    assert(store.gaugeTable.vacuumLog(retainVersions = 2) > 0)
+    assert(store.gaugeTable.retentionFloor == 4)
 
     // the sink keeps committing after truncation
     (6 to 8).foreach { i =>
@@ -113,8 +113,8 @@ class StreamingSnapshotRetentionSpec extends SparkSuite {
     assert(store.gaugeTable.currentVersion == vBefore)
 
     // stream-checkpoint LOSS: every harvest file replays in one batch;
-    // in-batch keep-latest + the scoped cross-batch repair converge to
-    // the exact same final rows (last-writer-wins idempotence — the
+    // the batch's keep-latest commit converges to the exact same final
+    // rows (last-writer-wins idempotence — the
     // property that makes replay safe at any point of the log)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
     StreamingIngest.runOnce(spark, meta, store, harvest, ckpt)

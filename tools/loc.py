@@ -4,7 +4,9 @@
 Usage: python3 tools/loc.py [ROOT]   (default ROOT: src/main/scala)
 
 Prints one `<lines>  <file>` row per .scala file under ROOT (sorted by
-path) and a final `<lines>  total` row. A line counts unless it is blank,
+path), then one `<lines>  <dir>/` subtotal row per directory holding
+.scala files (the files directly in it; `./` for ROOT itself), and a
+final `<lines>  total` row. A line counts unless it is blank,
 a `//` line comment, or lies inside a `/* ... */` block (scaladoc
 included); a line that opens or closes a block comment but also carries
 code outside it still counts.
@@ -59,8 +61,13 @@ def main():
                 with open(p, encoding="utf-8") as f:
                     rows.append((os.path.relpath(p, root), code_lines(f.read())))
     rows.sort()
+    dirs = {}
     for p, n in rows:
         print(f"{n:7d}  {p}")
+        d = os.path.dirname(p) or "."
+        dirs[d] = dirs.get(d, 0) + n
+    for d in sorted(dirs):
+        print(f"{dirs[d]:7d}  {d}/")
     print(f"{sum(n for _, n in rows):7d}  total")
 
 
