@@ -547,7 +547,9 @@ object IngestCli {
           // which applies keep-latest against earlier timemarks in the
           // batch's own source and dates — no observable state has a
           // ledger mark without its fact, or a row next to the one that
-          // supersedes it
+          // supersedes it. The source dim is written first, so no
+          // committed fact lacks its source.
+          store.upsertGaugeSource(meta, ObsIngest.buildGaugeSource(stations, meta))
           store.atomicCommit(store.newCommitId("obs")) { staging =>
             // a batch whose rows were all dropped (e.g. only
             // unregistered stations) commits no fact, but the ledger
@@ -558,7 +560,6 @@ object IngestCli {
                 meta.data_source, staging)
             store.stageLedger(fresh.withColumn("ingested", lit(true)), staging)
           }
-          upsertGaugeSource(store, ObsIngest.buildGaugeSource(stations, meta), meta)
         total += freshNames.length
       }
       // retain-obs processing runs UNCONDITIONALLY (not inside the
@@ -648,10 +649,11 @@ object IngestCli {
   /** One ADCIRC model run (SURVEY §3.2): per station-type harvest file
     * — derive data_source name + variable, anti-join the model-file
     * ledger (model-side J4: a (run, file, processing stamp) already
-    * ledgered is skipped), build/refresh the model source dim, ingest
-    * the fact with the run timemark, commit ledger rows
-    * (ingested=true), rerun-gated dedup driven from the ledger's
-    * processing_datetime history, then the apsviz station snapshot
+    * ledgered is skipped), build the model sources, ingest the fact
+    * with the run timemark; then refresh the model source dim and
+    * commit the fact with its ledger rows (ingested=true) as one batch,
+    * whose keep-latest by processing stamp repairs a rerun (J8/J9 model
+    * variant) in that same commit; then the apsviz station snapshot
     * from the meta files ∪ active retain-obs stations.
     */
   def modelRunIngest(
@@ -662,7 +664,8 @@ object IngestCli {
       advisory: Option[String] = None): Long = {
     // ONE driver-side literal for the whole run: current_timestamp()
     // would re-evaluate per write action, giving each harvest file a
-    // different proc_ts and tripping the rerun gate on a first ingest
+    // different proc_ts, and keep-latest would rank one run's own files
+    // against each other
     val procTsStr = processingDatetime.map(_.replace("T", " ")).getOrElse(
       java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
         .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")))
@@ -676,7 +679,6 @@ object IngestCli {
     val dataSource = ModelIngest.dataSourceName(ensemble, grid, storm)
     var total = 0L
     var allSources = Seq.empty[org.apache.spark.sql.DataFrame]
-    var ledgerNames = Seq.empty[String]
     var ledgerRows = Seq.empty[org.apache.spark.sql.DataFrame]
     var facts = Seq.empty[org.apache.spark.sql.DataFrame]
     // model-side J4 anti-join, ONE ledger scan for the whole run: files
@@ -704,7 +706,6 @@ object IngestCli {
           facts :+= ModelIngest.ingestRun(spark, meta, src, stations,
             lit(tmStr), p.toString)
             .withColumn("proc_ts", procTs.cast("timestamp"))
-          ledgerNames :+= fileName
           total += 1
         }
       }
@@ -713,47 +714,18 @@ object IngestCli {
     // atomic commit — the reference's per-file BEGIN/COPY/UPDATE/COMMIT
     // (ingestModelTasks.py:368-372) widened to the whole run: no
     // observable state has a ledgered file without its fact or a fact
-    // without its ledger row, so crash recovery never needs the rerun
-    // repair for this window (the gate below still handles genuine
-    // new-stamp reruns)
-    if (ledgerNames.nonEmpty) {
+    // without its ledger row. The fact commit keeps the latest-processed
+    // row per (source_id, time) of the run's timemark, so a rerun under
+    // a new stamp (ingestModelTasks.py:375-387) is repaired in that
+    // commit. The run's sources are registered first, so no committed
+    // fact lacks its source.
+    if (facts.nonEmpty) {
+      store.upsertModelSource(allSources.reduce(_ unionByName _))
       store.atomicCommit(store.newCommitId("model")) { staging =>
         store.stageModelData(facts.reduce(_ unionByName _), staging)
         store.stageModelLedger(
           ledgerRows.reduce(_ unionByName _).withColumn("ingested", lit(true)),
           staging)
-      }
-    }
-    if (allSources.nonEmpty) {
-      // UPSERT into the model-source dim: keep rows from other runs/
-      // instances, replace this run's (a blind overwrite would erase
-      // every previously registered source and silently empty their
-      // forecast queries)
-      val current = allSources.reduce(_ unionByName _).dropDuplicates("source_id")
-      val merged =
-        if (store.tableExists("model_source")) {
-          val ids = current.select("source_id").collect().map(_.getLong(0)).toSeq
-          store.modelSource.filter(!col("source_id").isin(ids: _*))
-            .unionByName(current)
-        } else current
-      store.writeModelSource(merged)
-    }
-    // rerun repair (J8/J9 model variant): the gate reads the LEDGER
-    // history for this run's (source keys, timemark) scope. More ledger
-    // rows than distinct file names means some file was ingested more
-    // than once — a genuine rerun (new processing stamp, the reference's
-    // >1-distinct-processing_datetime test, ingestModelTasks.py:375-387)
-    // OR a same-stamp crash retry that double-appended. Either way the
-    // repair keeps the latest-processed row per (source_id, time) and
-    // swaps ONLY the run_date partitions of this timemark.
-    if (store.hasModelData && ledgerNames.nonEmpty) {
-      val tm = lit(tmStr).cast("timestamp")
-      if (ModelIngest.rerunRepairNeeded(store.modelLedger, dataSource,
-        sourceInstance, forcingMetclass, tm)) {
-        // the swapped run_date partition may also hold OTHER timemarks
-        // of the same date — they ride through the rewrite untouched
-        store.swapModelRunDatePartitions(ModelIngest.dedupRun(
-          store.modelDataForTimemark(tmStr), tm, col("proc_ts")))
       }
     }
     // apsviz station snapshot from meta_* files (+ active obs stations)
@@ -821,17 +793,4 @@ object IngestCli {
     }
     total
   }
-
-  /** Replace this source's rows of the (tiny, O(catalog × stations))
-    * source dim; `writeGaugeSource` materializes the frame before it
-    * swaps the path being read. */
-  private def upsertGaugeSource(store: GaugeStore, src: org.apache.spark.sql.DataFrame, meta: SourceMeta): Unit =
-    store.writeGaugeSource(
-      if (store.tableExists("gauge_source"))
-        store.gaugeSource
-          .filter(!(col("data_source") === meta.data_source &&
-            col("source_name") === meta.source_name &&
-            col("source_archive") === meta.source_archive))
-          .unionByName(src)
-      else src)
 }

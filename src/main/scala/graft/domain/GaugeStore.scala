@@ -236,6 +236,20 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
   def gaugeSource: DataFrame =
     dim("gauge_source")(spark.read.parquet(path("gauge_source")))
 
+  /** Replace one catalog source's rows of the gauge-source dim with
+    * `src`, keeping every other source's. Ingest runs it before the
+    * batch commit whose rows need them, so a committed fact always has
+    * its source registered. */
+  def upsertGaugeSource(meta: SourceMeta, src: DataFrame): Unit =
+    writeGaugeSource(
+      if (tableExists("gauge_source"))
+        gaugeSource
+          .filter(!(col("data_source") === meta.data_source &&
+            col("source_name") === meta.source_name &&
+            col("source_archive") === meta.source_archive))
+          .unionByName(src)
+      else src)
+
   /** Ledger stage writers for an [[atomicCommit]]: the rows land under
     * the staging dir. */
   def stageLedger(df: DataFrame, stagingDir: String): Unit =
@@ -251,7 +265,10 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
     * data source, committed with keep-latest applied in its commit. */
   def stageGaugeData(df: DataFrame, dataSource: String, stagingDir: String): Unit
 
-  /** Fact stage writer for an [[atomicCommit]]: a model batch. */
+  /** Fact stage writer for an [[atomicCommit]]: a model batch,
+    * committed with keep-latest by `proc_ts` applied within each of its
+    * runs' timemarks — so a rerun under a new stamp replaces the run's
+    * older rows in the same commit. */
   def stageModelData(df: DataFrame, stagingDir: String): Unit
 
   /** Append a batch of obs fact rows of one data source as they are,
@@ -291,11 +308,12 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
 
   def hasModelData: Boolean
 
-  /** Rerun repair: `df` holds the REPAIRED rows of one (or few) run
+  /** Explicit run-day swap: `df` holds the rows of one (or few) run
     * timemarks and replaces every row of those run days, in one
     * commit; rows of other days sharing a rewritten file (one with no
     * run day too) are kept. A `df` row without a timemark is refused
-    * before anything is written. */
+    * before anything is written. Ingest does not call it: a model
+    * rerun is repaired inside its batch commit ([[stageModelData]]). */
   def swapModelRunDatePartitions(df: DataFrame): Unit
 
   /** Incremental daily OHLC rollup of the obs fact; returns the
@@ -445,6 +463,19 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
   def modelSource: DataFrame =
     dim("model_source")(spark.read.parquet(path("model_source")))
 
+  /** Replace the model-source dim rows whose `source_id` is in `src`,
+    * keeping every other run's and instance's (a blind overwrite would
+    * empty their forecast queries). Like [[upsertGaugeSource]], it runs
+    * before the batch commit. */
+  def upsertModelSource(src: DataFrame): Unit = {
+    val current = src.dropDuplicates("source_id")
+    writeModelSource(
+      if (tableExists("model_source")) {
+        val ids = current.select("source_id").collect().map(_.getLong(0)).toSeq
+        modelSource.filter(!col("source_id").isin(ids: _*)).unionByName(current)
+      } else current)
+  }
+
   /** Idempotent per-run append: replaces any existing snapshot rows of
     * the same model_run_id (the reference's apsviz_station_file_meta
     * `ingested` guard, ingestModelTasks.py:295). */
@@ -483,8 +514,8 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
   // ingestModelTasks.py:251; one row per ingested run file) ----------
 
   /** Partitioned by model_run_id: the ledger grows with run history,
-    * so the per-run filters in the rerun gate touch one run's
-    * directory, not the whole ledger. The explicit read schema keeps
+    * so the per-run filter of the model-side J4 anti-join touches one
+    * run's directory, not the whole ledger. The explicit read schema keeps
     * the partition column a plain string (no partition-value type
     * inference) and pins column order. */
   def modelLedger: DataFrame =

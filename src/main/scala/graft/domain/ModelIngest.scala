@@ -1,13 +1,15 @@
 package graft.domain
 
-import graft.operators.{FixedPivot, KeepLatestDedup}
+import graft.operators.FixedPivot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Model (ADCIRC) ingest pipeline — Spark restatement of
   * runModelIngest.py / ingestModelTasks.py (SURVEY §3.2): run-property
-  * EAV pivot, data_source naming rules, model fact ingest with the
-  * rerun-gated dedup, and the per-run ApsViz station snapshot.
+  * EAV pivot, data_source naming rules, model fact ingest, and the
+  * per-run ApsViz station snapshot. The rerun repair (J8/J9 model
+  * variant) is the keep-latest fold of the batch commit
+  * ([[GaugeStore.stageModelData]]).
   */
 object ModelIngest {
 
@@ -158,58 +160,6 @@ object ModelIngest {
         timemark.cast("timestamp").as("timemark"),
         lit(false).as("ingested"),
         lit(false).as("overlap_past_file_date_time"))
-
-  /** J9 rerun gate, driven from the model-file ledger exactly as the
-    * reference (ingestModelTasks.py:50-56, 375-387): duplicates are
-    * deleted only when the same (file, source keys, timemark) has >1
-    * distinct processing_datetime — i.e. the run was harvested more
-    * than once. */
-  /** Run-scope repair trigger — the gate [[graft.IngestCli]]'s
-    * modelRunIngest actually runs after each commit: more ledger rows
-    * than distinct files in the (data_source, instance, metclass,
-    * timemark) scope means a rerun under a NEW processing stamp or a
-    * same-stamp crash retry double-appended; either way the scoped
-    * keep-latest repair must run. Centralized here so the pipeline
-    * gate and the per-file [[rerunDetected]] (the reference's J9
-    * shape, spec-pinned) cannot drift apart silently. */
-  def rerunRepairNeeded(ledger: DataFrame, dataSource: String,
-      sourceInstance: String, forcingMetclass: String,
-      timemark: Column): Boolean = {
-    val stats = ledger.filter(
-      col("data_source") === dataSource &&
-        col("source_instance") === sourceInstance &&
-        col("forcing_metclass") === forcingMetclass &&
-        col("timemark") === timemark)
-      .agg(count(lit(1)).as("rows"), countDistinct("file_name").as("files"))
-      .collect()(0)
-    stats.getLong(0) > stats.getLong(1)
-  }
-
-  def rerunDetected(
-      ledger: DataFrame, fileName: String, timemark: Column,
-      dataSource: Option[String] = None,
-      sourceInstance: Option[String] = None,
-      forcingMetclass: Option[String] = None): Boolean = {
-    val keyed = Seq(
-      dataSource.map(col("data_source") === _),
-      sourceInstance.map(col("source_instance") === _),
-      forcingMetclass.map(col("forcing_metclass") === _)).flatten
-      .foldLeft(col("file_name") === fileName && col("timemark") === timemark)(_ && _)
-    ledger.filter(keyed)
-      .select("processing_datetime").distinct().count() > 1
-  }
-
-  /** Model dedup (J8 model variant): scoped by the run's timemark
-    * rather than a time window (ingestModelTasks.py:102-114);
-    * precedence = processing order, encoded by `processing_seq`.
-    */
-  def dedupRun(fact: DataFrame, timemark: Column, precedence: Column): DataFrame = {
-    val inScope = col("timemark") === timemark
-    // null-timemark rows pass through UNTOUCHED: === is NULL for them,
-    // so filter(inScope) and filter(!inScope) would BOTH drop the row
-    KeepLatestDedup(fact.filter(inScope), Seq("source_id", "time"), Seq(precedence))
-      .unionByName(fact.filter(!coalesce(inScope, lit(false))))
-  }
 
   /** ApsViz station snapshot for a run
     * (createIngestApsVizStationData.py, SURVEY §3.2 step

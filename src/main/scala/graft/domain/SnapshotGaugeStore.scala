@@ -24,15 +24,17 @@ import graft.sources.SnapshotTable
   * like a streaming sink's batch id). An obs batch commits through the
   * keep-latest verb itself ([[SnapshotTable.keepLatestWhere]] with the
   * batch as its inserts), so no version holds a row next to the one
-  * that supersedes it; a model batch commits through
-  * [[SnapshotTable.appendIfAbsentWithStats]].
+  * that supersedes it; a model batch commits through the same verb,
+  * scoped to its runs' timemarks, so a rerun replaces the run's older
+  * generation inside its own commit.
   *
-  * Keep-latest and the rerun repair ([[swapModelRunDatePartitions]])
-  * are copy-on-write verbs of the table's DML pipeline
-  * ([[SnapshotTable.keepLatestWhere]], [[SnapshotTable.swapWhere]]).
-  * Each commits keyed and unscoped, and the pipeline's conflict retry
-  * is their only retry: an interleaved rewrite or keyed commit forces
-  * a recompute from the new head, a blind append commutes.
+  * Keep-latest and the explicit run-day swap
+  * ([[swapModelRunDatePartitions]]) are copy-on-write verbs of the
+  * table's DML pipeline ([[SnapshotTable.keepLatestWhere]],
+  * [[SnapshotTable.swapWhere]]). Each commits keyed and unscoped, and
+  * the pipeline's conflict retry is their only retry: an interleaved
+  * rewrite or keyed commit forces a recompute from the new head, a
+  * blind append commutes.
   *
   * Daily rollup maintenance is CDC-DRIVEN: [[rollupDaily]] diffs the
   * fact table since the version the rollup last reflected and
@@ -123,12 +125,26 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
       } finally rows.unpersist()
     }
 
-  /** The batch's commit is one tagged append, laid out one file set
-    * per run day so the `run_day` stats prune to a run's own files. */
+  /** The batch's commit is keep-latest over its rows and the live rows
+    * of its runs (the reference's rerun repair, ingestModelTasks.py:
+    * 102-114): per `(source_id, time)` within a run's `run_day` and
+    * `timemark`, the latest `proc_ts` survives. A first run matches no
+    * stored row and commits its rows; a rerun rewrites only the files
+    * holding its timemark's rows, in the same commit. Laid out one file
+    * set per run day so the `run_day` stats prune to a run's own files.
+    * The run list is O(runs per batch) — one driver collect. */
   override def stageModelData(df: DataFrame, stagingDir: String): Unit =
     stageFact(stagingDir) { tag =>
-      modelTable.appendIfAbsentWithStats(
-        withModelParts(df).repartition(col("run_day")), tag, Seq("run_day"))
+      // one read of the batch serves its run list and the fold
+      val rows = withModelParts(df).repartition(col("run_day")).cache()
+      try {
+        val runs = rows.select("run_day", "timemark").distinct().collect()
+          .filterNot(_.isNullAt(0))
+        val inScope = runs.map(r => col("run_day") === r.getLong(0) &&
+          col("timemark") === lit(r.get(1))).reduceOption(_ || _).getOrElse(lit(false))
+        modelTable.keepLatestWhere(inScope, Seq("source_id", "time", "timemark"),
+          Seq(col("proc_ts")), Seq("run_day"), Some(rows), Some(tag))
+      } finally rows.unpersist()
       ()
     }
 
@@ -179,12 +195,13 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
 
   override def hasModelData: Boolean = modelTable.currentVersion > 0
 
-  /** Rerun repair, one [[SnapshotTable.swapWhere]] commit: every row
-    * of the repaired run days is replaced by `df`, other runs' rows
+  /** Run-day swap, one [[SnapshotTable.swapWhere]] commit: every row
+    * of the swapped run days is replaced by `df`, other runs' rows
     * sharing the rewritten files (a NULL `run_day` too) are carried
-    * through. The `run_day` stats prune the candidates, so a rerun
-    * costs one run's data, not the table size. The repaired-day list
-    * is O(few) — one driver collect. */
+    * through. The `run_day` stats prune the candidates, so a swap
+    * costs one run's data, not the table size. The swapped-day list
+    * is O(few) — one driver collect. No ingest path calls it: a rerun
+    * is repaired inside its batch commit ([[stageModelData]]). */
   override def swapModelRunDatePartitions(df: DataFrame): Unit = {
     val repaired = withModelParts(df)
     val days = repaired.select(col("run_day")).distinct().collect()

@@ -64,15 +64,16 @@ object StreamingIngest {
       .start()
   }
 
-  /** One micro-batch: normalize → enrich → route → one
-    * [[GaugeStore.atomicCommit]] of the fact, the keep-latest fold the
-    * batch path commits too. Mirrors ObsIngest.ingestSource exactly,
-    * minus the read. */
+  /** One micro-batch: normalize → enrich → route → register the source
+    * in the gauge-source dim → one [[GaugeStore.atomicCommit]] of the
+    * fact, the keep-latest fold the batch path commits too. Mirrors the
+    * batch path exactly, minus the read and the ledger. */
   private[streaming] def ingestBatch(
       spark: SparkSession, meta: SourceMeta, store: GaugeStore, batch: DataFrame): Unit = {
     if (batch.isEmpty) return
     val stations = store.stations
     val gaugeSource = ObsIngest.buildGaugeSource(stations, meta)
+    store.upsertGaugeSource(meta, gaugeSource)
     val data = ObsIngest.normalize(batch, meta)
     val fact = ObsIngest.routeMeasure(
         ObsIngest.attachSourceId(data, gaugeSource, stations), meta.source_variable)

@@ -19,16 +19,16 @@ import org.apache.spark.sql.types._
   * uses, so streaming and batch semantics cannot drift: per-run fact +
   * ledger rows publish as one atomic commit, re-announcement under the
   * same processing stamp is a no-op (ledger anti-join), and a genuine
-  * rerun (new stamp) triggers the ledger-driven keep-latest repair
-  * scoped to the run's partitions.
+  * rerun (new stamp) keeps the latest-processed rows of the run's
+  * timemark inside that commit.
   *
   * Crash contract: foreachBatch can replay a batch after a restart.
   * With a manifest-supplied `processing_datetime` the replay is
   * EXACTLY-ONCE (the run ledger already holds the stamp → 0 new
   * files); without one each attempt mints a fresh wall-clock stamp, so
-  * a replay lands as a detected rerun and the repair converges to the
-  * same final state (at-least-once + self-repair, the reference's cron
-  * semantics).
+  * a replay lands as a rerun whose commit keeps its own rows and
+  * converges to the same final state (at-least-once + self-repair, the
+  * reference's cron semantics).
   */
 object StreamingModelIngest {
 
@@ -100,9 +100,9 @@ object StreamingModelIngest {
         // before the checkpoint commits — the batch replays into the
         // same exception forever and every manifest behind it stalls.
         // Catch per RUN, record a durable dead-letter row (the
-        // operator's re-drive list — modelRunIngest is idempotent via
-        // the rerun gate, so re-running a repaired run is safe), and
-        // let the stream advance.
+        // operator's re-drive list — modelRunIngest's batch commit keeps
+        // the latest-processed rows of the run, so re-running a
+        // repaired run is safe), and let the stream advance.
         try {
           graft.IngestCli.modelRunIngest(spark, store,
             runDir = r.getAs[String]("run_dir"),

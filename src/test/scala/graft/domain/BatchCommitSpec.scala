@@ -4,11 +4,13 @@ import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** The obs batch commit is keep-latest itself: the batch's rows are
-  * written once, in ONE tagged commit that also drops every stored row
-  * they supersede in the batch's source and days. So no snapshot
-  * version shows a row next to the one that supersedes it, and no
-  * crash can leave such a pair behind.
+/** A batch commit is keep-latest itself: the batch's rows are written
+  * once, in ONE tagged commit that also drops every stored row they
+  * supersede — in the batch's source and days for obs, in the run's
+  * timemark for a model rerun. So no snapshot version shows a row next
+  * to the one that supersedes it, and no crash can leave such a pair
+  * behind. The batch's source dim is written before that commit, so a
+  * committed fact always has its source registered.
   */
 class BatchCommitSpec extends SparkSuite {
 
@@ -133,5 +135,57 @@ class BatchCommitSpec extends SparkSuite {
     assert(store.gaugeData.count() == batch1.size)
     assert(rows == batch1.size,
       s"$rows fact rows written for a batch of ${batch1.size}: $factWrites")
+  }
+  test("no model_data log version holds two live rows for one (source_id, time, timemark) across a rerun") {
+    val (root, _) = fixture("graft-model-versions")
+    val store = GaugeStore.open(spark, root)
+    val runId = "4358-2023042312-gfsforecast"
+    val runDir = Paths.get(root).getParent.resolve(runId)
+    Files.createDirectories(runDir)
+    def writeRun(level: Double): Unit =
+      Files.write(runDir.resolve("FORECAST_NOAASTATIONS.csv"),
+        ("TIME,STATION,WATER_LEVEL\n" +
+          s"2023-04-23T13:00:00,8410140,$level\n" +
+          s"2023-04-23T14:00:00,8410140,${level + 0.1}").getBytes)
+    def run(stamp: String): Long = graft.IngestCli.modelRunIngest(spark, store,
+      runDir.toString, runId, "2023-04-23T12:00:00", "gfsforecast", "ec95d",
+      None, "inst1", "synoptic", "https://ui.example",
+      processingDatetime = Some(stamp))
+    writeRun(0.5)
+    assert(run("2023-04-23T13:30:00") == 1)
+    // the rerun: the same run dir, rewritten, under a new stamp
+    writeRun(1.5)
+    assert(run("2023-04-23T15:00:00") == 1)
+    val table = new graft.sources.SnapshotTable(spark, s"$root/model_data")
+    val versions = 1 to table.currentVersion
+    assert(versions.nonEmpty)
+    versions.foreach { v =>
+      val dup = table.read(Some(v)).groupBy("source_id", "time", "timemark").count()
+        .filter(col("count") > 1).count()
+      assert(dup == 0, s"version $v holds $dup (source_id, time, timemark) key(s) twice")
+    }
+    assert(store.modelData.select("water_level").collect().map(_.getDouble(0))
+      .toSeq.sorted == Seq(1.5, 1.6))
+  }
+
+  test("an obs batch whose source-dim write fails serves its row after vacuum and a rerun") {
+    val (root, harvest) = fixture("graft-dim-order")
+    drop(harvest, "2023-04-23T12_00_00", batch1: _*)
+    var failed = false
+    val failing = new SnapshotGaugeStore(spark, root) {
+      override def writeGaugeSource(df: org.apache.spark.sql.DataFrame): Unit =
+        if (!failed) { failed = true; throw new IllegalStateException("dim write failed") }
+        else super.writeGaugeSource(df)
+    }
+    try ingest(failing, harvest)
+    catch { case _: IllegalStateException => }
+    assert(failed)
+    val fresh = GaugeStore.open(spark, root)
+    fresh.vacuum()
+    ingest(fresh, harvest)
+    val js = QueryServe.handle(fresh, Map("op" -> "get_obs_timeseries_station_data",
+      "station" -> "8410140", "start" -> "2023-04-23T00:00:00",
+      "end" -> "2023-04-24T00:00:00"))
+    assert(js.contains(""""tidal_gauge_water_level":1.3"""), js)
   }
 }

@@ -50,15 +50,17 @@ object CrashFs {
   val calls = new java.util.concurrent.atomic.AtomicInteger()
 }
 
-/** Crash-point sweep over the two batch commits: one obs batch that
-  * overlaps the stored rows and one model run. For a crash at every
-  * mutating call k of the batch (a seeded sample in the default run;
-  * all of them with `-Dcrash.points=all`, or N sampled with
-  * `-Dcrash.points=N`), a fresh store over the crashed root runs
-  * vacuum, and then:
+/** Crash-point sweep over the three batch commits: one obs batch that
+  * overlaps the stored rows, one model run, and a rerun of that model
+  * run under a new processing stamp. For a crash at every mutating call
+  * k of the batch (a seeded sample in the default run; all of them with
+  * `-Dcrash.points=all`, or N sampled with `-Dcrash.points=N`), a fresh
+  * store over the crashed root runs vacuum, and then:
   *  - the facts are exactly the pre-batch or the post-batch rows;
   *  - the ledger is the pre-batch or the post-batch one, and never
   *    marks the batch's files while the facts lack them;
+  *  - the batch source's dim keys are the pre-batch or the post-batch
+  *    ones, and never lag facts that hold the batch;
   *  - a rerun of the same ingest converges on the post-batch state.
   */
 class CrashPointSpec extends SparkSuite {
@@ -116,8 +118,9 @@ class CrashPointSpec extends SparkSuite {
     CrashFs.calls.get
   }
 
-  /** A store state as the facts' rows and the ledger's file names. */
-  private type State = (Seq[String], Seq[String])
+  /** A store state as the facts' rows, the ledger's file names and the
+    * source dim's keys. */
+  private type State = (Seq[String], Seq[String], Seq[String])
 
   /** Sweeps a crash over every sampled mutating call of `batch` on a
     * store restored from `template` (a copy of the pre-batch store at
@@ -140,7 +143,9 @@ class CrashPointSpec extends SparkSuite {
       val problem =
         if (got._1 != pre._1 && got._1 != post._1) Some(s"facts are neither pre nor post: ${got._1}")
         else if (got._2 != pre._2 && got._2 != post._2) Some(s"ledger is neither pre nor post: ${got._2}")
+        else if (got._3 != pre._3 && got._3 != post._3) Some(s"source dim is neither pre nor post: ${got._3}")
         else if (got._2 == post._2 && got._1 != post._1) Some("ledger ahead of the facts")
+        else if (got._1 == post._1 && got._3 != post._3) Some("source dim behind the facts")
         else {
           batch(GaugeStore.open(spark, work.toString))
           val again = state(GaugeStore.open(spark, work.toString))
@@ -155,8 +160,8 @@ class CrashPointSpec extends SparkSuite {
     val base = Files.createTempDirectory("graft-crash-obs")
     val harvest = base.resolve("harvest"); Files.createDirectories(harvest)
     val work = base.resolve("store")
-    Files.write(base.resolve("geom.csv"),
-      "8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A".getBytes)
+    val eastport = "8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A"
+    Files.write(base.resolve("geom.csv"), eastport.getBytes)
     def drop(tm: String, rows: String*): Unit =
       Files.write(harvest.resolve(s"noaaweb_stationdata_water_level_$tm.csv"),
         ("TIME,STATION,WATER_LEVEL\n" + rows.mkString("\n")).getBytes)
@@ -168,43 +173,76 @@ class CrashPointSpec extends SparkSuite {
     drop("2023-04-23T12_00_00", "2023-04-23T10:00:00,8410140,1.10",
       "2023-04-23T12:00:00,8410140,1.30")
     ingest(seeded)
+    // a station registered after the first batch: the batch's source dim
+    // gains its key
+    Files.write(base.resolve("geom.csv"),
+      (eastport + "\n8418150,43.6,-70.2,gmt,NOAA,Portland,tidal,us,me,Cumb,01B").getBytes)
+    seeded.writeStations(ObsIngest.seedStations(spark, base.resolve("geom.csv").toString))
     val template = base.resolve("template")
     copyTree(work, template)
     // the batch: a later harvest that rewrites 12:00 and adds 13:00
     drop("2023-04-23T18_00_00", "2023-04-23T12:00:00,8410140,9.99",
-      "2023-04-23T13:00:00,8410140,1.40")
+      "2023-04-23T13:00:00,8410140,1.40", "2023-04-23T13:00:00,8418150,2.10")
     val (n, ks, failed) = sweep(work, template, s => (
       s.gaugeData.select("source_id", "time", "timemark", "water_level")
         .collect().map(_.toString).toSeq.sorted,
-      s.ledger.select("file_name").collect().map(_.getString(0)).toSeq.sorted))(ingest)
+      s.ledger.select("file_name").collect().map(_.getString(0)).toSeq.sorted,
+      if (!s.tableExists("gauge_source")) Nil
+      else s.gaugeSource.select("source_id").collect().map(_.getLong(0).toString).toSeq.sorted))(ingest)
     info(s"obs batch: $n mutating calls, crashed at k = ${ks.mkString(",")}")
     assert(failed.isEmpty, failed.mkString("\n"))
   }
 
-  test("a crash at any mutating call of a model run recovers to the pre- or post-batch state") {
-    val base = Files.createTempDirectory("graft-crash-model")
+  /** A store over `base` with two stations and one model run dir; the
+    * run's ingest under a processing stamp, and the store's state. */
+  private class ModelFixture(base: Path) {
     val runId = "4358-2023042312-gfsforecast"
     val runDir = base.resolve(runId); Files.createDirectories(runDir)
     val work = base.resolve("store")
     Files.write(base.resolve("geom.csv"), ("8410140,44.9,-66.9,gmt,NOAA/NOS,Eastport,tidal,us,me,Washington,01A\n" +
       "8418150,43.6,-70.2,gmt,NOAA/NOS,Portland,tidal,us,me,Cumberland,01B").getBytes)
-    Files.write(runDir.resolve("FORECAST_NOAASTATIONS.csv"),
-      ("TIME,STATION,WATER_LEVEL\n2023-04-23T13:00:00,8410140,0.5\n" +
-        "2023-04-23T14:00:00,8410140,0.6\n2023-04-23T13:00:00,8418150,0.7").getBytes)
     GaugeStore.open(spark, work.toString)
       .writeStations(ObsIngest.seedStations(spark, base.resolve("geom.csv").toString))
-    val template = base.resolve("template")
-    copyTree(work, template)
-    val (n, ks, failed) = sweep(work, template, s => (
-      if (!s.hasModelData) Nil else s.modelData.select("source_id", "time", "timemark", "water_level")
-        .collect().map(_.toString).toSeq.sorted,
-      s.modelLedger.select("file_name").collect().map(_.getString(0)).toSeq.sorted)) { s =>
+    def writeRun(level: Double): Unit =
+      Files.write(runDir.resolve("FORECAST_NOAASTATIONS.csv"),
+        (s"TIME,STATION,WATER_LEVEL\n2023-04-23T13:00:00,8410140,$level\n" +
+          s"2023-04-23T14:00:00,8410140,${level + 0.1}\n2023-04-23T13:00:00,8418150,${level + 0.2}").getBytes)
+    def ingest(stamp: String)(s: GaugeStore): Unit = {
       graft.IngestCli.modelRunIngest(spark, s, runDir.toString, runId,
         "2023-04-23T12:00:00", "gfsforecast", "ec95d", None, "inst1", "synoptic",
-        "https://ui.example", processingDatetime = Some("2023-04-23T13:30:00"))
+        "https://ui.example", processingDatetime = Some(stamp))
       ()
     }
+    def state(s: GaugeStore): State = (
+      if (!s.hasModelData) Nil else s.modelData.select("source_id", "time", "timemark", "water_level")
+        .collect().map(_.toString).toSeq.sorted,
+      s.modelLedger.select("file_name").collect().map(_.getString(0)).toSeq.sorted,
+      if (!s.tableExists("model_source")) Nil
+      else s.modelSource.select("source_id").collect().map(_.getLong(0).toString).toSeq.sorted)
+  }
+
+  test("a crash at any mutating call of a model run recovers to the pre- or post-batch state") {
+    val base = Files.createTempDirectory("graft-crash-model")
+    val f = new ModelFixture(base)
+    f.writeRun(0.5)
+    val template = base.resolve("template")
+    copyTree(f.work, template)
+    val (n, ks, failed) = sweep(f.work, template, f.state)(f.ingest("2023-04-23T13:30:00"))
     info(s"model run: $n mutating calls, crashed at k = ${ks.mkString(",")}")
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  test("a crash at any mutating call of a model rerun under a new stamp recovers to the pre- or post-rerun state") {
+    val base = Files.createTempDirectory("graft-crash-rerun")
+    val f = new ModelFixture(base)
+    f.writeRun(0.5)
+    f.ingest("2023-04-23T13:30:00")(GaugeStore.open(spark, f.work.toString))
+    val template = base.resolve("template")
+    copyTree(f.work, template)
+    // the rerun: the same run dir, rewritten, under a new stamp
+    f.writeRun(1.5)
+    val (n, ks, failed) = sweep(f.work, template, f.state)(f.ingest("2023-04-23T15:00:00"))
+    info(s"model rerun: $n mutating calls, crashed at k = ${ks.mkString(",")}")
     assert(failed.isEmpty, failed.mkString("\n"))
   }
 }

@@ -143,8 +143,8 @@ class HistoricalArchiveSpec extends SparkSuite {
     assert(store.modelLedger.filter(col("ingested")).count() == 1)
     // same-stamp re-run (crash-retry shape): archive is idempotent and
     // the ledger gates re-ingest to 0 new files. (A re-run with a NEW
-    // stamp is a genuine rerun — it re-ingests and the rerun gate
-    // repairs, per ingestModelTasks.py:375-387.)
+    // stamp is a genuine rerun — it re-ingests and its batch commit
+    // keeps the latest-processed rows, per ingestModelTasks.py:375-387.)
     graft.IngestCli.runTask(spark, "ArchiveHistorical", Map(
       "histDir" -> root, "configItems" -> s"$root/config_item",
       "ingest" -> "true", "store" -> s"$root/store",

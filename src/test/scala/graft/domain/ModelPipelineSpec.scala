@@ -59,26 +59,21 @@ class ModelPipelineSpec extends SparkSuite {
     val timemark = lit("2023-04-23 12:00:00")
     val run1 = ModelIngest.ingestRun(spark, meta, src, stations, timemark,
       s"$dir/FORECAST_NOAASTATIONS.csv")
-      .withColumn("processing_seq", lit(1))
+      .withColumn("proc_ts", lit("2023-04-23 20:00:00").cast("timestamp"))
     assert(run1.count() == 3)
     assert(run1.filter(col("wave_height").isNotNull).count() == 0)
 
-    // rerun: same file re-ingested later -> duplicates until gate fires
-    val run2 = run1.withColumn("processing_seq", lit(2))
+    // rerun: same file re-ingested later, under a later processing stamp
+    val run2 = run1.withColumn("proc_ts", lit("2023-04-23 22:00:00").cast("timestamp"))
       .withColumn("water_level", col("water_level") + 1.0)
-    val combined = run1.unionByName(run2)
 
-    val ledger = Seq(
-      ("FORECAST_NOAASTATIONS.csv", "2023-04-23 12:00:00", "2023-04-23 20:00:00"),
-      ("FORECAST_NOAASTATIONS.csv", "2023-04-23 12:00:00", "2023-04-23 22:00:00"))
-      .toDF("file_name", "tm", "pd")
-      .select(col("file_name"), col("tm").cast("timestamp").as("timemark"),
-        col("pd").cast("timestamp").as("processing_datetime"))
-    assert(ModelIngest.rerunDetected(ledger, "FORECAST_NOAASTATIONS.csv",
-      lit("2023-04-23 12:00:00").cast("timestamp")))
-
-    val deduped = ModelIngest.dedupRun(combined,
-      timemark.cast("timestamp"), col("processing_seq"))
+    // each run commits through the store's batch fold: keep-latest by
+    // proc_ts within the run's timemark
+    val store = GaugeStore.open(spark,
+      Files.createTempDirectory("graft-model-fold").resolve("store").toString)
+    Seq(run1, run2).foreach(run =>
+      store.atomicCommit(store.newCommitId("model"))(store.stageModelData(run, _)))
+    val deduped = store.modelData
     assert(deduped.count() == 3)
     // later processing wins
     assert(deduped.filter(col("water_level") >= 1.4).count() == 3)
@@ -156,9 +151,8 @@ class ModelPipelineSpec extends SparkSuite {
     assert(store.modelLedger.count() == 1)
     assert(store.modelData.count() == 3)
 
-    // (c) genuine rerun (new harvest drop, new stamp): gate fires from
-    // the ledger's processing_datetime history and the repair keeps the
-    // latest-processed values only
+    // (c) genuine rerun (new harvest drop, new stamp): the batch commit
+    // keeps the latest-processed values only
     writeRun(1.5)
     assert(ingest("2023-04-23T15:00:00") == 1)
     assert(store.modelLedger.count() == 2)

@@ -50,16 +50,11 @@ class StreamingIngestSpec extends SparkSuite {
     StreamingIngest.runOnce(spark, meta, store, harvest, ckpt)
     assert(store.gaugeData.count() == 3)
 
-    // read path over the streamed store
+    // read path over the streamed store: the micro-batch registered
+    // its source in the dim
     val js = QueryApi.obsTimeseriesStationDataJson(
-      store.gaugeData, store.gaugeSource_safe(meta), store.stations,
+      store.gaugeData, store.gaugeSource, store.stations,
       "8410140", "2023-04-23 00:00:00", "2023-04-24 00:00:00")
     assert(js.contains(""""tidal_gauge_water_level":9.99"""))
-  }
-
-  private implicit class StoreOps(store: GaugeStore) {
-    // streaming path doesn't persist the source dim; derive it
-    def gaugeSource_safe(m: SourceMeta) =
-      ObsIngest.buildGaugeSource(store.stations, m)
   }
 }

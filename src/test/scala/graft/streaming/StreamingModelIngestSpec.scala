@@ -9,8 +9,8 @@ import java.nio.file.{Files, Paths}
   * files announce completed runs; consumption is exactly-once across
   * restarts (file-source checkpoint + explicit processing stamps), the
   * results are identical to the batch [[graft.IngestCli.modelRunIngest]]
-  * path, and a re-announced run with a new stamp flows through the
-  * rerun-gated repair. */
+  * path, and a re-announced run with a new stamp is repaired inside
+  * its batch commit. */
 class StreamingModelIngestSpec extends SparkSuite {
 
   private def writeRun(runDir: String, level: Double): Unit = {
@@ -138,9 +138,9 @@ class StreamingModelIngestSpec extends SparkSuite {
 
     StreamingModelIngest.runOnce(spark, store, watch, ckpt)
     // the good run landed in FULL despite the poison one (liveness is
-    // the contract here; whatever the poison run half-committed before
-    // throwing is repaired by the rerun gate when the operator
-    // re-drives it from the dead-letter list)
+    // the contract here; the poison run threw before its batch commit,
+    // and a re-drive from the dead-letter list commits the run's rows
+    // with keep-latest like any rerun)
     assert(store.modelLedger.filter(col("model_run_id") === goodId).count() == 1)
     assert(store.modelData.filter(
       col("timemark") === lit("2023-04-23 12:00:00").cast("timestamp")).count() >= 3)
