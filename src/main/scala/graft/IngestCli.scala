@@ -1,7 +1,7 @@
 package graft
 
 import graft.domain._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Task-dispatching CLI — the engine's control plane, mirroring the
@@ -262,13 +262,14 @@ object IngestCli {
 
       case "Stats" =>
         // operational table statistics: live files/bytes of the fact
-        // tables from their manifests; files/bytes/leaves + the worst
+        // and ledger tables from their manifests; files/bytes/leaves + the worst
         // leaf by file count (the compaction trigger signal) for the
         // rest from a directory walk — metadata only, no Spark jobs
         val store = GaugeStore.open(spark, req("store"))
         val tables = opts.getOrElse("tables",
-          "gauge_data,model_data,ledger_obs,ledger_model,stations," +
-            "gauge_source,model_source,apsviz_station,retain_obs_station")
+          "gauge_data,model_data,ledger_obs,ledger_model,apsviz_station_file_meta," +
+            "retain_obs_station_file_meta,stations,gauge_source,model_source," +
+            "apsviz_station,retain_obs_station")
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq
         tables.flatMap(t => store.tableStats(t)).foreach(m =>
           println(graft.util.Json.mapper.writeValueAsString(m)))
@@ -467,16 +468,19 @@ object IngestCli {
   /** The obs SequenceIngest pipeline (SURVEY §3.1): per catalog source
     * — discover files, anti-join the ledger, ingest the new ones, and
     * commit the batch with keep-latest over its source and dates, then
-    * its ledger rows. Sources are
-    * independent; failures skip the source and continue (reference
-    * log-and-continue semantics, runObsIngest.py:116-117).
+    * its ledger rows. Sources are independent; failures skip the source
+    * and continue (reference log-and-continue semantics,
+    * runObsIngest.py:116-117): a malformed file fails the read of its
+    * source's batch, which is then retried file by file; a failure on
+    * the store side fails the batch once, and its files retry on the
+    * next run.
     */
   def sequenceIngest(
       spark: SparkSession,
       store: GaugeStore,
       catalog: Seq[SourceMeta],
       harvestDir: String,
-      now: org.apache.spark.sql.Column,
+      now: Column,
       deleteProcessed: Boolean = false): Long = {
     val stations = store.stations
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -485,165 +489,187 @@ object IngestCli {
       val glob = s"$harvestDir/${meta.filename_prefix}_*.csv"
       val matched = fs.globStatus(new org.apache.hadoop.fs.Path(glob))
       if (matched != null && matched.nonEmpty) {
-        val names = matched.map(_.getPath.getName).toSeq.sorted
-        try total += ingestObsFiles(spark, store, stations, meta, harvestDir, now,
-          names, fs, deleteProcessed)
-        catch {
-          case e: Exception =>
-            // FAILFAST means one corrupt file aborts the source's whole
-            // batch scan — degrade to per-file granularity so the good
-            // files still land and ONLY the broken file stays
-            // unledgered (it retries next run, reference retry
-            // semantics, runObsIngest.py:116-117)
-            System.err.println(s"[ingest] source ${meta.data_source}/${meta.source_name} " +
-              s"batch failed (${e.getMessage}); retrying per file")
-            names.foreach { n =>
-              try total += ingestObsFiles(spark, store, stations, meta, harvestDir, now,
-                Seq(n), fs, deleteProcessed)
-              catch {
-                case e2: Exception => System.err.println(
-                  s"[ingest] skipping bad file $n: ${e2.getMessage}")
+        import spark.implicits._
+        def read(files: Seq[String]) =
+          readObsBatch(spark, stations, meta, harvestDir, now, files)
+        def commit(batch: ObsBatch) =
+          try commitObsBatch(spark, store, stations, meta, harvestDir, batch, fs,
+            deleteProcessed)
+          finally batch.release()
+        // a store-side failure (ledger read, dim write, commit) fails the
+        // batch once: its files stay unledgered and retry on the next run
+        try {
+          // J4 on the names alone: a ledgered file is never read again
+          val names = ObsIngest.newFilesOnly(
+            matched.map(_.getPath.getName).toSeq.toDF("file_name"), store.ledger, now)
+            .collect().map(_.getString(0)).toSeq.sorted
+          scala.util.Try(read(names)) match {
+            case scala.util.Success(batch) => total += commit(batch)
+            case scala.util.Failure(e) =>
+              // FAILFAST means one corrupt file aborts the source's whole
+              // batch read — degrade to per-file granularity so the good
+              // files still land and ONLY the broken file stays
+              // unledgered (it retries next run, reference retry
+              // semantics, runObsIngest.py:116-117); a one-file batch
+              // has nothing to isolate
+              System.err.println(s"[ingest] source ${meta.data_source}/" +
+                s"${meta.source_name} batch input failed (${e.getMessage}); " +
+                (if (names.size > 1) "retrying per file" else "it retries next run"))
+              if (names.size > 1) names.foreach { n =>
+                try total += commit(read(Seq(n)))
+                catch {
+                  case scala.util.control.NonFatal(e2) => System.err.println(
+                    s"[ingest] skipping bad file $n: ${e2.getMessage}")
+                }
               }
-            }
+          }
+        } catch {
+          case scala.util.control.NonFatal(e) => System.err.println(
+            s"[ingest] source ${meta.data_source}/${meta.source_name} batch " +
+              s"failed in the store (${e.getMessage}); it retries next run")
         }
       }
     }
     total
   }
 
-  /** Ingest an explicit file set of one source — the body of
-    * [[sequenceIngest]], callable for the whole batch or a single file
-    * (per-file failure isolation). Returns the number of NEW files
-    * committed to the ledger. */
-  private def ingestObsFiles(
-      spark: SparkSession,
-      store: GaugeStore,
-      stations: org.apache.spark.sql.DataFrame,
-      meta: SourceMeta,
-      harvestDir: String,
-      now: org.apache.spark.sql.Column,
-      fileNames: Seq[String],
-      fs: org.apache.hadoop.fs.FileSystem,
-      deleteProcessed: Boolean = false): Long = {
-    var total = 0L
+  /** One source's batch as read from its new harvest files: the rows
+    * (cached: every file is read once), the files' ledger rows and,
+    * when any of them has rows to load, their fact rows. */
+  private final case class ObsBatch(harvest: DataFrame, fresh: DataFrame,
+      names: Seq[String], rows: Option[DataFrame]) {
+    def release(): Unit = harvest.unpersist()
+  }
+
+  /** The harvest side of a source's batch of new files, for the whole
+    * batch or a single file (per-file failure isolation): the files are
+    * read and parsed here, once, before anything is written, so a
+    * malformed file fails this step and nothing else. */
+  private def readObsBatch(spark: SparkSession, stations: DataFrame,
+      meta: SourceMeta, harvestDir: String, now: Column,
+      fileNames: Seq[String]): ObsBatch = {
+    if (fileNames.isEmpty)
+      return ObsBatch(spark.emptyDataFrame, spark.emptyDataFrame, Nil, None)
     val harvest = ObsIngest.readHarvest(spark, meta,
-      fileNames.map(n => s"$harvestDir/$n"): _*)
-    val candidates = ObsIngest.harvestFileMeta(harvest, meta, harvestDir, now,
-      allFiles = fileNames)
-    val fresh = ObsIngest.newFilesOnly(candidates, store.ledger, now).cache()
+      fileNames.map(n => s"$harvestDir/$n"): _*).cache()
     try {
-      val freshNames = fresh.select("file_name").collect().map(_.getString(0)).toSeq
-      if (freshNames.nonEmpty) {
-          // materialize everything read from `fresh` up front: fresh's
-          // plan anti-joins the ledger files, and a cache eviction
-          // after the commit below would recompute against the GROWN
-          // ledger (empty result or dangling file reads)
-          val loadable = fresh.filter(!col("ingested"))
-            .select("file_name").collect().map(_.getString(0))
-          // fact batch + ledger rows publish as ONE atomic commit (the
-          // reference's COPY + UPDATE ingested inside one transaction,
-          // ingestObsTasks.py:145-149/:405-409): ledger rows stage
-          // already ingested=true and land only after the fact commit,
-          // which applies keep-latest against earlier timemarks in the
-          // batch's own source and dates — no observable state has a
-          // ledger mark without its fact, or a row next to the one that
-          // supersedes it. The source dim is written first, so no
-          // committed fact lacks its source.
-          store.upsertGaugeSource(meta, ObsIngest.buildGaugeSource(stations, meta))
-          store.atomicCommit(store.newCommitId("obs")) { staging =>
-            // a batch whose rows were all dropped (e.g. only
-            // unregistered stations) commits no fact, but the ledger
-            // must still commit or the file re-fails forever
-            if (loadable.nonEmpty)
-              store.stageGaugeData(ObsIngest.ingestSource(spark, meta, stations,
-                loadable.toIndexedSeq.map(f => s"$harvestDir/$f"): _*),
-                meta.data_source, staging)
-            store.stageLedger(fresh.withColumn("ingested", lit(true)), staging)
-          }
-        total += freshNames.length
+      val fresh = ObsIngest.harvestFileMeta(harvest, meta, harvestDir, now,
+        allFiles = fileNames)
+      // a file whose rows were all dropped (e.g. only unregistered
+      // stations) loads no fact, but its ledger row still commits or
+      // the file re-fails forever; a null-bounds file loads nothing
+      val loadable = fresh.filter(!col("ingested"))
+        .select("file_name").collect().map(_.getString(0)).toSeq
+      val rows = if (loadable.isEmpty) None else Some(ObsIngest.ingestSource(
+        harvest.filter(col("file_name").isin(loadable: _*)), meta, stations))
+      ObsBatch(harvest, fresh, fileNames, rows)
+    } catch {
+      case scala.util.control.NonFatal(e) => harvest.unpersist(); throw e
+    }
+  }
+
+  /** The store side of a source's batch: its source dim, the batch
+    * commit, the retain-obs snapshots and the removal of processed
+    * files. Returns the number of NEW files committed to the ledger. */
+  private def commitObsBatch(spark: SparkSession, store: GaugeStore,
+      stations: DataFrame, meta: SourceMeta, harvestDir: String, batch: ObsBatch,
+      fs: org.apache.hadoop.fs.FileSystem, deleteProcessed: Boolean): Long = {
+    if (batch.names.nonEmpty) {
+      // fact batch + ledger rows commit as ONE batch under one tag
+      // (the reference's COPY + UPDATE ingested inside one
+      // transaction, ingestObsTasks.py:145-149/:405-409): the ledger
+      // rows are already ingested=true and commit only after the fact
+      // commit, which applies keep-latest against earlier timemarks in
+      // the batch's own source and dates — no observable state has a
+      // ledger mark without its fact, or a row next to the one that
+      // supersedes it. The source dim is written first, so no
+      // committed fact lacks its source.
+      store.upsertGaugeSource(meta, ObsIngest.buildGaugeSource(stations, meta))
+      store.atomicCommit(store.newCommitId("obs")) { tag =>
+        batch.rows.foreach(store.stageGaugeData(_, meta.data_source, tag))
+        store.stageLedger(batch.fresh.withColumn("ingested", lit(true)), tag)
       }
-      // retain-obs processing runs UNCONDITIONALLY (not inside the
-      // new-files branch): its idempotence keys on the retain META
-      // ledger, so a crash that committed the data but not the retain
-      // side recovers on the next run even when that run ingests
-      // nothing new
-      val ingestedNames = freshNames
-          // retain-obs-station snapshots from sibling meta files
-          // (runRetainObsStationCreateIngest, SURVEY §3.1). Candidates
-          // derive from the DATA ledger minus the retain META ledger —
-          // not from this run's in-memory batch: a crash AFTER the
-          // atomic commit (data ledgered, retain not yet written)
-          // self-heals on the next run instead of skipping the batch's
-          // snapshots forever (recovery keyed on `fresh` cannot see
-          // them — newFilesOnly is empty once the ledger holds the
-          // batch). Per-meta-file fault isolation: one corrupt meta
-          // CSV loses only itself (no retain-ledger row → retried),
-          // never the files after it.
-          val doneMeta = store.retainObsStationFileMeta
-            .filter(col("data_source") === meta.data_source)
-            .select("file_name").collect().map(_.getString(0)).toSet
-          val retainCandidates = store.ledger
-            .filter(col("data_source") === meta.data_source &&
-              col("source_name") === meta.source_name)
-            .select(col("file_name"),
-              date_format(col("data_begin_time"), "yyyy-MM-dd HH:mm:ss").as("b"),
-              date_format(col("data_end_time"), "yyyy-MM-dd HH:mm:ss").as("e"),
-              date_format(col("timemark"), "yyyy-MM-dd HH:mm:ss").as("tm"))
-            .collect().toIndexedSeq
-          val processedMeta = retainCandidates.flatMap { r =>
-            val metaName = ObsIngest.metaFileNameFor(r.getString(0))
-            val metaPath = new org.apache.hadoop.fs.Path(s"$harvestDir/$metaName")
-            if (metaName != r.getString(0) && !doneMeta.contains(metaName) &&
-              fs.exists(metaPath)) {
-              try {
-                val raw = spark.read.option("header", "true").csv(metaPath.toString)
-                val names = raw.toDF(raw.columns.toIndexedSeq.map(_.toLowerCase): _*)
-                  .withColumnRenamed("station", "station_name")
-                  .select("station_name").distinct()
-                store.appendRetainObsStations(
-                  ObsIngest.retainObsStations(stations, names, meta,
-                    lit(r.getString(3)), lit(r.getString(1)), lit(r.getString(2))))
-                Some((metaName, r.getString(3), r.getString(1), r.getString(2)))
-              } catch {
-                case scala.util.control.NonFatal(e) =>
-                  System.err.println(
-                    s"[retain] $metaName failed (${e.getMessage}) — will retry next run")
-                  None
-              }
-            } else None
-          }
-          // per-meta-file bookkeeping ledger with the ingested commit
-          // marker (drf_retain_obs_station_file_meta, ingestObsTasks.py:322)
-          if (processedMeta.nonEmpty) {
-            import spark.implicits._
-            store.appendRetainObsStationFileMeta(
-              processedMeta.toDF("file_name", "tm", "b", "e").select(
-                lit(harvestDir).as("dir_path"),
-                col("file_name"),
-                lit(meta.data_source).as("data_source"),
-                lit(meta.source_name).as("source_name"),
-                lit(meta.source_archive).as("source_archive"),
-                lit(meta.location_type).as("location_type"),
-                col("tm").cast("timestamp").as("timemark"),
-                col("b").cast("timestamp").as("begin_date"),
-                col("e").cast("timestamp").as("end_date"),
-                // rows are appended AFTER the snapshot committed — the
-                // append itself is the commit marker (no false→true
-                // rewrite cycle, one fewer crash window)
-                lit(true).as("ingested")))
-          }
-          if (deleteProcessed) {
-            // S7: the reference removes harvest files once loaded and
-            // ledgered (ingestObsTasks.py:412-414) — the batch-path
-            // equivalent of the streaming cleanSource=delete option.
-            // The ledger, not file absence, stays the idempotence
-            // source of truth.
-            (ingestedNames ++ processedMeta.map(_._1)).foreach { n =>
-              fs.delete(new org.apache.hadoop.fs.Path(s"$harvestDir/$n"), false)
-            }
-          }
-    } finally fresh.unpersist()
-    total
+    }
+    // retain-obs processing runs UNCONDITIONALLY (not inside the
+    // new-files branch): its idempotence keys on the retain META
+    // ledger, so a crash that committed the data but not the retain
+    // side recovers on the next run even when that run ingests
+    // nothing new.
+    // Retain-obs-station snapshots from sibling meta files
+    // (runRetainObsStationCreateIngest, SURVEY §3.1). Candidates
+    // derive from the DATA ledger minus the retain META ledger —
+    // not from this run's in-memory batch: a crash AFTER the
+    // atomic commit (data ledgered, retain not yet written)
+    // self-heals on the next run instead of skipping the batch's
+    // snapshots forever (recovery keyed on `fresh` cannot see
+    // them — newFilesOnly is empty once the ledger holds the
+    // batch). Per-meta-file fault isolation: one corrupt meta
+    // CSV loses only itself (no retain-ledger row → retried),
+    // never the files after it.
+    val doneMeta = store.retainObsStationFileMeta
+      .filter(col("data_source") === meta.data_source)
+      .select("file_name").collect().map(_.getString(0)).toSet
+    val retainCandidates = store.ledger
+      .filter(col("data_source") === meta.data_source &&
+        col("source_name") === meta.source_name)
+      .select(col("file_name"),
+        date_format(col("data_begin_time"), "yyyy-MM-dd HH:mm:ss").as("b"),
+        date_format(col("data_end_time"), "yyyy-MM-dd HH:mm:ss").as("e"),
+        date_format(col("timemark"), "yyyy-MM-dd HH:mm:ss").as("tm"))
+      .collect().toIndexedSeq
+    val processedMeta = retainCandidates.flatMap { r =>
+      val metaName = ObsIngest.metaFileNameFor(r.getString(0))
+      val metaPath = new org.apache.hadoop.fs.Path(s"$harvestDir/$metaName")
+      if (metaName != r.getString(0) && !doneMeta.contains(metaName) &&
+        fs.exists(metaPath)) {
+        try {
+          val raw = spark.read.option("header", "true").csv(metaPath.toString)
+          val names = raw.toDF(raw.columns.toIndexedSeq.map(_.toLowerCase): _*)
+            .withColumnRenamed("station", "station_name")
+            .select("station_name").distinct()
+          store.appendRetainObsStations(
+            ObsIngest.retainObsStations(stations, names, meta,
+              lit(r.getString(3)), lit(r.getString(1)), lit(r.getString(2))))
+          Some((metaName, r.getString(3), r.getString(1), r.getString(2)))
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(
+              s"[retain] $metaName failed (${e.getMessage}) — will retry next run")
+            None
+        }
+      } else None
+    }
+    // per-meta-file bookkeeping ledger with the ingested commit
+    // marker (drf_retain_obs_station_file_meta, ingestObsTasks.py:322)
+    if (processedMeta.nonEmpty) {
+      import spark.implicits._
+      store.appendRetainObsStationFileMeta(
+        processedMeta.toDF("file_name", "tm", "b", "e").select(
+          lit(harvestDir).as("dir_path"),
+          col("file_name"),
+          lit(meta.data_source).as("data_source"),
+          lit(meta.source_name).as("source_name"),
+          lit(meta.source_archive).as("source_archive"),
+          lit(meta.location_type).as("location_type"),
+          col("tm").cast("timestamp").as("timemark"),
+          col("b").cast("timestamp").as("begin_date"),
+          col("e").cast("timestamp").as("end_date"),
+          // rows are appended AFTER the snapshot committed — the
+          // append itself is the commit marker (no false→true
+          // rewrite cycle, one fewer crash window)
+          lit(true).as("ingested")))
+    }
+    if (deleteProcessed) {
+      // S7: the reference removes harvest files once loaded and
+      // ledgered (ingestObsTasks.py:412-414) — the batch-path
+      // equivalent of the streaming cleanSource=delete option.
+      // The ledger, not file absence, stays the idempotence
+      // source of truth.
+      (batch.names ++ processedMeta.map(_._1)).foreach { n =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$harvestDir/$n"), false)
+      }
+    }
+    batch.names.size
   }
 
   /** One ADCIRC model run (SURVEY §3.2): per station-type harvest file
@@ -681,11 +707,11 @@ object IngestCli {
     var allSources = Seq.empty[org.apache.spark.sql.DataFrame]
     var ledgerRows = Seq.empty[org.apache.spark.sql.DataFrame]
     var facts = Seq.empty[org.apache.spark.sql.DataFrame]
-    // model-side J4 anti-join, ONE ledger scan for the whole run: files
-    // already ledgered under this processing stamp are skipped
-    // (idempotent re-invocation). Ledger rows and fact rows publish
-    // atomically below, so a ledgered file's fact is committed by
-    // construction.
+    // model-side J4 anti-join, ONE ledger scan for the whole run (the
+    // run id's manifest stats plan only its files): files already
+    // ledgered under this processing stamp are skipped (idempotent
+    // re-invocation). The ledger rows commit after the fact rows
+    // below, so a ledgered file's fact is committed by construction.
     val ingestedSeen: Set[String] = store.modelLedger.filter(
       col("model_run_id") === modelRunId &&
         col("processing_datetime") === procTs.cast("timestamp") &&
@@ -710,22 +736,23 @@ object IngestCli {
         }
       }
     }
-    // the run's fact rows + ledger rows (ingested=true) publish as ONE
-    // atomic commit — the reference's per-file BEGIN/COPY/UPDATE/COMMIT
-    // (ingestModelTasks.py:368-372) widened to the whole run: no
-    // observable state has a ledgered file without its fact or a fact
-    // without its ledger row. The fact commit keeps the latest-processed
-    // row per (source_id, time) of the run's timemark, so a rerun under
-    // a new stamp (ingestModelTasks.py:375-387) is repaired in that
-    // commit. The run's sources are registered first, so no committed
-    // fact lacks its source.
+    // the run's fact rows + ledger rows (ingested=true) commit as ONE
+    // batch under one tag — the reference's per-file
+    // BEGIN/COPY/UPDATE/COMMIT (ingestModelTasks.py:368-372) widened to
+    // the whole run: no observable state has a ledgered file without
+    // its fact, and a crash between the two commits leaves facts that
+    // the next run's re-ingest folds to the same rows. The fact commit
+    // keeps the latest-processed row per (source_id, time) of the run's
+    // timemark, so a rerun under a new stamp (ingestModelTasks.py:
+    // 375-387) is repaired in that commit. The run's sources are
+    // registered first, so no committed fact lacks its source.
     if (facts.nonEmpty) {
       store.upsertModelSource(allSources.reduce(_ unionByName _))
-      store.atomicCommit(store.newCommitId("model")) { staging =>
-        store.stageModelData(facts.reduce(_ unionByName _), staging)
+      store.atomicCommit(store.newCommitId("model")) { tag =>
+        store.stageModelData(facts.reduce(_ unionByName _), tag)
         store.stageModelLedger(
           ledgerRows.reduce(_ unionByName _).withColumn("ingested", lit(true)),
-          staging)
+          tag)
       }
     }
     // apsviz station snapshot from meta_* files (+ active obs stations)

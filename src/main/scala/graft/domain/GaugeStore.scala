@@ -3,27 +3,31 @@ package graft.domain
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SnapshotTable
+
 /** Storage for the engine's star schema — the Spark restatement of the
   * reference's Postgres tables (SURVEY §1.1).
   *
   * Layout under `root`:
   *   stations/, gauge_source/, model_source/ — dims (small)
-  *   ledger_obs/, ledger_model/              — harvest-file ledgers
+  *   ledger_obs/, ledger_model/,             — the bookkeeping ledgers:
+  *   apsviz_station_file_meta/,                manifest-log
+  *   retain_obs_station_file_meta/             [[graft.sources.SnapshotTable]]s
   *   gauge_data/, model_data/                — the facts: manifest-log
   *                                             [[graft.sources.SnapshotTable]]s
-  *   _staging/                               — [[atomicCommit]]'s staged
-  *                                             ledger rows
   *
-  * This class owns everything but the facts. Dims and ledgers are
-  * O(#stations)/O(#files) rows: they are rewritten through the driver
-  * and park-and-swapped into place, and [[vacuum]] recovers a swap a
-  * crash cut short. Dims are read from disk once per on-disk version
-  * ([[dim]]): the key is the dir's sorted (name, length, mtime)
-  * data-file listing, which is cross-process safe because every dim
-  * writer lays down new uniquely named part files. The fact surface is
-  * declared here and implemented once, by [[SnapshotGaugeStore]], over
-  * a manifest log that needs only create-if-absent on one small file
-  * per commit — atomic on object stores as well as HDFS/POSIX.
+  * This class owns everything but the facts. Dims are O(#stations)
+  * rows: they are rewritten through the driver and park-and-swapped
+  * into place, and [[vacuum]] recovers a swap a crash cut short. Dims
+  * are read from disk once per on-disk version ([[dim]]): the key is
+  * the dir's sorted (name, length, mtime) data-file listing, which is
+  * cross-process safe because every dim writer lays down new uniquely
+  * named part files. The ledgers only grow: each commit appends one
+  * file to a manifest log, a harvest ledger's under its batch's tag
+  * ([[atomicCommit]]). The fact surface is declared here and
+  * implemented once, by [[SnapshotGaugeStore]], over the same manifest
+  * log, which needs only create-if-absent on one small file per commit
+  * — atomic on object stores as well as HDFS/POSIX.
   */
 abstract class GaugeStore(val spark: SparkSession, val root: String) {
 
@@ -74,96 +78,54 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
   /** Unique commit id, ordered across process restarts. */
   def newCommitId(prefix: String): String = s"${prefix}_${bakSuffix()}"
 
-  /** The fact commit handed to a running [[atomicCommit]], by its
-    * staging dir; it commits under the tag it is given. */
-  private val stagedFacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String => Unit]()
+  /** The commits handed to a running [[atomicCommit]], by its tag:
+    * slot 0 the fact batch, slot 1 the ledger rows. */
+  private val handed =
+    new java.util.concurrent.ConcurrentHashMap[String, Array[() => Unit]]()
 
-  /** Hand the fact commit to the [[atomicCommit]] staging at
-    * `stagingDir` (the fact stage writers' one way in); one commit
+  private def hand(tag: String, slot: Int)(commit: => Unit): Unit = {
+    val batch = handed.get(tag)
+    require(batch != null, s"$tag is not a running atomicCommit")
+    require(batch(slot) == null, s"$tag already holds a ${Seq("fact", "ledger")(slot)} batch")
+    batch(slot) = () => commit
+  }
+
+  /** Hand the fact commit, made under `tag`, to the running
+    * [[atomicCommit]] (the fact stage writers' one way in); one commit
     * point holds one fact batch. */
-  protected def stageFact(stagingDir: String)(commit: String => Unit): Unit =
-    require(stagedFacts.putIfAbsent(stagingDir, commit) == null,
-      s"$stagingDir already holds a fact batch")
+  protected def stageFact(tag: String)(commit: => Unit): Unit =
+    hand(tag, 0)(commit)
 
-  /** All-or-nothing commit of a fact batch and the ledger rows that mark
-    * its files. `stage` hands the fact frame over ([[stageGaugeData]],
-    * [[stageModelData]]) and writes the ledger rows under
-    * `<staging>/<table>/…` in the live table's relative layout. The
-    * COMMIT POINT is the fact's one manifest commit, tagged
-    * `commit-<commitId>`; the staged ledger rows then move into their
-    * tables. A crash before the tagged commit leaves invisible staging,
-    * which [[vacuum]] deletes; a crash after it leaves ledger rows that
-    * [[vacuum]] moves in. So the ledger is never ahead of the facts, and
-    * a replayed id skips its fact by the tag. A batch with no fact rows
-    * moves its ledger rows in at once. A `stage` or fact commit that
-    * throws before the commit point leaves nothing behind.
+  /** Commit of a fact batch and the ledger rows that mark its files.
+    * `stage` hands the fact frame ([[stageGaugeData]],
+    * [[stageModelData]]) and the ledger rows ([[stageLedger]],
+    * [[stageModelLedger]]) over; then the fact batch commits as ONE
+    * manifest commit tagged `commit-<commitId>`, and the ledger rows
+    * commit after it, as one file under the same tag. So the ledger is
+    * never ahead of the facts, and a replayed id skips both commits by
+    * the tag. A crash between the two leaves facts without their ledger
+    * mark: the next run ingests those files again, and the fact commit's
+    * keep-latest folds them to the same rows. A batch with no fact rows
+    * commits its ledger rows alone.
     *
     * This is the reference's BEGIN / COPY / UPDATE ingested / COMMIT
     * transaction (ingestObsTasks.py:145-149, :405-409) restated on
-    * immutable storage. */
+    * immutable storage, healed by re-ingest as the reference heals a
+    * crash between load and ledger mark. */
   def atomicCommit(commitId: String)(stage: String => Unit): Unit = {
-    val fs = fsys
-    val staging = new org.apache.hadoop.fs.Path(path(s"_staging/$commitId"))
-    val key = staging.toString
     val tag = s"commit-$commitId"
-    fs.delete(staging, true)
-    fs.mkdirs(staging)
-    stagedFacts.remove(key)
-    try {
-      stage(key)
-      Option(stagedFacts.remove(key)).foreach(_(tag))
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        stagedFacts.remove(key)
-        if (!factCommitted(tag)) fs.delete(staging, true)
-        throw e
-    }
-    finalizeCommit(staging)
-  }
-
-  /** Whether a fact table holds the commit tagged `tag`. */
-  protected def factCommitted(tag: String): Boolean
-
-  /** Move every staged data file into its table at the same relative
-    * path, then drop the staging dir. Spark metadata files (`_SUCCESS`)
-    * are skipped — each live table keeps its own; part-file names are
-    * job-unique so a resumed move cannot collide. */
-  private def finalizeCommit(committed: org.apache.hadoop.fs.Path): Unit = {
-    val fs = fsys
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    def walk(dir: org.apache.hadoop.fs.Path, rel: List[String]): Unit =
-      fs.listStatus(dir).foreach { st =>
-        if (st.isDirectory) walk(st.getPath, rel :+ st.getPath.getName)
-        else if (isDataFile(st)) {
-          val destDir = rel.foldLeft(rootPath)(
-            (p, seg) => new org.apache.hadoop.fs.Path(p, seg))
-          fs.mkdirs(destDir)
-          require(fs.rename(st.getPath,
-            new org.apache.hadoop.fs.Path(destDir, st.getPath.getName)),
-            s"finalize move failed: ${st.getPath}")
-        }
-      }
-    walk(committed, Nil)
-    fs.delete(committed, true)
+    val batch = new Array[() => Unit](2)
+    require(handed.putIfAbsent(tag, batch) == null, s"$tag is already running")
+    try stage(tag) finally handed.remove(tag)
+    batch.filter(_ != null).foreach(_())
   }
 
   /** Existence via the root's OWN filesystem: java.io.File is always
-    * false for hdfs://-s3a:// roots, which silently turns readOrEmpty
-    * into "missing", has* into false, and dim upserts into blind
-    * overwrites on exactly the object-store deployments the manifest
-    * log targets. */
+    * false for hdfs://-s3a:// roots, which silently turns has* into
+    * false and dim upserts into blind overwrites on exactly the
+    * object-store deployments the manifest log targets. */
   def tableExists(table: String): Boolean =
     fsys.exists(new org.apache.hadoop.fs.Path(path(table)))
-
-  private def emptyFrame(schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  private def readOrEmpty(table: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (tableExists(table)) spark.read.parquet(path(table))
-    else emptyFrame(schema)
 
   /** Data files of a table dir, skipping Spark/Hadoop metadata
     * (`_SUCCESS`, `_committed_*`, `.crc`). */
@@ -250,26 +212,28 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
           .unionByName(src)
       else src)
 
-  /** Ledger stage writers for an [[atomicCommit]]: the rows land under
-    * the staging dir. */
-  def stageLedger(df: DataFrame, stagingDir: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(s"$stagingDir/ledger_obs")
+  /** Ledger stage writers for an [[atomicCommit]]: the rows commit
+    * after the batch's facts, as one file tagged like them. The model
+    * ledger records `model_run_id` manifest stats, so the per-run
+    * filter of the model-side J4 anti-join plans one run's files. */
+  def stageLedger(df: DataFrame, tag: String): Unit =
+    hand(tag, 1)(ledgers("ledger_obs").appendIfAbsent(df.coalesce(1), tag))
 
-  def stageModelLedger(df: DataFrame, stagingDir: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy("model_run_id")
-      .parquet(s"$stagingDir/ledger_model")
+  def stageModelLedger(df: DataFrame, tag: String): Unit =
+    hand(tag, 1)(ledgers("ledger_model").appendIfAbsentWithStats(
+      df.coalesce(1), tag, Seq("model_run_id")))
 
   // ---- fact tables (implemented by SnapshotGaugeStore) -------------
 
   /** Fact stage writer for an [[atomicCommit]]: an obs batch of one
     * data source, committed with keep-latest applied in its commit. */
-  def stageGaugeData(df: DataFrame, dataSource: String, stagingDir: String): Unit
+  def stageGaugeData(df: DataFrame, dataSource: String, tag: String): Unit
 
   /** Fact stage writer for an [[atomicCommit]]: a model batch,
     * committed with keep-latest by `proc_ts` applied within each of its
     * runs' timemarks — so a rerun under a new stamp replaces the run's
     * older rows in the same commit. */
-  def stageModelData(df: DataFrame, stagingDir: String): Unit
+  def stageModelData(df: DataFrame, tag: String): Unit
 
   /** Append a batch of obs fact rows of one data source as they are,
     * with no keep-latest. */
@@ -505,43 +469,61 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
 
   def retainObsStations: DataFrame = spark.read.parquet(path("retain_obs_station"))
 
+  // ---- the bookkeeping ledgers: manifest-log tables ---------------
+
+  /** The four ledgers, by table name (see [[GaugeStore.LedgerTables]]).
+    * Each commit lays down one file; the harvest ledgers' commits carry
+    * their batch's tag, the meta-file ledgers' commits none. */
+  protected lazy val ledgers: Map[String, SnapshotTable] =
+    GaugeStore.LedgerTables.map(t => t -> new SnapshotTable(spark, path(t))).toMap
+
+  /** A ledger's rows through the snapshot relation, so a filter on the
+    * frame plans only the files its manifest stats can match; before
+    * the ledger's first commit, an empty frame of `schema`. */
+  private def ledgerRows(table: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val t = ledgers(table)
+    if (t.currentVersion == 0)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.baseRelationToDataFrame(
+      new graft.sources.SnapshotRelation(spark.sqlContext, t, None))
+  }
+
   /** Obs harvest-file ledger. Rows are only ever written by an
     * [[atomicCommit]] that stages them already `ingested=true`, and
-    * they land after the fact batch they describe. */
-  def ledger: DataFrame = readOrEmpty("ledger_obs", Schemas.harvestObsFileMeta)
+    * they commit after the fact batch they describe. */
+  def ledger: DataFrame = ledgerRows("ledger_obs", Schemas.harvestObsFileMeta)
 
-  // ---- model harvest-file ledger (drf_harvest_model_file_meta,
-  // ingestModelTasks.py:251; one row per ingested run file) ----------
-
-  /** Partitioned by model_run_id: the ledger grows with run history,
-    * so the per-run filter of the model-side J4 anti-join touches one
-    * run's directory, not the whole ledger. The explicit read schema keeps
-    * the partition column a plain string (no partition-value type
-    * inference) and pins column order. */
+  /** Model harvest-file ledger (drf_harvest_model_file_meta,
+    * ingestModelTasks.py:251; one row per ingested run file). A
+    * `model_run_id` filter plans one run's files from the manifest
+    * stats ([[stageModelLedger]]). */
   def modelLedger: DataFrame =
-    if (tableExists("ledger_model"))
-      spark.read.schema(Schemas.harvestModelFileMeta).parquet(path("ledger_model"))
-    else emptyFrame(Schemas.harvestModelFileMeta)
+    ledgerRows("ledger_model", Schemas.harvestModelFileMeta)
 
   // ---- apsviz / retain-obs station meta-file ledgers
   // (drf_apsviz_station_file_meta, ingestModelTasks.py:295;
   //  drf_retain_obs_station_file_meta, ingestObsTasks.py:322) ---------
 
   def apsVizStationFileMeta: DataFrame =
-    readOrEmpty("apsviz_station_file_meta", Schemas.apsVizStationFileMeta)
+    ledgerRows("apsviz_station_file_meta", Schemas.apsVizStationFileMeta)
 
   /** Rows carry their own `ingested` commit marker: these ledgers are
     * only appended AFTER the data they describe committed, so no
-    * false→true rewrite pass exists (unlike the harvest ledgers, whose
-    * two-phase flag makes mid-ingest crashes detectable). */
-  def appendApsVizStationFileMeta(df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).parquet(path("apsviz_station_file_meta"))
+    * false→true rewrite pass exists. One commit, one file. */
+  def appendApsVizStationFileMeta(df: DataFrame): Unit = {
+    ledgers("apsviz_station_file_meta").appendWithStats(df.coalesce(1),
+      Seq("model_run_id"))
+    ()
+  }
 
   def retainObsStationFileMeta: DataFrame =
-    readOrEmpty("retain_obs_station_file_meta", Schemas.retainObsStationFileMeta)
+    ledgerRows("retain_obs_station_file_meta", Schemas.retainObsStationFileMeta)
 
-  def appendRetainObsStationFileMeta(df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).parquet(path("retain_obs_station_file_meta"))
+  def appendRetainObsStationFileMeta(df: DataFrame): Unit = {
+    ledgers("retain_obs_station_file_meta").append(df.coalesce(1))
+    ()
+  }
 
   /** Operational table statistics — the observability side of the
     * small-file story [[binPackCompact]] acts on: per table, total
@@ -566,11 +548,9 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
         else worstRel.mkString("/"))))
   }
 
-  /** Crash recovery + janitor, safe to run any time (e.g. at process
-    * start). An [[atomicCommit]] staging dir whose tagged fact commit
-    * landed has its ledger rows moved in, and every other staging dir
-    * is swept; then two swap crash shapes are repaired, then strays are
-    * swept:
+  /** Crash recovery + janitor for the directory-laid tables, safe to
+    * run any time (e.g. at process start): two swap crash shapes are
+    * repaired, then strays are swept:
     *
     *  1. whole-table swap ([[swapInto]]) interrupted between park and
     *     swap: the live table dir is missing, the original sits in
@@ -600,23 +580,6 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
     val bak = "^(.*)_bak_([0-9]+)$".r   // does NOT match `_pbak_` names
     val pbak = "^(.*)_pbak_([0-9]+)$".r
     val actions = scala.collection.mutable.ArrayBuffer[String]()
-    // phase 0: finish the atomic commits whose tagged fact commit
-    // landed (crash before their ledger rows moved), then sweep the
-    // rest (crash before the commit point — invisible, safe to drop:
-    // its rows re-derive on the next ingest of the same inputs)
-    val stagingRoot = new org.apache.hadoop.fs.Path(rootPath, "_staging")
-    if (fs.exists(stagingRoot)) {
-      val (done, open) = fs.listStatus(stagingRoot).sortBy(_.getPath.getName)
-        .partition(c => factCommitted(s"commit-${c.getPath.getName}"))
-      done.foreach { c =>
-        finalizeCommit(c.getPath)
-        actions += s"finalized commit ${c.getPath.getName}"
-      }
-      if (open.nonEmpty) {
-        open.foreach(c => fs.delete(c.getPath, true))
-        actions += "swept uncommitted staging"
-      }
-    }
     val byBase = entries.flatMap(p => p.getName match {
       case pbak(_, _) => None
       case bak(base, ts) => Some((base, ts.toLong, p))
@@ -679,29 +642,37 @@ abstract class GaugeStore(val spark: SparkSession, val root: String) {
 }
 
 object GaugeStore {
+  /** The bookkeeping ledgers, all manifest-log tables. */
+  val LedgerTables = Seq("ledger_obs", "ledger_model",
+    "apsviz_station_file_meta", "retain_obs_station_file_meta")
+
   /** Open the store at `root`; a missing root is a new, empty store.
     *
     * ADR (round 11): the facts live in manifest-log
     * [[graft.sources.SnapshotTable]]s — atomic commits without atomic
     * rename, O(1)-listing planning under per-micro-batch commit rates,
     * time travel, CDC-maintained rollups, and manifest-stat file
-    * pruning. The rename-based fact layout (Hive partition dirs
-    * `gauge_data/data_source_part=…`, `model_data/run_date=…`) is no
-    * longer supported; a root still holding one is refused rather than
-    * read as a manifest table. Opening writes nothing, so this also opens a
+    * pruning — and so do the ledgers. A fact or ledger dir laid out as
+    * plain parquet (part files or Hive partition dirs such as
+    * `gauge_data/data_source_part=…`, `ledger_model/model_run_id=…`
+    * beside no manifest log) is no longer supported; a root still
+    * holding one is refused rather than read as a manifest table. There
+    * is no migration. Opening writes nothing, so this also opens a
     * BuildAnnIndex dir for `Compact --index`. */
   def open(spark: SparkSession, root: String): GaugeStore = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    Seq("gauge_data" -> "data_source_part=", "model_data" -> "run_date=")
-      .foreach { case (table, part) =>
-        val dir = new org.apache.hadoop.fs.Path(s"$root/$table")
-        require(!fs.exists(dir) || !fs.listStatus(dir).exists(st =>
-          st.isDirectory && st.getPath.getName.startsWith(part)),
-          s"store at $root holds a plain-layout $table ($part… partition " +
-            "dirs) from the removed park-and-swap fact backend; only " +
-            "manifest-log stores open")
-      }
+    (Seq("gauge_data", "model_data") ++ LedgerTables).foreach { table =>
+      val dir = new org.apache.hadoop.fs.Path(s"$root/$table")
+      // a manifest table's top level holds only `data` and `_`-named
+      // dirs (`_log`, `_staging`, `_index`)
+      val plain = if (!fs.exists(dir)) None else fs.listStatus(dir)
+        .map(_.getPath.getName).find(n => n != "data" && !n.startsWith("_") &&
+          !n.startsWith("."))
+      require(plain.isEmpty, s"store at $root holds a plain-layout $table " +
+        s"(${plain.mkString}) from before the manifest log; only manifest-log " +
+        "stores open")
+    }
     new SnapshotGaugeStore(spark, root)
   }
 }

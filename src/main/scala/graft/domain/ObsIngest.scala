@@ -189,19 +189,16 @@ object ObsIngest {
         Schemas.obsMeasures.map(col): _*)
   }
 
-  /** Full create-and-enrich for one catalog source: read → normalize →
-    * attach source_id → route measure. Equivalent of
-    * createIngestObsData.py processData for all the source's files at
-    * once.
+  /** Full create-and-enrich for one catalog source's harvest rows
+    * ([[readHarvest]]): normalize → attach source_id → route measure.
+    * Equivalent of createIngestObsData.py processData for all the
+    * source's files at once.
     */
-  def ingestSource(
-      spark: SparkSession,
-      meta: SourceMeta,
-      stations: DataFrame,
-      paths: String*): DataFrame = {
+  def ingestSource(harvest: DataFrame, meta: SourceMeta,
+      stations: DataFrame): DataFrame = {
     val gaugeSource = buildGaugeSource(stations, meta)
-    val data = normalize(readHarvest(spark, meta, paths: _*), meta)
-    routeMeasure(attachSourceId(data, gaugeSource, stations), meta.source_variable)
+    routeMeasure(attachSourceId(normalize(harvest, meta), gaugeSource, stations),
+      meta.source_variable)
       .filter(col("source_id").isNotNull)
   }
 

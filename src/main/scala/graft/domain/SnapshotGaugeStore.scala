@@ -15,9 +15,11 @@ import graft.sources.SnapshotTable
   * scopes, get_obs_timeseries_station_data.sql:24, become BETWEEN on
   * the day number).
   *
-  * Dimension and ledger tables stay plain parquet in the base class:
-  * they are O(#stations)/O(#files)-sized, rewritten through the
-  * driver, and gain nothing from a manifest log.
+  * Dimension tables stay plain parquet in the base class: they are
+  * O(#stations)-sized, rewritten through the driver, and gain nothing
+  * from a manifest log. The ledgers are manifest-log tables of the base
+  * class too; [[tableStats]] and [[binPackCompact]] serve them with
+  * the facts.
   *
   * An [[atomicCommit]]'s fact batch is written once, as ONE manifest
   * commit tagged by the commit id (the tag is the exactly-once key,
@@ -112,8 +114,8 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
     * of its scope: its `obs_day` window and `data_source_part`. A batch
     * with no dated row commits nothing. */
   override def stageGaugeData(df: DataFrame, dataSource: String,
-      stagingDir: String): Unit =
-    stageFact(stagingDir) { tag =>
+      tag: String): Unit =
+    stageFact(tag) {
       // one read of the batch serves its day bounds and both sides of
       // the fold (its unmatched and its matched rows)
       val rows = withGaugeParts(df, dataSource).cache()
@@ -133,8 +135,8 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
     * holding its timemark's rows, in the same commit. Laid out one file
     * set per run day so the `run_day` stats prune to a run's own files.
     * The run list is O(runs per batch) — one driver collect. */
-  override def stageModelData(df: DataFrame, stagingDir: String): Unit =
-    stageFact(stagingDir) { tag =>
+  override def stageModelData(df: DataFrame, tag: String): Unit =
+    stageFact(tag) {
       // one read of the batch serves its run list and the fold
       val rows = withModelParts(df).repartition(col("run_day")).cache()
       try {
@@ -147,9 +149,6 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
       } finally rows.unpersist()
       ()
     }
-
-  override protected def factCommitted(tag: String): Boolean =
-    Seq(gaugeTable, modelTable).exists(_.committedTags.contains(tag))
 
   override def compactGaugeData(
       scope: Option[(String, String)],
@@ -319,21 +318,24 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
     stale
   }
 
-  /** The manifest table and its pruning-day column behind a fact
-    * table name; None for every other table. */
-  private def factTable(table: String): Option[(SnapshotTable, String)] =
+  /** The manifest table behind a fact or ledger table name, with the
+    * columns its rewrites record stats for; None for every other
+    * table. */
+  private def manifestTable(table: String): Option[(SnapshotTable, Seq[String])] =
     table match {
-      case "gauge_data" => Some((gaugeTable, "obs_day"))
-      case "model_data" => Some((modelTable, "run_day"))
-      case _ => None
+      case "gauge_data" => Some((gaugeTable, Seq("data_source_part", "obs_day")))
+      case "model_data" => Some((modelTable, Seq("run_day")))
+      case "ledger_model" | "apsviz_station_file_meta" =>
+        Some((ledgers(table), Seq("model_run_id")))
+      case _ => ledgers.get(table).map((_, Nil))
     }
 
-  /** Fact tables report their LIVE snapshot from the manifest — files
-    * and bytes the current version references. A directory walk would
-    * count `_log` manifests and files already removed but not yet
+  /** Manifest tables report their LIVE snapshot from the manifest —
+    * files and bytes the current version references. A directory walk
+    * would count `_log` manifests and files already removed but not yet
     * vacuumed. */
   override def tableStats(table: String): Option[Map[String, Any]] =
-    factTable(table) match {
+    manifestTable(table) match {
       case Some((t, _)) =>
         if (!tableExists(table)) None
         else Some(Map("table" -> table, "files" -> t.files().size,
@@ -341,26 +343,24 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
       case None => super.tableStats(table)
     }
 
-  /** Small-file maintenance for the facts: a manifest-commit rewrite
-    * via [[SnapshotTable.compact]] (older snapshots keep reading the
-    * originals until [[SnapshotTable.vacuum]]), sized to
-    * `targetBytes`. Idempotent: an already-packed table (and no
-    * z-order request) is left alone. Non-fact tables go through the
-    * base class's leaf bin-pack. */
+  /** Small-file maintenance for the manifest tables: a manifest-commit
+    * rewrite via [[SnapshotTable.compact]] (older snapshots keep
+    * reading the originals until [[SnapshotTable.vacuum]]), sized to
+    * `targetBytes`, re-recording the table's stat columns. Idempotent:
+    * an already-packed table (and no z-order request) is left alone.
+    * Other tables go through the base class's leaf bin-pack. */
   override def binPackCompact(
       table: String, targetBytes: Long,
       parallelism: Int,
       zorderCols: Seq[String], zorderBits: Int): Seq[String] = {
-    factTable(table) match {
+    manifestTable(table) match {
       case None => super.binPackCompact(table, targetBytes, parallelism,
         zorderCols, zorderBits)
       case Some((t, _)) if t.currentVersion == 0 => Seq.empty
-      case Some((t, dayCol)) =>
-        // gauge facts also re-record the data_source_part string
-        // bounds the rewrite would otherwise lose — source-scoped
-        // maintenance keeps pruning from metadata after a compaction
-        val parts = if (table == "gauge_data") Seq("data_source_part") else Nil
-        val statCols = (zorderCols ++ parts :+ dayCol).distinct
+      case Some((t, stats)) =>
+        // the rewrite re-records the stats the table's reads prune on
+        // (day, source, run), which it would otherwise lose
+        val statCols = (zorderCols ++ stats).distinct
         if (zorderCols.nonEmpty) {
           // a re-clustering request rewrites the live set (layout
           // change is whole-table by definition)

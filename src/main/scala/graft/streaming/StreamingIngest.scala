@@ -72,13 +72,8 @@ object StreamingIngest {
       spark: SparkSession, meta: SourceMeta, store: GaugeStore, batch: DataFrame): Unit = {
     if (batch.isEmpty) return
     val stations = store.stations
-    val gaugeSource = ObsIngest.buildGaugeSource(stations, meta)
-    store.upsertGaugeSource(meta, gaugeSource)
-    val data = ObsIngest.normalize(batch, meta)
-    val fact = ObsIngest.routeMeasure(
-        ObsIngest.attachSourceId(data, gaugeSource, stations), meta.source_variable)
-      .filter(col("source_id").isNotNull)
-      .cache()
+    store.upsertGaugeSource(meta, ObsIngest.buildGaugeSource(stations, meta))
+    val fact = ObsIngest.ingestSource(batch, meta, stations).cache()
     try store.atomicCommit(store.newCommitId("stream"))(
       store.stageGaugeData(fact, meta.data_source, _))
     finally fact.unpersist()

@@ -4,14 +4,14 @@ import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** Crash coverage at the two sides of the atomic batch commit's
-  * commit point. [[GaugeStore.atomicCommit]] writes the fact batch as
-  * ONE manifest commit tagged `commit-<id>` and only then moves the
-  * staged ledger rows in, so the ledger is never ahead of the facts:
-  * a crash before the tagged commit leaves staging that vacuum sweeps,
-  * a crash after it leaves ledger rows that vacuum moves in — zero
-  * duplicate and zero lost rows either way, with no rerun-gate
-  * involvement. [[CrashPointSpec]] sweeps every mutating call.
+/** Crash coverage at the two sides of the atomic batch commit.
+  * [[GaugeStore.atomicCommit]] commits the fact batch as ONE manifest
+  * commit tagged `commit-<id>` and only then the ledger rows, as one
+  * file under the same tag, so the ledger is never ahead of the facts:
+  * a crash inside the fact commit publishes nothing, a crash between
+  * the two commits leaves facts without their ledger mark, which the
+  * rerun of the batch folds to the same rows — zero duplicate and zero
+  * lost rows either way. [[CrashPointSpec]] sweeps every mutating call.
   */
 class AtomicCommitSpec extends SparkSuite {
   import spark.implicits._
@@ -26,55 +26,66 @@ class AtomicCommitSpec extends SparkSuite {
       .select(col("source_id"), col("t").cast("timestamp").as("timemark"),
         col("t").cast("timestamp").as("time"), col("water_level"))
 
-  test("crash AFTER the commit point: vacuum finalizes, zero dup, zero lost") {
+  /** `df` with a column whose evaluation throws: the commit that
+    * writes it dies in its write job, as a crash there would. */
+  private def crashing(df: org.apache.spark.sql.DataFrame, c: String) =
+    df.withColumn(c, when(lit(true), raise_error(lit("crash"))).otherwise(col(c)))
+
+  private def tags(root: String, table: String) =
+    new graft.sources.SnapshotTable(spark, s"$root/$table").committedTags
+
+  test("crash between the fact and ledger commits: the rerun repairs, zero dup, zero lost") {
     val root = Files.createTempDirectory("graft-ac1").toString
     val store = GaugeStore.open(spark, root)
     // pre-existing committed state
-    store.atomicCommit("c0") { staging =>
-      store.stageGaugeData(factRows("2023-04-23 10:00:00"), "tidal_gauge", staging)
-      store.stageLedger(ledgerRow("a.csv"), staging)
+    store.atomicCommit("c0") { tag =>
+      store.stageGaugeData(factRows("2023-04-23 10:00:00"), "tidal_gauge", tag)
+      store.stageLedger(ledgerRow("a.csv"), tag)
     }
     assert(store.gaugeData.count() == 1 && store.ledger.count() == 1)
 
-    // simulate a crash immediately after the commit point: commit a
-    // second batch's fact under tag commit-c1, then stage its ledger
-    // rows by hand with no finalize — exactly the on-disk state a kill
-    // there leaves
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
-    store.atomicCommit("c1")(
-      store.stageGaugeData(factRows("2023-04-24 10:00:00"), "tidal_gauge", _))
-    store.stageLedger(ledgerRow("b.csv"), s"$root/_staging/c1")
-    // the fact landed; its ledger rows are not yet visible
+    // a crash right after the commit point: the second batch's fact
+    // commits under commit-c1, its ledger commit dies
+    intercept[Exception](store.atomicCommit("c1") { tag =>
+      store.stageGaugeData(factRows("2023-04-24 10:00:00"), "tidal_gauge", tag)
+      store.stageLedger(crashing(ledgerRow("b.csv"), "file_name"), tag)
+    })
+    // the fact landed; its ledger mark did not, so b.csv is not ledgered
     assert(store.gaugeData.count() == 2 && store.ledger.count() == 1)
+    assert(tags(root, "ledger_obs") == Set("commit-c0"))
 
-    val actions = store.vacuum()
-    assert(actions.exists(_.contains("finalized commit c1")), actions.toString)
+    // the next run ingests b.csv again under a new id: keep-latest
+    // folds its rows onto the committed ones
+    store.atomicCommit("c2") { tag =>
+      store.stageGaugeData(factRows("2023-04-24 10:00:00"), "tidal_gauge", tag)
+      store.stageLedger(ledgerRow("b.csv"), tag)
+    }
     assert(store.gaugeData.count() == 2)                       // fact committed once
     assert(store.ledger.count() == 2)
-    assert(store.ledger.filter(col("ingested")).count() == 2)  // marked atomically
-    assert(!fs.exists(p("_staging/c1")))
-    assert(store.vacuum().isEmpty)                             // idempotent
+    assert(store.ledger.filter(col("ingested")).count() == 2)
+    assert(tags(root, "ledger_obs").subsetOf(tags(root, "gauge_data")))
+    assert(!new java.io.File(s"$root/_staging").exists())
   }
 
-  test("crash BEFORE the commit point: staging is swept, nothing published") {
+  test("crash inside the fact commit: nothing published, the rerun ingests the batch") {
     val root = Files.createTempDirectory("graft-ac2").toString
     val store = GaugeStore.open(spark, root)
-    store.atomicCommit("c0") { staging =>
-      store.stageLedger(ledgerRow("a.csv"), staging)
-    }
-    store.stageGaugeData(factRows("2023-04-24 10:00:00"), "tidal_gauge",
-      s"$root/_staging/c1")
-    store.stageLedger(ledgerRow("b.csv"), s"$root/_staging/c1")
-
-    val actions = store.vacuum()
-    assert(actions.contains("swept uncommitted staging"))
+    store.atomicCommit("c0")(store.stageLedger(ledgerRow("a.csv"), _))
+    intercept[Exception](store.atomicCommit("c1") { tag =>
+      store.stageGaugeData(crashing(factRows("2023-04-24 10:00:00"), "water_level"),
+        "tidal_gauge", tag)
+      store.stageLedger(ledgerRow("b.csv"), tag)
+    })
     assert(store.ledger.count() == 1)          // b.csv never became visible
     assert(!store.hasGaugeData)                // nor did its fact
-    assert(!new java.io.File(s"$root/_staging").exists() ||
-      new java.io.File(s"$root/_staging").list().isEmpty)
+    assert(!new java.io.File(s"$root/_staging").exists())
     // ...so the next ingest of b.csv re-processes it from scratch: the
     // ledger (not half-published state) is the idempotence record
+    store.atomicCommit("c2") { tag =>
+      store.stageGaugeData(factRows("2023-04-24 10:00:00"), "tidal_gauge", tag)
+      store.stageLedger(ledgerRow("b.csv"), tag)
+    }
+    assert(store.gaugeData.count() == 1 && store.ledger.count() == 2)
   }
 
   test("end-to-end obs ingest commits atomically and leaves no protocol residue") {

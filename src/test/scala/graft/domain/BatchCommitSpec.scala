@@ -4,6 +4,22 @@ import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
+/** The local filesystem recording how often each harvest CSV is
+  * opened; installed like [[CrashFs]], as the `file` scheme with the
+  * filesystem cache off. */
+class OpenCountingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName.endsWith(".csv"))
+      OpenCountingFs.opens.merge(f.getName, 1, (a: Int, b: Int) => a + b)
+    super.open(f, bufferSize)
+  }
+}
+
+object OpenCountingFs {
+  val opens = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+}
+
 /** A batch commit is keep-latest itself: the batch's rows are written
   * once, in ONE tagged commit that also drops every stored row they
   * supersede — in the batch's source and days for obs, in the run's
@@ -187,5 +203,110 @@ class BatchCommitSpec extends SparkSuite {
       "station" -> "8410140", "start" -> "2023-04-23T00:00:00",
       "end" -> "2023-04-24T00:00:00"))
     assert(js.contains(""""tidal_gauge_water_level":1.3"""), js)
+  }
+
+  test("a source whose dim write fails fails its batch once, ledgers nothing, and ingests every file next run") {
+    val (root, harvest) = fixture("graft-store-failure")
+    Seq("10", "11", "12").foreach(h =>
+      drop(harvest, s"2023-04-23T${h}_00_00", s"2023-04-23T$h:00:00,8410140,1.$h"))
+    var calls = 0
+    val failing = new SnapshotGaugeStore(spark, root) {
+      override def writeGaugeSource(df: org.apache.spark.sql.DataFrame): Unit = {
+        calls += 1
+        if (calls == 1) throw new IllegalStateException("dim write failed")
+        super.writeGaugeSource(df)
+      }
+    }
+    // a store-side failure is not retried file by file
+    assert(ingest(failing, harvest) == 0)
+    assert(calls == 1, s"the dim was written $calls times for one batch")
+    assert(failing.ledger.count() == 0 && !failing.hasGaugeData)
+    assert(ingest(GaugeStore.open(spark, root), harvest) == 3)
+    assert(served(GaugeStore.open(spark, root)).size == 3)
+  }
+
+  test("each ledger commit writes one data file and carries its batch's tag") {
+    val (root, harvest) = fixture("graft-ledger-commits")
+    val store = GaugeStore.open(spark, root)
+    // a multi-file obs batch, then a later one
+    drop(harvest, "2023-04-23T12_00_00", batch1: _*)
+    drop(harvest, "2023-04-23T13_00_00", "2023-04-23T13:00:00,8410140,1.40")
+    assert(ingest(store, harvest) == 2)
+    drop(harvest, "2023-04-23T18_00_00", batch2: _*)
+    assert(ingest(store, harvest) == 1)
+    // a two-file model run with a meta file
+    val runId = "4358-2023042312-gfsforecast"
+    val runDir = Paths.get(root).getParent.resolve(runId)
+    Files.createDirectories(runDir)
+    Seq("FORECAST", "NOWCAST").foreach { phase =>
+      Files.write(runDir.resolve(s"${phase}_NOAASTATIONS.csv"),
+        s"TIME,STATION,WATER_LEVEL\n2023-04-23T1${if (phase == "FORECAST") 3 else 1}:00:00,8410140,0.5".getBytes)
+    }
+    Files.write(runDir.resolve("meta_FORECAST_NOAASTATIONS.csv"), "STATION\n8410140".getBytes)
+    assert(graft.IngestCli.modelRunIngest(spark, store, runDir.toString, runId,
+      "2023-04-23T12:00:00", "gfsforecast", "ec95d", None, "inst1", "synoptic",
+      "https://ui.example", processingDatetime = Some("2023-04-23T13:30:00")) == 2)
+    def table(t: String) = new graft.sources.SnapshotTable(spark, s"$root/$t")
+    Seq("ledger_obs" -> "gauge_data", "ledger_model" -> "model_data").foreach {
+      case (ledger, fact) =>
+        val t = table(ledger)
+        (1 to t.currentVersion).foreach { v =>
+          val added = t.files(Some(v)).toSet -- (if (v == 1) Set.empty[String]
+            else t.files(Some(v - 1)).toSet)
+          assert(added.size == 1, s"$ledger v$v added ${added.size} files")
+        }
+        assert(t.committedTags.size == t.currentVersion, s"$ledger has an untagged commit")
+        assert(t.committedTags.subsetOf(table(fact).committedTags),
+          s"$ledger tags ${t.committedTags} not in $fact")
+    }
+    assert(table("ledger_obs").currentVersion == 2 && store.ledger.count() == 3)
+    assert(table("ledger_model").currentVersion == 1 && store.modelLedger.count() == 2)
+    val meta = table("apsviz_station_file_meta")
+    assert(meta.currentVersion == 1 && meta.files().size == 1)
+  }
+
+  test("the model-side J4 ledger read plans one run's files from model_run_id stats") {
+    val (root, _) = fixture("graft-ledger-prune")
+    val store = GaugeStore.open(spark, root)
+    val runs = Seq("2023042300", "2023042306", "2023042312")
+    runs.foreach { tm =>
+      val runId = s"4358-$tm-gfsforecast"
+      val runDir = Paths.get(root).getParent.resolve(runId)
+      Files.createDirectories(runDir)
+      Files.write(runDir.resolve("FORECAST_NOAASTATIONS.csv"),
+        s"TIME,STATION,WATER_LEVEL\n2023-04-23T13:00:00,8410140,0.5".getBytes)
+      val timemark = s"2023-04-23T${tm.takeRight(2)}:00:00"
+      graft.IngestCli.modelRunIngest(spark, store, runDir.toString, runId,
+        timemark, "gfsforecast", "ec95d", None, "inst1", "synoptic",
+        "https://ui.example", processingDatetime = Some("2023-04-23T13:30:00"))
+    }
+    val ledgerRoot = s"$root/ledger_model"
+    assert(new graft.sources.SnapshotTable(spark, ledgerRoot).files().size == 3)
+    val got = store.modelLedger.filter(col("model_run_id") === "4358-2023042306-gfsforecast")
+      .select("file_name").collect()
+    assert(got.length == 1)
+    assert(graft.sources.SnapshotTable.lastPlannedCandidates(ledgerRoot).map(_.size)
+      .contains(1), graft.sources.SnapshotTable.lastPlannedCandidates(ledgerRoot).toString)
+  }
+
+  test("sequenceIngest opens each new harvest file once and no ledgered file") {
+    val (root, harvest) = fixture("graft-read-once")
+    drop(harvest, "2023-04-23T12_00_00", batch1: _*)
+    assert(ingest(GaugeStore.open(spark, root), harvest) == 1)
+    drop(harvest, "2023-04-23T18_00_00", batch2: _*)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val before = Seq("fs.file.impl", "fs.file.impl.disable.cache").map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[OpenCountingFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    OpenCountingFs.opens.clear()
+    try assert(ingest(GaugeStore.open(spark, root), harvest) == 1)
+    finally before.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(OpenCountingFs.opens.asScala.toMap == Map(
+      "noaaweb_stationdata_water_level_2023-04-23T18_00_00.csv" -> 1))
+    assert(served(GaugeStore.open(spark, root)) == oracle)
   }
 }

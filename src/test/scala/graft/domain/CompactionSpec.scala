@@ -7,10 +7,10 @@ import java.nio.file.Files
 /** Small-file maintenance compaction ([[GaugeStore.binPackCompact]]):
   * accretion from cron-cadence appends is rewritten down to
   * ⌈bytes/target⌉ files without changing any query result,
-  * idempotently. The fact tables compact through manifest commits; the
-  * directory-laid tables (ledgers, a BuildAnnIndex `lists` layout)
-  * through the leaf park-and-swap, crash-recoverably via
-  * [[GaugeStore.vacuum]]. */
+  * idempotently. The manifest tables (facts and ledgers) compact
+  * through manifest commits; the directory-laid tables (a
+  * BuildAnnIndex `lists` layout, `retain_obs_station`) through the
+  * leaf park-and-swap, crash-recoverably via [[GaugeStore.vacuum]]. */
 class CompactionSpec extends SparkSuite {
   import spark.implicits._
 
@@ -25,16 +25,17 @@ class CompactionSpec extends SparkSuite {
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
   }
 
-  /** `n` model-ledger rows of run `run`, committed the way ingest
-    * commits them — one file set per call into the run's partition. */
-  private def commitModelLedger(store: GaugeStore, run: String, batch: Int,
-      n: Int = 1): Unit =
-    store.atomicCommit(store.newCommitId("model"))(store.stageModelLedger(
-      (0 until n).map(j => (f"b$batch%02d_f$j%04d.csv", run, true))
-        .toDF("file_name", "model_run_id", "ingested"), _))
+  /** `n` rows appended as one file into inverted list `c` of a
+    * `centroid_id=`-partitioned `lists` dir (the `Compact --index`
+    * shape) — one UpdateAnnIndex run's accretion per call. */
+  private def appendList(root: String, c: Int, batch: Int, n: Int = 1): Unit =
+    (0 until n).map(j => (batch * 10000L + j, c)).toDF("vec_id", "centroid_id")
+      .coalesce(1).write.mode("append").partitionBy("centroid_id")
+      .parquet(s"$root/lists")
 
-  private def runLeaf(root: String, run: String) =
-    s"$root/ledger_model/model_run_id=$run"
+  private def listLeaf(root: String, c: Int) = s"$root/lists/centroid_id=$c"
+
+  private def lists(root: String) = spark.read.parquet(s"$root/lists")
 
   test("N-batch accretion compacts to one file per leaf; rows and dedup semantics unchanged") {
     val root = Files.createTempDirectory("graft-compact").toString
@@ -84,79 +85,77 @@ class CompactionSpec extends SparkSuite {
   test("file count lands at ceil(bytes/target) for a sub-leaf target") {
     val root = Files.createTempDirectory("graft-compact2").toString
     val store = GaugeStore.open(spark, root)
-    (1 to 6).foreach(i => commitModelLedger(store, "r1", i, n = 200))
-    val leaf = runLeaf(root, "r1")
+    (1 to 6).foreach(i => appendList(root, 1, i, n = 200))
+    val leaf = listLeaf(root, 1)
     val bytes = dataFiles(leaf).map(_.length).sum
     val target = bytes / 3 + 1                    // expect ceil = 3 files
     val expected = ((bytes + target - 1) / target).toInt
-    store.binPackCompact("ledger_model", targetBytes = target)
+    store.binPackCompact("lists", targetBytes = target)
     assert(dataFiles(leaf).size == expected,
       s"expected $expected files, got ${dataFiles(leaf).size}")
-    assert(store.modelLedger.count() == 1200)
+    assert(lists(root).count() == 1200)
   }
 
   test("crash mid-swap: a parked leaf with no live counterpart is restored by vacuum") {
     val root = Files.createTempDirectory("graft-compact3").toString
     val store = GaugeStore.open(spark, root)
-    (1 to 3).foreach(i => commitModelLedger(store, "r1", i))
+    (1 to 3).foreach(i => appendList(root, 1, i))
     // simulate binPackCompact dying between park and swap: the leaf is
     // in the _pbak_ dir (flattened name), the live leaf is gone
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
-    fs.mkdirs(p("ledger_model_pbak_55"))
-    assert(fs.rename(p("ledger_model/model_run_id=r1"),
-      p("ledger_model_pbak_55/model_run_id=r1")))
-    assert(!fs.exists(p("ledger_model/model_run_id=r1")))
+    fs.mkdirs(p("lists_pbak_55"))
+    assert(fs.rename(p("lists/centroid_id=1"), p("lists_pbak_55/centroid_id=1")))
+    assert(!fs.exists(p("lists/centroid_id=1")))
     val actions = store.vacuum()
-    assert(actions.exists(_.contains("restored ledger_model/")), actions.toString)
-    assert(store.modelLedger.count() == 3)
-    assert(!fs.exists(p("ledger_model_pbak_55")))
+    assert(actions.exists(_.contains("restored lists/")), actions.toString)
+    assert(lists(root).count() == 3)
+    assert(!fs.exists(p("lists_pbak_55")))
     // and a compaction after recovery proceeds normally
-    val compacted = store.binPackCompact("ledger_model", targetBytes = 1L << 30)
-    assert(compacted.size == 1 && store.modelLedger.count() == 3)
+    val compacted = store.binPackCompact("lists", targetBytes = 1L << 30)
+    assert(compacted.size == 1 && lists(root).count() == 3)
   }
 
   test("unpartitioned table compacts through the whole-table swap path") {
     val root = Files.createTempDirectory("graft-compact4").toString
     val store = GaugeStore.open(spark, root)
+    // retain_obs_station: a plain parquet dir, one file per append
     (1 to 4).foreach { i =>
-      store.atomicCommit(store.newCommitId("obs"))(store.stageLedger(
-        Seq((s"f$i.csv", true)).toDF("file_name", "ingested")
-          .withColumn("processing_datetime",
-            lit(f"2023-04-23 $i%02d:00:00").cast("timestamp")), _))
+      store.appendRetainObsStations(Seq((s"s$i", "tidal_gauge")).toDF(
+        "station_name", "data_source").coalesce(1))
     }
-    assert(dataFiles(s"$root/ledger_obs").size >= 4)
-    store.binPackCompact("ledger_obs", targetBytes = 1L << 30)
-    assert(dataFiles(s"$root/ledger_obs").size == 1)
-    assert(store.ledger.count() == 4)
+    assert(dataFiles(s"$root/retain_obs_station").size == 4)
+    store.binPackCompact("retain_obs_station", targetBytes = 1L << 30)
+    assert(dataFiles(s"$root/retain_obs_station").size == 1)
+    assert(store.retainObsStations.count() == 4)
   }
 
   test("mixed root+partition layout: root files are skipped, partitions never deleted") {
     val root = Files.createTempDirectory("graft-compact5").toString
     val store = GaugeStore.open(spark, root)
-    (1 to 2).foreach(i => commitModelLedger(store, "r1", i))
+    (1 to 2).foreach(i => appendList(root, 1, i))
     // stray data files at the TABLE ROOT next to the partition dirs —
     // no writer here produces this, but an external tool can; the old
     // whole-table swap would have replaced the table with only the
     // rewritten leaves, deleting every other partition
     val strayDir = Files.createTempDirectory("graft-stray").toString
-    Seq(("stray.csv", "r9", true)).toDF("file_name", "model_run_id", "ingested")
+    Seq((99L, 9)).toDF("vec_id", "centroid_id")
       .repartition(2).write.mode("overwrite").parquet(strayDir)
     val strays = dataFiles(strayDir)
     assert(strays.size == 2)
     strays.foreach { f =>
-      Files.copy(f.toPath, java.nio.file.Paths.get(s"$root/ledger_model", f.getName))
+      Files.copy(f.toPath, java.nio.file.Paths.get(s"$root/lists", f.getName))
     }
-    val leaf = runLeaf(root, "r1")
+    val leaf = listLeaf(root, 1)
     assert(dataFiles(leaf).size == 2)
 
-    val actions = store.binPackCompact("ledger_model", targetBytes = 1L << 30)
+    val actions = store.binPackCompact("lists", targetBytes = 1L << 30)
     // root leaf skipped with an explicit message; partition leaf still compacted
-    assert(actions.exists(_.contains("skipped ledger_model root-level")), actions.toString)
-    assert(actions.exists(_.contains("model_run_id=r1")), actions.toString)
+    assert(actions.exists(_.contains("skipped lists root-level")), actions.toString)
+    assert(actions.exists(_.contains("centroid_id=1")), actions.toString)
     // partition dir intact (compacted to 1 file), root strays untouched
     assert(dataFiles(leaf).size == 1)
-    assert(dataFiles(s"$root/ledger_model").size == 2)
+    assert(dataFiles(s"$root/lists").size == 2)
     assert(spark.read.parquet(leaf).count() == 2)
   }
 
@@ -246,17 +245,54 @@ class CompactionSpec extends SparkSuite {
   test("z-order columns are validated against the leaf file schema before any rewrite") {
     val root = Files.createTempDirectory("graft-zval").toString
     val store = GaugeStore.open(spark, root)
-    commitModelLedger(store, "r1", 1)
+    appendList(root, 1, 1)
     // partition-encoded column: lives in the dir name, absent from leaf files
     val err = intercept[IllegalArgumentException] {
-      store.binPackCompact("ledger_model", zorderCols = Seq("model_run_id"))
+      store.binPackCompact("lists", zorderCols = Seq("centroid_id"))
     }
     assert(err.getMessage.contains("partition-encoded"), err.getMessage)
     // plain typo is caught the same way, before any leaf is touched
     val err2 = intercept[IllegalArgumentException] {
-      store.binPackCompact("ledger_model", zorderCols = Seq("fil_name"))
+      store.binPackCompact("lists", zorderCols = Seq("vec_idd"))
     }
-    assert(err2.getMessage.contains("fil_name"))
-    assert(store.modelLedger.count() == 1, "no data may be touched on validation failure")
+    assert(err2.getMessage.contains("vec_idd"))
+    assert(lists(root).count() == 1, "no data may be touched on validation failure")
+  }
+
+  test("Compact --tables ledger_obs packs the ledger by a manifest commit; Stats reads its live files") {
+    import graft.IngestCli
+    val root = Files.createTempDirectory("graft-compact-ledger").toString
+    val store = GaugeStore.open(spark, root)
+    (1 to 4).foreach { i =>
+      store.atomicCommit(store.newCommitId("obs"))(store.stageLedger(
+        Seq((s"f$i.csv", true)).toDF("file_name", "ingested")
+          .withColumn("processing_datetime",
+            lit(f"2023-04-23 $i%02d:00:00").cast("timestamp")), _))
+    }
+    def stats(): com.fasterxml.jackson.databind.JsonNode = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(IngestCli.runTask(spark, "Stats",
+        Map("store" -> root, "tables" -> "ledger_obs")))
+      graft.util.Json.mapper.readTree(out.toString("UTF-8").trim)
+    }
+    val table = new graft.sources.SnapshotTable(spark, s"$root/ledger_obs")
+    // the manifest's four live files, not the `_log` manifests beside them
+    assert(stats().get("files").asInt == 4, stats().toString)
+    assert(stats().get("bytes").asLong == table.liveBytes())
+    val before = store.ledger.orderBy("file_name").collect().toSeq
+    def compact(): String = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(IngestCli.runTask(spark, "Compact", Map("store" -> root,
+        "tables" -> "ledger_obs", "targetBytes" -> (1L << 30).toString)))
+      out.toString("UTF-8")
+    }
+    assert(compact().contains("compacted ledger_obs small files (snapshot v5)"))
+    assert(stats().get("files").asInt == 1)
+    assert(store.ledger.orderBy("file_name").collect().toSeq == before)
+    // the rewrite is a manifest commit: the originals stay for older
+    // snapshots until a snapshot vacuum, the tags stay in the log
+    assert(dataFiles(s"$root/ledger_obs/data").size == 5)
+    assert(table.read(Some(4)).count() == 4 && table.committedTags.size == 4)
+    assert(compact().contains("compacted 0 partition(s)"))
   }
 }

@@ -50,18 +50,23 @@ object CrashFs {
   val calls = new java.util.concurrent.atomic.AtomicInteger()
 }
 
-/** Crash-point sweep over the three batch commits: one obs batch that
+/** Crash-point sweep over the three batch commits — one obs batch that
   * overlaps the stored rows, one model run, and a rerun of that model
-  * run under a new processing stamp. For a crash at every mutating call
-  * k of the batch (a seeded sample in the default run; all of them with
-  * `-Dcrash.points=all`, or N sampled with `-Dcrash.points=N`), a fresh
-  * store over the crashed root runs vacuum, and then:
+  * run under a new processing stamp — and over a daily rollup rebuild.
+  * For a crash at every mutating call k (a seeded sample in the default
+  * run; all of them with `-Dcrash.points=all`, or N sampled with
+  * `-Dcrash.points=N`), a fresh store over the crashed root runs
+  * vacuum, and then, for a batch:
   *  - the facts are exactly the pre-batch or the post-batch rows;
   *  - the ledger is the pre-batch or the post-batch one, and never
   *    marks the batch's files while the facts lack them;
+  *  - every ledger table's tags are tags of a fact commit;
   *  - the batch source's dim keys are the pre-batch or the post-batch
   *    ones, and never lag facts that hold the batch;
-  *  - a rerun of the same ingest converges on the post-batch state.
+  *  - a rerun of the same ingest converges on the post-batch state, and
+  *    a replay of any committed id adds no ledger row;
+  * and for the rollup, a rerun rebuilds the rollup a fresh store builds
+  * from the same facts.
   */
 class CrashPointSpec extends SparkSuite {
 
@@ -122,6 +127,29 @@ class CrashPointSpec extends SparkSuite {
     * source dim's keys. */
   private type State = (Seq[String], Seq[String], Seq[String])
 
+  private def tags(work: Path, table: String): Set[String] =
+    new graft.sources.SnapshotTable(spark, work.resolve(table).toString).committedTags
+
+  /** A ledger table holding a tag that no fact commit has. */
+  private def ledgerAhead(work: Path): Option[String] = {
+    val facts = tags(work, "gauge_data") ++ tags(work, "model_data")
+    GaugeStore.LedgerTables.map(t => t -> (tags(work, t) -- facts))
+      .collectFirst { case (t, extra) if extra.nonEmpty => s"$t tags $extra have no fact commit" }
+  }
+
+  /** Replays every committed id of the harvest ledgers with their own
+    * rows; the tag must skip each replay. */
+  private def replayAddsRows(work: Path, state: GaugeStore => State): Option[String] = {
+    val store = GaugeStore.open(spark, work.toString)
+    val before = state(store)
+    tags(work, "ledger_obs").foreach(t => store.atomicCommit(t.stripPrefix("commit-"))(
+      store.stageLedger(store.ledger, _)))
+    tags(work, "ledger_model").foreach(t => store.atomicCommit(t.stripPrefix("commit-"))(
+      store.stageModelLedger(store.modelLedger, _)))
+    val after = state(GaugeStore.open(spark, work.toString))
+    if (after != before) Some(s"a replayed commit id changed the store: $after") else None
+  }
+
   /** Sweeps a crash over every sampled mutating call of `batch` on a
     * store restored from `template` (a copy of the pre-batch store at
     * `work`). Returns the k whose recovery failed, with the reason. */
@@ -146,10 +174,11 @@ class CrashPointSpec extends SparkSuite {
         else if (got._3 != pre._3 && got._3 != post._3) Some(s"source dim is neither pre nor post: ${got._3}")
         else if (got._2 == post._2 && got._1 != post._1) Some("ledger ahead of the facts")
         else if (got._1 == post._1 && got._3 != post._3) Some("source dim behind the facts")
-        else {
+        else ledgerAhead(work).orElse {
           batch(GaugeStore.open(spark, work.toString))
           val again = state(GaugeStore.open(spark, work.toString))
-          if (again != post) Some(s"rerun did not converge: $again") else None
+          if (again != post) Some(s"rerun did not converge: $again")
+          else ledgerAhead(work).orElse(replayAddsRows(work, state))
         }
       problem.map(k -> _)
     }
@@ -243,6 +272,63 @@ class CrashPointSpec extends SparkSuite {
     f.writeRun(1.5)
     val (n, ks, failed) = sweep(f.work, template, f.state)(f.ingest("2023-04-23T15:00:00"))
     info(s"model rerun: $n mutating calls, crashed at k = ${ks.mkString(",")}")
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  test("a crash at any mutating call of a rollup rebuild recovers, after vacuum and a rerun, to a fresh store's rollup") {
+    val base = Files.createTempDirectory("graft-crash-rollup")
+    val harvest = base.resolve("harvest"); Files.createDirectories(harvest)
+    val work = base.resolve("store")
+    Files.write(base.resolve("geom.csv"),
+      "8410140,44.9,-66.9,gmt,NOAA,Eastport,tidal,us,me,Wash,01A".getBytes)
+    def drop(tm: String, rows: String*): Unit =
+      Files.write(harvest.resolve(s"noaaweb_stationdata_water_level_$tm.csv"),
+        ("TIME,STATION,WATER_LEVEL\n" + rows.mkString("\n")).getBytes)
+    def ingest(store: GaugeStore): Unit =
+      graft.IngestCli.sequenceIngest(spark, store, Seq(obsMeta), harvest.toString,
+        lit("2023-04-25 00:00:00"))
+    val seeded = GaugeStore.open(spark, work.toString)
+    seeded.writeStations(ObsIngest.seedStations(spark, base.resolve("geom.csv").toString))
+    drop("2023-04-23T12_00_00", "2023-04-22T23:00:00,8410140,1.10",
+      "2023-04-23T10:00:00,8410140,1.20")
+    ingest(seeded)
+    seeded.rollupDaily()
+    // a later batch rewrites one rolled-up day and adds another: the
+    // rebuild replaces one partition, writes a new one and swaps the
+    // version marker
+    drop("2023-04-24T12_00_00", "2023-04-23T10:00:00,8410140,9.99",
+      "2023-04-24T10:00:00,8410140,1.40")
+    ingest(seeded)
+    val template = base.resolve("template")
+    copyTree(work, template)
+    def rows(s: GaugeStore): Seq[String] =
+      s.rollupDailyTable.collect().map(_.toString).toSeq.sorted
+    // the oracle: the same facts, rolled up by a store with no rollup yet
+    val fresh = base.resolve("fresh")
+    copyTree(template, fresh)
+    deleteTree(fresh.resolve("gauge_rollup_daily"))
+    Files.delete(fresh.resolve("gauge_rollup_daily_version"))
+    val freshStore = GaugeStore.open(spark, fresh.toString)
+    freshStore.rollupDaily()
+    val oracle = rows(freshStore)
+    val (n, ks, failed) = withCrashFs {
+      val n = armed(work.toString, Int.MaxValue)(GaugeStore.open(spark, work.toString).rollupDaily())
+      assert(n > 0 && rows(GaugeStore.open(spark, work.toString)) == oracle)
+      val ks =
+        if (points == "all") (1 to n).toList
+        else new scala.util.Random(11).shuffle((1 to n).toList).take(points.toInt).sorted
+      val failed = ks.flatMap { k =>
+        deleteTree(work); copyTree(template, work)
+        armed(work.toString, k)(GaugeStore.open(spark, work.toString).rollupDaily())
+        val store = GaugeStore.open(spark, work.toString)
+        store.vacuum()
+        store.rollupDaily()
+        val got = rows(GaugeStore.open(spark, work.toString))
+        if (got != oracle) Some(k -> s"rollup after the rerun differs: $got") else None
+      }
+      (n, ks, failed)
+    }
+    info(s"rollup: $n mutating calls, crashed at k = ${ks.mkString(",")}")
     assert(failed.isEmpty, failed.mkString("\n"))
   }
 }

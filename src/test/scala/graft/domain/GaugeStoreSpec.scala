@@ -40,10 +40,13 @@ class GaugeStoreSpec extends SparkSuite {
       s"read ${pruned.inputFiles.length} of 3 run files — manifest pruning lost")
   }
 
-  /** One ledgered file per run, committed the way ingest commits. */
-  private def seedModelLedger(store: GaugeStore, runs: String*): Unit =
-    store.atomicCommit(store.newCommitId("model"))(store.stageModelLedger(
-      runs.map(r => (s"$r.csv", r, true)).toDF("file_name", "model_run_id", "ingested"), _))
+  /** A `centroid_id=`-partitioned `lists` dir (the `Compact --index`
+    * shape), one partition per id. */
+  private def seedLists(root: String, ids: Int*): Unit =
+    ids.map(i => (i.toLong, i)).toDF("vec_id", "centroid_id")
+      .write.mode("append").partitionBy("centroid_id").parquet(s"$root/lists")
+
+  private def lists(root: String) = spark.read.parquet(s"$root/lists")
 
   test("cross-batch compaction keeps latest timemark per (source,time)") {
     val root = Files.createTempDirectory("graft-store2").toString
@@ -88,22 +91,20 @@ class GaugeStoreSpec extends SparkSuite {
   test("vacuum restores a parked backup after a simulated swap crash and sweeps strays") {
     val root = Files.createTempDirectory("graft-store4").toString
     val store = GaugeStore.open(spark, root)
-    store.atomicCommit("c0")(store.stageLedger(Seq(("a.csv", true))
-      .toDF("file_name", "ingested")
-      .withColumn("processing_datetime", lit("2023-04-23 12:00:00").cast("timestamp")), _))
+    seedLists(root, 1)
     // simulate the swapInto crash window: live parked as backup, tmp
     // written but never swapped in
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
-    assert(fs.rename(p("ledger_obs"), p("ledger_obs_bak_42")))
-    fs.mkdirs(p("ledger_obs_tmp"))
-    assert(!fs.exists(p("ledger_obs")))
+    assert(fs.rename(p("lists"), p("lists_bak_42")))
+    fs.mkdirs(p("lists_tmp"))
+    assert(!fs.exists(p("lists")))
 
     val actions = store.vacuum()
-    assert(actions.exists(_.startsWith("restored ledger_obs")))
-    assert(fs.exists(p("ledger_obs")))
-    assert(!fs.exists(p("ledger_obs_tmp")) && !fs.exists(p("ledger_obs_bak_42")))
-    assert(store.ledger.count() == 1)              // contents intact
+    assert(actions.exists(_.startsWith("restored lists")))
+    assert(fs.exists(p("lists")))
+    assert(!fs.exists(p("lists_tmp")) && !fs.exists(p("lists_bak_42")))
+    assert(lists(root).count() == 1)               // contents intact
     // idempotent: nothing left to do
     assert(store.vacuum().isEmpty)
   }
@@ -111,20 +112,19 @@ class GaugeStoreSpec extends SparkSuite {
   test("vacuum restores parked PARTITION dirs when the table itself survived") {
     val root = Files.createTempDirectory("graft-store5").toString
     val store = GaugeStore.open(spark, root)
-    seedModelLedger(store, "r1", "r2")
-    assert(store.modelLedger.count() == 2)
-    // simulate a partition swap crash: one run's partition parked into
+    seedLists(root, 1, 2)
+    assert(lists(root).count() == 2)
+    // simulate a partition swap crash: one list's partition parked into
     // the backup, never replaced — the table dir itself still exists
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
-    fs.mkdirs(p("ledger_model_pbak_99"))
-    assert(fs.rename(p("ledger_model/model_run_id=r1"),
-      p("ledger_model_pbak_99/model_run_id=r1")))
-    assert(store.modelLedger.count() == 1)         // partition gone
+    fs.mkdirs(p("lists_pbak_99"))
+    assert(fs.rename(p("lists/centroid_id=1"), p("lists_pbak_99/centroid_id=1")))
+    assert(lists(root).count() == 1)               // partition gone
     val actions = store.vacuum()
-    assert(actions.exists(_.contains("restored ledger_model/model_run_id=r1")), actions.toString)
-    assert(store.modelLedger.count() == 2)         // partition back
-    assert(!fs.exists(p("ledger_model_pbak_99")))
+    assert(actions.exists(_.contains("restored lists/centroid_id=1")), actions.toString)
+    assert(lists(root).count() == 2)               // partition back
+    assert(!fs.exists(p("lists_pbak_99")))
   }
 
   test("vacuum does NOT mine a whole-table backup for partitions the rewrite dropped") {
@@ -134,20 +134,19 @@ class GaugeStoreSpec extends SparkSuite {
     // partition would resurrect deleted data.
     val root = Files.createTempDirectory("graft-store6").toString
     val store = GaugeStore.open(spark, root)
-    seedModelLedger(store, "r1", "r2")
+    seedLists(root, 1, 2)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
     // park the FULL old table (as swapInto does), make the live table a
-    // rewrite that dropped the r1 partition
-    assert(fs.rename(p("ledger_model"), p("ledger_model_bak_77")))
-    fs.mkdirs(p("ledger_model"))
-    assert(fs.rename(p("ledger_model_bak_77/model_run_id=r2"),
-      p("ledger_model/model_run_id=r2")))
+    // rewrite that dropped the centroid_id=1 partition
+    assert(fs.rename(p("lists"), p("lists_bak_77")))
+    fs.mkdirs(p("lists"))
+    assert(fs.rename(p("lists_bak_77/centroid_id=2"), p("lists/centroid_id=2")))
     val actions = store.vacuum()
-    assert(!actions.exists(_.contains("restored ledger_model/")),
+    assert(!actions.exists(_.contains("restored lists/")),
       s"whole-table backup was mined for partitions: $actions")
-    assert(store.modelLedger.count() == 1)         // dropped stays dropped
-    assert(!fs.exists(p("ledger_model_bak_77")))   // superseded copy swept
+    assert(lists(root).count() == 1)               // dropped stays dropped
+    assert(!fs.exists(p("lists_bak_77")))          // superseded copy swept
   }
 
   test("dims are read once per on-disk version, keep the parquet read's partitioning and the apsviz_station default") {

@@ -89,9 +89,9 @@ class ObsPipelineSpec extends SparkSuite {
 
   test("ingestSource end-to-end: normalize, source_id join, measure routing") {
     fixtures
-    val fact = ObsIngest.ingestSource(spark, meta, stations,
+    val fact = ObsIngest.ingestSource(ObsIngest.readHarvest(spark, meta,
       s"$dir/noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv",
-      s"$dir/noaaweb_stationdata_water_level_2023-04-23T18_00_00.csv")
+      s"$dir/noaaweb_stationdata_water_level_2023-04-23T18_00_00.csv"), meta, stations)
     assert(fact.columns.toSeq ==
       Seq("source_id", "timemark", "time") ++ Schemas.obsMeasures)
     assert(fact.count() == 6)                       // UNKNOWN station dropped
@@ -114,9 +114,9 @@ class ObsPipelineSpec extends SparkSuite {
         lit(null).cast("double").as("air_pressure"),
         lit(null).cast("double").as("stream_elevation"),
         lit(null).cast("double").as("flow_volume")), "tidal_gauge")
-    val fact = ObsIngest.ingestSource(spark, meta, stations,
+    val fact = ObsIngest.ingestSource(ObsIngest.readHarvest(spark, meta,
       s"$dir/noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv",
-      s"$dir/noaaweb_stationdata_water_level_2023-04-23T18_00_00.csv")
+      s"$dir/noaaweb_stationdata_water_level_2023-04-23T18_00_00.csv"), meta, stations)
     def commit(): Unit = store.atomicCommit(store.newCommitId("obs"))(
       store.stageGaugeData(fact, meta.data_source, _))
     def inScope = store.gaugeData.filter(to_date(col("time")) === lit("2023-04-23"))
@@ -134,9 +134,9 @@ class ObsPipelineSpec extends SparkSuite {
   test("obsTimeseriesStationData: fixed-category pivot + JSON_AGG contract (A7/A8)") {
     fixtures
     val fact = graft.operators.KeepLatestDedup(
-      ObsIngest.ingestSource(spark, meta, stations,
+      ObsIngest.ingestSource(ObsIngest.readHarvest(spark, meta,
         s"$dir/noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv",
-        s"$dir/noaaweb_stationdata_water_level_2023-04-23T18_00_00.csv"),
+        s"$dir/noaaweb_stationdata_water_level_2023-04-23T18_00_00.csv"), meta, stations),
       Seq("source_id", "time"), Seq(col("timemark")))
     val source = ObsIngest.buildGaugeSource(stations, meta)
     val out = QueryApi.obsTimeseriesStationData(fact, source, stations,
@@ -157,8 +157,8 @@ class ObsPipelineSpec extends SparkSuite {
 
   test("allparms variant: 9 categories incl. dynamic nowcast column (F9)") {
     fixtures
-    val fact = ObsIngest.ingestSource(spark, meta, stations,
-      s"$dir/noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv")
+    val fact = ObsIngest.ingestSource(ObsIngest.readHarvest(spark, meta,
+      s"$dir/noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv"), meta, stations)
     val source = ObsIngest.buildGaugeSource(stations, meta)
     val out = QueryApi.obsTimeseriesStationDataAllParms(fact, source, stations,
       "8410140", "2023-04-23 10:00:00", "2023-04-23 13:00:00", "adcirc.nowcast")
@@ -173,8 +173,8 @@ class ObsPipelineSpec extends SparkSuite {
 
   test("projected view reproduces the reference column list (ingestObsTasks.py:494-521)") {
     fixtures
-    val fact = ObsIngest.ingestSource(spark, meta, stations,
-      s"$dir/noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv")
+    val fact = ObsIngest.ingestSource(ObsIngest.readHarvest(spark, meta,
+      s"$dir/noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv"), meta, stations)
     val source = ObsIngest.buildGaugeSource(stations, meta)
     val v = QueryApi.gaugeStationSourceDataProjected(fact, source, stations)
     assert(v.columns.toSeq == Seq(
@@ -189,8 +189,8 @@ class ObsPipelineSpec extends SparkSuite {
 
   test("registerViews: SQL-visible serving views (SURVEY 3.3)") {
     fixtures
-    val fact = ObsIngest.ingestSource(spark, meta, stations,
-      s"$dir/noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv")
+    val fact = ObsIngest.ingestSource(ObsIngest.readHarvest(spark, meta,
+      s"$dir/noaaweb_stationdata_water_level_2023-04-23T12_00_00.csv"), meta, stations)
     val source = ObsIngest.buildGaugeSource(stations, meta)
     QueryApi.registerViews(fact, source, fact, source, stations)
     val n = spark.sql(

@@ -102,31 +102,31 @@ class SnapshotGaugeStoreSpec extends SparkSuite {
 
   test("crash-stranded commit publishes the fact exactly once across re-runs") {
     val store = mkStore()
-    val root = store.root
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
-    // on-disk state of a kill right after the commit point: the fact's
-    // tagged commit landed, its staged ledger rows never moved in
-    store.atomicCommit("c1")(store.stageGaugeData(
-      fact((7L, "2023-04-23 00:00:00", "2023-04-23 10:00:00", 1.0)), "tidal_gauge", _))
-    store.stageLedger(Seq(("a.csv", true)).toDF("file_name", "ingested"),
-      s"$root/_staging/c1")
-    assert(store.ledger.count() == 0)
-    val actions = store.vacuum()
-    assert(actions.exists(_.contains("finalized commit c1")), actions.toString)
-    assert(store.gaugeData.count() == 1 && store.ledger.count() == 1)
-    // a replay of the same commit id skips the fact by its tag and
-    // moves its ledger rows in again
-    store.atomicCommit("c1") { staging =>
+    def ledgerRow = Seq(("a.csv", true)).toDF("file_name", "ingested")
+    // a kill right after the commit point: the fact's tagged commit
+    // landed, its ledger commit died in its write job
+    intercept[Exception](store.atomicCommit("c1") { tag =>
       store.stageGaugeData(
-        fact((7L, "2023-04-23 00:00:00", "2023-04-23 10:00:00", 2.0)), "tidal_gauge", staging)
-      store.stageLedger(Seq(("a.csv", true)).toDF("file_name", "ingested"), staging)
+        fact((7L, "2023-04-23 00:00:00", "2023-04-23 10:00:00", 1.0)), "tidal_gauge", tag)
+      store.stageLedger(ledgerRow.withColumn("file_name",
+        when(lit(true), raise_error(lit("crash"))).otherwise(col("file_name"))), tag)
+    })
+    assert(store.gaugeData.count() == 1 && store.ledger.count() == 0)
+    // a replay of the same commit id skips the fact by its tag and
+    // commits its ledger rows; a second replay adds no ledger row
+    (1 to 2).foreach { _ =>
+      store.atomicCommit("c1") { tag =>
+        store.stageGaugeData(
+          fact((7L, "2023-04-23 00:00:00", "2023-04-23 10:00:00", 2.0)), "tidal_gauge", tag)
+        store.stageLedger(ledgerRow, tag)
+      }
+      assert(store.gaugeData.select("water_level").collect().map(_.getDouble(0)).toSeq ==
+        Seq(1.0), "re-published commit rewrote the fact despite its tag")
+      assert(store.ledger.count() == 1)
     }
-    assert(store.gaugeData.select("water_level").collect().map(_.getDouble(0)).toSeq ==
-      Seq(1.0), "re-published commit rewrote the fact despite its tag")
-    assert(!fs.exists(p("_staging/c1")))
     assert(store.gaugeTable.committedTags.contains("commit-c1"))
+    assert(new graft.sources.SnapshotTable(spark, s"${store.root}/ledger_obs")
+      .committedTags == Set("commit-c1"))
   }
 
   test("binPackCompact routes facts through a snapshot compact and is idempotent") {
@@ -256,17 +256,28 @@ class SnapshotGaugeStoreSpec extends SparkSuite {
     model((1L, "2023-04-23 00:00:00", "2023-04-23 01:00:00", 1.0))
       .withColumn("run_date", to_date(col("timemark")))
       .write.partitionBy("run_date").parquet(s"$plainModel/model_data")
-    Seq(plainGauge -> "gauge_data", plainModel -> "model_data").foreach {
-      case (r, table) =>
-        val err = intercept[IllegalArgumentException](GaugeStore.open(spark, r))
-        assert(err.getMessage.contains(s"plain-layout $table"), err.getMessage)
-    }
-    // opening writes nothing: neither into a fresh root nor into a
-    // BuildAnnIndex layout that `Compact --index` opens as a store
+    // and so is a plain-parquet ledger dir (part files, or run
+    // partition dirs) beside no manifest log
+    val plainLedger = Files.createTempDirectory("plainledger").toString
+    Seq(("a.csv", true)).toDF("file_name", "ingested")
+      .write.parquet(s"$plainLedger/ledger_obs")
+    val plainRuns = Files.createTempDirectory("plainruns").toString
+    Seq(("a.csv", "r1", true)).toDF("file_name", "model_run_id", "ingested")
+      .write.partitionBy("model_run_id").parquet(s"$plainRuns/ledger_model")
     def tree(r: String): Set[String] = {
       val s = Files.walk(Paths.get(r))
       try s.toArray.map(_.toString).toSet finally s.close()
     }
+    Seq(plainGauge -> "gauge_data", plainModel -> "model_data",
+      plainLedger -> "ledger_obs", plainRuns -> "ledger_model").foreach {
+      case (r, table) =>
+        val before = tree(r)
+        val err = intercept[IllegalArgumentException](GaugeStore.open(spark, r))
+        assert(err.getMessage.contains(s"plain-layout $table"), err.getMessage)
+        assert(tree(r) == before)
+    }
+    // opening writes nothing: neither into a fresh root nor into a
+    // BuildAnnIndex layout that `Compact --index` opens as a store
     val freshRoot = Files.createTempDirectory("freshopen").toString
     GaugeStore.open(spark, freshRoot)
     assert(tree(freshRoot) == Set(freshRoot))
